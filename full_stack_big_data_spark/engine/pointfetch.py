@@ -123,17 +123,21 @@ def point_fetch(spark: SparkSession, path: str, key: str,
 def fetch_payload_prefetched(spark: SparkSession, path: str, key: str,
                              ids_df: DataFrame, ids: list[int] | None,
                              pk_mod: int = PF_PK_MOD) -> DataFrame:
-    """:func:`fetch_payload`'s three regimes with the driver id collect
-    ALREADY PERFORMED by the caller (``ids = fetch_ids(ids_df, key)``,
-    possibly None past the size gate). Exists so the streaming gate
-    bodies can run that collect on an overlap thread (guide §2.6)
-    while the driver concurrently builds the next verify tier's
-    expression trees — the id fetch is the per-batch driver-blocking
-    action, and the expression construction is the driver-side work
-    that used to serialize behind it. Kept separate from
-    ``fetch_payload`` (same dispatch, deliberately duplicated ~6
-    lines) so batch-path consumers of the classic entry point keep an
-    unchanged function."""
+    """Three regimes by candidate-set size, never the raw corpus in any
+    of them (the payload carries only (key, verify columns)); ``ids``
+    is the caller's ``fetch_ids(ids_df, key)``, None past the size gate.
+
+    ≤ PF_IN_MAX ids → pushed-literal point fetch (directory prune +
+    per-value row-group skipping). ≤ PF_MAX_IDS → broadcast join, but
+    still with the literal ``pk IN`` directory prune (the pk set is at
+    most pk_mod values regardless of id count, so the literal stays
+    tiny while untouched directories are never opened). Past the
+    driver gate → plain broadcast join over the payload.
+
+    Taking the ids pre-collected lets the streaming gate bodies run
+    the collect (the per-batch driver-blocking action) on an overlap
+    thread while the driver builds the next verify tier's expression
+    trees (guide §2.6)."""
     if ids is not None and len(ids) <= PF_IN_MAX:
         return point_fetch(spark, path, key, ids, pk_mod=pk_mod)
     r = spark.read.parquet(path)
@@ -146,22 +150,7 @@ def fetch_payload_prefetched(spark: SparkSession, path: str, key: str,
 
 def fetch_payload(spark: SparkSession, path: str, key: str,
                   ids_df: DataFrame, pk_mod: int = PF_PK_MOD) -> DataFrame:
-    """The gates' entry point: three regimes by candidate-set size,
-    never the raw corpus in any of them (the payload carries only
-    (key, verify columns)).
-
-    ≤ PF_IN_MAX ids → pushed-literal point fetch (directory prune +
-    per-value row-group skipping). ≤ PF_MAX_IDS → broadcast join, but
-    still with the literal ``pk IN`` directory prune (the pk set is at
-    most pk_mod values regardless of id count, so the literal stays
-    tiny while untouched directories are never opened). Past the
-    driver gate → plain broadcast join over the payload."""
-    ids = fetch_ids(ids_df, key)
-    if ids is not None and len(ids) <= PF_IN_MAX:
-        return point_fetch(spark, path, key, ids, pk_mod=pk_mod)
-    r = spark.read.parquet(path)
-    if ids is not None:
-        pks = sorted({i % pk_mod for i in ids})
-        r = r.where(F.col("pk").isin(pks))
-    return (r.drop("pk")
-            .join(F.broadcast(ids_df.select(key).distinct()), key))
+    """The gates' entry point: collect the candidate ids, then
+    :func:`fetch_payload_prefetched`."""
+    return fetch_payload_prefetched(spark, path, key, ids_df,
+                                    fetch_ids(ids_df, key), pk_mod)

@@ -26,14 +26,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Configs that MUST be set before/at session build.
-_BUILD_CONFS = {
+# The engine's SQL confs. All are runtime-settable, so get_spark()
+# applies them at build and tune_session() applies them to a live
+# session — the engine also works when the caller (e.g. the
+# verification driver) owns the SparkSession.
+_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow transfer for pandas UDFs / toPandas — the vectorized Python path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Bound the debug plan-string every action renders for the listener
     # bus/UI: iterative pipelines (component loops, pagerank) nest deep
     # lineage, and an UNCAPPED explainString materializes the whole tree
@@ -46,13 +50,6 @@ _BUILD_CONFS = {
     # identical, but LTZ is what watermarks/unix_micros/window frames
     # require, and it matches DuckDB's naive-timestamp comparison.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-}
-
-# Configs safe to set on a live session (runtime SQL confs). Applied by
-# tune_session() so the engine also works when the caller (e.g. the
-# verification driver) owns the SparkSession.
-_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # NOT excluded: InferFiltersFromGenerate. It re-inlines computed
     # array expressions (interpreted HOFs on the text paths) into a
     # per-row Filter below every explode, which LOOKS like a
@@ -63,23 +60,12 @@ _RUNTIME_CONFS = {
     # family, direction inconsistent). A global optimizer exclusion
     # with no robust win is risk without reward — adjudicated out
     # (BENCHNOTES r12, the measurement-discipline note).
-    # See _BUILD_CONFS: cap driver-side plan strings (iterative lineage
-    # would otherwise OOM explainString at scale).
-    "spark.sql.maxPlanStringLength": "100000",
-    # See _BUILD_CONFS: naive parquet timestamps → LTZ under UTC, so
-    # event-time ops (watermark, unix_micros, RANGE frames) resolve.
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    # Arrow batching for toPandas/pandas-UDF transfer — runtime-settable,
-    # so caller-owned (vanilla) sessions get the vectorized path too.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs this engine relies on to an existing session."""
-    for k, v in _RUNTIME_CONFS.items():
+    for k, v in _CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -90,12 +76,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # ~50× too many for sf≤0.1 inputs, so every shuffle pays 200 task
         # launches for µs of work. Spark exposes no "explicitly set vs
         # default" bit for this conf, so "200" is read as "unset" (the
-        # baked-in default); a caller who deliberately wants 200 opts out
-        # with SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1. On a real cluster
-        # this branch never fires: any deployment sets its own value, and
-        # AQE coalescing handles the rest.
-        if (not os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS")
-                and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"):
+        # baked-in default). On a real cluster this branch never fires:
+        # any deployment sets its own value, and AQE coalescing handles
+        # the rest.
+        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(spark.sparkContext.defaultParallelism))
     except Exception:
@@ -157,7 +141,7 @@ def get_spark(app_name: str = "full-stack-big-data-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in _BUILD_CONFS.items():
+    for k, v in _CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return tune_session(spark)

@@ -1,17 +1,22 @@
 """Vector math over ``array<float>`` embedding columns.
 
-Two implementations of the same arithmetic:
+Two forms of the same arithmetic:
 
 * ``dot`` / ``l2_norm`` / ``cosine_sim_exprs`` — pure Catalyst
   higher-order functions (``zip_with`` + ``aggregate``). Zero Python
   transfer, but HOFs are CodegenFallback: every row interprets three
-  lambda chains and allocates the intermediate arrays, ~µs/row.
-* ``cosine_sim`` — Arrow-batched pandas UDF that replays the SAME
-  IEEE-754 operation sequence with numpy (see its docstring for the
-  bit-exactness argument). This is the default: the similarity
-  operators score millions of candidate pairs per run, and the r14
-  decomposition measured the HOF chain at ~7.6 s of the 10.8 s
-  ``emb_knn_graph`` wall at sf0.1 (2.56 M pairs), vs ~1 s Arrow.
+  lambda chains and allocates the intermediate arrays, ~µs/row. This is
+  the reference form the Arrow kernel is pinned against, and the
+  production form where candidate volume is too small to amortize a
+  Python worker round trip (``ann_brute_topk``, the gates'
+  ``quant_screen_keep``).
+* ``cosine_sim`` — one Arrow-native UDF (``arrow_udf``) that reshapes
+  each ``ListArray``'s values buffer into a (rows × dim) matrix without
+  touching row objects and replays the SAME IEEE-754 operation sequence
+  with numpy (see its docstring for the bit-exactness argument). The
+  corpus-scale pair scorers use it: they score millions of candidate
+  pairs per run, and the r14 decomposition measured the HOF chain at
+  ~7.6 s of the 10.8 s ``emb_knn_graph`` wall at sf0.1 (2.56 M pairs).
 
 Floats are widened to double *before* any arithmetic so accumulation
 order and precision match the DuckDB oracle (which computes list_* in
@@ -21,9 +26,9 @@ double).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, functions as F
+
 
 
 def _d(col: Column) -> Column:
@@ -42,15 +47,15 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine_sim_exprs(a: Column, b: Column) -> Column:
-    """The Catalyst-expression form of :func:`cosine_sim` (kept for
-    reference and for the paired A/B adjudication; same semantics)."""
+    """The Catalyst-expression form of :func:`cosine_sim` (same
+    semantics; the bit-exactness reference and the small-volume form)."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom)
 
 
 def _cos_row(x, y) -> float:
-    """Per-row replay of the exact Catalyst sequence, for ragged /
-    mismatched-length pairs only (zip_with pads → NULL dot → NULL)."""
+    """Per-row replay of the exact Catalyst sequence, for degenerate
+    batches only (mismatched lengths: zip_with pads → NULL dot → NULL)."""
     if len(x) != len(y):
         return float("nan")
     d = 0.0
@@ -64,92 +69,6 @@ def _cos_row(x, y) -> float:
         sb = sb + yd * yd
     denom = np.sqrt(sa) * np.sqrt(sb)
     return d / denom if denom > 0 else float("nan")
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL (not an ANSI divide-by-zero crash) when
-    either vector has zero norm — a zero vector has no direction, and a
-    NULL similarity drops out of every top-k/threshold filter, which is
-    the only sensible semantics for degenerate embeddings.
-
-    Arrow-batched numpy implementation, bit-identical to the Catalyst
-    HOF form by construction: the dim loop applies the SAME IEEE-754
-    double operation sequence the ``aggregate`` fold does — per step
-    one rounded multiply then one rounded add, left to right —
-    vectorized ACROSS rows instead of along the vector, so no pairwise
-    / BLAS re-association sneaks in. float32 → float64 widening is
-    exact; ``Math.sqrt`` and ``np.sqrt`` are both correctly rounded per
-    IEEE; denom and the final divide each round once in both forms.
-    NULL propagation matches too: a NULL input row, a NULL element
-    (→ NaN dot via the oracle's own semantics) or a zero/NaN denom all
-    fail ``denom > 0`` in Catalyst and are masked to NA here (pandas
-    converts NaN to NA for the nullable Float64 return, which Spark
-    reads as NULL).
-
-    PRECONDITION — finite inputs (r14 ADVICE): the bit-identity claim
-    above covers finite embeddings (every corpus/fixture vector). For
-    NON-finite inputs the two forms diverge on one corner: ±inf
-    elements give denom = inf > 0 with a NaN ratio, which the HOF form
-    returns as NaN (sorted ABOVE all doubles by a descending top-k)
-    while this form's Float64 masking turns it into NULL (dropped by
-    threshold filters). Callers feeding unsanitized external vectors
-    must filter non-finite rows first; the engine's similarity
-    operators all consume the generated corpus tables, which are
-    finite by construction.
-
-    CALL-SITE CONSTRAINT: returned as a nondeterministic expression
-    (see below), so it is valid in Project/Filter positions only —
-    Spark's analyzer rejects nondeterministic expressions inside join
-    conditions, aggregate-function arguments and generator inputs, and
-    it blocks pushdown of unrelated filters below the projection.
-    Compute the column first (``withColumn``) if a future caller needs
-    it near one of those positions.
-    """
-
-    @F.pandas_udf("double")
-    def _cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        out = np.full(len(av), np.nan)
-        valid = (~av.isna() & ~bv.isna()).to_numpy()
-        if valid.any():
-            va = av[valid].to_numpy()
-            vb = bv[valid].to_numpy()
-            try:
-                A = np.stack(va).astype(np.float64)
-                B = np.stack(vb).astype(np.float64)
-            except ValueError:
-                # Ragged batch (never the fixture's fixed-dim
-                # embeddings): zip_with pads with NULL → NULL dot →
-                # when(denom>0, NULL) → NULL; replay row-at-a-time.
-                out[valid] = [_cos_row(x, y) for x, y in zip(va, vb)]
-                return pd.Series(out).astype("Float64")
-            if A.shape[1] != B.shape[1]:
-                out[valid] = [_cos_row(x, y) for x, y in zip(va, vb)]
-                return pd.Series(out).astype("Float64")
-            d = np.zeros(len(A))
-            sa = np.zeros(len(A))
-            sb = np.zeros(len(A))
-            for i in range(A.shape[1]):
-                ai = A[:, i]
-                bi = B[:, i]
-                d = d + ai * bi
-                sa = sa + ai * ai
-                sb = sb + bi * bi
-            denom = np.sqrt(sa) * np.sqrt(sb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = np.where(denom > 0, d / denom, np.nan)
-            out[valid] = c
-        # Float64 (masked) turns NaN into NA → SQL NULL, matching
-        # when(denom > 0, ...)'s else-NULL branch.
-        return pd.Series(out).astype("Float64")
-
-    # asNondeterministic: the threshold consumers filter on the cosine
-    # column (`where(cos >= t)` above the projection), and pushed-down
-    # filters referencing a UDF-computed column duplicate the
-    # ArrowEvalPython below themselves — every candidate pair scored
-    # twice (guide §4.4; the r14 duplicated-UDF audit caught `_cos` ×2
-    # in both banded deployment entries). The function is genuinely
-    # deterministic, so blocking reorder/duplication changes no result.
-    return _cos.asNondeterministic()(a, b)
 
 
 def _list_matrix(arr: pa.Array) -> np.ndarray | None:
@@ -176,35 +95,52 @@ def _list_matrix(arr: pa.Array) -> np.ndarray | None:
             .reshape(len(lens), int(lens[0])).astype(np.float64))
 
 
-def cosine_sim_zerocopy(a: Column, b: Column) -> Column:
-    """:func:`cosine_sim` behind the Arrow-native UDF interface
-    (``arrow_udf``, Spark 4.1) — bit-identical semantics, cheaper
-    boundary. The pandas form receives each list column as a Series of
-    per-row ndarray OBJECTS and pays an O(rows) Python-level
-    ``np.stack`` per batch per side; this form receives the raw
-    ``pa.ListArray`` and reshapes its contiguous values buffer into the
-    (rows × dim) matrix zero-copy (``_list_matrix``), so the per-batch
-    Python work is the dim loop alone. Paired order-alternating A/B on
-    the 2.56 M-pair knn candidate set: every adjacent pairing won,
-    minima 1.23×, means ≈1.4× (scripts/adjudicate_cosine_zerocopy.py).
+def cosine_sim(a: Column, b: Column) -> Column:
+    """Cosine similarity; NULL (not an ANSI divide-by-zero crash) when
+    either vector has zero norm — a zero vector has no direction, and a
+    NULL similarity drops out of every top-k/threshold filter, which is
+    the only sensible semantics for degenerate embeddings.
 
-    Bit-exactness: the SAME per-dim left-to-right IEEE fold as
-    ``cosine_sim``/the Catalyst HOF form (pinned in
-    tests/test_similarity.py); float32→float64 widening exact; NaN →
-    NULL masking identical (``from_pandas=True`` maps NaN to null, the
-    Float64-mask twin). Degenerate rows (null row, null element,
-    ragged) drop to a per-row replay of the Catalyst sequence. Same
-    finite-input precondition and Project/Filter-only call-site
-    constraint as :func:`cosine_sim` (returned nondeterministic).
+    Arrow-native kernel (``arrow_udf``): each list column arrives as a
+    raw ``pa.ListArray`` whose contiguous values buffer reshapes into
+    the (rows × dim) matrix zero-copy (:func:`_list_matrix`), so the
+    per-batch Python work is the dim loop alone.
 
-    Routed to the corpus-scale pair scorers (knn graph, incremental
-    ANN) where candidate volume amortizes everything; the
-    threshold-gated banded/streaming consumers keep ``cosine_sim`` —
-    at their candidate counts the two forms are band-indistinguishable
-    and the pandas form has three rounds of adjudication history."""
+    Bit-identical to the Catalyst HOF form by construction: the dim
+    loop applies the SAME IEEE-754 double operation sequence the
+    ``aggregate`` fold does — per step one rounded multiply then one
+    rounded add, left to right — vectorized ACROSS rows instead of
+    along the vector, so no pairwise / BLAS re-association sneaks in.
+    float32 → float64 widening is exact; ``Math.sqrt`` and ``np.sqrt``
+    are both correctly rounded per IEEE; denom and the final divide each
+    round once in both forms. NULL propagation matches too: a zero/NaN
+    denom fails ``denom > 0`` in Catalyst and is masked to null here
+    (``from_pandas=True`` maps NaN to null). Degenerate batches (null
+    row, null element, ragged or mismatched lengths) drop to
+    :func:`_cos_row`, a per-row replay of the Catalyst sequence.
+
+    PRECONDITION — finite inputs (r14 ADVICE): the bit-identity claim
+    above covers finite embeddings (every corpus/fixture vector). For
+    NON-finite inputs the two forms diverge on one corner: ±inf
+    elements give denom = inf > 0 with a NaN ratio, which the HOF form
+    returns as NaN (sorted ABOVE all doubles by a descending top-k)
+    while this form's NaN masking turns it into NULL (dropped by
+    threshold filters). Callers feeding unsanitized external vectors
+    must filter non-finite rows first; the engine's similarity
+    operators all consume the generated corpus tables, which are
+    finite by construction.
+
+    CALL-SITE CONSTRAINT: returned as a nondeterministic expression
+    (see below), so it is valid in Project/Filter positions only —
+    Spark's analyzer rejects nondeterministic expressions inside join
+    conditions, aggregate-function arguments and generator inputs, and
+    it blocks pushdown of unrelated filters below the projection.
+    Compute the column first (``withColumn``) if a future caller needs
+    it near one of those positions.
+    """
 
     @F.arrow_udf("double")
-    def _cos0(av: pa.Array, bv: pa.Array) -> pa.Array:
+    def _cos(av: pa.Array, bv: pa.Array) -> pa.Array:
         A = _list_matrix(av)
         B = _list_matrix(bv)
         if A is None or B is None or A.shape[1] != B.shape[1]:
@@ -232,4 +168,11 @@ def cosine_sim_zerocopy(a: Column, b: Column) -> Column:
             c = np.where(denom > 0, d / denom, np.nan)
         return pa.array(c, type=pa.float64(), from_pandas=True)
 
-    return _cos0.asNondeterministic()(a, b)
+    # asNondeterministic: the threshold consumers filter on the cosine
+    # column (`where(cos >= t)` above the projection), and pushed-down
+    # filters referencing a UDF-computed column duplicate the
+    # ArrowEvalPython below themselves — every candidate pair scored
+    # twice (guide §4.4; the r14 duplicated-UDF audit caught `_cos` ×2
+    # in both banded deployment entries). The function is genuinely
+    # deterministic, so blocking reorder/duplication changes no result.
+    return _cos.asNondeterministic()(a, b)

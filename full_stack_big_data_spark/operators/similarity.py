@@ -44,8 +44,7 @@ from ..engine.catalog import Catalog
 from ..engine.localdf import local_df
 from ..functions import observability
 from ..functions.skew import grouped_topk
-from ..functions.vectors import (cosine_sim, cosine_sim_exprs,
-                                 cosine_sim_zerocopy)
+from ..functions.vectors import cosine_sim, cosine_sim_exprs
 from .registry import register
 
 N_QUERIES = 5          # vec_id < 5 are the query vectors
@@ -93,8 +92,8 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # item): at N_QUERIES×corpus ≈ 12.5k scored pairs the Python
     # boundary never amortizes — 3-variant paired A/B minima: HOF
     # 0.537s vs Arrow-pandas 0.691s vs zero-copy 0.749s, HOF winning
-    # every rep (scripts/adjudicate_brute_topk_cosine.py; md5-equal).
-    # The corpus-scale scorers stay on the Arrow kernels.
+    # every rep (OPTIMIZATION_r15.md §4; md5-equal).
+    # The corpus-scale scorers stay on the Arrow kernel.
     scored = (
         F.broadcast(q).join(e, F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
@@ -1260,12 +1259,10 @@ def ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn = src.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("qv"))
     nn = src.select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("nv"))
-    # zero-copy Arrow cosine (r15): candidate volume here amortizes the
-    # boundary, and the buffer-reshape form wins the paired A/B
+    # Arrow cosine: candidate volume here amortizes the boundary
     scored = (cand.join(qn, "new_id").join(nn, "neighbor_id")
               .select("new_id", "neighbor_id",
-                      cosine_sim_zerocopy(F.col("nv"),
-                                          F.col("qv")).alias("cos")))
+                      cosine_sim(F.col("nv"), F.col("qv")).alias("cos")))
     return (
         grouped_topk(scored, ["new_id"],
                      [F.desc("cos"), F.asc("neighbor_id")],
@@ -1321,12 +1318,10 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn = src.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("qv"))
     nn = src.select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("nv"))
-    # zero-copy Arrow cosine (r15): candidate volume here amortizes the
-    # boundary, and the buffer-reshape form wins the paired A/B
+    # Arrow cosine: candidate volume here amortizes the boundary
     scored = (cand.join(qn, "new_id").join(nn, "neighbor_id")
               .select("new_id", "neighbor_id",
-                      cosine_sim_zerocopy(F.col("nv"),
-                                          F.col("qv")).alias("cos")))
+                      cosine_sim(F.col("nv"), F.col("qv")).alias("cos")))
     return (
         grouped_topk(scored, ["new_id"],
                      [F.desc("cos"), F.asc("neighbor_id")],
@@ -1580,40 +1575,6 @@ def unpacked_q_col(w32):
         F.shiftright(F.shiftleft(w, 16), 16), F.shiftright(w, 16))))
 
 
-def _screen_keep_row(x, w, s) -> bool:
-    """Per-row replay of the exact Catalyst screen sequence, for
-    ragged/degenerate rows only (see :func:`quant_screen_keep_arrow`). A row
-    whose unpacked codes are shorter than the query (zip_with would pad
-    with NULL → NULL bound → dropped by the filter) returns False."""
-    # lo sign-extends via mask + sign bit, hi via arithmetic shift —
-    # replayed in plain ints (Python's >> on a signed int is arithmetic).
-    codes = []
-    for v in (int(v) for v in w):
-        lo = (v & 0xFFFF) - (1 << 16) if v & 0x8000 else v & 0xFFFF
-        hi = v >> 16  # python >> on signed int is arithmetic
-        codes.extend((lo, hi))
-    d = len(x)
-    if len(codes) < d:
-        return False
-    q = codes[:d]
-    dot = 0.0
-    sq = 0.0
-    sx = 0.0
-    for xi, qi in zip(x, q):
-        xd = float(xi)
-        qd = float(qi)
-        dot = dot + xd * qd
-        sq = sq + qd * qd
-        sx = sx + xd * xd
-    s64 = float(s)
-    dotq = s64 * dot
-    qn = s64 * np.sqrt(sq)
-    r = (0.5 * (1.0 + _QUANT_R_SLACK) * s64) * np.sqrt(float(d))
-    xn = np.sqrt(sx)
-    return bool((qn <= r)
-                or (dotq + xn * r >= NEARDUP_COS * (xn * (qn - r))))
-
-
 def quant_screen_keep(qv, w32, s):
     """Boolean screen decision for one candidate pair — the
     Cauchy–Schwarz upper-bound test ``(qn <= r) | (dotq + xn·r >=
@@ -1622,16 +1583,15 @@ def quant_screen_keep(qv, w32, s):
     expression chain lived inline in streaming/joins.py through r14 and
     moved here, next to its pack format, unchanged).
 
-    DELIBERATELY the Catalyst HOF form: the r15 Arrow-kernel trial
-    (:func:`quant_screen_keep_arrow`, kept for reference) LOST the
-    paired order-alternating A/B 0/8 at sf0.1
-    (scripts/adjudicate_quant_screen.py — minima 0.93–0.97× of this
-    form) — at the scaled gates' candidate volume (~2k pairs × 64 dims
-    per batch) the interpreted fold is cheaper than the extra Python
-    worker round trip + per-batch UDF registration the kernel pays,
-    the same small-candidate-count economics that put
-    ``ann_brute_topk`` on the r14 watch list. NULL/ragged rows yield
-    NULL, which the gate's filter drops."""
+    DELIBERATELY the Catalyst HOF form: an r15 Arrow-kernel trial LOST
+    the paired order-alternating A/B 0/8 at sf0.1 (OPTIMIZATION_r15.md
+    §2 — minima 0.93–0.97× of this form) — at the scaled gates'
+    candidate volume (~2k pairs × 64 dims per batch) the interpreted
+    fold is cheaper than the extra Python worker round trip +
+    per-batch UDF registration the kernel pays, the same
+    small-candidate-count economics that put ``ann_brute_topk`` on the
+    HOF cosine. NULL/ragged rows yield NULL, which the gate's filter
+    drops."""
     from ..functions.vectors import dot, l2_norm
 
     qarr = F.slice(unpacked_q_col(w32), 1, F.size(qv))
@@ -1642,77 +1602,6 @@ def quant_screen_keep(qv, w32, s):
     xn = l2_norm(qv)
     return ((qn <= r)                           # degenerate → bypass
             | (dotq + xn * r >= NEARDUP_COS * (xn * (qn - r))))
-
-
-def quant_screen_keep_arrow(qv, w32, s):
-    """REFERENCE-ONLY Arrow form of :func:`quant_screen_keep` — the r15
-    trial that applied the r14 cosine-kernel mechanism (§4.2: one numpy
-    pass per Arrow batch instead of the interpreted HOF chain) to the
-    tier-1 screen, bit-identical to the Catalyst form by the same
-    replayed-IEEE construction: the dim loop applies the identical
-    double operation sequence (one rounded multiply then one rounded
-    add per step, left to right) vectorized ACROSS rows; int16→float64
-    and float32→float64 widenings are exact; each scalar multiply in
-    ``dotq``/``qn``/``r`` rounds once in the same order as the Column
-    expression tree; ``np.sqrt``/``Math.sqrt`` are both correctly
-    rounded — so the screened pair set is provably unchanged (pinned in
-    tests/test_similarity.py). MEASURED AND REJECTED for the production
-    path: 0/8 paired wins at sf0.1 (scripts/adjudicate_quant_screen.py)
-    — the gates' per-batch candidate volume is too small to amortize
-    the Python boundary crossing. Kept so the adjudication stays
-    reproducible and because the kernel becomes the right form if a
-    future operating point raises per-batch candidates by ~10×.
-    NULL/ragged rows (zip_with pads → NULL bound → dropped) return
-    False, which the ``where()`` treats identically."""
-
-    @F.pandas_udf("boolean")
-    def _keep(xv: pd.Series, wv: pd.Series, sv: pd.Series) -> pd.Series:
-        out = np.zeros(len(xv), dtype=bool)
-        valid = (~xv.isna() & ~wv.isna() & ~sv.isna()).to_numpy()
-        if valid.any():
-            xs = xv[valid].to_numpy()
-            ws = wv[valid].to_numpy()
-            ss = sv[valid].to_numpy().astype(np.float64)
-            try:
-                X = np.stack(xs).astype(np.float64)
-                W = np.stack(ws).astype(np.int64)
-            except ValueError:   # ragged batch — never the fixed-dim corpus
-                out[valid] = [_screen_keep_row(x, w, s)
-                              for x, w, s in zip(xs, ws, ss)]
-                return pd.Series(out)
-            d = X.shape[1]
-            if 2 * W.shape[1] < d:
-                out[valid] = False
-                return pd.Series(out)
-            # unpack: lo = (w<<16)>>16 sign-extended, hi = w>>16 — the
-            # exact integer arithmetic of unpacked_q_col, on int32 words
-            W32 = W.astype(np.int32)
-            lo = np.right_shift(np.left_shift(W32, 16), 16)
-            hi = np.right_shift(W32, 16)
-            Q = np.empty((W32.shape[0], 2 * W32.shape[1]), dtype=np.int32)
-            Q[:, 0::2] = lo
-            Q[:, 1::2] = hi
-            Q64 = Q[:, :d].astype(np.float64)
-            dot = np.zeros(len(X))
-            sq = np.zeros(len(X))
-            sx = np.zeros(len(X))
-            for i in range(d):
-                xi = X[:, i]
-                qi = Q64[:, i]
-                dot = dot + xi * qi
-                sq = sq + qi * qi
-                sx = sx + xi * xi
-            dotq = ss * dot
-            qn = ss * np.sqrt(sq)
-            r = (0.5 * (1.0 + _QUANT_R_SLACK) * ss) * np.sqrt(float(d))
-            xn = np.sqrt(sx)
-            with np.errstate(invalid="ignore"):
-                keep = (qn <= r) | (dotq + xn * r
-                                    >= NEARDUP_COS * (xn * (qn - r)))
-            out[valid] = keep
-        return pd.Series(out)
-
-    return _keep(qv, w32, s)
 
 
 _SRP_QUANT_PAYLOAD_DIRS: dict[str, str] = {}
@@ -3570,8 +3459,8 @@ def knn_graph_edges(src: DataFrame, k: int = KNN_K,
     eb = src.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("emb_b"))
     scored = (cand.join(ea, "src_id").join(eb, "neighbor_id")
               .select("src_id", "neighbor_id",
-                      cosine_sim_zerocopy(F.col("emb_a"),
-                                          F.col("emb_b")).alias("cos")))
+                      cosine_sim(F.col("emb_a"),
+                                 F.col("emb_b")).alias("cos")))
     from pyspark.sql import Window
     w = Window.partitionBy("src_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (scored.withColumn("rank", F.row_number().over(w).cast("bigint"))

@@ -597,35 +597,14 @@ def _verify_pool():
     the tiers' actions are only sequential because the driver code
     called them sequentially). The r15 body decomposition measured
     ~43% of the per-batch wall as DRIVER-side expression construction
-    (minhash/HOF lambda trees, the pandas-UDF registration) serialized
+    (minhash/HOF lambda trees, the UDF registration) serialized
     between the two id-collect actions — so each collect now runs on
     this pool while the main thread builds the next tier's expression
     trees. One worker is enough: there is never more than one collect
-    in flight. ``FSBD_GATE_SERIAL=1`` restores the serial order (the
-    committed A/B adjudication seam — scripts/adjudicate_gate_overlap.py
-    toggles it inside one process)."""
-    import os
-    if os.environ.get("FSBD_GATE_SERIAL") == "1":
-        return None
+    in flight. Paired A/B against serial order read parity, never worse
+    (OPTIMIZATION_r15.md §1)."""
     from concurrent.futures import ThreadPoolExecutor
     return ThreadPoolExecutor(max_workers=1)
-
-
-class _Done:
-    """Pre-resolved future for the serial (pool=None) path."""
-
-    def __init__(self, v):
-        self._v = v
-
-    def result(self):
-        return self._v
-
-
-def _submit(pool, fn, *args):
-    """Submit to the overlap pool, or run inline when serial."""
-    if pool is None:
-        return _Done(fn(*args))
-    return pool.submit(fn, *args)
 
 
 def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
@@ -660,13 +639,13 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
         pool = _verify_pool()
         try:
             ids_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids1 = _submit(pool, fetch_ids, ids_df, "vec_id")
+            ids1 = pool.submit(fetch_ids, ids_df, "vec_id")
             # §2.6 overlap: while the candidate-id collect materializes
             # the bucket join on the pool thread, the driver builds the
             # Cauchy-Schwarz screen's HOF expression trees
             # (quant_screen_keep — id-independent, name-resolved at
-            # analysis; the Arrow-kernel variant was measured and
-            # rejected, see quant_screen_keep_arrow).
+            # analysis; an Arrow-kernel screen was measured and
+            # rejected, OPTIMIZATION_r15.md §2).
             keep = quant_screen_keep(F.col("qv"), F.col("w32"),
                                      F.col("s"))
             qp = (fetch_payload_prefetched(spark, quant_payload_path,
@@ -677,7 +656,7 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
                     .select("old_id", "vec_id").persist())
             scope.append(cand)
             ids2_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids2 = _submit(pool, fetch_ids, ids2_df, "vec_id")
+            ids2 = pool.submit(fetch_ids, ids2_df, "vec_id")
             # Overlap again: the screen's materialization + collect runs
             # while the driver constructs (and registers) the exact
             # Arrow cosine UDF for tier 2.
@@ -689,8 +668,7 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
                       .select(F.col("vec_id").alias("old_id"),
                               F.col("embedding").alias("old_emb")))
         finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
+            pool.shutdown(wait=False)
     else:
         cos_pred = cosine_sim(F.col("old_emb"), F.col("qv")) >= NEARDUP_COS
         corpus = (fetch_payload(spark, payload_path, "vec_id",
@@ -978,7 +956,7 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
         pool = _verify_pool()
         try:
             ids_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids1 = _submit(pool, fetch_ids, ids_df, "doc_id")
+            ids1 = pool.submit(fetch_ids, ids_df, "doc_id")
             # §2.6 overlap: the candidate-id collect (which materializes
             # the signature chain + bucket join) runs on the pool thread
             # while the driver builds the hash-screen expression trees —
@@ -1005,7 +983,7 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
                     .persist())
             scope.append(cand)
             ids2_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids2 = _submit(pool, fetch_ids, ids2_df, "doc_id")
+            ids2 = pool.submit(fetch_ids, ids2_df, "doc_id")
             # Overlap again: the screen materializes + collects on the
             # pool thread while the driver constructs tier 2's
             # re-shingle expression chain (the exact kernel the index
@@ -1021,8 +999,7 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
                       .select("doc_id", tok_col)
                       .select(F.col("doc_id").alias("old_doc"), ng_col))
         finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
+            pool.shutdown(wait=False)
     else:
         sh_old = (fetch_payload(spark, payload_path, "doc_id",
                                 cand.select(F.col("old_doc")

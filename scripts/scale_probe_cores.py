@@ -59,7 +59,7 @@ if not os.path.isdir(SF10):
 
 from pyspark.sql import SparkSession
 
-from full_stack_big_data_spark.engine.session import (_BUILD_CONFS,
+from full_stack_big_data_spark.engine.session import (_CONFS,
                                                       release_scoped_cache,
                                                       tune_session)
 from full_stack_big_data_spark.operators.registry import load_all
@@ -74,7 +74,7 @@ b = (SparkSession.builder.appName(f"scale-probe-{cores}-{codec}")
      .config("spark.sql.parquet.compression.codec",
              "zstd" if codec == "zstd" else "snappy")
      .config("spark.ui.enabled", "false"))
-for k, v in _BUILD_CONFS.items():
+for k, v in _CONFS.items():
     b = b.config(k, v)
 spark = b.getOrCreate()
 tune_session(spark)

@@ -63,8 +63,8 @@ def _child(name: str) -> None:
 
     frac = os.environ.get("STREAM_PROBE_FRACTION")
     if frac:
-        S._BUILD_CONFS = dict(
-            S._BUILD_CONFS,
+        S._CONFS = dict(
+            S._CONFS,
             **{"spark.memory.fraction": frac,
                "spark.memory.storageFraction": "0.2"})
     spark = S.get_spark(app_name=f"stream-mem-{name}")

@@ -573,12 +573,12 @@ def test_ivfpq_composition_laws(spark):
 
 
 def test_arrow_cosine_bit_identical_to_hof_form(spark):
-    """r14 change 10 pin: the Arrow-batched numpy cosine_sim must be
-    BIT-identical to the Catalyst zip_with+aggregate form it replaced —
-    same left-to-right IEEE double sequence, same NULL semantics
-    (null input, zero norm, ragged lengths). A dense cross of the smoke
-    corpus catches re-association (BLAS/pairwise summation) drift; the
-    degenerate rows catch NULL-path drift."""
+    """The Arrow cosine_sim kernel must be BIT-identical to the
+    Catalyst zip_with+aggregate form — same left-to-right IEEE double
+    sequence, same NaN→NULL masking. A dense cross of the smoke corpus
+    catches re-association (BLAS/pairwise summation) drift on the
+    zero-copy matrix path; the degenerate rows (zero norm, null row,
+    ragged lengths, null element) catch drift on the per-row fallback."""
     from pyspark.sql import functions as F
     from full_stack_big_data_spark.engine.catalog import Catalog
     from full_stack_big_data_spark.functions.vectors import (
@@ -595,9 +595,10 @@ def test_arrow_cosine_bit_identical_to_hof_form(spark):
 
     degenerate = spark.createDataFrame(
         [(1, [0.0] * 4, [1.0, 2.0, 3.0, 4.0]),   # zero norm -> NULL
-         (2, None, [1.0, 2.0, 3.0, 4.0]),        # null input -> NULL
+         (2, None, [1.0, 2.0, 3.0, 4.0]),        # null row -> NULL
          (3, [1.0, 2.0], [1.0, 2.0, 3.0, 4.0]),  # ragged -> NULL
-         (4, [1.0, -2.0, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0])],
+         (4, [1.0, None, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0]),  # null elem
+         (5, [1.0, -2.0, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0])],
         "id int, x array<float>, y array<float>")
     rows = degenerate.select(
         "id", cosine_sim(F.col("x"), F.col("y")).alias("new"),
@@ -605,6 +606,60 @@ def test_arrow_cosine_bit_identical_to_hof_form(spark):
     for r in rows:
         assert (r.new is None) == (r.old is None) and \
             (r.new is None or r.new == r.old), r
+
+
+def test_zerocopy_cosine_bit_identical_to_hof_form(spark):
+    """The zero-copy matrix path of cosine_sim: ``_list_matrix`` must
+    reshape a fixed-dim ``ListArray``'s values buffer into exactly the
+    rows' widened values — also for a sliced array, whose offsets do not
+    start at 0 — and must refuse every degenerate shape so the kernel
+    takes the per-row fallback. Small Arrow batches then put many batch
+    boundaries inside one partition, and the kernel must stay
+    BIT-identical to the Catalyst HOF form across all of them."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from full_stack_big_data_spark.engine.catalog import Catalog
+    from full_stack_big_data_spark.functions.vectors import (
+        _list_matrix, cosine_sim, cosine_sim_exprs)
+
+    e = Catalog(spark, SF_SMOKE).embeddings
+    vecs = [r.embedding for r in
+            e.orderBy("vec_id").select("embedding").limit(40).collect()]
+    arr = pa.array(vecs, type=pa.list_(pa.float32()))
+    for view in (arr, arr.slice(13, 20)):
+        m = _list_matrix(view)
+        want = np.array(view.to_pylist(), dtype=np.float32) \
+            .astype(np.float64)
+        assert m is not None and m.dtype == np.float64
+        assert m.shape == want.shape and np.array_equal(m, want)
+
+    f32 = pa.list_(pa.float32())
+    for bad in (pa.array([[1.0, 2.0], None], type=f32),       # null row
+                pa.array([[1.0, None], [3.0, 4.0]], type=f32),  # null elem
+                pa.array([[1.0, 2.0], [3.0]], type=f32),       # ragged
+                pa.array([], type=f32),                        # empty
+                pa.array([1.0, 2.0], type=pa.float64())):      # not a list
+        assert _list_matrix(bad) is None, bad
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        a = e.select(F.col("vec_id").alias("ia"),
+                     F.col("embedding").alias("x"))
+        b = e.select(F.col("vec_id").alias("ib"),
+                     F.col("embedding").alias("y"))
+        pairs = a.where("ia % 11 = 0").crossJoin(b.where("ib % 13 = 0"))
+        bad = (pairs.select(
+                   cosine_sim(F.col("x"), F.col("y")).alias("new"),
+                   cosine_sim_exprs(F.col("x"), F.col("y")).alias("old"))
+               .where("(new IS NULL) <> (old IS NULL) OR new <> old")
+               .count())
+        assert pairs.count() > 7, "one Arrow batch — boundaries untested"
+    finally:
+        spark.conf.set(key, old)
+    assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF form"
 
 
 def test_srp_bucket_rows_single_udf_eval(spark):
@@ -624,89 +679,3 @@ def test_srp_bucket_rows_single_udf_eval(spark):
     n_arrow = tree.count("ArrowEvalPython")
     assert n_arrow == 1, f"expected 1 ArrowEvalPython, got {n_arrow}:\n{tree}"
     assert "size(" not in plan, "inferred size() filter reappeared"
-
-
-def test_arrow_quant_screen_bit_identical_to_hof_form(spark):
-    """r15 pin: the REFERENCE Arrow quantized-screen kernel
-    (quant_screen_keep_arrow — measured and rejected for the production
-    path, kept for the adjudication) must make the BIT-identical keep
-    decision the shipping Catalyst HOF bound chain makes — same
-    left-to-right IEEE double sequence, same scalar-multiply order,
-    same int16 unpack arithmetic. NULL/ragged rows may differ only as
-    NULL-vs-False (both dropped by the gate's filter). Dense corpus
-    pairs catch re-association drift; the degenerate rows catch the
-    unpack/NULL paths."""
-    from pyspark.sql import functions as F
-    from full_stack_big_data_spark.engine.catalog import Catalog
-    from full_stack_big_data_spark.operators.similarity import (
-        quant_screen_keep, quant_screen_keep_arrow, quantized_vec_cols)
-
-    e = Catalog(spark, SF_SMOKE).embeddings
-    qz = quantized_vec_cols(e.select("vec_id", "embedding")).where(
-        "vec_id % 5 = 0")
-    x = (e.select(F.col("vec_id").alias("ix"),
-                  F.col("embedding").alias("qv"))
-         .where("ix % 7 = 0"))
-    pairs = x.crossJoin(qz)
-    args = (F.col("qv"), F.col("w32"), F.col("s"))
-    bad = (pairs.select(quant_screen_keep_arrow(*args).alias("new"),
-                        quant_screen_keep(*args).alias("old"))
-           .where("new <> coalesce(old, false)").count())
-    assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF screen"
-    # the sweep must exercise both outcomes or the comparison is vacuous
-    kept = pairs.where(quant_screen_keep_arrow(*args)).count()
-    assert 0 < kept < pairs.count()
-
-    degenerate = spark.createDataFrame(
-        [(1, [0.0] * 4, [0, 0], 0.0),             # zero query + zero codes
-         (2, [1.0, 2.0, 3.0, 4.0], [65537, 65537], 1e-4),   # codes (1,1,1,1)
-         (3, [1.0, 2.0, 3.0, 4.0], [-65536, 131071], 2.0),  # negative codes
-         (4, [1.0, 2.0, 3.0, 4.0], [65537], 1.0),  # ragged: codes too short
-         (5, None, [65537, 65537], 1.0),           # null query
-         (6, [1.0, -1.0], [virt := 0x7FFF7FFF, virt], 3.05e-5)],  # int16 max
-        "id int, qv array<float>, w32 array<int>, s float")
-    rows = degenerate.select(
-        "id", quant_screen_keep_arrow(F.col("qv"), F.col("w32"),
-                                      F.col("s")).alias("new"),
-        quant_screen_keep(F.col("qv"), F.col("w32"),
-                          F.col("s")).alias("old")).collect()
-    for r in rows:
-        old = bool(r.old) if r.old is not None else False
-        assert r.new == old, r
-
-
-def test_zerocopy_cosine_bit_identical_to_hof_form(spark):
-    """r15 pin: the arrow_udf zero-copy cosine (cosine_sim_zerocopy,
-    routed to the corpus-scale pair scorers) must be BIT-identical to
-    the Catalyst HOF form — same fold, same NaN→NULL masking — across
-    dense corpus pairs and every degenerate path (null row, null
-    element, ragged lengths, zero norm), exactly like the r14 pandas
-    kernel's pin above."""
-    from pyspark.sql import functions as F
-    from full_stack_big_data_spark.engine.catalog import Catalog
-    from full_stack_big_data_spark.functions.vectors import (
-        cosine_sim_exprs, cosine_sim_zerocopy)
-
-    e = Catalog(spark, SF_SMOKE).embeddings
-    a = e.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("x"))
-    b = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("y"))
-    pairs = a.where("ia % 5 = 0").crossJoin(b.where("ib % 7 = 0"))
-    bad = (pairs.select(
-               cosine_sim_zerocopy(F.col("x"), F.col("y")).alias("new"),
-               cosine_sim_exprs(F.col("x"), F.col("y")).alias("old"))
-           .where("(new IS NULL) <> (old IS NULL) OR new <> old").count())
-    assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF form"
-
-    degenerate = spark.createDataFrame(
-        [(1, [0.0] * 4, [1.0, 2.0, 3.0, 4.0]),   # zero norm -> NULL
-         (2, None, [1.0, 2.0, 3.0, 4.0]),        # null row -> NULL
-         (3, [1.0, 2.0], [1.0, 2.0, 3.0, 4.0]),  # ragged -> NULL
-         (4, [1.0, None, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0]),  # null elem
-         (5, [1.0, -2.0, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0])],
-        "id int, x array<float>, y array<float>")
-    rows = degenerate.select(
-        "id", cosine_sim_zerocopy(F.col("x"), F.col("y")).alias("new"),
-        cosine_sim_exprs(F.col("x"), F.col("y")).alias("old")).collect()
-    for r in rows:
-        assert (r.new is None) == (r.old is None) and \
-            (r.new is None or r.new == r.old), r
