@@ -1218,8 +1218,9 @@ def phash_index_compact(spark: SparkSession, path: str, out_path: str,
     into a fixed ``files``-way layout (8 bytes/row — even a billion-doc
     index is single-digit GB, so a SMALL constant is the right shape;
     a deployment sizes ``files`` to index bytes / target file size)."""
-    idx = spark.read.parquet(path)
-    idx.repartition(files).write.mode("overwrite").parquet(out_path)
+    from ..engine.generations import write_generation
+
+    write_generation(spark.read.parquet(path), out_path, None, files)
 
 
 @register(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ..engine.catalog import Catalog
+from ..engine.generations import write_generation
 from ..engine.localdf import local_df
 from ..functions import observability
 from ..functions.skew import grouped_topk
@@ -753,20 +754,6 @@ def _ivf_assigned(e: DataFrame) -> DataFrame:
             .select("vec_id", "embedding", F.col("cells")[0].alias("cell")))
 
 
-def _cell_write_tasks(spark: SparkSession, cells: int = IVF_CELLS_WIDE) -> int:
-    """Task count for the cell-clustered index writes: min(cells,
-    defaultParallelism). An EXPLICIT count matters — a keyed
-    ``repartition("cell")`` with no count is AQE-coalesced to one task
-    on small inputs, which then creates every cell's file sequentially
-    (measured r14: 4.5 s vs 1.4 s for the same 256-file write at
-    sf0.1). Scale-adaptive, not tuned to local mode: on a cluster
-    defaultParallelism ≥ cells, so each task owns whole cells (one
-    file per cell); locally each task writes cells/N files in one
-    wave. Never exceeds ``cells`` — more tasks than partition dirs
-    would only add empty tasks."""
-    return max(1, min(cells, spark.sparkContext.defaultParallelism))
-
-
 def ivf_index_build(spark: SparkSession, sf_dir: str) -> str:
     """BUILD side of the persisted IVF lifecycle: assign the corpus to
     cells with the corpus-scaled sign codebook and write it
@@ -786,8 +773,7 @@ def ivf_index_build(spark: SparkSession, sf_dir: str) -> str:
 
     e = Catalog(spark, sf_dir).embeddings
     path = scratch_dir("fsbd_ivf_index_")
-    (_ivf_assigned(e).repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
+    write_generation(_ivf_assigned(e), path, "cell", IVF_CELLS_WIDE)
     return path
 
 
@@ -829,19 +815,23 @@ IVF_APPEND_MOD = 10   # vec_id % 10 == 0 plays "today's dump" in the append
 
 
 def ivf_index_compact(spark: SparkSession, path: str, out_path: str) -> None:
-    """Per-cell small-file compaction for the partitioned IVF index —
-    the ``sources/sinks.py::compact`` pattern applied to the index
-    layout: every append drops one file per touched cell per dump, and
-    a year of daily dumps is 365 files/cell (one task + one open each
-    at serve time). The rewrite repartitions BY the partition column so
-    each cell's rows land in exactly one task → ONE file per cell in
-    the new generation dir, partition layout (and so dynamic partition
-    pruning at serve) preserved. Explicit task count: see
-    ``_cell_write_tasks`` (hash partitioning still lands each cell
-    wholly in one task, so the one-file-per-cell pin holds)."""
-    idx = spark.read.parquet(path)
-    (idx.repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(out_path))
+    """Per-cell small-file compaction for the partitioned IVF index:
+    every append drops one file per touched cell per dump, and a year
+    of daily dumps is 365 files/cell (one task + one open each at serve
+    time). The fold is a cell-keyed generation write — ONE file per
+    cell in the new generation dir, partition layout (and so partition
+    pruning at serve) preserved (``engine.generations``)."""
+    write_generation(spark.read.parquet(path), out_path, "cell",
+                     IVF_CELLS_WIDE)
+
+
+def _ivf_base_build(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The IVF base generation at ``path``: the corpus minus today's
+    dump (vec_id % IVF_APPEND_MOD != 0) assigned with the stored sign
+    codebook, one file per cell (see :func:`ivf_index_build`)."""
+    base = Catalog(spark, sf_dir).embeddings.where(
+        F.col("vec_id") % IVF_APPEND_MOD != 0)
+    write_generation(_ivf_assigned(base), path, "cell", IVF_CELLS_WIDE)
 
 
 @register(
@@ -878,15 +868,12 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py."""
     from ..engine.scratch import scratch_dir
 
-    e = Catalog(spark, sf_dir).embeddings
+    dump = Catalog(spark, sf_dir).embeddings.where(
+        F.col("vec_id") % IVF_APPEND_MOD == 0)
     path = scratch_dir("fsbd_ivf_append_")
-    # clustered writes: one file per cell per write (see ivf_index_build)
-    _ivf_assigned(e.where(F.col("vec_id") % IVF_APPEND_MOD != 0)) \
-        .repartition(_cell_write_tasks(spark), "cell") \
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    _ivf_assigned(e.where(F.col("vec_id") % IVF_APPEND_MOD == 0)) \
-        .repartition(_cell_write_tasks(spark), "cell") \
-        .write.mode("append").partitionBy("cell").parquet(path)
+    _ivf_base_build(spark, sf_dir, path)
+    write_generation(_ivf_assigned(dump), path, "cell", IVF_CELLS_WIDE,
+                     mode="append")
     gen2 = scratch_dir("fsbd_ivf_append_gen2_")
     ivf_index_compact(spark, path, gen2)
     return ivf_index_serve(spark, sf_dir, gen2)
@@ -2911,10 +2898,9 @@ def _write_pq_codebook(spark: SparkSession, cb: np.ndarray,
     both. A 100 TB deployment keeps this shape: the codebook never
     grows with the corpus, so driver-side I/O is the correct layout at
     any scale (the CORPUS writes stay distributed)."""
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
+
+    from ..engine.generations import write_single_file
 
     tbl = pa.table(
         {"sub": pa.array([s for s in range(PQ_SUBSPACES)
@@ -2925,12 +2911,7 @@ def _write_pq_codebook(spark: SparkSession, cb: np.ndarray,
                         for s in range(PQ_SUBSPACES)
                         for j in range(PQ_CELLS)],
                        pa.list_(pa.int64()))})
-    os.makedirs(path, exist_ok=True)
-    for old in os.listdir(path):                 # overwrite semantics
-        if old.endswith(".parquet") or old == "_SUCCESS":
-            os.remove(os.path.join(path, old))
-    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
+    write_single_file(tbl, path)
 
 
 def ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
@@ -2948,9 +2929,8 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
     cb = _read_pq_codebook(
         spark, _pq_artifact_dir(spark, sf_dir) + "/codebook")
     path = scratch_dir("fsbd_ivfpq_index_")
-    (_ivfpq_corpus_index(spark, sf_dir, cb)
-     .repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
+    write_generation(_ivfpq_corpus_index(spark, sf_dir, cb), path, "cell",
+                     IVF_CELLS_WIDE)
     _write_pq_codebook(spark, cb, path + "/_codebook")
     return path
 
@@ -3033,6 +3013,19 @@ def _pq_trained_codebooks_on(spark: SparkSession,
     return cb
 
 
+def _ivfpq_base_build(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The IVFADC base generation at ``path``: PQ codebook TRAINED on
+    the base residues (vec_id % IVF_APPEND_MOD != 0 — codebooks are
+    constants of the generation, not of the stream), codes written one
+    file per cell, codebook stored inside the generation at
+    ``path/_codebook``."""
+    base = Catalog(spark, sf_dir).embeddings.where(
+        F.col("vec_id") % IVF_APPEND_MOD != 0)
+    cb = _pq_trained_codebooks_on(spark, base)
+    write_generation(_ivfpq_rows(base, cb), path, "cell", IVF_CELLS_WIDE)
+    _write_pq_codebook(spark, cb, path + "/_codebook")
+
+
 @register(
     "ann_ivfpq_index_append",
     oracle=_ivfpq_trained_oracle(
@@ -3074,20 +3067,15 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts pinned in tests/test_similarity.py."""
     from ..engine.scratch import scratch_dir
 
-    e = Catalog(spark, sf_dir).embeddings
-    base = e.where(F.col("vec_id") % IVF_APPEND_MOD != 0)
-    cb = _pq_trained_codebooks_on(spark, base)
+    dump = Catalog(spark, sf_dir).embeddings.where(
+        F.col("vec_id") % IVF_APPEND_MOD == 0)
     path = scratch_dir("fsbd_ivfpq_append_")
-    # clustered writes: one file per cell per write (see ivf_index_build)
-    (_ivfpq_rows(base, cb).repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
-    _write_pq_codebook(spark, cb, path + "/_codebook")
+    _ivfpq_base_build(spark, sf_dir, path)
     # today's dump: encoded with the codebook READ BACK from the store
     # (round-trip on the artifact, not the in-memory array)
     cb2 = _read_pq_codebook(spark, path + "/_codebook")
-    (_ivfpq_rows(e.where(F.col("vec_id") % IVF_APPEND_MOD == 0), cb2)
-     .repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("append").partitionBy("cell").parquet(path))
+    write_generation(_ivfpq_rows(dump, cb2), path, "cell", IVF_CELLS_WIDE,
+                     mode="append")
     gen2 = scratch_dir("fsbd_ivfpq_append_gen2_")
     ivf_index_compact(spark, path, gen2)
     _write_pq_codebook(spark, cb2, gen2 + "/_codebook")

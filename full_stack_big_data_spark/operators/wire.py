@@ -170,38 +170,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Small-files compaction.
 # ---------------------------------------------------------------------------
 
-COMPACT_TARGET_BYTES = 64 * 1024 * 1024
-
-
-def compact_parquet(spark: SparkSession, src_dir: str, dst_dir: str,
-                    target_bytes: int = COMPACT_TARGET_BYTES) -> int:
-    """Rewrite a many-small-files parquet directory into
-    ``ceil(bytes/target)`` files. Streaming micro-batch sinks and
-    per-executor writers leave thousands of tiny files per partition;
-    at 100 TB that murders scan planning (one task per file) and HDFS/
-    object-store metadata. Returns the output file count.
-
-    ``coalesce`` (not ``repartition``): compaction must not pay a
-    shuffle — it merges existing splits read-side, so the rewrite is
-    scan + write only.
-    """
-    import os
-    # Walk recursively: partitioned and streaming-sink layouts nest their
-    # files in subdirectories, and sizing only the top level would read 0
-    # bytes and silently collapse the dataset to coalesce(1).
-    size = 0
-    found = False
-    for root, _dirs, files in os.walk(src_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                size += os.path.getsize(os.path.join(root, f))
-                found = True
-    if not found:
-        raise ValueError(f"compact_parquet: no .parquet files under {src_dir}")
-    nfiles = max(1, -(-size // target_bytes))
-    spark.read.parquet(src_dir).coalesce(nfiles).write.mode("overwrite").parquet(dst_dir)
-    return nfiles
-
 
 @register(
     "q_compact_roundtrip",
@@ -216,6 +184,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang-level count/chars/checksum must hash-match DuckDB reading the
     ORIGINAL table, proving the rewrite is content-exact. The file-count
     reduction itself is pinned in ``tests/test_sinks.py``."""
+    from ..engine.generations import compact_parquet
     from ..engine.scratch import scratch_dir
     from ..functions.hashing import hex64
     d = Catalog(spark, sf_dir).documents.select(

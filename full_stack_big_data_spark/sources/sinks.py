@@ -30,35 +30,6 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def compact(spark: SparkSession, path: str, out_path: str,
-            target_file_bytes: int = 128 * 1024 * 1024) -> int:
-    """Compact a small-files parquet directory into ~``target_file_bytes``
-    files, content-preserving. Returns the number of output files.
-
-    The streaming sinks here (``streaming/rollup.py``, any foreachBatch
-    writer) produce one file per micro-batch per partition — the classic
-    small-files problem that degrades every later scan (one task + one
-    open per file; at 100 TB of minute-batches that's millions of files).
-    Compaction is a plain rewrite sized by the data: coalesce to
-    ``ceil(bytes / target)`` output files. ``coalesce`` (not
-    ``repartition``) — it merges existing partitions without a shuffle,
-    which is exactly right for a layout-only rewrite.
-    """
-    import math
-    import os
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, files in os.walk(path)
-        for f in files if f.endswith(".parquet"))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-    return sum(
-        1 for dp, _, files in os.walk(out_path)
-        for f in files if f.endswith(".parquet"))
-
-
 def read_merged_schema(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet directory whose files have EVOLVED schemas (columns
     added over time), unioning columns by name with NULLs for files that

@@ -8,11 +8,9 @@ module closes the symmetry with two entries:
 * ``stream_ivf_ingest`` — each micro-batch of "today's dump" is
   coarse-assigned with the STORED sign codebook (an index constant:
   old assignments never invalidate) in one Arrow pass and appended as
-  a ``batch_id=<epoch>`` partition under dynamic partition overwrite —
-  the family's exactly-once recipe at both replay layers (Structured
-  Streaming's checkpoint dedups batch delivery; a replayed foreachBatch
-  REWRITES its epoch partition instead of appending — crash-replay
-  pinned in tests/test_streaming.py). The entry returns the grown
+  an epoch partition (``engine.generations.append_epoch`` — exactly-once
+  at both replay layers; crash-replay pinned in
+  tests/test_streaming.py). The entry returns the grown
   (vec_id, cell) membership; the oracle replays the full-corpus
   assignment in SQL, so green proves streamed growth ≡ batch rebuild.
 
@@ -31,24 +29,23 @@ batch-sized partition write — zero streaming state, zero shuffles;
 compaction is one cell-keyed exchange of the index (sized by the
 index, never the corpus history); vacuum is driver-side directory ops
 on superseded generations only, between drains (quiescence is the
-caller's contract, engine/retention.py).
+caller's contract, engine/generations.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine.retention import vacuum_superseded
+from ..engine.generations import (append_epoch, read_epochs,
+                                  vacuum_checked, write_generation)
 from ..engine.session import tune_session
 from ..operators.registry import register
-from ..operators.similarity import (IVF_APPEND_MOD, _cell_write_tasks,
-                                    _ivf_assigned,
+from ..operators.similarity import (IVF_APPEND_MOD, IVF_CELLS_WIDE,
+                                    _ivf_assigned, _ivf_base_build,
                                     _ivf_scaled_assign_prefix,
                                     _ivf_scaled_oracle, ivf_index_serve)
 from .core import stream_table
-from .joins import _gate_dirs, _read_gate_output, _registered_cache
+from .joins import _gate_dirs, _registered_cache
 
 # vec_id % IVF_APPEND_MOD == 0 plays "today's dump" (the ann_ivf_index_
 # append convention); the base generation indexes the rest.
@@ -67,30 +64,20 @@ def _ivf_base_dir(spark: SparkSession, sf_dir: str) -> str:
     path = _IVF_BASE_DIRS.get(sf_dir)
     if path is not None:
         return path
-    from ..engine.catalog import Catalog
     from ..engine.scratch import scratch_dir
 
     path = scratch_dir("fsbd_ivf_stream_base_")
-    e = Catalog(spark, sf_dir).embeddings
-    # clustered write: one file per cell (similarity.ivf_index_build)
-    (_ivf_assigned(e.where(F.col("vec_id") % IVF_APPEND_MOD != 0))
-     .repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
+    _ivf_base_build(spark, sf_dir, path)
     _IVF_BASE_DIRS[sf_dir] = path
     return path
 
 
 def _ivf_ingest(epochs_dir: str):
     """foreachBatch body: assign the micro-batch with the stored sign
-    codebook (one Arrow pass, no shuffle) and write it as THIS epoch's
-    partition under dynamic overwrite — a crash-replay of the same
-    batch_id rewrites the partition instead of appending."""
+    codebook (one Arrow pass, no shuffle) and append it as THIS epoch's
+    partition (``engine.generations.append_epoch``)."""
     def body(batch: DataFrame, batch_id: int) -> None:
-        (_ivf_assigned(batch)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(epochs_dir))
+        append_epoch(_ivf_assigned(batch), batch_id, epochs_dir)
     return body
 
 
@@ -103,15 +90,16 @@ SELECT vec_id, CAST(cell AS INTEGER) AS cell FROM corpus
 """
 
 
-def _drain_ivf_dump(spark: SparkSession, sf_dir: str, epochs_dir: str,
+def _drain_ivf_dump(spark: SparkSession, sf_dir: str, body,
                     ckpt: str) -> None:
-    """availableNow drain of the dump residue through the ingest sink."""
+    """availableNow drain of the dump residue through the foreachBatch
+    ``body`` (``_ivf_ingest`` or ``_ivfpq_ingest``)."""
     path = f"{sf_dir}/embeddings.parquet"
     template = spark.read.parquet(path)
     feed = (stream_table(spark, path, template)
             .where(F.col("vec_id") % IVF_APPEND_MOD == 0)
             .select("vec_id", "embedding"))
-    q = (feed.writeStream.foreachBatch(_ivf_ingest(epochs_dir))
+    q = (feed.writeStream.foreachBatch(body)
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
@@ -146,10 +134,10 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     base = _ivf_base_dir(spark, sf_dir)
     epochs_dir, ckpt = _gate_dirs(_IVF_INGEST_DIRS, sf_dir, "ivf_ingest")
-    _drain_ivf_dump(spark, sf_dir, epochs_dir, ckpt)
+    _drain_ivf_dump(spark, sf_dir, _ivf_ingest(epochs_dir), ckpt)
     base_rows = (spark.read.parquet(base)
                  .select("vec_id", F.col("cell").cast("int").alias("cell")))
-    grown = _read_gate_output(spark, epochs_dir, "vec_id long, cell int")
+    grown = read_epochs(spark, epochs_dir, "vec_id long, cell int")
     return base_rows.unionByName(grown)
 
 
@@ -162,41 +150,27 @@ def _vacuumed_ivf_gen2(spark: SparkSession, sf_dir: str) -> str:
     path = _IVF_VAC_DIRS.get(sf_dir)
     if path is not None:
         return path
-    from ..engine.catalog import Catalog
     from ..engine.scratch import scratch_dir
 
     # 1. private base generation (vacuum DELETES its inputs — the
     # memoized family artifacts must never be its victims)
     base = scratch_dir("fsbd_ivfvac_base_")
-    e = Catalog(spark, sf_dir).embeddings
-    # clustered write: one file per cell (similarity.ivf_index_build)
-    (_ivf_assigned(e.where(F.col("vec_id") % IVF_APPEND_MOD != 0))
-     .repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(base))
+    _ivf_base_build(spark, sf_dir, base)
 
     # 2. ingest drain of the dump residue
     epochs = scratch_dir("fsbd_ivfvac_epochs_")
     ckpt = scratch_dir("fsbd_ivfvac_ckpt_")
-    _drain_ivf_dump(spark, sf_dir, epochs, ckpt)
+    _drain_ivf_dump(spark, sf_dir, _ivf_ingest(epochs), ckpt)
 
     # 3. compact: fold base ∪ epochs into one file per cell
     gen2 = scratch_dir("fsbd_ivfvac_gen2_")
-    base_rows = spark.read.parquet(base)
-    epoch_rows = spark.read.parquet(epochs).drop("batch_id")
-    (base_rows.unionByName(epoch_rows)
-     .repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(gen2))
+    epoch_rows = read_epochs(spark, epochs,
+                             "vec_id long, embedding array<float>, cell int")
+    write_generation(spark.read.parquet(base).unionByName(epoch_rows),
+                     gen2, "cell", IVF_CELLS_WIDE)
 
     # 4. vacuum — asserted inside the registered query, not just run
-    stats = vacuum_superseded(required=[gen2], superseded=[base, epochs])
-    if stats["bytes_reclaimed"] <= 0:
-        raise RuntimeError("vacuum reclaimed nothing — the lifecycle "
-                           f"left no superseded bytes: {stats}")
-    if any(os.path.isdir(p) for p in (base, epochs)):
-        raise RuntimeError("vacuum left a superseded generation alive")
-    if not os.path.isdir(ckpt):
-        raise RuntimeError("vacuum ate the streaming checkpoint — "
-                           "retention contract violated")
+    vacuum_checked([gen2], [base, epochs], ckpt)
     _IVF_VAC_DIRS[sf_dir] = gen2
     return gen2
 
@@ -236,27 +210,16 @@ _IVFPQ_BASE_DIRS: dict[str, str] = {}
 
 def _ivfpq_stream_base(spark: SparkSession, sf_dir: str) -> str:
     """The IVFADC base generation a long-running codes ingest grows
-    beside: PQ codebook TRAINED on the base residues (the append
-    lifecycle's rule — codebooks are constants of the generation, not
-    of the stream), codes cell-partitioned, codebook stored inside the
-    generation. Memoized per (process, corpus) like the SRP base."""
+    beside (``similarity._ivfpq_base_build``), memoized per (process,
+    corpus) like the SRP base."""
     path = _IVFPQ_BASE_DIRS.get(sf_dir)
     if path is not None:
         return path
-    from ..engine.catalog import Catalog
     from ..engine.scratch import scratch_dir
-    from ..operators.similarity import (_ivfpq_rows,
-                                        _pq_trained_codebooks_on,
-                                        _write_pq_codebook)
+    from ..operators.similarity import _ivfpq_base_build
 
     path = scratch_dir("fsbd_ivfpq_stream_base_")
-    e = Catalog(spark, sf_dir).embeddings
-    base = e.where(F.col("vec_id") % IVF_APPEND_MOD != 0)
-    cb = _pq_trained_codebooks_on(spark, base)
-    # clustered write: one file per cell (similarity.ivf_index_build)
-    (_ivfpq_rows(base, cb).repartition(_cell_write_tasks(spark), "cell")
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
-    _write_pq_codebook(spark, cb, path + "/_codebook")
+    _ivfpq_base_build(spark, sf_dir, path)
     _IVFPQ_BASE_DIRS[sf_dir] = path
     return path
 
@@ -264,16 +227,12 @@ def _ivfpq_stream_base(spark: SparkSession, sf_dir: str) -> str:
 def _ivfpq_ingest(epochs_dir: str, cb):
     """foreachBatch body: coarse-assign AND PQ-encode the micro-batch
     with the STORED codebook (one Arrow pass — the `_ivfpq_rows`
-    kernel), written as this epoch's partition under dynamic overwrite
-    (replay rewrites, never appends)."""
+    kernel), appended as this epoch's partition
+    (``engine.generations.append_epoch``)."""
     from ..operators.similarity import _ivfpq_rows
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        (_ivfpq_rows(batch, cb)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(epochs_dir))
+        append_epoch(_ivfpq_rows(batch, cb), batch_id, epochs_dir)
     return body
 
 
@@ -323,15 +282,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _read_pq_codebook(spark, base + "/_codebook")
     epochs_dir, ckpt = _gate_dirs(_IVFPQ_INGEST_DIRS, sf_dir,
                                   "ivfpq_ingest")
-    path = f"{sf_dir}/embeddings.parquet"
-    template = spark.read.parquet(path)
-    feed = (stream_table(spark, path, template)
-            .where(F.col("vec_id") % IVF_APPEND_MOD == 0)
-            .select("vec_id", "embedding"))
-    q = (feed.writeStream.foreachBatch(_ivfpq_ingest(epochs_dir, cb))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _drain_ivf_dump(spark, sf_dir, _ivfpq_ingest(epochs_dir, cb), ckpt)
     probes, probed = _ivfpq_probe_luts_and_cells(spark, sf_dir, cb)
     # static partition pruning on the base generation's cell dirs
     # (similarity.ivf_index_serve); the epoch side is batch_id-
@@ -340,8 +291,8 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .where(F.col("cell").isin(probed))
                  .select("vec_id", F.col("cell").cast("int").alias("cell"),
                          "codes"))
-    grown = (_read_gate_output(spark, epochs_dir,
-                               "vec_id long, cell int, codes array<bigint>")
+    grown = (read_epochs(spark, epochs_dir,
+                         "vec_id long, cell int, codes array<bigint>")
              .where(F.col("cell").isin(probed)))
     idx = base_rows.unionByName(grown)
     return _ivfpq_serve(idx, probes)

@@ -22,8 +22,10 @@ plain-SQL DuckDB oracle (same rows a batch run would produce).
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.generations import append_epoch, read_epochs, write_generation
 from ..engine.session import tune_session
 from ..operators.registry import register
 from ..operators.similarity import SRP_BITS_WIDE as _SRP_BITS_WIDE
@@ -191,21 +193,6 @@ _EVAL_INDEX_DIRS: dict[str, str] = {}
 _DECONTAM_DIRS = _registered_cache()
 
 
-def _read_gate_output(spark: SparkSession, out_dir: str,
-                      schema: str) -> DataFrame:
-    """Read an ingest gate's epoch-partitioned sink with an EXPLICIT
-    schema: a feed whose every batch is fully dropped writes no files,
-    and a schema-less parquet read of the empty directory raises
-    UNABLE_TO_INFER_SCHEMA — an all-dropped stream is an EMPTY result,
-    not an error (surfaced by the sf1.0 curate probe, where the decade
-    corpus's token suffixing zeroes English-stopword evidence
-    corpus-wide). The batch_id partition column is layout, not
-    contract: the explicit schema omits it, and the drop removes the
-    discovered partition column when files exist (a no-op on the
-    empty read, where nothing was discovered)."""
-    return spark.read.schema(schema).parquet(out_dir).drop("batch_id")
-
-
 def _eval_gram_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the eval set's distinct n-grams as parquet ONCE per
     (process, corpus) — the persisted reference set a long-running
@@ -235,20 +222,11 @@ def _decontam_admit(index_path: str, out_dir: str):
     """foreachBatch body: within each micro-batch (a plain batch
     DataFrame, so the full join surface applies) broadcast the stored
     gram index, left-semi it against the batch's exploded grams to find
-    contaminated doc_ids, anti-join them away, write survivors to the
-    output parquet. The index is read through the BATCH's session —
-    foreachBatch hands a micro-batch clone, and mixing DataFrames
-    across sessions is an error.
-
-    The write is IDEMPOTENT per epoch (r9 ADVICE): foreachBatch is
-    at-least-once — a crash after the sink write but before the
-    checkpoint commit replays the micro-batch — so survivors land in a
-    ``batch_id=<epoch>`` partition under DYNAMIC partition overwrite.
-    A replayed epoch rewrites ITS OWN partition in place instead of
-    appending a duplicate file set; epochs never overwrite each other.
-    This is the documented recipe for exactly-once semantics over an
-    at-least-once callback: deterministic batch content (a file feed
-    replays byte-identical) + an idempotent epoch-keyed write."""
+    contaminated doc_ids, anti-join them away, append survivors as the
+    epoch's partition (idempotent under replay — the argument is in
+    ``engine.generations``). The index is read through the BATCH's
+    session — foreachBatch hands a micro-batch clone, and mixing
+    DataFrames across sessions is an error."""
     def admit(batch: DataFrame, batch_id: int) -> None:
         idx = batch.sparkSession.read.parquet(index_path)
         # Batch-scoped persist: the tokenize + n-gram projection feeds
@@ -261,12 +239,11 @@ def _decontam_admit(index_path: str, out_dir: str):
             g = batch.select("doc_id", F.explode("gs").alias("g"))
             hits = (g.join(F.broadcast(idx), "g", "left_semi")
                     .select("doc_id").distinct())
-            (batch.join(hits, "doc_id", "left_anti")
-             .select("doc_id", F.size("gs").cast("int").alias("n_grams"),
-                     F.lit(batch_id).alias("batch_id"))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(out_dir))
+            append_epoch(
+                batch.join(hits, "doc_id", "left_anti")
+                .select("doc_id",
+                        F.size("gs").cast("int").alias("n_grams")),
+                batch_id, out_dir)
         finally:
             batch.unpersist()
     return admit
@@ -309,13 +286,9 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: readStream over the document feed → map-side gram arrays →
     checkpointed ``foreachBatch`` where each micro-batch broadcast-joins
     the stored index (benchmark-sized — KBs against a TB/day feed) and
-    writes survivors to the output table. Replay is idempotent at BOTH
-    layers: the checkpoint records consumed source files, so a restart
-    (or a second drain over an unchanged feed) adds zero batches and
-    zero rows — and if a crash lands between the sink write and the
-    checkpoint commit, the replayed epoch's dynamic partition
-    overwrite rewrites its own ``batch_id`` partition instead of
-    appending duplicates (both pinned in tests/test_streaming.py).
+    writes survivors to the output table. Replay is idempotent at both
+    layers (the argument is in ``engine.generations``; both pinned in
+    tests/test_streaming.py).
 
     Scale: per-batch cost is one broadcast membership join + a
     batch-local doc_id dedup — no streaming state store at all (the
@@ -348,8 +321,7 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     # batch_id is a sink-layout column (the idempotency key), not part
     # of the query's result contract — project it away for the oracle.
-    return _read_gate_output(spark, out_dir,
-                             "doc_id long, n_grams int")
+    return read_epochs(spark, out_dir, "doc_id long, n_grams int")
 
 
 # ---------------------------------------------------------------------------
@@ -367,10 +339,9 @@ def _phash_gate(index_path: str, target_dir: str, sensor: str):
     finding): hash the micro-batch's payloads (the two Arrow passes of
     ``phash_signature_frame``), bipartite banded-join the batch
     signatures against the stored corpus index, drop every new doc
-    with a hamming ≤ ball hit, write survivors' signature rows to a
-    ``batch_id=<epoch>`` partition under dynamic partition overwrite
-    (the idempotent-replay recipe pinned on ``_decontam_admit``). The
-    index is read through the BATCH's session; the signature frame is
+    with a hamming ≤ ball hit, append survivors' signature rows as the
+    epoch's partition (``engine.generations.append_epoch``). The index
+    is read through the BATCH's session; the signature frame is
     batch-scoped persisted (feeds the banded probe AND the final
     anti-join)."""
     def body(batch: DataFrame, batch_id: int) -> None:
@@ -387,11 +358,8 @@ def _phash_gate(index_path: str, target_dir: str, sensor: str):
                         band_bits=PHASH_BAND_BITS_SCALED, sig_col="phash",
                         sensor=sensor, hamming_max=PHASH_HAMMING_MAX)
                     .select(F.col("new_doc").alias("doc_id")).distinct())
-            (sig.join(hits, "doc_id", "left_anti")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(target_dir))
+            append_epoch(sig.join(hits, "doc_id", "left_anti"), batch_id,
+                         target_dir)
         finally:
             sig.unpersist()
     return body
@@ -491,7 +459,7 @@ def stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return _read_gate_output(spark, out_dir, "doc_id long, phash long")
+    return read_epochs(spark, out_dir, "doc_id long, phash long")
 
 
 _PHASH_INGEST_DIRS = _registered_cache()
@@ -576,8 +544,7 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
          .trigger(availableNow=True).start())
     q.awaitTermination()
     base = spark.read.parquet(base_dir).select("doc_id", "phash")
-    grown = _read_gate_output(spark, epochs_dir,
-                              "doc_id long, phash long")
+    grown = read_epochs(spark, epochs_dir, "doc_id long, phash long")
     return base.unionByName(grown)
 
 
@@ -605,6 +572,15 @@ def _verify_pool():
     (OPTIMIZATION_r15.md §1)."""
     from concurrent.futures import ThreadPoolExecutor
     return ThreadPoolExecutor(max_workers=1)
+
+
+def _verify_submit(pool, spark: SparkSession, fn, *args):
+    """Run ``fn(*args)`` on the verify pool under the SUBMITTING
+    thread's Spark local properties. A bare ``pool.submit`` runs the
+    collect with none: it loses the micro-batch's job group, so a
+    failed or cancelled batch leaves a job that stopping the query
+    cannot cancel."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
 
 def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
@@ -639,7 +615,7 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
         pool = _verify_pool()
         try:
             ids_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids1 = pool.submit(fetch_ids, ids_df, "vec_id")
+            ids1 = _verify_submit(pool, spark, fetch_ids, ids_df, "vec_id")
             # §2.6 overlap: while the candidate-id collect materializes
             # the bucket join on the pool thread, the driver builds the
             # Cauchy-Schwarz screen's HOF expression trees
@@ -656,7 +632,8 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
                     .select("old_id", "vec_id").persist())
             scope.append(cand)
             ids2_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids2 = pool.submit(fetch_ids, ids2_df, "vec_id")
+            ids2 = _verify_submit(pool, spark, fetch_ids, ids2_df,
+                                  "vec_id")
             # Overlap again: the screen's materialization + collect runs
             # while the driver constructs (and registers) the exact
             # Arrow cosine UDF for tier 2.
@@ -691,13 +668,13 @@ def _embedding_gate(index_path: str, payload_path: str, target_dir: str,
     against the stored corpus index, verify candidates with the exact
     cosine kernel over POINT-FETCHED payload rows (engine.pointfetch —
     per-batch I/O ∝ candidates, never an embeddings.parquet pass), and
-    write ``survivors(batch, nb, hits)`` to a ``batch_id=<epoch>``
-    partition under dynamic partition overwrite (the family's
-    idempotent-replay recipe). Candidates carry IDS ONLY through the
-    bucket join; the bucket rows and candidate subtree are batch-scoped
-    persisted (each feeds two consumers). ``tables``/``bits`` default
-    to the registered fixture operating point; the sf1.0 probe
-    overrides bits to the N/64 sizing rule against a matching index."""
+    append ``survivors(batch, nb, hits)`` as the epoch's partition
+    (``engine.generations.append_epoch``). Candidates carry IDS ONLY
+    through the bucket join; the bucket rows and candidate subtree are
+    batch-scoped persisted (each feeds two consumers).
+    ``tables``/``bits`` default to the registered fixture operating
+    point; the sf1.0 probe overrides bits to the N/64 sizing rule
+    against a matching index."""
     def body(batch: DataFrame, batch_id: int) -> None:
         from ..functions import observability
         from ..operators.similarity import (SRP_BITS, SRP_TABLES,
@@ -721,11 +698,8 @@ def _embedding_gate(index_path: str, payload_path: str, target_dir: str,
                 hits = _cosine_verify_hits(
                     ss, cand, batch, payload_path,
                     quant_payload_path=quant_payload_path, scope=scope)
-                (survivors(batch, nb, hits)
-                 .withColumn("batch_id", F.lit(batch_id))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id").parquet(target_dir))
+                append_epoch(survivors(batch, nb, hits), batch_id,
+                             target_dir)
             finally:
                 for df in scope:
                     df.unpersist()
@@ -816,7 +790,7 @@ def _run_embedding_admit(spark: SparkSession, sf_dir: str, cache: dict,
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return _read_gate_output(spark, out_dir, "vec_id long")
+    return read_epochs(spark, out_dir, "vec_id long")
 
 
 @register(
@@ -956,7 +930,7 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
         pool = _verify_pool()
         try:
             ids_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids1 = pool.submit(fetch_ids, ids_df, "doc_id")
+            ids1 = _verify_submit(pool, spark, fetch_ids, ids_df, "doc_id")
             # §2.6 overlap: the candidate-id collect (which materializes
             # the signature chain + bucket join) runs on the pool thread
             # while the driver builds the hash-screen expression trees —
@@ -983,7 +957,8 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
                     .persist())
             scope.append(cand)
             ids2_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids2 = pool.submit(fetch_ids, ids2_df, "doc_id")
+            ids2 = _verify_submit(pool, spark, fetch_ids, ids2_df,
+                                  "doc_id")
             # Overlap again: the screen materializes + collects on the
             # pool thread while the driver constructs tier 2's
             # re-shingle expression chain (the exact kernel the index
@@ -1025,9 +1000,9 @@ def _text_gate(index_path: str, payload_path: str | None,
     band rows against the stored corpus index, verify candidates with
     EXACT jaccard over POINT-FETCHED payload shingle sets
     (engine.pointfetch — per-batch I/O ∝ candidates' pk directories,
-    never a corpus pass), and write ``survivors(sh_new, bands_new,
-    hits)`` to a ``batch_id=<epoch>`` partition under dynamic partition
-    overwrite (the family's idempotent-replay recipe). The shingle
+    never a corpus pass), and append ``survivors(sh_new, bands_new,
+    hits)`` as the epoch's partition
+    (``engine.generations.append_epoch``). The shingle
     frame, band rows, and candidate subtree are each batch-scoped
     persisted — every one feeds two consumers (r10 ADVICE pattern)."""
     def body(batch: DataFrame, batch_id: int) -> None:
@@ -1061,11 +1036,8 @@ def _text_gate(index_path: str, payload_path: str | None,
                                                 hash_payload_path,
                                                 text_payload_path,
                                                 scope=scope)
-                    (survivors(sh_new, bands_new, hits)
-                     .withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .option("partitionOverwriteMode", "dynamic")
-                     .partitionBy("batch_id").parquet(target_dir))
+                    append_epoch(survivors(sh_new, bands_new, hits),
+                                 batch_id, target_dir)
                 finally:
                     for df in scope:
                         df.unpersist()
@@ -1178,8 +1150,7 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return _read_gate_output(spark, out_dir,
-                             "doc_id long, n_shingles int")
+    return read_epochs(spark, out_dir, "doc_id long, n_shingles int")
 
 
 # ---------------------------------------------------------------------------
@@ -1281,8 +1252,8 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (spark.read.parquet(base_dir)
             .select("doc_id", F.col("band").cast("int").alias("band"),
                     "bucket"))
-    grown = _read_gate_output(spark, epochs_dir,
-                              "doc_id long, band int, bucket string")
+    grown = read_epochs(spark, epochs_dir,
+                        "doc_id long, band int, bucket string")
     return base.unionByName(grown)
 
 
@@ -1349,8 +1320,8 @@ def _run_embedding_ingest(spark: SparkSession, sf_dir: str, cache: dict,
             .select("vec_id",
                     F.col("table_id").cast("int").alias("table_id"),
                     F.col("bucket").cast("int").alias("bucket")))
-    grown = _read_gate_output(spark, epochs_dir,
-                              "vec_id long, table_id int, bucket int")
+    grown = read_epochs(spark, epochs_dir,
+                        "vec_id long, table_id int, bucket int")
     return base.unionByName(grown)
 
 
@@ -1457,11 +1428,10 @@ def _fold_text_generations(spark: SparkSession, sf_dir: str,
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
     from ..engine.scratch import scratch_dir
-    from ..operators.dedup import _shingle_sets, hashed_shingle_cols
+    from ..operators.dedup import BANDS, _shingle_sets, hashed_shingle_cols
 
     gen2 = scratch_dir("fsbd_text_index_gen2_")
-    (grown.repartition("band")
-     .write.mode("overwrite").partitionBy("band").parquet(gen2))
+    write_generation(grown, gen2, "band", BANDS)
     member = grown.select("doc_id").distinct().persist()
     try:
         pay2h = scratch_dir("fsbd_text_hash_payload_gen2_")
@@ -1518,9 +1488,8 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold that lost, duplicated, or corrupted any row hash-mismatches.
     File-count and payload-serve pins live in tests/test_streaming.py.
     RETENTION: the fold supersedes the base + epoch + payload
-    directories it read; engine.retention.vacuum_superseded reclaims
-    them (completeness-gated on gen2's _SUCCESS, delete-last,
-    idempotent, quiescence the caller's contract — pinned in
+    directories it read; engine.generations.vacuum_superseded reclaims
+    them (the crash-safety argument is in that module; pinned in
     tests/test_streaming.py::test_retention_vacuum_superseded_generations).
 
     Scale: the fold is ONE index-sized exchange (repartition on the
@@ -1553,11 +1522,11 @@ def embedding_index_compact_dirs(spark: SparkSession,
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
     from ..engine.scratch import scratch_dir
+    from ..operators.similarity import SRP_TABLES
 
     grown = stream_embedding_ingest_scaled(spark, sf_dir)  # memoized drain
     gen2 = scratch_dir("fsbd_emb_index_gen2_")
-    (grown.repartition("table_id")
-     .write.mode("overwrite").partitionBy("table_id").parquet(gen2))
+    write_generation(grown, gen2, "table_id", SRP_TABLES)
     pay2 = scratch_dir("fsbd_emb_payload_gen2_")
     member = grown.select("vec_id").distinct()
     write_payload(
@@ -1600,9 +1569,8 @@ def embedding_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`text_index_compact` for the shape and scale argument; here
     the fold exchange is keyed on table_id and the payload rebuild is
     one pass over the grown vector membership. RETENTION: same recipe
-    as the text compact — engine.retention.vacuum_superseded reclaims
-    the superseded base/epoch/payload dirs, completeness-gated on
-    gen2's _SUCCESS. Folds the
+    as the text compact — engine.generations.vacuum_superseded reclaims
+    the superseded base/epoch/payload dirs. Folds the
     SCALED-geometry drain (r11 verdict item 1): the registered
     lifecycle — admit → grow → compact — runs end-to-end at the
     2^bits ≈ N/64 operating point whose decade probe is linear, with
@@ -1646,7 +1614,7 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
     execution order is the cost order: the map-only quality gate first
     shrinks the batch, the broadcast gram check runs on survivors, and
     only they pay MinHash banding + the point-fetch verify. One
-    epoch-keyed idempotent write, the family recipe."""
+    epoch append (``engine.generations.append_epoch``)."""
     def admit(batch: DataFrame, batch_id: int) -> None:
         from ..functions import observability
         from ..functions.text import token_ngrams, tokens
@@ -1705,14 +1673,12 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
                                                 hash_payload_path,
                                                 text_payload_path,
                                                 scope=scope)
-                    (clean.select("doc_id", "lang",
-                                  F.col("n_tokens").cast("int")
-                                  .alias("n_tokens"))
-                     .join(hits, "doc_id", "left_anti")
-                     .withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .option("partitionOverwriteMode", "dynamic")
-                     .partitionBy("batch_id").parquet(out_dir))
+                    append_epoch(
+                        clean.select("doc_id", "lang",
+                                     F.col("n_tokens").cast("int")
+                                     .alias("n_tokens"))
+                        .join(hits, "doc_id", "left_anti"),
+                        batch_id, out_dir)
                 finally:
                     for df in scope:
                         df.unpersist()
@@ -1821,8 +1787,8 @@ def stream_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return _read_gate_output(spark, out_dir,
-                             "doc_id long, lang string, n_tokens int")
+    return read_epochs(spark, out_dir,
+                       "doc_id long, lang string, n_tokens int")
 
 
 def reset_gate_dirs() -> None:

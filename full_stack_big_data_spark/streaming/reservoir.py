@@ -26,7 +26,7 @@ is what buys exactly-once without epoch-partitioned sinks:
   ∪ batch — the repo's foreachBatch versioned-state recipe), so a
   replayed epoch rewrites ITS OWN version from the same inputs and a
   torn write never corrupts the previous version. Superseded versions
-  are reclaimable with engine.retention.vacuum_superseded once the
+  are reclaimable with engine.generations.vacuum_superseded once the
   stream is quiescent.
 
 Scale: per-batch work is one map-side key projection over the batch,
@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.localdf import local_df
-from ..engine.retention import _is_committed
+from ..engine.generations import committed
 from ..engine.session import tune_session
 from ..functions.hashing import hex64, hex64_sql
 from ..operators.registry import register
@@ -56,7 +56,7 @@ _R_SALT = "reservoir|"
 def _committed_versions(state_root: str,
                         below: int | None = None) -> list[int]:
     """Snapshot versions with a ``_SUCCESS`` commit record (the same
-    commit discipline engine.retention enforces — r12 ADVICE): a crash
+    commit discipline engine.generations enforces — r12 ADVICE): a crash
     mid-write of v=N leaves a torn directory that neither serving nor
     the replay's prev-version scan may read; the replay of N rewrites
     it from committed v<N inputs."""
@@ -67,7 +67,7 @@ def _committed_versions(state_root: str,
         v = int(d.split("=", 1)[1])
         if below is not None and v >= below:
             continue
-        if _is_committed(os.path.join(state_root, d)):
+        if committed(os.path.join(state_root, d)):
             out.append(v)
     return sorted(out)
 

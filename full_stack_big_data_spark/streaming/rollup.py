@@ -68,17 +68,16 @@ def serve_hourly(spark: SparkSession, rollup_path: str) -> DataFrame:
 
 def compact_rollup(spark: SparkSession, rollup_path: str,
                    out_path: str) -> None:
-    """Fold the batch-keyed partial directories into one generation —
-    the periodic maintenance job the module docstring promises. The
-    stream accumulates one directory per micro-batch; at 100 TB/day
-    that is millions of small files per week, and small-file pressure
-    (listing cost, open-per-file, metadata) is the serving store's real
-    scale limit — NOT data volume, which stays hours × event_types.
-    Compaction is a plain re-aggregation of the same shape (SUM of
-    counts and decimal partial sums, exact and order-independent), so
-    serving from the compacted generation equals serving from the
-    batch-keyed history bit-for-bit — registered and oracle-checked as
-    ``stream_serving_compacted``. A deployment runs this behind a
-    generation swap (write new dir, flip a pointer, drop the old) so
-    serving never reads a half-compacted store."""
-    serve_hourly(spark, rollup_path).write.mode("overwrite").parquet(out_path)
+    """Fold the batch-keyed partial directories into ONE file at
+    ``out_path``. The stream leaves one directory per micro-batch, and
+    small-file count (listing, open-per-file, metadata) is the serving
+    store's scale limit — not data volume, which stays hours ×
+    event_types. The fold is a plain re-aggregation of the same shape
+    (exact, order-independent SUMs), so serving from ``out_path``
+    equals serving from the batch-keyed history bit-for-bit —
+    oracle-checked as ``stream_serving_compacted``. The caller serves
+    from ``out_path`` once this returns; the batch directories are then
+    superseded (``engine.generations.vacuum_superseded``)."""
+    from ..engine.generations import write_generation
+
+    write_generation(serve_hourly(spark, rollup_path), out_path, None, 1)

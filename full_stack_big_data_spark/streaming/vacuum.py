@@ -1,7 +1,7 @@
 """Registered end-to-end index-retention lifecycle (r12 verdict
 item 3): ingest → compact → **vacuum** → serve, in one driver entry.
 
-``engine.retention.vacuum_superseded`` carries the crash-safety
+``engine.generations.vacuum_superseded`` carries the crash-safety
 contract (completeness-gated, delete-last, idempotent) and is pinned
 in pytest, but until this entry no driver query ever SERVED from a
 store whose superseded generations were actually reclaimed — the
@@ -44,21 +44,19 @@ Scale: steps 1-3 are the family's linear build/fold passes; step 4 is
 driver-side directory ops on superseded paths only; step 5 is the
 standard zero-state admit gate. Nothing here adds a shuffle to the
 ingest hot path — vacuum is maintenance between drains, which is why
-quiescence is the caller's contract (engine/retention.py).
+quiescence is the caller's contract (engine/generations.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine.retention import vacuum_superseded
+from ..engine.generations import read_epochs, vacuum_checked
 from ..engine.session import tune_session
 from ..operators.registry import register
 from .core import stream_table
-from .joins import (_fold_text_generations, _gate_dirs, _read_gate_output,
-                    _registered_cache, _text_admit, _text_ingest)
+from .joins import (_fold_text_generations, _gate_dirs, _registered_cache,
+                    _text_admit, _text_ingest)
 
 # doc_id % 4 → lifecycle role: {0,1} = the old corpus the base
 # generation indexes; 2 = the ingested dump that grows the index;
@@ -127,22 +125,13 @@ def _vacuumed_gen2_dirs(spark: SparkSession,
     base_rows = (spark.read.parquet(base)
                  .select("doc_id", F.col("band").cast("int").alias("band"),
                          "bucket"))
-    epoch_rows = _read_gate_output(spark, epochs,
-                                   "doc_id long, band int, bucket string")
+    epoch_rows = read_epochs(spark, epochs,
+                             "doc_id long, band int, bucket string")
     gen2, gen2h, gen2t = _fold_text_generations(
         spark, sf_dir, base_rows.unionByName(epoch_rows))
 
     # 4. vacuum the superseded generations — asserted, not just run
-    stats = vacuum_superseded(required=[gen2, gen2h, gen2t],
-                              superseded=[base, epochs, payh, payt])
-    if stats["bytes_reclaimed"] <= 0:
-        raise RuntimeError("vacuum reclaimed nothing — the lifecycle "
-                           f"left no superseded bytes: {stats}")
-    if any(os.path.isdir(p) for p in (base, epochs, payh, payt)):
-        raise RuntimeError("vacuum left a superseded generation alive")
-    if not os.path.isdir(ckpt):
-        raise RuntimeError("vacuum ate the streaming checkpoint — "
-                           "retention contract violated")
+    vacuum_checked([gen2, gen2h, gen2t], [base, epochs, payh, payt], ckpt)
     dirs = (gen2, gen2h, gen2t)
     _VAC_GEN2_DIRS[sf_dir] = dirs
     return dirs
@@ -224,7 +213,7 @@ def text_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns dump B's admitted (doc_id, n_shingles) — the same surface
     as ``stream_text_admit`` — computed against a store whose
     superseded generations were DELETED before the serve drain
-    started, which is the end-to-end proof ``engine.retention``'s
+    started, which is the end-to-end proof ``engine.generations``'s
     pytest pins could not give the driver."""
     tune_session(spark)
     gen2, gen2h, gen2t = _vacuumed_gen2_dirs(spark, sf_dir)
@@ -242,5 +231,4 @@ def text_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return _read_gate_output(spark, out_dir,
-                             "doc_id long, n_shingles int")
+    return read_epochs(spark, out_dir, "doc_id long, n_shingles int")

@@ -213,9 +213,8 @@ STREAM_STATE_BOUNDS = {
                          "post-vacuum serve are the stateless per-doc "
                          "text gate); the lifecycle's only state is "
                          "ON DISK — private base/epoch/payload "
-                         "generations folded to gen2 and then "
-                         "RECLAIMED (engine.retention, completeness-"
-                         "gated), checkpoint preserved",
+                         "generations folded to gen2, then RECLAIMED "
+                         "(engine.generations), checkpoint kept",
     "stream_ivf_ingest": "zero store state: each batch is one map-only "
                          "Arrow assignment (no join at all — an index "
                          "ingests everything; dedup is the admit "
@@ -226,8 +225,8 @@ STREAM_STATE_BOUNDS = {
                         "map-only IVF assignment sink; the lifecycle's "
                         "only state is ON DISK — private base + epoch "
                         "generations folded to a one-file-per-cell "
-                        "gen2 and then RECLAIMED (engine.retention, "
-                        "completeness-gated), checkpoint preserved",
+                        "gen2, then RECLAIMED (engine.generations), "
+                        "checkpoint kept",
     "stream_ivfpq_ingest": "zero store state: each batch is one "
                            "map-only Arrow pass (coarse assignment + "
                            "PQ encode with the stored codebook) "

@@ -37,12 +37,12 @@ def test_interval_query_prunes_partitions(spark, tmp_path):
 
 
 def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
-    """sources/sinks.py::compact — the small-files fix: 32 tiny files
-    compact into 1 target-sized file, byte-identical content, no shuffle
-    (coalesce keeps it a layout-only rewrite)."""
+    """engine/generations.py::compact_parquet — the small-files fix:
+    32 tiny files compact into 1 target-sized file, byte-identical
+    content, no shuffle (coalesce keeps it a layout-only rewrite)."""
     import os
     from full_stack_big_data_spark.engine.catalog import Catalog
-    from full_stack_big_data_spark.sources.sinks import compact
+    from full_stack_big_data_spark.engine.generations import compact_parquet
 
     ev = Catalog(spark, SF_SMOKE).events
     small = str(tmp_path / "small")
@@ -51,8 +51,8 @@ def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
     assert n_small == 32
 
     out = str(tmp_path / "compacted")
-    n_out = compact(spark, small, out)
-    assert n_out == 1  # sf0.001 events ≪ 128 MiB target
+    n_out = compact_parquet(spark, small, out)
+    assert n_out == 1  # sf0.001 events ≪ 64 MiB target
 
     a = spark.read.parquet(small)
     b = spark.read.parquet(out)
@@ -85,7 +85,7 @@ def test_compact_reduces_file_count_without_shuffle(spark, tmp_path):
     identical content; coalesce keeps the rewrite shuffle-free."""
     import os
     from full_stack_big_data_spark.engine.catalog import Catalog
-    from full_stack_big_data_spark.operators.wire import compact_parquet
+    from full_stack_big_data_spark.engine.generations import compact_parquet
     from conftest import SF_SMOKE
 
     d = Catalog(spark, SF_SMOKE).documents.select("doc_id", "text")
@@ -110,7 +110,7 @@ def test_compact_parquet_sizes_nested_layouts(spark, tmp_path):
 
     import pytest
 
-    from full_stack_big_data_spark.operators.wire import compact_parquet
+    from full_stack_big_data_spark.engine.generations import compact_parquet
 
     src = str(tmp_path / "partitioned")
     (spark.range(0, 50_000)
@@ -127,6 +127,17 @@ def test_compact_parquet_sizes_nested_layouts(spark, tmp_path):
     nfiles = compact_parquet(spark, src, out, target_bytes=target)
     assert nfiles == -(-nested_bytes // target), (nfiles, nested_bytes, target)
     assert spark.read.parquet(out).count() == 50_000
+
+    # One source file larger than target: coalesce cannot split it, so
+    # the count returned is the count on disk, not ceil(bytes/target).
+    single = str(tmp_path / "single")
+    spark.read.parquet(src).coalesce(1).write.parquet(single)
+    single_bytes = sum(os.path.getsize(os.path.join(single, f))
+                       for f in os.listdir(single) if f.endswith(".parquet"))
+    out1 = str(tmp_path / "compacted_single")
+    n1 = compact_parquet(spark, single, out1, target_bytes=target)
+    on_disk = sum(f.endswith(".parquet") for f in os.listdir(out1))
+    assert n1 == on_disk < -(-single_bytes // target), (n1, on_disk)
 
     empty = str(tmp_path / "empty")
     os.makedirs(empty)

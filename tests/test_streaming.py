@@ -748,18 +748,18 @@ def test_gate_output_read_is_empty_safe(spark, tmp_path):
     return an EMPTY frame with the contract schema, not raise
     UNABLE_TO_INFER_SCHEMA (surfaced by the sf1.0 curate probe). With
     files present, the batch_id layout column stays projected away."""
-    from full_stack_big_data_spark.streaming.joins import _read_gate_output
+    from full_stack_big_data_spark.engine.generations import read_epochs
 
     empty = str(tmp_path / "empty_sink")
     os.makedirs(empty)
-    got = _read_gate_output(spark, empty, "doc_id long, n_tokens int")
+    got = read_epochs(spark, empty, "doc_id long, n_tokens int")
     assert got.count() == 0 and got.columns == ["doc_id", "n_tokens"]
 
     full = str(tmp_path / "full_sink")
     (spark.createDataFrame([(1, 5, 0), (2, 7, 1)],
                            "doc_id long, n_tokens int, batch_id long")
      .write.partitionBy("batch_id").parquet(full))
-    got = _read_gate_output(spark, full, "doc_id long, n_tokens int")
+    got = read_epochs(spark, full, "doc_id long, n_tokens int")
     assert got.columns == ["doc_id", "n_tokens"]
     assert sorted(map(tuple, got.collect())) == [(1, 5), (2, 7)]
 
@@ -937,13 +937,13 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     import pytest
 
     from full_stack_big_data_spark.engine.pointfetch import write_payload
-    from full_stack_big_data_spark.engine.retention import (
-        IncompleteGenerationError, vacuum_superseded)
+    from full_stack_big_data_spark.engine.generations import (
+        IncompleteGenerationError, read_epochs, vacuum_superseded)
     from full_stack_big_data_spark.functions.text import token_ngrams, tokens
     from full_stack_big_data_spark.operators.dedup import (
         SHINGLE_N, _band_rows, hashed_shingle_cols)
     from full_stack_big_data_spark.streaming.joins import (
-        _read_gate_output, _text_admit, _text_ingest)
+        _text_admit, _text_ingest)
 
     def sh(df):
         return (df.select("doc_id", tokens("text").alias("toks"))
@@ -974,7 +974,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     grown = (spark.read.parquet(base)
              .select("doc_id", F.col("band").cast("int").alias("band"),
                      "bucket")
-             .unionByName(_read_gate_output(
+             .unionByName(read_epochs(
                  spark, epochs, "doc_id long, band int, bucket string")))
     gen2 = str(tmp_path / "gen2")
     (grown.repartition("band")
@@ -996,7 +996,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     admit = _text_admit(gen2, None, out_pre,
                         hash_payload_path=hpay2, text_payload_path=tpay2)
     admit(probe, 0)
-    pre = sorted(r.doc_id for r in _read_gate_output(
+    pre = sorted(r.doc_id for r in read_epochs(
         spark, out_pre, "doc_id long, n_shingles int").collect())
     assert pre == [32]
 
@@ -1020,7 +1020,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     admit2 = _text_admit(gen2, None, out_post,
                          hash_payload_path=hpay2, text_payload_path=tpay2)
     admit2(probe, 0)
-    post = sorted(r.doc_id for r in _read_gate_output(
+    post = sorted(r.doc_id for r in read_epochs(
         spark, out_post, "doc_id long, n_shingles int").collect())
     assert post == pre
 
@@ -1162,7 +1162,7 @@ def test_stream_reservoir_bounded_state_chop_invariance_and_replay(
     # (d) retention: superseded snapshot versions vacuum away
     # (completeness-gated on the live version) and the served sample
     # is unchanged — the reservoir's own storage never grows either.
-    from full_stack_big_data_spark.engine.retention import \
+    from full_stack_big_data_spark.engine.generations import \
         vacuum_superseded
     stats = vacuum_superseded([f"{state2}/v=1"], [f"{state2}/v=0"])
     assert stats["deleted"] == [f"{state2}/v=0"]
@@ -1383,3 +1383,24 @@ def test_stream_ivfpq_ingest_epoch_replay_writes_no_duplicates(spark, tmp_path):
     expected = sorted((r.vec_id, r.cell, tuple(r.codes))
                       for r in _ivfpq_rows(batch, cb).collect())
     assert once == expected and len(once) == 4
+
+
+def test_verify_pool_task_keeps_the_batch_job_group(spark):
+    """The verify tiers' id collects run on a pool thread; submitted
+    the way the gates submit them, they must carry the micro-batch's
+    job group, so cancelling the batch cancels their jobs too."""
+    from full_stack_big_data_spark.streaming.joins import (_verify_pool,
+                                                           _verify_submit)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("batch-7", "verify pool job-group pin")
+    pool = _verify_pool()
+    try:
+        got = _verify_submit(pool, spark, sc.getLocalProperty,
+                             "spark.jobGroup.id").result()
+    finally:
+        pool.shutdown(wait=True)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert got == "batch-7"
