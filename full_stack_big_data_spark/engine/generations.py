@@ -158,22 +158,25 @@ def compact_parquet(spark: SparkSession, src_dir: str, dst_dir: str,
     return len(_parquet_files(dst_dir))
 
 
-def write_single_file(table, path: str) -> None:
+def write_single_file(table, path: str) -> str:
     """Replace ``path`` with a one-file generation written driver-side:
     ``part-00000.parquet`` holding the pyarrow ``table``, then the
-    ``_SUCCESS`` commit record. For bounded artifacts (a codebook) where
-    a Spark job would cost more than the write. The old directory is
-    removed whole, so no part or checksum file of an earlier Spark write
-    survives."""
+    ``_SUCCESS`` commit record; returns the part file's path. For
+    bounded artifacts (a codebook, a rollup micro-batch's partials)
+    where a Spark job would cost more than the write. The old directory
+    is removed whole, so no part or checksum file of an earlier Spark
+    write survives."""
     import pyarrow.parquet as pq
 
     p = local_path(path)
     if os.path.isdir(p):
         shutil.rmtree(p)
     os.makedirs(p)
-    pq.write_table(table, os.path.join(p, "part-00000.parquet"))
+    part = os.path.join(p, "part-00000.parquet")
+    pq.write_table(table, part)
     with open(os.path.join(p, _COMMIT), "w"):
         pass
+    return part
 
 
 def _tree_bytes(path: str) -> int:

@@ -87,12 +87,13 @@ def _list_matrix(arr: pa.Array) -> np.ndarray | None:
     lens = np.diff(offs)
     if len(lens) == 0 or lens.min() != lens.max():
         return None
-    vals = arr.values
+    # only the slice's own elements: a sliced array shares its parent's
+    # whole values buffer, nulls outside the slice included
+    vals = arr.values.slice(offs[0], offs[-1] - offs[0])
     if vals.null_count:
         return None
     v = vals.to_numpy(zero_copy_only=True)
-    return (v[offs[0]:offs[-1]]
-            .reshape(len(lens), int(lens[0])).astype(np.float64))
+    return v.reshape(len(lens), int(lens[0])).astype(np.float64)
 
 
 def cosine_sim(a: Column, b: Column) -> Column:

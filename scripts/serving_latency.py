@@ -11,10 +11,13 @@ surface, README.md:45-55).
 Method: a live continuous query (processingTime trigger — THE knob)
 maintains the rollup store (streaming/rollup.py, the exactly-once
 batch-keyed layout) over a file source. For each of N rounds, one new
-parquet file of events is dropped at t0, then the serving read
-(re-aggregate partials, filter, count) polls until the cumulative
-event count includes the new batch; latency = t_visible − t0. The
-serving read itself is timed separately so store-read cost and
+parquet file of events is dropped at t0, then the serving read polls
+until the cumulative event count includes the new batch; latency =
+t_visible − t0. The serving read is ``serve_hourly`` plus a count: the
+partials of every committed batch directory, summed on the driver from
+a decode cache checked against the store; the count then runs over that
+in-memory local relation, with no Spark file read or re-aggregation of
+the partials. It is timed separately so store-read cost and
 trigger-wait decompose.
 
 Usage: python scripts/serving_latency.py [rounds] [trigger_ms ...]

@@ -662,6 +662,22 @@ def test_zerocopy_cosine_bit_identical_to_hof_form(spark):
     assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF form"
 
 
+def test_list_matrix_checks_nulls_only_inside_the_slice():
+    """A sliced ListArray shares its parent's whole values buffer; a
+    null element outside the slice must not send the slice to the
+    row-wise fallback, and one inside it still must."""
+    import numpy as np
+    import pyarrow as pa
+    from full_stack_big_data_spark.functions.vectors import _list_matrix
+
+    arr = pa.array([[1.0, None], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]],
+                   type=pa.list_(pa.float32()))
+    m = _list_matrix(arr.slice(1, 3))
+    assert m is not None and m.dtype == np.float64
+    assert np.array_equal(m, [[3.0, 4.0], [5.0, 6.0], [7.0, 8.0]])
+    assert _list_matrix(arr.slice(0, 2)) is None
+
+
 def test_srp_bucket_rows_single_udf_eval(spark):
     """r14 change 11 pin: the bucket UDF lives INSIDE the generator, so
     InferFiltersFromGenerate cannot infer a size()>0 filter that

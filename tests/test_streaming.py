@@ -180,6 +180,106 @@ def test_streaming_rollup_matches_batch_and_is_idempotent(spark, tmp_path):
     assert total == ev.count()
 
 
+def _hour_events(spark, b, value=0.25):
+    """``b + 1`` click events in hour ``b`` of 2024-01-02 (UTC), so
+    each micro-batch's partials are disjoint from every other's."""
+    return spark.range(b + 1).select(
+        F.timestamp_seconds(F.lit(1704153600 + 3600 * b) + F.col("id"))
+        .alias("ts"),
+        F.lit("click").alias("event_type"),
+        F.lit(value).alias("value"))
+
+
+def _served(spark, store):
+    from full_stack_big_data_spark.streaming.rollup import serve_hourly
+    return sorted(map(repr, serve_hourly(spark, store).collect()))
+
+
+def test_rollup_view_follows_the_store_and_runs_no_job(spark, tmp_path):
+    """The served rollup is a checked decode of the store: a read plus
+    where/collect runs no Spark job, a deleted batch directory drops
+    exactly its rows, an uncommitted one (no _SUCCESS) is not served,
+    and a cold start (empty cache) answers as the warm view does."""
+    from full_stack_big_data_spark.streaming import rollup
+
+    store = str(tmp_path / "store")
+    parts = {}
+    for b in range(3):
+        ev = _hour_events(spark, b)
+        parts[b] = sorted(map(repr, rollup.hourly_partials(ev).collect()))
+        rollup.write_batch_partials(ev, b, store)
+    assert _served(spark, store) == sorted(parts[0] + parts[1] + parts[2])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup-view-read", "served read runs no job")
+    try:
+        got = (rollup.serve_hourly(spark, store)
+               .where(F.col("n_events") > 1).collect())
+        jobs = sc.statusTracker().getJobIdsForGroup("rollup-view-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert jobs == [] and sorted(r.n_events for r in got) == [2, 3]
+
+    import shutil
+    shutil.rmtree(os.path.join(store, "batch_id=1"))
+    assert _served(spark, store) == sorted(parts[0] + parts[2])
+
+    rollup.write_batch_partials(_hour_events(spark, 3), 3, store)
+    os.remove(os.path.join(store, "batch_id=3", "_SUCCESS"))
+    warm = _served(spark, store)
+    assert warm == sorted(parts[0] + parts[2])
+
+    rollup._views.clear()
+    assert _served(spark, store) == warm
+
+
+def test_rollup_view_rewrite_wins_over_an_unchanged_fingerprint(
+        spark, tmp_path):
+    """A batch rewritten in-process with content of the same byte size
+    serves the new content even when the file's fingerprint cannot tell
+    (the filesystem reuses the inode; the mtime is set back, as a
+    coarse clock would leave it): the write-through replaces the
+    cached decode."""
+    from full_stack_big_data_spark.streaming.rollup import (
+        hourly_partials, write_batch_partials)
+
+    store = str(tmp_path / "store")
+    write_batch_partials(_hour_events(spark, 1, 1.5), 0, store)
+    first = _served(spark, store)
+    part = os.path.join(store, "batch_id=0", "part-00000.parquet")
+    st = os.stat(part)
+    rewrite = _hour_events(spark, 1, 2.5)
+    write_batch_partials(rewrite, 0, store)
+    assert os.path.getsize(part) == st.st_size
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns))
+    second = _served(spark, store)
+    assert second != first
+    assert second == sorted(map(repr, hourly_partials(rewrite).collect()))
+
+
+def test_rollup_view_evicts_files_that_left_the_store(spark, tmp_path):
+    """After compaction and the vacuum of the batch directories, the
+    next serves leave in the cache only the generation's file."""
+    from full_stack_big_data_spark.engine.generations import (
+        vacuum_superseded)
+    from full_stack_big_data_spark.streaming import rollup
+
+    store, gen1 = str(tmp_path / "store"), str(tmp_path / "gen1")
+    for b in range(2):
+        rollup.write_batch_partials(_hour_events(spark, b), b, store)
+    warm = _served(spark, store)
+    rollup.compact_rollup(spark, store, gen1)
+    vacuum_superseded([gen1], [os.path.join(store, d)
+                               for d in os.listdir(store)])
+    assert _served(spark, gen1) == warm
+    assert _served(spark, store) == []
+    cached = {p for view in rollup._views.values() for p in view
+              if p.startswith(str(tmp_path))}
+    assert cached == {os.path.join(gen1, "part-00000.parquet")}
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """The watermark actually DROPS late data in append mode — the
     property that bounds state at 100 TB/day. Batch 1 advances event
