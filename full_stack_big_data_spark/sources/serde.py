@@ -153,7 +153,11 @@ def _decode_udf(mode: str):
                 if failfast:
                     raise ValueError(f"Could not decode input bytes: {bytes(raw)!r}")
                 rows.append((None, None, None))
-        return pd.DataFrame(rows, columns=["username", "text", "timestamp"])
+        # Nullable Int64 from the Python ints: inferred, a timestamp
+        # column holding a None is float64, which rounds |ts| > 2**53.
+        return (pd.DataFrame(rows, columns=["username", "text", "timestamp"],
+                             dtype=object)
+                .astype({"timestamp": "Int64"}))
 
     return decode
 

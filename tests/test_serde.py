@@ -42,6 +42,18 @@ def test_permissive_drops_corrupt_records(spark):
     assert sorted(tuple(r) for r in out.collect()) == sorted(FIXTURE)
 
 
+def test_permissive_keeps_int64_timestamps_beside_a_corrupt_row(spark):
+    """A corrupt payload in the same Arrow batch as valid rows must not
+    cost the valid timestamps their low bits: a column of ints and None
+    inferred by pandas is float64, exact only up to 2**53."""
+    stamps = [2 ** 53 + 1, 2 ** 63 - 1, -(2 ** 63)]
+    rows = [(tweet_to_avro_bytes("u", "t", ts),) for ts in stamps] + [(CORRUPT,)]
+    df = spark.createDataFrame(rows, "value binary").coalesce(1)
+    out = (df.select(decode_tweet_avro(F.col("value"), "PERMISSIVE").alias("p"))
+           .select("p.timestamp").collect())
+    assert [r.timestamp for r in out] == stamps + [None]
+
+
 def test_failfast_raises_on_corrupt(spark):
     """T2 (AvroScheme) semantics: decoding failure aborts the query."""
     df = spark.createDataFrame([(CORRUPT,)], "value binary")
