@@ -94,7 +94,7 @@ HEADLINE = [
 # operators a 100 TB ingest actually runs (text gate, self-growing
 # embedding index at deployment geometry, bounded-state reservoir) now
 # have round-over-round wall-time tracking, not just probe rows. Each
-# rep runs FRESH sink/checkpoint dirs (reset_gate_dirs) so the timing
+# rep runs FRESH sink/checkpoint dirs (scratch.forget_runs) so the timing
 # is a real drain, never a memoized availableNow no-op; the shared
 # corpus-side index/payload artifacts stay memoized (paid once, like
 # production). Recorded in the same queries map; the labeled
@@ -226,9 +226,9 @@ def main() -> None:
                 # fresh sink/checkpoint dirs per rep — a re-drain, not
                 # a memoized availableNow no-op (shared index/payload
                 # artifacts stay, the production steady state)
-                from full_stack_big_data_spark.streaming.joins import \
-                    reset_gate_dirs
-                reset_gate_dirs()
+                from full_stack_big_data_spark.engine.scratch import \
+                    forget_runs
+                forget_runs()
             if name in ("ann_ivf_index_persist", "ann_ivfpq_index_persist"):
                 # Timed in the two lifecycle halves (r8 verdict item 3):
                 # the write-dominated index build would otherwise mask a

@@ -18,6 +18,27 @@ DataFrames, so cleanup must NOT run when the builder returns):
   opportunistically at first use (their pid no longer exists);
 * every temp table name is recorded and dropped at interpreter exit via
   the same atexit hook, if a live SparkSession is still around.
+
+The same root scopes the one process-wide memo, :func:`memo`: "build
+this once per process and corpus". Every stored artifact (an index,
+a verify payload, a trained codebook or merge table) and every
+streaming run's scratch directories are looked up under one key in
+one table, so no module keeps a dict of its own. Entries come in two
+classes:
+
+* **artifacts** — the corpus-side state a long-running gate reads
+  every batch and pays for once (the index and payload builders). They
+  live until the process exits.
+* **per-run** entries (``per_run=True``) — a drain's sink and
+  checkpoint directories and whatever a lifecycle derives from them
+  (folded generations, vacuumed stores, reservoir states).
+  :func:`forget_runs` drops them, so the next call re-drains its full
+  feed into fresh directories: a second availableNow run over the same
+  checkpoint adds zero batches, which is right for idempotence but
+  times nothing and leaves the candidate sensors silent. Artifacts
+  survive it.
+
+A ``make`` that raises stores nothing, so the next call builds again.
 """
 
 from __future__ import annotations
@@ -31,6 +52,8 @@ import uuid
 _ROOT = os.path.join(tempfile.gettempdir(), "fsbd_scratch")
 _proc_root: str | None = None
 _tables: list[str] = []
+_memo: dict = {}
+_per_run: set = set()
 
 
 def _pid_alive(pid: int) -> bool:
@@ -100,3 +123,23 @@ def register_temp_table(name: str) -> str:
         scratch_dir("reg_")
     _tables.append(name)
     return name
+
+
+def memo(key, make, *, per_run: bool = False):
+    """The value stored under ``key``, built by ``make()`` on first use.
+    ``per_run`` marks it for :func:`forget_runs`. Unlocked, so ``make``
+    may itself call :func:`memo` (a compaction builds on its ingest
+    drain); builders are called from the driver thread, never from
+    inside a micro-batch body."""
+    if key not in _memo:
+        _memo[key] = make()
+        if per_run:
+            _per_run.add(key)
+    return _memo[key]
+
+
+def forget_runs() -> None:
+    """Forget every per-run entry; artifacts stay."""
+    for key in _per_run:
+        _memo.pop(key, None)
+    _per_run.clear()

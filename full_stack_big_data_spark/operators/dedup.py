@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..engine.catalog import Catalog
+from ..engine.scratch import memo, scratch_dir
 from ..functions import observability
 from ..functions.hashing import hex64, hex64_sql
 from ..functions.text import token_ngrams, token_ngrams_sql, tokens, tokens_sql
@@ -80,7 +81,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-inlined — three evaluations per row (filter ×2 + Project).
     A non-attribute input skips the rule entirely, so the chain runs
     once per row inside Generate. Paired order-alternating reps at
-    sf0.1 (scripts/adjudicate_generate_filter.py): q_sketch_kmv
+    sf0.1 (OPTIMIZATION_r14.md § 9): q_sketch_kmv
     7.36 → 0.90 s (8.2×), q_sketch_kmv_merge 7.38 → 1.23 s (6.0×),
     results identical; the global excludedRules dodge measured the
     same, so the local form ships (no optimizer-conf blast radius,
@@ -402,9 +403,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_INDEX_DIRS: dict[str, str] = {}
-
-
 def minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the EXISTING corpus's (doc_id, band, bucket) MinHash
     band rows as band-partitioned parquet ONCE per (process, corpus) —
@@ -413,20 +411,14 @@ def minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     (``stream_text_admit``) checks each micro-batch against disk
     instead of re-bucketing the corpus. Same memoized economics as the
     SRP/phash/eval-gram artifacts."""
-    path = _MINHASH_INDEX_DIRS.get(sf_dir)
-    if path is not None:
+    def build() -> str:
+        sh = _shingle_sets(spark, sf_dir).where(
+            F.col("doc_id") % INCR_MOD != INCR_REM)
+        path = scratch_dir("fsbd_minhash_index_")
+        (_band_rows(sh).write.mode("overwrite").partitionBy("band")
+         .parquet(path))
         return path
-    from ..engine.scratch import scratch_dir
-
-    sh = _shingle_sets(spark, sf_dir).where(
-        F.col("doc_id") % INCR_MOD != INCR_REM)
-    path = scratch_dir("fsbd_minhash_index_")
-    _band_rows(sh).write.mode("overwrite").partitionBy("band").parquet(path)
-    _MINHASH_INDEX_DIRS[sf_dir] = path
-    return path
-
-
-_MINHASH_PAYLOAD_DIRS: dict[str, str] = {}
+    return memo(("minhash_index_dir", sf_dir), build)
 
 
 def minhash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -444,18 +436,15 @@ def minhash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     :func:`doc_text_payload_dir`); this builder remains as the one-tier
     path's payload (plan-pin tests; gate_io_probe's r11 baseline row)
     and for any caller that wants pre-exploded shingle sets."""
-    path = _MINHASH_PAYLOAD_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
 
-    sh = _shingle_sets(spark, sf_dir).where(
-        F.col("doc_id") % INCR_MOD != INCR_REM)
-    path = scratch_dir("fsbd_minhash_payload_")
-    write_payload(sh, "doc_id", path)
-    _MINHASH_PAYLOAD_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        sh = _shingle_sets(spark, sf_dir).where(
+            F.col("doc_id") % INCR_MOD != INCR_REM)
+        path = scratch_dir("fsbd_minhash_payload_")
+        write_payload(sh, "doc_id", path)
+        return path
+    return memo(("minhash_payload_dir", sf_dir), build)
 
 
 def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
@@ -495,9 +484,6 @@ def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
             .withColumn("collide", F.size("hs") < F.col("n")))
 
 
-_DOC_TEXT_PAYLOAD_DIRS: dict[str, str] = {}
-
-
 def doc_text_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     """TIER 2 of the text gates' verify payload: the corpus side's raw
     (doc_id, text) in point-lookup layout. The exact verify re-derives
@@ -507,22 +493,16 @@ def doc_text_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     shingle strings at 2.7× the corpus (BENCHNOTES r11): at rest this
     tier is exactly 1× corpus text, and per batch it is only opened
     for hash-screen survivors (≈ true near-dups)."""
-    path = _DOC_TEXT_PAYLOAD_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
 
-    d = (Catalog(spark, sf_dir).documents
-         .where(F.col("doc_id") % INCR_MOD != INCR_REM)
-         .select("doc_id", "text"))
-    path = scratch_dir("fsbd_doc_text_payload_")
-    write_payload(d, "doc_id", path)
-    _DOC_TEXT_PAYLOAD_DIRS[sf_dir] = path
-    return path
-
-
-_MINHASH_HASH_PAYLOAD_DIRS: dict[str, str] = {}
+    def build() -> str:
+        d = (Catalog(spark, sf_dir).documents
+             .where(F.col("doc_id") % INCR_MOD != INCR_REM)
+             .select("doc_id", "text"))
+        path = scratch_dir("fsbd_doc_text_payload_")
+        write_payload(d, "doc_id", path)
+        return path
+    return memo(("doc_text_payload_dir", sf_dir), build)
 
 
 def minhash_hash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -537,18 +517,15 @@ def minhash_hash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     survivors (true near-dups plus the ~zero-probability collision
     bypasses) open tier-2 raw-text row groups
     (:func:`doc_text_payload_dir`)."""
-    path = _MINHASH_HASH_PAYLOAD_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
 
-    sh = _shingle_sets(spark, sf_dir).where(
-        F.col("doc_id") % INCR_MOD != INCR_REM)
-    path = scratch_dir("fsbd_minhash_hash_payload_")
-    write_payload(hashed_shingle_cols(sh), "doc_id", path)
-    _MINHASH_HASH_PAYLOAD_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        sh = _shingle_sets(spark, sf_dir).where(
+            F.col("doc_id") % INCR_MOD != INCR_REM)
+        path = scratch_dir("fsbd_minhash_hash_payload_")
+        write_payload(hashed_shingle_cols(sh), "doc_id", path)
+        return path
+    return memo(("minhash_hash_payload_dir", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------

@@ -139,7 +139,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mass becomes filter(dang) + SUM over the cached rank frame —
     # zero joins feeding the 1-row funnel (guide §2.4; paired
     # order-alternating A/B won all 4 rounds, ~1.3×,
-    # scripts/adjudicate_pagerank_dangflag.py — results bit-identical).
+    # OPTIMIZATION_r14.md § 8 — results bit-identical).
     nodes = (edges_deg.select(F.col("src").alias("u"))
              .union(edges_deg.select(F.col("dst").alias("u")))
              .distinct()

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..engine.catalog import Catalog
+from ..engine.scratch import memo, scratch_dir
 from ..functions.hashing import hex64, hex64_sql
 from .registry import register
 
@@ -1143,9 +1144,6 @@ def multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         hamming_max=PHASH_HAMMING_MAX)
 
 
-_PHASH_INDEX_DIRS: dict[str, str] = {}
-
-
 def _phash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the EXISTING corpus's (doc_id, phash) table as
     parquet ONCE per (process, corpus) — 8 bytes/doc, the artifact a
@@ -1153,20 +1151,17 @@ def _phash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     expensive BMP render+decode pass) happens once per dump, not once
     per dedup run. Same memoized economics as the SRP/PQ/BPE
     artifacts."""
-    path = _PHASH_INDEX_DIRS.get(sf_dir)
-    if path is not None:
+    def build() -> str:
+        path = scratch_dir("fsbd_phash_index_")
+        # Carve-out on the SCAN (the pred parameter), not above the
+        # Arrow stages — the build renders only the corpus half it
+        # stores.
+        sig = _phash_signatures(
+            spark, sf_dir,
+            pred=F.col("doc_id") % PHASH_INCR_MOD != PHASH_INCR_REM)
+        sig.write.mode("overwrite").parquet(path)
         return path
-    from ..engine.scratch import scratch_dir
-
-    path = scratch_dir("fsbd_phash_index_")
-    # Carve-out on the SCAN (the pred parameter), not above the Arrow
-    # stages — the build renders only the corpus half it stores.
-    sig = _phash_signatures(
-        spark, sf_dir,
-        pred=F.col("doc_id") % PHASH_INCR_MOD != PHASH_INCR_REM)
-    sig.write.mode("overwrite").parquet(path)
-    _PHASH_INDEX_DIRS[sf_dir] = path
-    return path
+    return memo(("phash_index_dir", sf_dir), build)
 
 
 @register(
@@ -1256,7 +1251,6 @@ def multimodal_phash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame
     exchange of the 8-byte/doc index — sized by the index, not the
     payload store — and the serve join inherits the scaled banding
     posture. File counts pinned in tests/test_multimodal.py."""
-    from ..engine.scratch import scratch_dir
     from .dedup import banded_hamming_pairs
 
     is_new = F.col("doc_id") % PHASH_INCR_MOD == PHASH_INCR_REM

@@ -43,6 +43,7 @@ from pyspark.sql.types import ArrayType, IntegerType, LongType
 from ..engine.catalog import Catalog
 from ..engine.generations import write_generation
 from ..engine.localdf import local_df
+from ..engine.scratch import memo, scratch_dir
 from ..functions import observability
 from ..functions.skew import grouped_topk
 from ..functions.vectors import cosine_sim, cosine_sim_exprs
@@ -769,7 +770,6 @@ def ivf_index_build(spark: SparkSession, sf_dir: str) -> str:
     files). One shuffle of index-sized rows buying a bounded file
     count is the hash-distribution write mode of the optimization
     guide's file-layout section."""
-    from ..engine.scratch import scratch_dir
 
     e = Catalog(spark, sf_dir).embeddings
     path = scratch_dir("fsbd_ivf_index_")
@@ -866,7 +866,6 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     a maintenance job sized by the index, not the corpus history — and
     serve keeps the DPP-pruned probes/C scan. File counts pinned in
     tests/test_similarity.py."""
-    from ..engine.scratch import scratch_dir
 
     dump = Catalog(spark, sf_dir).embeddings.where(
         F.col("vec_id") % IVF_APPEND_MOD == 0)
@@ -1287,7 +1286,6 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the on-disk table — with a bucket predicate the scan prunes to the
     touched partitions (pinned in ``tests/test_plans.py``).
     """
-    from ..engine.scratch import scratch_dir
 
     tbl = srp_bucket_rows(Catalog(spark, sf_dir).embeddings)
     is_new = F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM
@@ -1399,9 +1397,6 @@ def embedding_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SRP_INDEX_DIRS: dict[tuple[str, int, int], str] = {}
-
-
 def srp_index_dir(spark: SparkSession, sf_dir: str,
                   tables: int = SRP_TABLES, bits: int = SRP_BITS) -> str:
     """Materialize the EXISTING corpus's (vec_id, table_id, bucket) SRP
@@ -1415,23 +1410,15 @@ def srp_index_dir(spark: SparkSession, sf_dir: str,
     entries the 16×9 one (a deployment runs exactly one geometry; both
     exist here only because the fixture rows are kept as sensor
     contrasts). The verify payload is geometry-free and shared."""
-    key = (sf_dir, tables, bits)
-    path = _SRP_INDEX_DIRS.get(key)
-    if path is not None:
+    def build() -> str:
+        tbl = srp_bucket_rows(Catalog(spark, sf_dir).embeddings
+                              .where(F.col("vec_id") % ANN_INCR_MOD
+                                     != ANN_INCR_REM),
+                              tables=tables, bits=bits)
+        path = scratch_dir("fsbd_srp_admit_index_")
+        tbl.write.mode("overwrite").partitionBy("table_id").parquet(path)
         return path
-    from ..engine.scratch import scratch_dir
-
-    tbl = srp_bucket_rows(Catalog(spark, sf_dir).embeddings
-                          .where(F.col("vec_id") % ANN_INCR_MOD
-                                 != ANN_INCR_REM),
-                          tables=tables, bits=bits)
-    path = scratch_dir("fsbd_srp_admit_index_")
-    tbl.write.mode("overwrite").partitionBy("table_id").parquet(path)
-    _SRP_INDEX_DIRS[key] = path
-    return path
-
-
-_SRP_PAYLOAD_DIRS: dict[str, str] = {}
+    return memo(("srp_index_dir", sf_dir, tables, bits), build)
 
 
 def srp_payload_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1453,19 +1440,16 @@ def srp_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     these float row groups — the r12 verdict overrode the earlier
     "not worth it" adjudication here, asking the text gates' two-tier
     I/O discipline to cover the vector family too."""
-    path = _SRP_PAYLOAD_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
 
-    e = (Catalog(spark, sf_dir).embeddings
-         .where(F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM)
-         .select("vec_id", "embedding"))
-    path = scratch_dir("fsbd_srp_payload_")
-    write_payload(e, "vec_id", path)
-    _SRP_PAYLOAD_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        e = (Catalog(spark, sf_dir).embeddings
+             .where(F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM)
+             .select("vec_id", "embedding"))
+        path = scratch_dir("fsbd_srp_payload_")
+        write_payload(e, "vec_id", path)
+        return path
+    return memo(("srp_payload_dir", sf_dir), build)
 
 
 # --- Quantized tier-1 of the embedding verify payload (r12 verdict
@@ -1591,9 +1575,6 @@ def quant_screen_keep(qv, w32, s):
             | (dotq + xn * r >= NEARDUP_COS * (xn * (qn - r))))
 
 
-_SRP_QUANT_PAYLOAD_DIRS: dict[str, str] = {}
-
-
 def srp_quant_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     """TIER 1 of the embedding gates' verify payload: the corpus
     side's packed-int16 quantized vectors in point-lookup layout
@@ -1601,19 +1582,16 @@ def srp_quant_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     it — every candidate is screened here and only survivors, ≈ true
     near-dups, open the float tier). See :func:`quantized_vec_cols`
     for the representation and the no-false-drops bound."""
-    path = _SRP_QUANT_PAYLOAD_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
 
-    e = (Catalog(spark, sf_dir).embeddings
-         .where(F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM)
-         .select("vec_id", "embedding"))
-    path = scratch_dir("fsbd_srp_quant_payload_")
-    write_payload(quantized_vec_cols(e), "vec_id", path)
-    _SRP_QUANT_PAYLOAD_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        e = (Catalog(spark, sf_dir).embeddings
+             .where(F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM)
+             .select("vec_id", "embedding"))
+        path = scratch_dir("fsbd_srp_quant_payload_")
+        write_payload(quantized_vec_cols(e), "vec_id", path)
+        return path
+    return memo(("srp_quant_payload_dir", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -2787,12 +2765,6 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                         _ivfpq_probe_luts(spark, sf_dir, cb))
 
 
-# Train-once/serve-many artifact store: (sf_dir → scratch path holding
-# codebook/ + codes/ parquet). Process-scoped like the ann_index scratch
-# dirs; keyed by corpus dir so a multi-SF sweep cannot cross-serve.
-_PQ_ARTIFACT_DIRS: dict[str, str] = {}
-
-
 def _pq_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the trained-PQ deployment artifacts for ``sf_dir`` —
     the (sub, cell, w) codebook table and the re-encoded corpus codes —
@@ -2801,26 +2773,24 @@ def _pq_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
     Lloyd step + integer argmin encoding), so reuse cannot change any
     answer — it only removes the training scan from the serve path,
     which is precisely the train-once/serve-many economics PQ exists
-    for (codebooks retrain per crawl dump, queries arrive forever)."""
-    path = _PQ_ARTIFACT_DIRS.get(sf_dir)
-    if path is not None:
+    for (codebooks retrain per crawl dump, queries arrive forever).
+    Keyed by corpus dir, so a multi-SF sweep cannot cross-serve."""
+    def build() -> str:
+        path = scratch_dir("fsbd_pq_artifact_")
+        cb = _pq_trained_codebooks(spark, sf_dir)
+        local_df(
+            spark,
+            [(s, j, [int(x) for x in cb[s, j]])
+             for s in range(PQ_SUBSPACES) for j in range(PQ_CELLS)],
+            "sub int, cell int, w array<bigint>",
+        ).write.mode("overwrite").parquet(path + "/codebook")
+        # The corpus codes are the index payload (4 bytes/vector at
+        # scale); map-only encode streamed straight to parquet, no
+        # shuffle.
+        (pq_codes(spark, sf_dir, cb)
+         .write.mode("overwrite").parquet(path + "/codes"))
         return path
-    from ..engine.scratch import scratch_dir
-
-    path = scratch_dir("fsbd_pq_artifact_")
-    cb = _pq_trained_codebooks(spark, sf_dir)
-    local_df(
-        spark,
-        [(s, j, [int(x) for x in cb[s, j]])
-         for s in range(PQ_SUBSPACES) for j in range(PQ_CELLS)],
-        "sub int, cell int, w array<bigint>",
-    ).write.mode("overwrite").parquet(path + "/codebook")
-    # The corpus codes are the index payload (4 bytes/vector at scale);
-    # map-only encode streamed straight to parquet, no shuffle.
-    (pq_codes(spark, sf_dir, cb)
-     .write.mode("overwrite").parquet(path + "/codes"))
-    _PQ_ARTIFACT_DIRS[sf_dir] = path
-    return path
+    return memo(("pq_artifact_dir", sf_dir), build)
 
 
 @register(
@@ -2924,7 +2894,6 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
     precedent) so the bench times each component. The write clusters
     by cell first — one file per cell instead of tasks×cells (see
     ``ivf_index_build``)."""
-    from ..engine.scratch import scratch_dir
 
     cb = _read_pq_codebook(
         spark, _pq_artifact_dir(spark, sf_dir) + "/codebook")
@@ -3065,7 +3034,6 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange of the 4-byte-code index — sized by the index, never the
     corpus history) with PQ shrinking every byte moved 64×. File
     counts pinned in tests/test_similarity.py."""
-    from ..engine.scratch import scratch_dir
 
     dump = Catalog(spark, sf_dir).embeddings.where(
         F.col("vec_id") % IVF_APPEND_MOD == 0)
@@ -3220,7 +3188,6 @@ def _power_direction(eq: DataFrame) -> DataFrame:
     sweep). Writing 1 row per iteration costs nothing at any scale and
     keeps every iteration's plan the same small shape.
     """
-    from ..engine.scratch import scratch_dir
 
     spark = eq.sparkSession
     vdf = spark.range(1).select(

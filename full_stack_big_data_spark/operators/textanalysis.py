@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..engine.catalog import Catalog
+from ..engine.scratch import memo, scratch_dir
 from ..functions.text import (
     STOPWORDS_BY_LANG, char_ngrams, char_ngrams_sql, token_ngrams,
     token_ngrams_sql, tokens, tokens_sql,
@@ -961,9 +962,6 @@ def bpe_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("cnt").cast("bigint").alias("cnt")))
 
 
-_BPE_ARTIFACT_DIRS: dict[str, str] = {}
-
-
 def _bpe_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the trained merge table for ``sf_dir`` as parquet,
     ONCE per process; later calls serve from disk. The merge table is a
@@ -971,23 +969,20 @@ def _bpe_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
     answer — it removes the k training rounds from the serve path (the
     ``_pq_artifact_dir`` economics: merges retrain per corpus dump,
     tokenization runs forever)."""
-    path = _BPE_ARTIFACT_DIRS.get(sf_dir)
-    if path is not None:
-        return path
-    from ..engine.scratch import scratch_dir
     from .dedup import _free_local_checkpoint
 
-    path = scratch_dir("fsbd_bpe_merges_")
-    words, steps = _bpe_train(spark, sf_dir)
-    _free_local_checkpoint(words)
-    out = steps[0]
-    for b in steps[1:]:
-        out = out.unionAll(b)
-    out.coalesce(1).write.mode("overwrite").parquet(path)
-    for b in steps:
-        _free_local_checkpoint(b)
-    _BPE_ARTIFACT_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        path = scratch_dir("fsbd_bpe_merges_")
+        words, steps = _bpe_train(spark, sf_dir)
+        _free_local_checkpoint(words)
+        out = steps[0]
+        for b in steps[1:]:
+            out = out.unionAll(b)
+        out.coalesce(1).write.mode("overwrite").parquet(path)
+        for b in steps:
+            _free_local_checkpoint(b)
+        return path
+    return memo(("bpe_artifact_dir", sf_dir), build)
 
 
 @register(

@@ -7,6 +7,12 @@ query lifecycle: ``writeStream.start()`` → ``awaitTermination`` → ``stop``.
 everything currently in the source, exactly-once) so streaming operators
 can participate in the batch-style correctness gate: same program, the
 trigger is the only difference between "stream forever" and "drain once".
+
+Every checkpointed gate is the same program — read a feed, run a
+``foreachBatch`` body to completion, read back what it wrote — so its
+three pieces live here once: :func:`corpus_stream` (the feed),
+:func:`drain_dirs` (the per-run sink and checkpoint) and :func:`drain`
+(the run).
 """
 
 from __future__ import annotations
@@ -16,6 +22,9 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..engine.scratch import memo, scratch_dir
+from ..engine.session import tune_session
 
 _seq = itertools.count()
 _stage_root: str | None = None
@@ -27,7 +36,6 @@ def _staged_dir(path: str) -> str:
     per-process temp dir (testdata itself stays untouched/read-only)."""
     global _stage_root
     if _stage_root is None:
-        from ..engine.scratch import scratch_dir
         _stage_root = scratch_dir("fsbd_stream_src_")
     # Key by the full source path, not the basename: the same table name
     # exists at every scale factor, and a basename-keyed dir would silently
@@ -46,6 +54,37 @@ def stream_table(spark: SparkSession, path: str, template: DataFrame) -> DataFra
     batch reader (streaming sources require explicit schemas)."""
     src = _staged_dir(path) if os.path.isfile(path) else path
     return spark.readStream.schema(template.schema).parquet(src)
+
+
+def corpus_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-streaming source over the corpus table ``table`` of
+    ``sf_dir``, on a tuned session."""
+    tune_session(spark)
+    path = f"{sf_dir}/{table}.parquet"
+    return stream_table(spark, path, spark.read.parquet(path))
+
+
+def drain_dirs(tag: str, sf_dir: str) -> tuple[str, str]:
+    """The (sink, checkpoint) scratch pair a gate drains ``sf_dir``'s
+    feed into: one pair per process and corpus, a per-run memo entry,
+    so ``engine.scratch.forget_runs`` makes the next drain start
+    fresh."""
+    return memo((tag, sf_dir),
+                lambda: (scratch_dir(f"fsbd_{tag}_out_"),
+                         scratch_dir(f"fsbd_{tag}_ckpt_")),
+                per_run=True)
+
+
+def drain(feed: DataFrame, body, checkpoint: str,
+          output_mode: str = "append") -> None:
+    """Run ``body(batch_df, batch_id)`` over every micro-batch of
+    ``feed`` available now, with its offsets checkpointed at
+    ``checkpoint``, and return when the query has finished. A drain
+    over a checkpoint that already covers the feed adds no batches."""
+    q = (feed.writeStream.outputMode(output_mode).foreachBatch(body)
+         .option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
 
 
 def run_to_completion(sdf: DataFrame, *, output_mode: str,

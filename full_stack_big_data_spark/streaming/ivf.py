@@ -38,20 +38,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import (append_epoch, read_epochs,
                                   vacuum_checked, write_generation)
+from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
 from ..operators.registry import register
 from ..operators.similarity import (IVF_APPEND_MOD, IVF_CELLS_WIDE,
                                     _ivf_assigned, _ivf_base_build,
                                     _ivf_scaled_assign_prefix,
                                     _ivf_scaled_oracle, ivf_index_serve)
-from .core import stream_table
-from .joins import _gate_dirs, _registered_cache
+from .core import corpus_stream, drain, drain_dirs
 
 # vec_id % IVF_APPEND_MOD == 0 plays "today's dump" (the ann_ivf_index_
 # append convention); the base generation indexes the rest.
-_IVF_INGEST_DIRS = _registered_cache()
-_IVF_BASE_DIRS: dict[str, str] = {}
-_IVF_VAC_DIRS = _registered_cache()
 
 
 def _ivf_base_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -61,15 +58,11 @@ def _ivf_base_dir(spark: SparkSession, sf_dir: str) -> str:
     checks nothing against but grows beside; memoized like the SRP
     base index (production steady state: the base is built once per
     full rebuild, not per drain)."""
-    path = _IVF_BASE_DIRS.get(sf_dir)
-    if path is not None:
+    def build() -> str:
+        path = scratch_dir("fsbd_ivf_stream_base_")
+        _ivf_base_build(spark, sf_dir, path)
         return path
-    from ..engine.scratch import scratch_dir
-
-    path = scratch_dir("fsbd_ivf_stream_base_")
-    _ivf_base_build(spark, sf_dir, path)
-    _IVF_BASE_DIRS[sf_dir] = path
-    return path
+    return memo(("ivf_base_dir", sf_dir), build)
 
 
 def _ivf_ingest(epochs_dir: str):
@@ -94,15 +87,10 @@ def _drain_ivf_dump(spark: SparkSession, sf_dir: str, body,
                     ckpt: str) -> None:
     """availableNow drain of the dump residue through the foreachBatch
     ``body`` (``_ivf_ingest`` or ``_ivfpq_ingest``)."""
-    path = f"{sf_dir}/embeddings.parquet"
-    template = spark.read.parquet(path)
-    feed = (stream_table(spark, path, template)
+    feed = (corpus_stream(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") % IVF_APPEND_MOD == 0)
             .select("vec_id", "embedding"))
-    q = (feed.writeStream.foreachBatch(body)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, body, ckpt)
 
 
 @register(
@@ -133,7 +121,7 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_index_compact`` folds and ``ivf_index_vacuum`` reclaims."""
     tune_session(spark)
     base = _ivf_base_dir(spark, sf_dir)
-    epochs_dir, ckpt = _gate_dirs(_IVF_INGEST_DIRS, sf_dir, "ivf_ingest")
+    epochs_dir, ckpt = drain_dirs("ivf_ingest", sf_dir)
     _drain_ivf_dump(spark, sf_dir, _ivf_ingest(epochs_dir), ckpt)
     base_rows = (spark.read.parquet(base)
                  .select("vec_id", F.col("cell").cast("int").alias("cell")))
@@ -146,12 +134,14 @@ def _vacuumed_ivf_gen2(spark: SparkSession, sf_dir: str) -> str:
     ingest drain into epochs, compact fold to one cell-partitioned
     gen2 (one file per cell — the ``ivf_index_compact`` kernel over
     base ∪ epochs), vacuum of the superseded dirs. Returns the gen2
-    path — the only directory left alive besides the checkpoint."""
-    path = _IVF_VAC_DIRS.get(sf_dir)
-    if path is not None:
-        return path
-    from ..engine.scratch import scratch_dir
+    path — the only directory left alive besides the checkpoint. A
+    per-run memo entry: after ``engine.scratch.forget_runs`` the next
+    call re-runs the whole lifecycle."""
+    return memo(("vacuumed_ivf_gen2", sf_dir),
+                lambda: _ivf_vacuum_lifecycle(spark, sf_dir), per_run=True)
 
+
+def _ivf_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> str:
     # 1. private base generation (vacuum DELETES its inputs — the
     # memoized family artifacts must never be its victims)
     base = scratch_dir("fsbd_ivfvac_base_")
@@ -171,7 +161,6 @@ def _vacuumed_ivf_gen2(spark: SparkSession, sf_dir: str) -> str:
 
     # 4. vacuum — asserted inside the registered query, not just run
     vacuum_checked([gen2], [base, epochs], ckpt)
-    _IVF_VAC_DIRS[sf_dir] = gen2
     return gen2
 
 
@@ -204,24 +193,17 @@ def ivf_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVFADC codes store: streaming ingest (the composed index's capstone).
 # ---------------------------------------------------------------------------
 
-_IVFPQ_INGEST_DIRS = _registered_cache()
-_IVFPQ_BASE_DIRS: dict[str, str] = {}
-
-
 def _ivfpq_stream_base(spark: SparkSession, sf_dir: str) -> str:
     """The IVFADC base generation a long-running codes ingest grows
     beside (``similarity._ivfpq_base_build``), memoized per (process,
     corpus) like the SRP base."""
-    path = _IVFPQ_BASE_DIRS.get(sf_dir)
-    if path is not None:
-        return path
-    from ..engine.scratch import scratch_dir
     from ..operators.similarity import _ivfpq_base_build
 
-    path = scratch_dir("fsbd_ivfpq_stream_base_")
-    _ivfpq_base_build(spark, sf_dir, path)
-    _IVFPQ_BASE_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        path = scratch_dir("fsbd_ivfpq_stream_base_")
+        _ivfpq_base_build(spark, sf_dir, path)
+        return path
+    return memo(("ivfpq_stream_base", sf_dir), build)
 
 
 def _ivfpq_ingest(epochs_dir: str, cb):
@@ -280,8 +262,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     base = _ivfpq_stream_base(spark, sf_dir)
     cb = _read_pq_codebook(spark, base + "/_codebook")
-    epochs_dir, ckpt = _gate_dirs(_IVFPQ_INGEST_DIRS, sf_dir,
-                                  "ivfpq_ingest")
+    epochs_dir, ckpt = drain_dirs("ivfpq_ingest", sf_dir)
     _drain_ivf_dump(spark, sf_dir, _ivfpq_ingest(epochs_dir, cb), ckpt)
     probes, probed = _ivfpq_probe_luts_and_cells(spark, sf_dir, cb)
     # static partition pruning on the base generation's cell dirs

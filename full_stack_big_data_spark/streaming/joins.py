@@ -26,18 +26,16 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import append_epoch, read_epochs, write_generation
+from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
 from ..operators.registry import register
 from ..operators.similarity import SRP_BITS_WIDE as _SRP_BITS_WIDE
-from .core import run_to_completion, stream_table
+from .core import corpus_stream, drain, drain_dirs, run_to_completion
 from .windows import TS_FMT, with_event_time
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    path = f"{sf_dir}/events.parquet"
-    template = spark.read.parquet(path)
-    return with_event_time(stream_table(spark, path, template))
+    return with_event_time(corpus_stream(spark, sf_dir, "events"))
 
 
 @register(
@@ -163,59 +161,27 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per micro-batch against the stored gram index.
 # ---------------------------------------------------------------------------
 
-_GATE_DIR_CACHES: list[dict] = []
-
-
-def _registered_cache() -> dict:
-    """A gate's memoized-dirs cache, auto-enrolled for
-    :func:`reset_gate_dirs` — a new gate cannot be forgotten by the
-    probe reset (r11 review finding: the reset used to hand-enumerate
-    every cache, so an omission made fresh-dirs probing a silent
-    zero-batch no-op for that gate)."""
-    d: dict = {}
-    _GATE_DIR_CACHES.append(d)
-    return d
-
-
-def _gate_dirs(cache: dict, sf_dir: str, tag: str) -> tuple[str, str]:
-    """Memoized (sink dir, checkpoint dir) scratch pair for an ingest
-    gate — the 6-line block every gate used to copy."""
-    dirs = cache.get(sf_dir)
-    if dirs is None:
-        from ..engine.scratch import scratch_dir
-        dirs = (scratch_dir(f"fsbd_{tag}_out_"),
-                scratch_dir(f"fsbd_{tag}_ckpt_"))
-        cache[sf_dir] = dirs
-    return dirs
-
-
-_EVAL_INDEX_DIRS: dict[str, str] = {}
-_DECONTAM_DIRS = _registered_cache()
-
-
 def _eval_gram_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the eval set's distinct n-grams as parquet ONCE per
     (process, corpus) — the persisted reference set a long-running
     ingest checks every batch against (benchmarks change rarely; the
     stream runs forever). Same memoized-artifact economics as the BPE
     merge table and the PQ codebooks."""
-    path = _EVAL_INDEX_DIRS.get(sf_dir)
-    if path is not None:
-        return path
     from ..engine.catalog import Catalog
-    from ..engine.scratch import scratch_dir
     from ..functions.text import token_ngrams, tokens
     from ..operators.decontam import DECONTAM_N, EVAL_MOD
 
-    path = scratch_dir("fsbd_eval_gram_index_")
-    d = Catalog(spark, sf_dir).documents.where(F.col("doc_id") % EVAL_MOD == 0)
-    toks = d.select(tokens("text").alias("toks"))
-    (toks.select(F.explode(F.array_distinct(
-        token_ngrams(F.col("toks"), DECONTAM_N))).alias("g"))
-     .distinct()
-     .write.mode("overwrite").parquet(path))
-    _EVAL_INDEX_DIRS[sf_dir] = path
-    return path
+    def build() -> str:
+        path = scratch_dir("fsbd_eval_gram_index_")
+        d = (Catalog(spark, sf_dir).documents
+             .where(F.col("doc_id") % EVAL_MOD == 0))
+        toks = d.select(tokens("text").alias("toks"))
+        (toks.select(F.explode(F.array_distinct(
+            token_ngrams(F.col("toks"), DECONTAM_N))).alias("g"))
+         .distinct()
+         .write.mode("overwrite").parquet(path))
+        return path
+    return memo(("eval_gram_index_dir", sf_dir), build)
 
 
 def _decontam_admit(index_path: str, out_dir: str):
@@ -302,11 +268,9 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     index_path = _eval_gram_index_dir(spark, sf_dir)
-    out_dir, ckpt = _gate_dirs(_DECONTAM_DIRS, sf_dir, "stream_decontam")
+    out_dir, ckpt = drain_dirs("stream_decontam", sf_dir)
 
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     # Project tokens to an attribute before n-gramming (CollapseProject
     # discipline — a lambda body re-evaluates non-attribute inputs per
     # element; same shape as operators/decontam.py).
@@ -315,10 +279,7 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id",
                   F.array_distinct(
                       token_ngrams(F.col("toks"), DECONTAM_N)).alias("gs")))
-    q = (gs.writeStream.foreachBatch(_decontam_admit(index_path, out_dir))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(gs, _decontam_admit(index_path, out_dir), ckpt)
     # batch_id is a sink-layout column (the idempotency key), not part
     # of the query's result contract — project it away for the oracle.
     return read_epochs(spark, out_dir, "doc_id long, n_grams int")
@@ -329,9 +290,6 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_decontam — drop an incoming image if it near-dups the corpus,
 # decided per micro-batch against the persisted phash signature index.
 # ---------------------------------------------------------------------------
-
-_PHASH_ADMIT_DIRS = _registered_cache()
-
 
 def _phash_gate(index_path: str, target_dir: str, sensor: str):
     """Shared foreachBatch chain for BOTH phash gates (admit + ingest —
@@ -447,22 +405,14 @@ def stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     index_path = _phash_index_dir(spark, sf_dir)
-    out_dir, ckpt = _gate_dirs(_PHASH_ADMIT_DIRS, sf_dir, "phash_admit")
+    out_dir, ckpt = drain_dirs("phash_admit", sf_dir)
 
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where((F.col("doc_id") % PHASH_INCR_MOD == PHASH_INCR_REM)
                        & (F.length("text") >= 1))
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(_phash_admit(index_path, out_dir))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _phash_admit(index_path, out_dir), ckpt)
     return read_epochs(spark, out_dir, "doc_id long, phash long")
-
-
-_PHASH_INGEST_DIRS = _registered_cache()
 
 
 def _phash_ingest(base_index_path: str, epochs_dir: str):
@@ -531,18 +481,13 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     base_dir = _phash_index_dir(spark, sf_dir)   # the corpus generation
-    epochs_dir, ckpt = _gate_dirs(_PHASH_INGEST_DIRS, sf_dir, "phash_ingest")
+    epochs_dir, ckpt = drain_dirs("phash_ingest", sf_dir)
 
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where((F.col("doc_id") % PHASH_INCR_MOD == PHASH_INCR_REM)
                        & (F.length("text") >= 1))
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(_phash_ingest(base_dir, epochs_dir))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _phash_ingest(base_dir, epochs_dir), ckpt)
     base = spark.read.parquet(base_dir).select("doc_id", "phash")
     grown = read_epochs(spark, epochs_dir, "doc_id long, phash long")
     return base.unionByName(grown)
@@ -554,9 +499,6 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incoming embedding if it near-dups the corpus, per micro-batch
 # against the persisted SRP bucket index.
 # ---------------------------------------------------------------------------
-
-_EMB_ADMIT_DIRS = _registered_cache()
-
 
 def _verify_pool():
     """One-thread overlap pool for the verify tiers' driver id collects
@@ -761,8 +703,8 @@ WHERE vec_id % {ANN_INCR_MOD} = {ANN_INCR_REM}
 """
 
 
-def _run_embedding_admit(spark: SparkSession, sf_dir: str, cache: dict,
-                         tag: str, bits: int | None = None) -> DataFrame:
+def _run_embedding_admit(spark: SparkSession, sf_dir: str, tag: str,
+                         bits: int | None = None) -> DataFrame:
     """Shared entry body for the admit gate at either SRP geometry:
     build/reuse the (geometry-keyed) corpus index + (geometry-free)
     payload, drain the new-vector feed through the checkpointed
@@ -776,20 +718,14 @@ def _run_embedding_admit(spark: SparkSession, sf_dir: str, cache: dict,
     index_path = srp_index_dir(spark, sf_dir, **kw)
     payload_path = srp_payload_dir(spark, sf_dir)
     quant_path = srp_quant_payload_dir(spark, sf_dir)
-    out_dir, ckpt = _gate_dirs(cache, sf_dir, tag)
+    out_dir, ckpt = drain_dirs(tag, sf_dir)
 
-    path = f"{sf_dir}/embeddings.parquet"
-    template = spark.read.parquet(path)
-    vecs = stream_table(spark, path, template)
+    vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    q = (feed.writeStream
-         .foreachBatch(_embedding_admit(index_path, payload_path, out_dir,
-                                        bits=bits,
-                                        quant_payload_path=quant_path))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _embedding_admit(index_path, payload_path, out_dir,
+                                 bits=bits, quant_payload_path=quant_path),
+          ckpt)
     return read_epochs(spark, out_dir, "vec_id long")
 
 
@@ -841,11 +777,7 @@ def stream_embedding_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment actually runs is ``stream_embedding_admit_scaled``
     (2^bits ≈ N/64), and the self-growing/compaction lifecycle
     composes THAT one (r11 verdict item 1)."""
-    return _run_embedding_admit(spark, sf_dir, _EMB_ADMIT_DIRS,
-                                "emb_admit")
-
-
-_EMB_ADMIT_SCALED_DIRS = _registered_cache()
+    return _run_embedding_admit(spark, sf_dir, "emb_admit")
 
 
 @register(
@@ -872,8 +804,8 @@ def stream_embedding_admit_scaled(spark: SparkSession,
     per-table collision is p^9 (p = 1 − θ/π), so 16 tables keep ≈ 99%
     recall at cos ≥ 0.9 true duplicates while low-cosine collision
     noise collapses — the operating point a 100 TB dedup wants."""
-    return _run_embedding_admit(spark, sf_dir, _EMB_ADMIT_SCALED_DIRS,
-                                "emb_admit_sc", bits=_SRP_BITS_WIDE)
+    return _run_embedding_admit(spark, sf_dir, "emb_admit_sc",
+                                bits=_SRP_BITS_WIDE)
 
 
 # ---------------------------------------------------------------------------
@@ -882,9 +814,6 @@ def stream_embedding_admit_scaled(spark: SparkSession,
 # docs that NEAR-DUP the training corpus itself (jaccard ≥ threshold),
 # per micro-batch against the persisted MinHash band index.
 # ---------------------------------------------------------------------------
-
-_TEXT_ADMIT_DIRS = _registered_cache()
-
 
 def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
                          sh_new: DataFrame, payload_path: str | None,
@@ -1133,23 +1062,18 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    minhash_index_dir)
 
     tune_session(spark)
-    path = f"{sf_dir}/documents.parquet"
     index_path = minhash_index_dir(spark, sf_dir)
     hash_payload_path = minhash_hash_payload_dir(spark, sf_dir)
     text_payload_path = doc_text_payload_dir(spark, sf_dir)
-    out_dir, ckpt = _gate_dirs(_TEXT_ADMIT_DIRS, sf_dir, "text_admit")
+    out_dir, ckpt = drain_dirs("text_admit", sf_dir)
 
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(
-             _text_admit(index_path, None, out_dir,
-                         hash_payload_path=hash_payload_path,
-                         text_payload_path=text_payload_path))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _text_admit(index_path, None, out_dir,
+                            hash_payload_path=hash_payload_path,
+                            text_payload_path=text_payload_path),
+          ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")
 
 
@@ -1159,9 +1083,6 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are appended INTO the index as epoch-keyed partitions, closing the
 # ingest loop for all three column families.
 # ---------------------------------------------------------------------------
-
-_TEXT_INGEST_DIRS = _registered_cache()
-
 
 def _text_ingest(base_index_path: str, payload_path: str | None,
                  epochs_dir: str,
@@ -1232,32 +1153,24 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    minhash_index_dir)
 
     tune_session(spark)
-    path = f"{sf_dir}/documents.parquet"
     base_dir = minhash_index_dir(spark, sf_dir)
     hash_payload_path = minhash_hash_payload_dir(spark, sf_dir)
     text_payload_path = doc_text_payload_dir(spark, sf_dir)
-    epochs_dir, ckpt = _gate_dirs(_TEXT_INGEST_DIRS, sf_dir, "text_ingest")
+    epochs_dir, ckpt = drain_dirs("text_ingest", sf_dir)
 
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(
-             _text_ingest(base_dir, None, epochs_dir,
-                          hash_payload_path=hash_payload_path,
-                          text_payload_path=text_payload_path))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _text_ingest(base_dir, None, epochs_dir,
+                             hash_payload_path=hash_payload_path,
+                             text_payload_path=text_payload_path),
+          ckpt)
     base = (spark.read.parquet(base_dir)
             .select("doc_id", F.col("band").cast("int").alias("band"),
                     "bucket"))
     grown = read_epochs(spark, epochs_dir,
                         "doc_id long, band int, bucket string")
     return base.unionByName(grown)
-
-
-_EMB_INGEST_DIRS = _registered_cache()
 
 
 def _embedding_ingest(index_path: str, payload_path: str, epochs_dir: str,
@@ -1288,8 +1201,8 @@ WHERE vec_id % {ANN_INCR_MOD} <> {ANN_INCR_REM}
 """
 
 
-def _run_embedding_ingest(spark: SparkSession, sf_dir: str, cache: dict,
-                          tag: str, bits: int | None = None) -> DataFrame:
+def _run_embedding_ingest(spark: SparkSession, sf_dir: str, tag: str,
+                          bits: int | None = None) -> DataFrame:
     """Shared entry body for the self-growing SRP index at either
     geometry: drain the feed through the ingest gate (admit decision
     vs the geometry-keyed BASE index), return base ∪ grown epochs."""
@@ -1302,20 +1215,14 @@ def _run_embedding_ingest(spark: SparkSession, sf_dir: str, cache: dict,
     base_dir = srp_index_dir(spark, sf_dir, **kw)
     payload_path = srp_payload_dir(spark, sf_dir)
     quant_path = srp_quant_payload_dir(spark, sf_dir)
-    epochs_dir, ckpt = _gate_dirs(cache, sf_dir, tag)
+    epochs_dir, ckpt = drain_dirs(tag, sf_dir)
 
-    path = f"{sf_dir}/embeddings.parquet"
-    template = spark.read.parquet(path)
-    vecs = stream_table(spark, path, template)
+    vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    q = (feed.writeStream.foreachBatch(
-             _embedding_ingest(base_dir, payload_path, epochs_dir,
-                               bits=bits,
-                               quant_payload_path=quant_path))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _embedding_ingest(base_dir, payload_path, epochs_dir,
+                                  bits=bits, quant_payload_path=quant_path),
+          ckpt)
     base = (spark.read.parquet(base_dir)
             .select("vec_id",
                     F.col("table_id").cast("int").alias("table_id"),
@@ -1356,11 +1263,7 @@ def stream_embedding_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrast (see ``stream_embedding_admit``); the lifecycle a
     deployment runs, and the one ``embedding_index_compact`` folds, is
     ``stream_embedding_ingest_scaled`` (r11 verdict item 1)."""
-    return _run_embedding_ingest(spark, sf_dir, _EMB_INGEST_DIRS,
-                                 "emb_ingest")
-
-
-_EMB_INGEST_SCALED_DIRS = _registered_cache()
+    return _run_embedding_ingest(spark, sf_dir, "emb_ingest")
 
 
 @register(
@@ -1382,19 +1285,9 @@ def stream_embedding_ingest_scaled(spark: SparkSession,
     admission; only the bucket space (and hence the per-batch
     candidate volume, which stays ∝ true near-dups as N grows) and
     the oracle's embedded plane literals change."""
-    return _run_embedding_ingest(spark, sf_dir, _EMB_INGEST_SCALED_DIRS,
-                                 "emb_ingest_sc", bits=_SRP_BITS_WIDE)
+    return _run_embedding_ingest(spark, sf_dir, "emb_ingest_sc",
+                                 bits=_SRP_BITS_WIDE)
 
-
-# Enrolled in the gate-cache registry (r11 ADVICE): the compact
-# entries memoize the fold + payload rebuild, so without enrollment a
-# scale-probe rep ≥ 2 timed only the gen2 groupBy/checksum read — the
-# same memoized-rep vacuity reset_gate_dirs exists to prevent. With
-# enrollment, each fresh-dirs rep re-runs the WHOLE lifecycle the
-# entry composes (ingest drain + fold + payload rebuild), which is
-# what its decade row should price.
-_TEXT_COMPACT_DIRS: dict[str, tuple[str, str, str]] = _registered_cache()
-_EMB_COMPACT_DIRS: dict[str, tuple[str, str]] = _registered_cache()
 
 _CHECKSUM_P = 1_000_000_007
 
@@ -1408,14 +1301,14 @@ def text_index_compact_dirs(spark: SparkSession,
     periodic maintenance job the ingest docstrings promise
     (``phash_index_compact``'s pattern, plus the payload half this
     family carries). Returns (gen2 index dir, gen2 hash-payload dir,
-    gen2 text-payload dir); memoized per (process, corpus)."""
-    dirs = _TEXT_COMPACT_DIRS.get(sf_dir)
-    if dirs is not None:
-        return dirs
-    grown = stream_text_ingest(spark, sf_dir)   # memoized drain
-    dirs = _fold_text_generations(spark, sf_dir, grown)
-    _TEXT_COMPACT_DIRS[sf_dir] = dirs
-    return dirs
+    gen2 text-payload dir). A per-run memo entry: after
+    ``engine.scratch.forget_runs`` the next call re-runs the WHOLE
+    lifecycle it composes (ingest drain + fold + payload rebuild), not
+    just a read of the folded generation."""
+    return memo(("text_index_compact_dirs", sf_dir),
+                lambda: _fold_text_generations(
+                    spark, sf_dir, stream_text_ingest(spark, sf_dir)),
+                per_run=True)
 
 
 def _fold_text_generations(spark: SparkSession, sf_dir: str,
@@ -1427,7 +1320,6 @@ def _fold_text_generations(spark: SparkSession, sf_dir: str,
     Returns (gen2 index, gen2 hash payload, gen2 text payload)."""
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
     from ..operators.dedup import BANDS, _shingle_sets, hashed_shingle_cols
 
     gen2 = scratch_dir("fsbd_text_index_gen2_")
@@ -1515,26 +1407,25 @@ def embedding_index_compact_dirs(spark: SparkSession,
     membership. The drain folded is the SCALED-geometry lifecycle
     (``stream_embedding_ingest_scaled``, 2^bits ≈ N/64) — a
     maintenance entry a user actually runs must not compose the
-    fixture geometry's occupancy pathology (r11 verdict item 1)."""
-    dirs = _EMB_COMPACT_DIRS.get(sf_dir)
-    if dirs is not None:
-        return dirs
+    fixture geometry's occupancy pathology (r11 verdict item 1). A
+    per-run memo entry, like the text twin."""
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
     from ..operators.similarity import SRP_TABLES
 
-    grown = stream_embedding_ingest_scaled(spark, sf_dir)  # memoized drain
-    gen2 = scratch_dir("fsbd_emb_index_gen2_")
-    write_generation(grown, gen2, "table_id", SRP_TABLES)
-    pay2 = scratch_dir("fsbd_emb_payload_gen2_")
-    member = grown.select("vec_id").distinct()
-    write_payload(
-        Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
-        .join(member, "vec_id", "left_semi"),
-        "vec_id", pay2)
-    _EMB_COMPACT_DIRS[sf_dir] = (gen2, pay2)
-    return gen2, pay2
+    def build() -> tuple[str, str]:
+        grown = stream_embedding_ingest_scaled(spark, sf_dir)
+        gen2 = scratch_dir("fsbd_emb_index_gen2_")
+        write_generation(grown, gen2, "table_id", SRP_TABLES)
+        pay2 = scratch_dir("fsbd_emb_payload_gen2_")
+        member = grown.select("vec_id").distinct()
+        write_payload(
+            Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
+            .join(member, "vec_id", "left_semi"),
+            "vec_id", pay2)
+        return gen2, pay2
+    return memo(("embedding_index_compact_dirs", sf_dir), build,
+                per_run=True)
 
 
 def _embedding_index_compact_oracle() -> str:
@@ -1593,8 +1484,6 @@ def embedding_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming twin of pipeline_curate and the full lambda ingest story the
 # reference's README declares (/root/reference/README.md:49-55).
 # ---------------------------------------------------------------------------
-
-_CURATE_DIRS = _registered_cache()
 
 from ..operators.pipeline import CURATE_MIN_TOKENS  # noqa: E402 — the
 # batch pipeline_curate's quality floor, imported (not re-declared) so
@@ -1768,41 +1657,22 @@ def stream_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.decontam import EVAL_MOD
 
     tune_session(spark)
-    path = f"{sf_dir}/documents.parquet"
     eval_index = _eval_gram_index_dir(spark, sf_dir)
     band_index = minhash_index_dir(spark, sf_dir)
     hash_payload = minhash_hash_payload_dir(spark, sf_dir)
     text_payload = doc_text_payload_dir(spark, sf_dir)
-    out_dir, ckpt = _gate_dirs(_CURATE_DIRS, sf_dir, "stream_curate")
+    out_dir, ckpt = drain_dirs("stream_curate", sf_dir)
 
-    template = spark.read.parquet(path)
-    docs = stream_table(spark, path, template)
+    docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where((F.col("doc_id") % INCR_MOD == INCR_REM)
                        & (F.col("doc_id") % EVAL_MOD != 0))
             .select("doc_id", "lang", "text"))
-    q = (feed.writeStream.foreachBatch(
-             _curate_admit(eval_index, band_index, None, out_dir,
-                           hash_payload_path=hash_payload,
-                           text_payload_path=text_payload))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _curate_admit(eval_index, band_index, None, out_dir,
+                              hash_payload_path=hash_payload,
+                              text_payload_path=text_payload),
+          ckpt)
     return read_epochs(spark, out_dir,
                        "doc_id long, lang string, n_tokens int")
-
-
-def reset_gate_dirs() -> None:
-    """Probe hook (scripts/scale_probe_sf1.py): forget the memoized
-    output/checkpoint dirs of every ingest gate so the next invocation
-    re-drains the full feed. A second availableNow run over memoized
-    dirs adds ZERO batches — exactly right for idempotence (pinned in
-    tests/test_streaming.py), but opaque to rep-timing and to the
-    candidate sensors, which only fire inside a running micro-batch
-    (r10 verdict item 2). The INDEX/payload artifacts stay memoized:
-    they are the persisted corpus-side state a production gate reads
-    every batch, paid once — the bpe_tokenize_serve probe precedent."""
-    for d in _GATE_DIR_CACHES:
-        d.clear()
 
 
 APPROX_DISTINCT_RSD = 0.05

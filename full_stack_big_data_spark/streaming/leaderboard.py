@@ -29,9 +29,8 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from ..engine.session import tune_session
 from ..operators.registry import register
-from .core import run_to_completion, stream_table
+from .core import corpus_stream, run_to_completion
 
 TOP_K = 3
 
@@ -91,10 +90,7 @@ WHERE rank <= {TOP_K}
     tags=("streaming", "stateful", "leaderboard"),
 )
 def stream_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    path = f"{sf_dir}/events.parquet"
-    template = spark.read.parquet(path)
-    out = running_top_users(stream_table(spark, path, template))
+    out = running_top_users(corpus_stream(spark, sf_dir, "events"))
     sink = run_to_completion(out, output_mode="update")
     # Each batch re-emits a key's full top-k tagged with the monotone
     # per-key total; the final leaderboard is the rows at each key's max.

@@ -12,21 +12,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine.session import tune_session
 from ..operators.registry import register
 from ..operators.textanalysis import _vocab_oracle
 from ..operators.wordcount import _WC_SQL
-from .core import run_to_completion, stream_table
+from .core import corpus_stream, drain, run_to_completion
 from .identity import identity_pipe_json
 from .windows import session_counts, sliding_counts, tumbling_counts
 from .wordcount_stream import streaming_word_counts
-
-
-def _stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    tune_session(spark)
-    path = f"{sf_dir}/{table}.parquet"
-    template = spark.read.parquet(path)
-    return stream_table(spark, path, template)
 
 
 @register(
@@ -36,7 +28,7 @@ def _stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     tags=("streaming", "wordcount"),
 )
 def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wc = streaming_word_counts(_stream(spark, sf_dir, "documents"))
+    wc = streaming_word_counts(corpus_stream(spark, sf_dir, "documents"))
     return run_to_completion(wc, output_mode="complete")
 
 
@@ -51,7 +43,7 @@ FROM events GROUP BY 1, 2
     tags=("streaming", "window"),
 )
 def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = tumbling_counts(_stream(spark, sf_dir, "events"))
+    agg = tumbling_counts(corpus_stream(spark, sf_dir, "events"))
     return run_to_completion(agg, output_mode="complete")
 
 
@@ -71,7 +63,7 @@ FROM w GROUP BY 1, 2
     tags=("streaming", "window"),
 )
 def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = sliding_counts(_stream(spark, sf_dir, "events"))
+    agg = sliding_counts(corpus_stream(spark, sf_dir, "events"))
     return run_to_completion(agg, output_mode="complete")
 
 
@@ -100,7 +92,7 @@ FROM s GROUP BY user_id, sid
     tags=("streaming", "window", "session"),
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = session_counts(_stream(spark, sf_dir, "events"))
+    agg = session_counts(corpus_stream(spark, sf_dir, "events"))
     return run_to_completion(agg, output_mode="complete")
 
 
@@ -118,7 +110,7 @@ def stream_identity_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
     )
-    src = _stream(spark, sf_dir, "events").select(
+    src = corpus_stream(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.round("value", 6).alias("value"))
     schema = StructType([
         StructField("event_id", LongType()),
@@ -166,19 +158,16 @@ def stream_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.kafka import file_wire_reader, write_to_file_wire
     from ..sources.serde import from_json_bytes, to_json_bytes
 
-    tune_session(spark)
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path).select(*cols)
+    src = corpus_stream(spark, sf_dir, "documents").select(*cols)
     topic = scratch_dir("fsbd_wire_topic_")
     # producer: stream the table → binary wire rows → checkpointed topic
-    q = (write_to_file_wire(
-             to_json_bytes(stream_table(spark, path, template).select(*cols), cols),
-             topic, scratch_dir("fsbd_wire_ckp_"))
+    q = (write_to_file_wire(to_json_bytes(src, cols), topic,
+                            scratch_dir("fsbd_wire_ckp_"))
          .trigger(availableNow=True).start())
     q.awaitTermination()
     # consumer: flow-controlled stream over the topic → decode → sink
-    back = from_json_bytes(file_wire_reader(spark, topic), template.schema)
+    back = from_json_bytes(file_wire_reader(spark, topic), src.schema)
     sink = run_to_completion(back, output_mode="append")
     return (sink.groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
@@ -219,7 +208,7 @@ def stream_serving_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..engine.scratch import scratch_dir
     from .rollup import maintain_hourly_rollup, serve_hourly
 
-    src = _stream(spark, sf_dir, "events")
+    src = corpus_stream(spark, sf_dir, "events")
     store = scratch_dir("fsbd_serving_store_")
     maintain_hourly_rollup(src, store, scratch_dir("fsbd_serving_ckp_"))
     hourly = serve_hourly(spark, store)
@@ -263,7 +252,7 @@ def stream_serving_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..engine.scratch import scratch_dir
     from .rollup import compact_rollup, maintain_hourly_rollup, serve_hourly
 
-    src = _stream(spark, sf_dir, "events")
+    src = corpus_stream(spark, sf_dir, "events")
     store = scratch_dir("fsbd_serving_store_")
     maintain_hourly_rollup(src, store, scratch_dir("fsbd_serving_ckp_"))
     gen1 = scratch_dir("fsbd_serving_gen1_")
@@ -305,7 +294,7 @@ def stream_lambda_merged_wordcount(spark: SparkSession, sf_dir: str) -> DataFram
     from ..engine.catalog import Catalog
     from ..operators.wordcount import word_counts
 
-    speed_src = _stream(spark, sf_dir, "documents").where("doc_id % 5 = 4")
+    speed_src = corpus_stream(spark, sf_dir, "documents").where("doc_id % 5 = 4")
     speed = run_to_completion(streaming_word_counts(speed_src),
                               output_mode="complete")
     batch = word_counts(Catalog(spark, sf_dir).documents
@@ -323,9 +312,9 @@ def stream_lambda_merged_wordcount(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def stream_vocab_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vocabulary table maintained INCREMENTALLY from a document
-    stream: each micro-batch writes its own (token, cnt) partial under
-    a batch-keyed directory (the idempotent exactly-once layout of
-    ``streaming/rollup.py`` — a replayed batch overwrites itself), and
+    stream: each micro-batch writes its own (token, cnt) partial as its
+    epoch (``engine.generations.append_epoch`` — a replayed batch
+    rewrites itself), and
     the served vocabulary re-aggregates the partials and ranks them
     with the SAME code as the batch build
     (``textanalysis.vocab_from_counts``). The oracle is the batch
@@ -338,23 +327,21 @@ def stream_vocab_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    from ..engine.generations import append_epoch, read_epochs
     from ..engine.scratch import scratch_dir
     from ..functions.text import tokens
     from ..operators.textanalysis import vocab_from_counts
 
-    src = _stream(spark, sf_dir, "documents")
+    src = corpus_stream(spark, sf_dir, "documents")
     store = scratch_dir("fsbd_vocab_store_")
 
     def write_partials(df: DataFrame, bid: int) -> None:
-        (df.select(F.explode(tokens("text")).alias("token"))
-         .groupBy("token").agg(F.count("*").alias("cnt"))
-         .write.mode("overwrite").parquet(f"{store}/batch_id={bid}"))
+        append_epoch(df.select(F.explode(tokens("text")).alias("token"))
+                     .groupBy("token").agg(F.count("*").alias("cnt")),
+                     bid, store)
 
-    q = (src.writeStream.foreachBatch(write_partials)
-         .option("checkpointLocation", scratch_dir("fsbd_vocab_ckp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    merged = (spark.read.parquet(store)
+    drain(src, write_partials, scratch_dir("fsbd_vocab_ckp_"))
+    merged = (read_epochs(spark, store, "token string, cnt long")
               .groupBy("token").agg(F.sum("cnt").alias("cnt")))
     return vocab_from_counts(merged)
 

@@ -44,10 +44,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.localdf import local_df
 from ..engine.generations import committed
+from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
 from ..functions.hashing import hex64, hex64_sql
 from ..operators.registry import register
-from .joins import _registered_cache
+from .core import drain
 
 RESERVOIR_K = 64
 _R_SALT = "reservoir|"
@@ -70,10 +71,6 @@ def _committed_versions(state_root: str,
         if committed(os.path.join(state_root, d)):
             out.append(v)
     return sorted(out)
-
-# Enrolled in the gate-cache registry so fresh-dirs probe reps re-drain
-# the feed and re-fold the reservoir instead of timing a memoized read.
-_RES_DIRS: dict[str, tuple[str, str, str]] = _registered_cache()
 
 
 def _race_key_col() -> F.Column:
@@ -103,14 +100,16 @@ def _merge_reservoir(prev: DataFrame, batch: DataFrame,
             .limit(k))
 
 
-def _reservoir_body(state_root: str, k: int = RESERVOIR_K):
+def _reservoir_body(state_root: str, k: int = RESERVOIR_K,
+                    race_key=_race_key_col, key_type: str = "bigint"):
     """foreachBatch body: fold the micro-batch into the versioned
     reservoir. Reads snapshot v{b-1} (the newest version < b on disk —
-    a replay of b must NOT read b's own torn output), writes v{b}."""
+    a replay of b must NOT read b's own torn output), writes v{b}.
+    ``race_key()`` is the key column, of SQL type ``key_type``."""
     def body(batch: DataFrame, batch_id: int) -> None:
         ss = batch.sparkSession
         keyed = (batch.select("doc_id", "n_chars")
-                 .withColumn("race_key", _race_key_col())
+                 .withColumn("race_key", race_key())
                  .orderBy(F.desc("race_key"), F.asc("doc_id"))
                  .limit(k))
         versions = _committed_versions(state_root, below=batch_id)
@@ -119,7 +118,7 @@ def _reservoir_body(state_root: str, k: int = RESERVOIR_K):
                 os.path.join(state_root, f"v={versions[-1]}"))
         else:
             prev = local_df(
-                ss, [], "doc_id long, n_chars int, race_key bigint")
+                ss, [], f"doc_id long, n_chars int, race_key {key_type}")
         out = os.path.join(state_root, f"v={batch_id}")
         (_merge_reservoir(prev, keyed, k)
          .coalesce(1).write.mode("overwrite").parquet(out))
@@ -144,6 +143,32 @@ def read_reservoir(spark: SparkSession, state_root: str) -> DataFrame:
     w = Window.orderBy(F.desc("race_key"), F.asc("doc_id"))
     return cur.select(F.row_number().over(w).cast("bigint").alias("rank"),
                       "doc_id", "n_chars", "race_key")
+
+
+def _drain_reservoir(spark: SparkSession, sf_dir: str, tag: str,
+                     body) -> DataFrame:
+    """Drain the document feed, staged as FOUR files read one per
+    micro-batch (``maxFilesPerTrigger=1``), through ``body(state_root)``
+    and serve the newest snapshot. The staged feed, the state root and
+    the checkpoint are one per-run memo entry, so fresh-dirs probe reps
+    re-drain the feed and re-fold the reservoir instead of timing a
+    memoized read."""
+    tune_session(spark)
+
+    def stage() -> tuple[str, str, str]:
+        feed_dir = scratch_dir(f"fsbd_{tag}_feed_")
+        (spark.read.parquet(f"{sf_dir}/documents.parquet")
+         .select("doc_id", "n_chars")
+         .repartition(4).write.mode("overwrite").parquet(feed_dir))
+        return (feed_dir, scratch_dir(f"fsbd_{tag}_state_"),
+                scratch_dir(f"fsbd_{tag}_ckpt_"))
+    feed_dir, state_root, ckpt = memo((tag, sf_dir), stage, per_run=True)
+
+    template = spark.read.parquet(feed_dir)
+    feed = (spark.readStream.schema(template.schema)
+            .option("maxFilesPerTrigger", 1).parquet(feed_dir))
+    drain(feed, body(state_root), ckpt)
+    return read_reservoir(spark, state_root)
 
 
 def _reservoir_oracle() -> str:
@@ -186,36 +211,12 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cite: reference has no sampling surface; this is the §2.5-class
     capability a 100 TB ingest needs (sample a bounded eval/inspection
     set from an unbounded firehose without ever buffering it)."""
-    from ..engine.scratch import scratch_dir
-
-    tune_session(spark)
-    dirs = _RES_DIRS.get(sf_dir)
-    if dirs is None:
-        feed_dir = scratch_dir("fsbd_reservoir_feed_")
-        state_root = scratch_dir("fsbd_reservoir_state_")
-        ckpt = scratch_dir("fsbd_reservoir_ckpt_")
-        (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .select("doc_id", "n_chars")
-         .repartition(4).write.mode("overwrite").parquet(feed_dir))
-        dirs = (feed_dir, state_root, ckpt)
-        _RES_DIRS[sf_dir] = dirs
-    feed_dir, state_root, ckpt = dirs
-
-    template = spark.read.parquet(feed_dir)
-    feed = (spark.readStream.schema(template.schema)
-            .option("maxFilesPerTrigger", 1).parquet(feed_dir))
-    q = (feed.writeStream.foreachBatch(_reservoir_body(state_root))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return read_reservoir(spark, state_root)
+    return _drain_reservoir(spark, sf_dir, "reservoir", _reservoir_body)
 
 
 _W_SALT = "wsample|"
 _W_U_MOD = 1_000_000
 WEIGHTED_RES_K = 64
-
-_WRES_DIRS: dict[str, tuple[str, str, str]] = _registered_cache()
 
 
 def _weighted_race_key_col() -> F.Column:
@@ -235,23 +236,7 @@ def _weighted_reservoir_body(state_root: str, k: int = WEIGHTED_RES_K):
     key (A-Res: keep the k largest ln(u)/w). The merge algebra, and
     with it every exactly-once/chop-invariance argument, is key-
     agnostic — only the key column changes."""
-    def body(batch: DataFrame, batch_id: int) -> None:
-        ss = batch.sparkSession
-        keyed = (batch.select("doc_id", "n_chars")
-                 .withColumn("race_key", _weighted_race_key_col())
-                 .orderBy(F.desc("race_key"), F.asc("doc_id"))
-                 .limit(k))
-        versions = _committed_versions(state_root, below=batch_id)
-        if versions:
-            prev = ss.read.parquet(
-                os.path.join(state_root, f"v={versions[-1]}"))
-        else:
-            prev = local_df(
-                ss, [], "doc_id long, n_chars int, race_key double")
-        out = os.path.join(state_root, f"v={batch_id}")
-        (_merge_reservoir(prev, keyed, k)
-         .coalesce(1).write.mode("overwrite").parquet(out))
-    return body
+    return _reservoir_body(state_root, k, _weighted_race_key_col, "double")
 
 
 def _weighted_reservoir_oracle() -> str:
@@ -293,27 +278,4 @@ def stream_reservoir_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. Together with ``stream_reservoir_sample`` this closes the
     sampling family's streaming column for both uniform and weighted
     draws."""
-    from ..engine.scratch import scratch_dir
-
-    tune_session(spark)
-    dirs = _WRES_DIRS.get(sf_dir)
-    if dirs is None:
-        feed_dir = scratch_dir("fsbd_wres_feed_")
-        state_root = scratch_dir("fsbd_wres_state_")
-        ckpt = scratch_dir("fsbd_wres_ckpt_")
-        (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .select("doc_id", "n_chars")
-         .repartition(4).write.mode("overwrite").parquet(feed_dir))
-        dirs = (feed_dir, state_root, ckpt)
-        _WRES_DIRS[sf_dir] = dirs
-    feed_dir, state_root, ckpt = dirs
-
-    template = spark.read.parquet(feed_dir)
-    feed = (spark.readStream.schema(template.schema)
-            .option("maxFilesPerTrigger", 1).parquet(feed_dir))
-    q = (feed.writeStream.foreachBatch(
-             _weighted_reservoir_body(state_root))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return read_reservoir(spark, state_root)
+    return _drain_reservoir(spark, sf_dir, "wres", _weighted_reservoir_body)

@@ -57,6 +57,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import committed, local_path, write_single_file
+from .core import drain
 
 # The served rollup: the partials' SUM types (Spark widens a decimal SUM
 # by 10 digits), hours as UTC instants.
@@ -112,11 +113,8 @@ def maintain_hourly_rollup(sdf: DataFrame, rollup_path: str,
                            checkpoint: str) -> None:
     """Drain the event stream once (availableNow), maintaining the
     batch-keyed hourly partials under ``rollup_path``."""
-    q = (sdf.writeStream
-         .foreachBatch(lambda df, bid: write_batch_partials(df, bid, rollup_path))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(sdf, lambda df, bid: write_batch_partials(df, bid, rollup_path),
+          checkpoint)
 
 
 def _store_files(root: str) -> list[str]:

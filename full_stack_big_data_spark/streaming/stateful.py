@@ -28,9 +28,8 @@ from pyspark.sql.types import (
     LongType, StructField, StructType,
 )
 
-from ..engine.session import tune_session
 from ..operators.registry import register
-from .core import run_to_completion, stream_table
+from .core import corpus_stream, run_to_completion
 
 _OUT = StructType([
     StructField("user_id", LongType()),
@@ -92,10 +91,7 @@ FROM events GROUP BY user_id
     tags=("streaming", "stateful"),
 )
 def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    path = f"{sf_dir}/events.parquet"
-    template = spark.read.parquet(path)
-    out = running_user_stats(stream_table(spark, path, template))
+    out = running_user_stats(corpus_stream(spark, sf_dir, "events"))
     sink = run_to_completion(out, output_mode="update")
     # Update mode emits one row per key per batch; running stats are
     # monotone, so the final state is the per-key extreme of each column

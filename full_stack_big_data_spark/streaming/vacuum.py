@@ -52,11 +52,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import read_epochs, vacuum_checked
+from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
 from ..operators.registry import register
-from .core import stream_table
-from .joins import (_fold_text_generations, _gate_dirs, _registered_cache,
-                    _text_admit, _text_ingest)
+from .core import corpus_stream, drain, drain_dirs
+from .joins import _fold_text_generations, _text_admit, _text_ingest
 
 # doc_id % 4 → lifecycle role: {0,1} = the old corpus the base
 # generation indexes; 2 = the ingested dump that grows the index;
@@ -67,24 +67,23 @@ _VAC_OLD = (0, 1)
 _VAC_INGEST = 2
 _VAC_SERVE = 3
 
-# gen2 dirs keyed by sf_dir; enrolled so fresh-dirs probe reps re-run
-# the WHOLE lifecycle (build + drain + fold + vacuum), not a memo read.
-_VAC_GEN2_DIRS: dict[str, tuple[str, str, str]] = _registered_cache()
-_VAC_SERVE_DIRS = _registered_cache()
-
 
 def _vacuumed_gen2_dirs(spark: SparkSession,
                         sf_dir: str) -> tuple[str, str, str]:
     """Steps 1-4: build the private base generation, drain the ingest
     dump into epochs, fold to gen2, vacuum the superseded dirs.
     Returns the (index, hash payload, text payload) gen2 triple — the
-    ONLY directories left alive besides the checkpoint."""
-    dirs = _VAC_GEN2_DIRS.get(sf_dir)
-    if dirs is not None:
-        return dirs
+    ONLY directories left alive besides the checkpoint. A per-run memo
+    entry, so fresh-dirs probe reps re-run the WHOLE lifecycle (build +
+    drain + fold + vacuum), not a memo read."""
+    return memo(("vacuumed_gen2_dirs", sf_dir),
+                lambda: _text_vacuum_lifecycle(spark, sf_dir), per_run=True)
+
+
+def _text_vacuum_lifecycle(spark: SparkSession,
+                           sf_dir: str) -> tuple[str, str, str]:
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
-    from ..engine.scratch import scratch_dir
     from ..operators.dedup import (_band_rows, _shingle_sets,
                                    hashed_shingle_cols)
 
@@ -108,18 +107,12 @@ def _vacuumed_gen2_dirs(spark: SparkSession,
     # 2. ingest drain: dump A grows the index as epoch partitions
     epochs = scratch_dir("fsbd_vac_epochs_")
     ckpt = scratch_dir("fsbd_vac_ingest_ckpt_")
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path)
-    feed = (stream_table(spark, path, template)
+    feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_INGEST)
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(
-             _text_ingest(base, None, epochs,
-                          hash_payload_path=payh,
-                          text_payload_path=payt))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _text_ingest(base, None, epochs, hash_payload_path=payh,
+                             text_payload_path=payt),
+          ckpt)
 
     # 3. compact: fold base ∪ epochs, rebuild payload tiers
     base_rows = (spark.read.parquet(base)
@@ -132,9 +125,7 @@ def _vacuumed_gen2_dirs(spark: SparkSession,
 
     # 4. vacuum the superseded generations — asserted, not just run
     vacuum_checked([gen2, gen2h, gen2t], [base, epochs, payh, payt], ckpt)
-    dirs = (gen2, gen2h, gen2t)
-    _VAC_GEN2_DIRS[sf_dir] = dirs
-    return dirs
+    return gen2, gen2h, gen2t
 
 
 def _text_vacuum_oracle() -> str:
@@ -218,17 +209,11 @@ def text_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     gen2, gen2h, gen2t = _vacuumed_gen2_dirs(spark, sf_dir)
 
-    out_dir, ckpt = _gate_dirs(_VAC_SERVE_DIRS, sf_dir, "vac_serve")
-    path = f"{sf_dir}/documents.parquet"
-    template = spark.read.parquet(path)
-    feed = (stream_table(spark, path, template)
+    out_dir, ckpt = drain_dirs("vac_serve", sf_dir)
+    feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_SERVE)
             .select("doc_id", "text"))
-    q = (feed.writeStream.foreachBatch(
-             _text_admit(gen2, None, out_dir,
-                         hash_payload_path=gen2h,
-                         text_payload_path=gen2t))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(feed, _text_admit(gen2, None, out_dir, hash_payload_path=gen2h,
+                            text_payload_path=gen2t),
+          ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")

@@ -19,7 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.generations import append_epoch, read_epochs
+from ..engine.scratch import scratch_dir
 from ..operators.wordcount import word_counts
+from .core import drain
 
 
 def streaming_word_counts(stream_df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -41,19 +44,16 @@ def chained_aggregation(stream_df: DataFrame, spark: SparkSession,
                         sink_path: str) -> DataFrame:
     """A3: aggregate-of-aggregates via foreachBatch chaining.
 
-    Each micro-batch of first-level word-count updates is appended to a
-    parquet table at ``sink_path``; the second-level aggregate runs over
+    Each micro-batch of first-level word-count updates lands as its
+    epoch of the table at ``sink_path`` (``engine.generations.
+    append_epoch``, so a replayed batch rewrites itself instead of
+    appending its updates twice); the second-level aggregate runs over
     that table. This is the modern equivalent of TestAggregatesCounter
     consuming TestWordCounter's update stream."""
-    wc = streaming_word_counts(stream_df)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_path)
-
-    q = (wc.writeStream.outputMode("update").foreachBatch(merge)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(sink_path).agg(
+    drain(streaming_word_counts(stream_df),
+          lambda df, bid: append_epoch(df, bid, sink_path),
+          scratch_dir("fsbd_a3_ckpt_"), output_mode="update")
+    return read_epochs(spark, sink_path, "word string, cnt long").agg(
         F.count("*").alias("update_events"),
         F.sum("cnt").alias("sum_counts"),
     )

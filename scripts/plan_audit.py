@@ -269,13 +269,13 @@ def audit_streaming(spark, reg) -> tuple[list[str], list[str]]:
     # the listener here would observe ZERO micro-batches and stamp the
     # bound over a vacuous row (r11 review finding — the same
     # memoized-drain vacuity scale_probe's _fresh_gate fixes).
-    from full_stack_big_data_spark.streaming.joins import reset_gate_dirs
+    from full_stack_big_data_spark.engine.scratch import forget_runs
     try:
         for name, spec in reg.items():
             if "streaming" not in spec.tags:
                 continue
             col.reset()
-            reset_gate_dirs()
+            forget_runs()
             release_scoped_cache(spark)
             bound = STREAM_STATE_BOUNDS.get(name)
             try:

@@ -357,8 +357,8 @@ def _fresh_gate(name):
     def run(spark, sf):
         from full_stack_big_data_spark.operators.registry import \
             load_all as _la
-        from full_stack_big_data_spark.streaming import joins as sj
-        sj.reset_gate_dirs()
+        from full_stack_big_data_spark.engine import scratch
+        scratch.forget_runs()
         return _la()[name].builder(spark, sf)
     return run
 

@@ -1446,11 +1446,11 @@ def test_ivf_vacuum_gen2_one_file_per_cell_and_superseded_gone(spark):
     from collections import Counter
 
     from full_stack_big_data_spark.operators.registry import load_all
-    from full_stack_big_data_spark.streaming.ivf import _IVF_VAC_DIRS
+    from full_stack_big_data_spark.streaming.ivf import _vacuumed_ivf_gen2
 
     reg = load_all()
     assert reg["ivf_index_vacuum"].builder(spark, SF_SMOKE).count() > 0
-    gen2 = _IVF_VAC_DIRS[SF_SMOKE]
+    gen2 = _vacuumed_ivf_gen2(spark, SF_SMOKE)
     files = Counter()
     for dp, _dirs, fs in os.walk(gen2):
         cell = os.path.basename(dp)
