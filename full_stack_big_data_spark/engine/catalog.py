@@ -11,6 +11,21 @@ gives every operator the same normalized view of the testdata tables:
   (float division would round half the microseconds up).
 - everything else is passed through untouched, so Catalyst sees the bare
   parquet scan and can push filters/prune columns into it.
+
+Schema memo. ``spark.read.parquet(p)`` without a schema runs a Spark
+job to read the footers (75–90 ms and one job per load at 4 vCPU;
+with the schema given, 10–14 ms and no job), and every registry
+builder loads through here. So :meth:`Catalog.load` reads with
+``spark.read.schema(s).parquet(p)``, where ``s`` is the schema Spark
+inferred the first time, kept in ``engine.scratch.memo``. The memo key
+is the table's local file fingerprint — (relative path, inode, size,
+``mtime_ns``) of every parquet file, walked recursively for directory
+tables — plus the session's values of the confs that change parquet
+schema inference (:data:`_SCHEMA_CONFS`). A rewrite, an added or
+removed file, or a conf flip changes the key, so the next load infers
+again. Not detected, as for the served rollup view: a rewrite in place
+that keeps the inode and the size and sets ``mtime`` back. A path that
+is not local or cannot be stat'ed keeps the inferred read.
 """
 
 from __future__ import annotations
@@ -19,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .scratch import memo
 from .session import tune_session
 
 TABLES = (
@@ -47,6 +63,15 @@ SPREAD_TABLES = {"documents", "embeddings"}
 # correctness sweep free of pointless shuffles.
 SPREAD_MIN_BYTES = 256 * 1024
 
+# Session confs that change what schema Spark infers from the same files.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -67,7 +92,7 @@ class Catalog:
         pure cost."""
         if name not in TABLES:
             raise KeyError(f"unknown table {name!r}; have {TABLES}")
-        df = self.spark.read.parquet(self.path(name))
+        df = self._read(self.path(name))
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             # nanos → micros, truncating (matches DuckDB/Arrow).
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -80,40 +105,57 @@ class Catalog:
                 df = df.repartition(par)
         return df
 
+    def _read(self, p: str) -> DataFrame:
+        """``spark.read.parquet(p)`` with the memoized schema of the same
+        files (module docstring); the plain inferring read when ``p``
+        has no local fingerprint."""
+        files = self._files(p)
+        if files is None:
+            return self.spark.read.parquet(p)
+        key = ("catalog_schema", p, files,
+               tuple(self.spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+        schema = memo(key, lambda: self.spark.read.parquet(p).schema)
+        return self.spark.read.schema(schema).parquet(p)
+
     @staticmethod
-    def _walk_parquet(p: str) -> tuple[int, int]:
-        """(total bytes, file count) of every .parquet under ``p``,
-        recursively — hive-partitioned and streaming-sink layouts nest
-        their files, and a top-level-only listing reads them as 0 bytes
-        (the compact_parquet bug class, r3 advice)."""
-        size = nfiles = 0
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                if f.endswith(".parquet"):
-                    size += os.path.getsize(os.path.join(root, f))
-                    nfiles += 1
-        return size, nfiles
+    def _files(p: str) -> tuple | None:
+        """(relative path, inode, size, mtime_ns) of the file ``p``, or
+        of every .parquet file under the directory ``p``, recursively —
+        hive-partitioned and streaming-sink layouts nest their files,
+        and a top-level-only listing reads them as 0 bytes (the
+        compact_parquet bug class, r3 advice). Hidden ``_``/``.`` names,
+        which Spark does not read, are skipped. None when ``p`` cannot
+        be stat'ed locally (a non-local path)."""
+        try:
+            if not os.path.isdir(p):
+                st = os.stat(p)
+                return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+            out = []
+            for root, dirs, names in os.walk(p):
+                dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+                for f in sorted(names):
+                    if f.endswith(".parquet") and f[0] not in "_.":
+                        st = os.stat(os.path.join(root, f))
+                        out.append((os.path.relpath(os.path.join(root, f), p),
+                                    st.st_ino, st.st_size, st.st_mtime_ns))
+            return tuple(out)
+        except OSError:
+            return None
 
     def _size(self, name: str) -> int:
-        p = self.path(name)
-        if os.path.isdir(p):
-            return self._walk_parquet(p)[0]
-        return os.path.getsize(p) if os.path.exists(p) else 1 << 60
+        files = self._files(self.path(name))
+        return sum(f[2] for f in files) if files is not None else 1 << 60
 
     def _est_splits(self, name: str) -> int:
         """Scan splits the file layout yields: Σ bytes / maxPartitionBytes
         (cheap filesystem arithmetic — no plan materialization)."""
-        p = self.path(name)
-        if os.path.isdir(p):
-            size, nfiles = self._walk_parquet(p)
-            nfiles = max(1, nfiles)
-        elif os.path.exists(p):
-            size, nfiles = os.path.getsize(p), 1
-        else:  # non-local path — let Spark's own split logic stand
+        files = self._files(self.path(name))
+        if files is None:  # non-local path — let Spark's own split logic stand
             return 1 << 30
-        max_bytes = int(self.spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728").removesuffix("b"))
-        return max(nfiles, size // max_bytes)
+        # the parsed byte count: the conf string may carry a unit ("64m")
+        max_bytes = (self.spark._jsparkSession.sessionState().conf()
+                     .filesMaxPartitionBytes())
+        return max(len(files), 1, sum(f[2] for f in files) // max_bytes)
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLES:

@@ -22,12 +22,26 @@ Portability: every hash that reaches results is md5-based (see
 ``functions.hashing``) so DuckDB reproduces signatures bit-for-bit.
 MinHash mins over an affine integer family derived from one md5 per
 shingle (exact BIGINT arithmetic mod 2³¹-1 — identical in both
-engines; see the constants block below).
+engines; see the constants block below). Spark computes the bucket ids
+with one Arrow kernel (``_minhash_buckets``, an ``arrow_udf`` under
+:func:`_band_rows`), not Catalyst higher-order functions: the 16
+interpreted ``transform`` chains cost a per-shingle lambda call in
+every task and ~2,000 py4j round trips to build each plan. The kernel
+hashes the same UTF-8 bytes with md5, runs the same family as numpy
+int64 (every product < 2⁶², so no overflow and no rounding) and keys
+each band with the same ``'|'``-joined decimal text, so its buckets
+equal the Catalyst form's bit for bit (pinned in
+``tests/test_minhash_kernel.py``) and the DuckDB oracle's.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 from ..engine.catalog import Catalog
 from ..engine.scratch import memo, scratch_dir
@@ -205,12 +219,63 @@ WHERE i * 1.0 / (sa.n + sb.n - i) >= {threshold}
 """
 
 
+_MH_A_NP = np.array(_MH_A, dtype=np.int64)
+_MH_B_NP = np.array(_MH_B, dtype=np.int64)
+_EMPTY_BUCKET = hashlib.md5(b"").hexdigest()
+
+
+def _minhash_buckets(s: pa.Array, bands: int) -> pa.ListArray:
+    """The ``bands`` bucket ids of every row of an ``array<string>``
+    shingle-set column, as one Arrow batch — the kernel under
+    :func:`_band_rows` (see there for why it is one kernel and why it
+    is bit-exact). ``s`` is read through its offsets and values
+    buffers: the flat shingle vector is hashed once, the 16-hash family
+    runs as one (shingles × 16) int64 matrix, and per-row minima come
+    from one ``reduceat`` over the non-empty rows' segment starts.
+    Null rows, empty rows and null elements follow Catalyst's
+    ``array_min``/``concat_ws`` null algebra: null elements are
+    skipped, and a row with no non-null shingle gets
+    ``md5('')`` in every band."""
+    rows = N_HASHES // bands
+    n = len(s)
+    offs = s.offsets.to_numpy()
+    row = np.repeat(np.arange(n), np.diff(offs))
+    # a sliced list array shares its parent's whole values buffer
+    g = s.values.slice(offs[0], offs[-1] - offs[0])
+    keep = g.is_valid().to_numpy(zero_copy_only=False)
+    if s.null_count:
+        keep &= s.is_valid().to_numpy(zero_copy_only=False)[row]
+    row = row[keep]
+    digests = b"".join(hashlib.md5(v).digest()[:8] for v in
+                       g.filter(pa.array(keep)).cast(pa.binary()).to_pylist())
+    # hex64: the first 15 hex digits of md5 = the top 60 bits
+    h = (np.frombuffer(digests, dtype=">u8") >> 4).astype(np.int64) % MH_P
+    sig = (h[:, None] * _MH_A_NP + _MH_B_NP) % MH_P      # < 2**62: exact
+    cnt = np.bincount(row, minlength=n)
+    has = cnt > 0
+    mins = (np.minimum.reduceat(sig, (np.cumsum(cnt) - cnt)[has], axis=0)
+            if len(sig) else sig).tolist()
+    out = []
+    it = iter(mins)
+    for nonempty in has:
+        if not nonempty:
+            out.extend([_EMPTY_BUCKET] * bands)
+            continue
+        m = next(it)
+        out.extend(hashlib.md5("|".join(map(str, m[b * rows:(b + 1) * rows]))
+                               .encode()).hexdigest()
+                   for b in range(bands))
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
+        pa.array(out, type=pa.string()))
+
+
 def _band_rows(sh: DataFrame, bands: int = BANDS) -> DataFrame:
     """(doc_id, band, bucket) LSH rows from the compact shingle table —
     signatures map-side (one md5 per shingle, affine family over it),
-    bands as a ``bands``-row explode over the shared 16-hash signature.
-    Bucket joins downstream are equi-joins on (band, bucket): shuffle
-    bounded by signature size, never all-pairs.
+    bands as a ``bands``-row posexplode over the shared 16-hash
+    signature. Bucket joins downstream are equi-joins on (band, bucket):
+    shuffle bounded by signature size, never all-pairs.
 
     ``bands`` is the recall/precision LAYOUT KNOB over the same
     signatures: rows-per-band r = N_HASHES/bands, P(candidate at
@@ -219,28 +284,32 @@ def _band_rows(sh: DataFrame, bands: int = BANDS) -> DataFrame:
     ~99.998% for ~16×-hotter buckets (measured in
     ``tests/test_dedup.py::test_band_layout_knob_recall_at_half``) —
     the trade ``decontam_fuzzy``'s docstring prices out.
+
+    One Arrow kernel (``arrow_udf`` over :func:`_minhash_buckets`)
+    computes every band's bucket id per row. The Catalyst form it
+    replaces — 16 ``transform`` lambdas plus an md5 ``transform`` per
+    row — is CodegenFallback: each lambda is interpreted per shingle,
+    and building the 16 lambda chains cost ~2,000 py4j round trips per
+    plan. The kernel is bit-identical to that form
+    (``tests/test_minhash_kernel.py`` pins it): the per-shingle md5
+    and the band md5 hash the same UTF-8 bytes; the affine family is
+    exact int64 arithmetic in both (h < 2³¹ and a < 2³¹, so every
+    product stays below 2⁶²) and min is order-free; the band key is
+    the same ``'|'``-joined decimal text ``concat_ws`` builds from
+    ``cast(bigint AS string)``.
     """
     if N_HASHES % bands:
         raise ValueError(f"bands={bands} must divide N_HASHES={N_HASHES}")
-    rows = N_HASHES // bands
-    hashed = sh.select("doc_id", "s",
-                       F.transform("s", lambda g: hex64(g) % MH_P).alias("h"))
-    mh = hashed.select("doc_id", *[
-        F.array_min(F.transform("h", lambda h: (h * _MH_A[i] + _MH_B[i]) % MH_P))
-        .alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ])
-    return mh.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[
-                    F.col(f"mh{rows * b + r}").cast("string")
-                    for r in range(rows)])).alias("bucket"),
-            ) for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+
+    @F.arrow_udf(ArrayType(StringType(), containsNull=False))
+    def _buckets(s: pa.Array) -> pa.Array:
+        return _minhash_buckets(s, bands)
+
+    # the kernel sits inside the generator, not in a projected column:
+    # a Generate over a bare attribute gets an inferred size/isnotnull
+    # filter pushed below it with the kernel re-inlined (see _shingled)
+    return sh.select("doc_id",
+                     F.posexplode(_buckets("s")).alias("band", "bucket"))
 
 
 @register(
@@ -269,8 +338,9 @@ def minhash_lsh_pairs(sh: DataFrame, sensor: str,
     # Signatures/bands map-side (see _band_rows): zero shuffle — the old
     # explode → groupBy(doc_id) formulation shuffled the entire exploded
     # shingle table (the engine's largest exchange) just to bring each
-    # doc's shingles back together.
-    bands = _band_rows(sh)
+    # doc's shingles back together. Persisted: both self-join sides read
+    # one signature pass instead of running the kernel once each.
+    bands = _band_rows(sh).persist()
 
     a, b = bands.alias("a"), bands.alias("b")
     cand = (

@@ -23,6 +23,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
 import json
+import shutil
 import sys
 import tempfile
 
@@ -43,7 +44,6 @@ spark.sparkContext.setLogLevel("ERROR")
 
 ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 staged = tempfile.mkdtemp(prefix="fsbd_stream_retry_")
-ev.repartition(4).write.mode("overwrite").parquet(staged)
 
 
 def flaky(df):
@@ -80,8 +80,12 @@ def drain(inject):
     return sorted("|".join(repr(r[c]) for c in cols) for r in rows)
 
 
-clean = drain(inject=False)
-injected = drain(inject=True)
+try:
+    ev.repartition(4).write.mode("overwrite").parquet(staged)
+    clean = drain(inject=False)
+    injected = drain(inject=True)
+finally:
+    shutil.rmtree(staged, ignore_errors=True)
 print(json.dumps({"ok": clean == injected, "rows": len(clean)}))
 spark.stop()
 """

@@ -49,6 +49,10 @@ _EXPECTED = {
     "ann_ivf_scaled": {"_cells": 1, "_cos": 1},
     # stored-codebook IVFADC: one assignment + one encode, zero copies
     "ann_ivfpq_adc": {"_cells": 1, "_encode": 1},
+    # persisted band rows: both bucket self-join sides read one
+    # signature pass of the MinHash bucket kernel
+    "dedup_minhash_lsh": {"_buckets": 1},
+    "multimodal_frame_neardup": {"_buckets": 1},
 }
 
 
