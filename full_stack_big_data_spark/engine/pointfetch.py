@@ -19,20 +19,29 @@ One file per pk directory at this scale; a 100 TB deployment raises
 ``PF_PK_MOD`` (and files per dir) so a directory stays a few hundred
 MB — the pruning arithmetic is unchanged.
 
-Fetch (``point_fetch``): candidate ids are pulled to the driver
-(size-gated — candidates per batch are bounded by the gate families'
-CAND_CEIL contracts, so this is a few thousand int64s; past the gate
-the caller falls back to the broadcast join, now against the payload
-table rather than the raw corpus) and pushed into the scan as LITERAL
-predicates: ``pk IN (…)`` prunes directories (PartitionFilters) and
-``key IN (…)`` reaches parquet as PushedFilters for row-group
-skipping. Per-batch bytes read ∝ candidate directories touched, never
-the corpus — pinned in tests/test_plans.py and measured in
-scripts/gate_io_probe.py.
+Fetch (``fetch_ids`` + ``fetch_payload_prefetched``): candidate ids
+are pulled to the driver (size-gated — candidates per batch are
+bounded by the gate families' CAND_CEIL contracts, so this is a few
+thousand int64s; past the gate the fetch falls back to the broadcast
+join, now against the payload table rather than the raw corpus) and
+pushed into the scan as LITERAL predicates (``point_fetch``):
+``pk IN (…)`` prunes directories (PartitionFilters) and ``key IN (…)``
+reaches parquet as PushedFilters for row-group skipping. Per-batch
+bytes read ∝ candidate directories touched, never the corpus — pinned
+in tests/test_plans.py and measured in scripts/gate_io_probe.py.
+
+Verify (``two_tier_verify``): the one two-tier fetch-and-decide every
+similarity family's exact verify runs — a screen tier over every
+candidate, the exact tier over screen survivors only — with each id
+collect overlapped against the driver's expression building.
+``dedup.jaccard_verify`` (text) and ``similarity.cosine_verify``
+(embeddings) supply the tiers; the batch ``dedup_incremental`` entry
+and every streaming ingest gate call them.
 """
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 PF_PK_MOD = 32        # payload directory-partition modulus
@@ -134,8 +143,8 @@ def fetch_payload_prefetched(spark: SparkSession, path: str, key: str,
     tiny while untouched directories are never opened). Past the
     driver gate → plain broadcast join over the payload.
 
-    Taking the ids pre-collected lets the streaming gate bodies run
-    the collect (the per-batch driver-blocking action) on an overlap
+    Taking the ids pre-collected lets :func:`two_tier_verify` run the
+    collect (the per-batch driver-blocking action) on an overlap
     thread while the driver builds the next verify tier's expression
     trees (guide §2.6)."""
     if ids is not None and len(ids) <= PF_IN_MAX:
@@ -148,9 +157,66 @@ def fetch_payload_prefetched(spark: SparkSession, path: str, key: str,
             .join(F.broadcast(ids_df.select(key).distinct()), key))
 
 
-def fetch_payload(spark: SparkSession, path: str, key: str,
-                  ids_df: DataFrame, pk_mod: int = PF_PK_MOD) -> DataFrame:
-    """The gates' entry point: collect the candidate ids, then
-    :func:`fetch_payload_prefetched`."""
-    return fetch_payload_prefetched(spark, path, key, ids_df,
-                                    fetch_ids(ids_df, key), pk_mod)
+def _verify_pool():
+    """One-thread overlap pool for the verify tiers' driver id collects
+    (guide §2.6: Spark happily runs jobs from several driver threads;
+    the tiers' actions are only sequential because the driver code
+    called them sequentially). The r15 body decomposition measured
+    ~43% of the per-batch wall as DRIVER-side expression construction
+    (minhash/HOF lambda trees, the UDF registration) serialized
+    between the two id-collect actions — so each collect runs on this
+    pool while the main thread builds the next tier's expression
+    trees. One worker is enough: there is never more than one collect
+    in flight. Paired A/B against serial order read parity, never worse
+    (OPTIMIZATION_r15.md §1)."""
+    from concurrent.futures import ThreadPoolExecutor
+    return ThreadPoolExecutor(max_workers=1)
+
+
+def _verify_submit(pool, spark: SparkSession, fn, *args):
+    """Run ``fn(*args)`` on the verify pool under the SUBMITTING
+    thread's Spark local properties. A bare ``pool.submit`` runs the
+    collect with none: it loses the micro-batch's job group, so a
+    failed or cancelled batch leaves a job that stopping the query
+    cannot cancel."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+
+def two_tier_verify(spark: SparkSession, cand: DataFrame, old: str,
+                    key: str, screen_path: str, screen, exact_path: str,
+                    exact, scope: list) -> DataFrame:
+    """The exact verify every similarity family shares: a cheap SCREEN
+    tier over every candidate, then the exact tier over the screen's
+    survivors only, each read by a pk-pruned point fetch of its payload
+    — never a pass over the corpus table.
+
+    ``cand`` holds candidate pairs; its ``old`` column is the corpus
+    side's id, looked up in both payloads under ``key`` (the fetched
+    rows carry it renamed to ``old``). ``screen`` and ``exact`` are
+    zero-argument builders, each called while its tier's id collect
+    runs on the overlap pool, returning ``apply(pairs, rows)``: the
+    screen's apply keeps a SUPERSET of the pairs the exact test keeps
+    (each family's screen carries that proof), the exact apply returns
+    the verified result.
+
+    The screened pair frame feeds the tier-2 id fetch AND the exact
+    join, so it is persisted and appended to ``scope`` for the
+    caller's finally-block to unpersist — the result is consumed
+    lazily, after this function returns."""
+    pool = _verify_pool()
+    try:
+        ids_df = cand.select(F.col(old).alias(key))
+        ids = _verify_submit(pool, spark, fetch_ids, ids_df, key)
+        apply_screen = screen()
+        rows = fetch_payload_prefetched(spark, screen_path, key, ids_df,
+                                        ids.result())
+        cand = apply_screen(cand, rows.withColumnRenamed(key, old)).persist()
+        scope.append(cand)
+        ids_df = cand.select(F.col(old).alias(key))
+        ids = _verify_submit(pool, spark, fetch_ids, ids_df, key)
+        apply_exact = exact()
+        rows = fetch_payload_prefetched(spark, exact_path, key, ids_df,
+                                        ids.result())
+    finally:
+        pool.shutdown(wait=False)
+    return apply_exact(cand, rows.withColumnRenamed(key, old))

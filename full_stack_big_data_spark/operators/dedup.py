@@ -398,79 +398,27 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     table by ``doc_id % 4 == 3``.
 
     Since r13 (r12 verdict item 7) the entry runs against the SAME
-    at-scale artifacts the streaming gate reads, so batch and stream
-    share one verify I/O discipline: candidates come from the STORED
-    band index (:func:`minhash_index_dir` — the corpus is bucketed
-    once per dump, never re-shingled here), the verify is two-tier —
-    tier 1 screens candidate pairs on point-fetched int32 shingle
-    hashes (:func:`minhash_hash_payload_dir`; hash-jaccard at the same
-    threshold is provably drop-free, :func:`hashed_shingle_cols`), and
-    only screen survivors (≈ true near-dups) point-fetch tier-2 raw
-    text (:func:`doc_text_payload_dir`) to re-shingle with the index
-    build's own kernel and decide on exact jaccard. Candidate
-    generation cost ∝ new-batch size, never corpus²; verify I/O ∝
-    candidate pk directories, never a corpus pass. The r11-era
-    pre-exploded shingle-string payload (``minhash_payload_dir``) is
-    no longer on any registered path — it survives for plan-pin tests
-    and the probe baseline only.
+    at-scale artifacts the streaming gate reads, and through the same
+    code: candidates come from the STORED band index
+    (:func:`band_index_candidates` over :func:`minhash_index_dir` — the
+    corpus is bucketed once per dump, never re-shingled here) and the
+    verify is the text family's one two-tier exact verify
+    (:func:`jaccard_verify`) — so batch and stream make the same
+    near-dup decision by construction. Candidate generation cost ∝
+    new-batch size, never corpus²; verify I/O ∝ candidate pk
+    directories, never a corpus pass.
     """
-    from ..engine.pointfetch import fetch_payload
-
-    index_path = minhash_index_dir(spark, sf_dir)
-    hpay = minhash_hash_payload_dir(spark, sf_dir)
-    tpay = doc_text_payload_dir(spark, sf_dir)
-
     sh_new = (_shingle_sets(spark, sf_dir)
               .where(F.col("doc_id") % INCR_MOD == INCR_REM).persist())
-    bands_new = _band_rows(sh_new)
-    idx = spark.read.parquet(index_path)
-    cand = (
-        idx.alias("a").join(
-            bands_new.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket")))
-        .select(F.col("a.doc_id").alias("old_doc"),
-                F.col("b.doc_id").alias("new_doc"))
-        .distinct()
-    )
-    # tier 1: hash screen over point-fetched corpus shingle hashes
-    hp = (fetch_payload(spark, hpay, "doc_id",
-                        cand.select(F.col("old_doc").alias("doc_id")))
-          .select(F.col("doc_id").alias("old_doc"),
-                  F.col("hs").alias("ho"), F.col("n").alias("no"),
-                  F.col("collide").alias("coll_o")))
-    nh = (hashed_shingle_cols(sh_new)
-          .select(F.col("doc_id").alias("new_doc"),
-                  F.col("hs").alias("hn"), F.col("n").alias("nn"),
-                  F.col("collide").alias("coll_n")))
-    ih = F.size(F.array_intersect("ho", "hn"))
-    keep = (F.col("coll_o") | F.col("coll_n")
-            | (F.col("ih") / (F.col("no") + F.col("nn") - F.col("ih"))
-               >= JACCARD_THRESHOLD))
-    screened = (cand.join(hp, "old_doc").join(nh, "new_doc")
-                .select("old_doc", "new_doc", ih.alias("ih"),
-                        "no", "nn", "coll_o", "coll_n")
-                .where(keep)
-                .select("old_doc", "new_doc")
-                .persist())   # feeds the tier-2 id fetch AND the exact join
-    # tier 2: exact jaccard over re-shingled point-fetched raw text
-    so = (fetch_payload(spark, tpay, "doc_id",
-                        screened.select(F.col("old_doc").alias("doc_id")))
-          .select("doc_id", tokens("text").alias("toks"))
-          .select(F.col("doc_id").alias("old_doc"),
-                  F.array_distinct(token_ngrams(F.col("toks"), SHINGLE_N))
-                  .alias("so")))
-    sn = sh_new.select(F.col("doc_id").alias("new_doc"),
-                       F.col("s").alias("sn"))
-    i = F.size(F.array_intersect("so", "sn"))
-    jac = F.col("i") / (F.col("no") + F.col("nn") - F.col("i"))
-    return (
-        screened.join(so, "old_doc").join(sn, "new_doc")
-        .select("old_doc", "new_doc", i.alias("i"),
-                F.size("so").alias("no"), F.size("sn").alias("nn"))
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("old_doc", "new_doc", F.round(jac, 6).alias("jaccard"))
-    )
+    cand = band_index_candidates(spark, minhash_index_dir(spark, sf_dir),
+                                 _band_rows(sh_new), "incremental_minhash")
+    # the screened pair frame stays cached for the returned lazy frame,
+    # as sh_new does
+    return (jaccard_verify(spark, cand, sh_new,
+                           minhash_hash_payload_dir(spark, sf_dir),
+                           doc_text_payload_dir(spark, sf_dir), [])
+            .select("old_doc", F.col("doc_id").alias("new_doc"),
+                    "jaccard"))
 
 
 def minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -491,37 +439,32 @@ def minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     return memo(("minhash_index_dir", sf_dir), build)
 
 
-def minhash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the corpus side's (doc_id, s) distinct shingle sets
-    as a point-lookup payload (engine.pointfetch layout) ONCE per
-    (process, corpus) — the verify half of the minhash index artifact.
-    The r10 ``stream_text_admit`` re-derived candidate old docs'
-    shingles by joining ids into an UNPRUNED documents.parquet scan
-    every micro-batch (r10 verdict's weak item); with the payload
-    stored beside the band index, the exact-jaccard verify never opens
-    the raw corpus: per-batch I/O is the pk directories the candidate
-    ids touch. Storage is the shingle arrays once (≈ 2.7× corpus text).
-    Since r12 the GATES no longer read this artifact — their verify is
-    two-tier (:func:`minhash_hash_payload_dir` +
-    :func:`doc_text_payload_dir`); this builder remains as the one-tier
-    path's payload (plan-pin tests; gate_io_probe's r11 baseline row)
-    and for any caller that wants pre-exploded shingle sets."""
-    from ..engine.pointfetch import write_payload
-
-    def build() -> str:
-        sh = _shingle_sets(spark, sf_dir).where(
-            F.col("doc_id") % INCR_MOD != INCR_REM)
-        path = scratch_dir("fsbd_minhash_payload_")
-        write_payload(sh, "doc_id", path)
-        return path
-    return memo(("minhash_payload_dir", sf_dir), build)
+def band_index_candidates(spark: SparkSession, index_path: str,
+                          bands_new: DataFrame, sensor: str) -> DataFrame:
+    """Distinct (old_doc, doc_id) candidate pairs: the new side's
+    (doc_id, band, bucket) rows (:func:`_band_rows`) equi-joined
+    against the STORED band index at ``index_path``
+    (:func:`minhash_index_dir`'s layout) — the one bipartite candidate
+    join of ``dedup_incremental``, every streaming text gate and
+    scripts/gate_io_probe.py. Cost ∝ new-side band rows × bucket
+    occupancy, never corpus²; ``sensor`` names the raw collision
+    count (``functions.observability``)."""
+    idx = spark.read.parquet(index_path)
+    cand = (idx.alias("a").join(
+                bands_new.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket")))
+            .select(F.col("a.doc_id").alias("old_doc"),
+                    F.col("b.doc_id").alias("doc_id")))
+    return observability.observe_candidates(cand, sensor).distinct()
 
 
 def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
     """(doc_id, hs, n, collide) from a (doc_id, s) shingle-set frame —
-    the tier-1 screen representation shared by the payload builder and
-    the gates' new-batch side (both sides MUST hash identically or the
-    screen's superset argument below is void).
+    the tier-1 screen representation shared by the payload builder
+    (:func:`minhash_hash_payload_dir`, and the compaction folds'
+    rebuilds) and :func:`jaccard_verify`'s new side (both sides MUST
+    hash identically or the screen's superset argument below is void).
 
     ``hs`` = distinct 31-bit hash of each shingle (xxhash64 folded to
     int32), ``n`` = |s| (the EXACT set size; the screen's jaccard
@@ -596,6 +539,67 @@ def minhash_hash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
         write_payload(hashed_shingle_cols(sh), "doc_id", path)
         return path
     return memo(("minhash_hash_payload_dir", sf_dir), build)
+
+
+def jaccard_verify(spark: SparkSession, cand: DataFrame, sh_new: DataFrame,
+                   hash_payload: str, text_payload: str,
+                   scope: list) -> DataFrame:
+    """The text family's one exact verify: the verified (old_doc,
+    doc_id, jaccard) pairs among the (old_doc, doc_id) candidates,
+    jaccard ≥ ``JACCARD_THRESHOLD`` rounded to 6 places. ``sh_new``
+    holds the new side's (doc_id, s) shingle sets; the corpus side is
+    read only from its two payload tiers, by pk-pruned point fetch —
+    never a documents.parquet pass (``engine.pointfetch.two_tier_verify``
+    runs the fetches; ``scope`` receives the persisted screened pairs).
+
+    Tier 1 fetches candidate old docs' int32 shingle hashes
+    (:func:`minhash_hash_payload_dir`) and screens pairs on hash-jaccard
+    at the same threshold — drop-free (:func:`hashed_shingle_cols`), so
+    the screen changes I/O, never the result. Tier 2 fetches only the
+    survivors' raw text (:func:`doc_text_payload_dir`), re-derives
+    their shingle sets with the index build's own kernel and decides
+    on exact jaccard, collision-proof."""
+    from ..engine.pointfetch import two_tier_verify
+
+    def screen():
+        nh = (hashed_shingle_cols(sh_new)
+              .select("doc_id", F.col("hs").alias("hn"),
+                      F.col("n").alias("nn"),
+                      F.col("collide").alias("coll_n")))
+        ih = F.size(F.array_intersect("ho", "hn"))
+        keep = (F.col("coll_o") | F.col("coll_n")
+                | (F.col("ih") / (F.col("no") + F.col("nn") - F.col("ih"))
+                   >= JACCARD_THRESHOLD))
+        return lambda pairs, rows: (
+            pairs.join(rows.select("old_doc", F.col("hs").alias("ho"),
+                                   F.col("n").alias("no"),
+                                   F.col("collide").alias("coll_o")),
+                       "old_doc")
+            .join(nh, "doc_id")
+            .select("old_doc", "doc_id", ih.alias("ih"),
+                    "no", "nn", "coll_o", "coll_n")
+            .where(keep)
+            .select("old_doc", "doc_id"))
+
+    def exact():
+        # _shingle_sets' two-projection shape: tokenize into a real
+        # column first so the regex split stays once-per-row under the
+        # transform() lambda
+        toks = tokens("text").alias("toks")
+        so = F.array_distinct(token_ngrams(F.col("toks"), SHINGLE_N))
+        i = F.size(F.array_intersect("so", "s"))
+        jac = F.col("i") / (F.col("no") + F.col("nn") - F.col("i"))
+        return lambda pairs, rows: (
+            pairs.join(rows.select("old_doc", toks)
+                       .select("old_doc", so.alias("so")), "old_doc")
+            .join(sh_new, "doc_id")
+            .select("old_doc", "doc_id", i.alias("i"),
+                    F.size("so").alias("no"), F.size("s").alias("nn"))
+            .where(jac >= JACCARD_THRESHOLD)
+            .select("old_doc", "doc_id", F.round(jac, 6).alias("jaccard")))
+
+    return two_tier_verify(spark, cand, "old_doc", "doc_id", hash_payload,
+                           screen, text_payload, exact, scope)
 
 
 # ---------------------------------------------------------------------------

@@ -138,31 +138,10 @@ def _srp_hyperplanes(tables: int = SRP_TABLES, bits: int = SRP_BITS) -> np.ndarr
     return w
 
 
-def srp_buckets(df: DataFrame, vec_col: str = "embedding",
-                tables: int = SRP_TABLES, bits: int = SRP_BITS) -> DataFrame:
-    """Append ``buckets: array<int>`` — one SRP bucket id per hash table.
-
-    Arrow-batched pandas UDF: each batch becomes one (rows × dim) numpy
-    matrix; bucket bits for all tables come from a single matmul against
-    the (dim × tables·bits) hyperplane matrix.
-
-    ``tables``/``bits`` are the corpus-size dial (registered queries pin
-    the defaults so their oracles stay fixed): expected bucket occupancy
-    is N/2^bits per table, and the bucket self-join is quadratic in
-    occupancy, so ``bits`` MUST grow with log₂(N) — ~2^bits ≈ N/64 keeps
-    per-bucket work constant. Higher bits also shifts recall toward
-    higher-cosine pairs (collision prob p^bits per table), which is the
-    operating point a 100 TB dedup actually wants (cos ≥ 0.9 dups, not
-    0.4 neighbors); the 64× probe (scripts/scale_probe_embeddings.py)
-    runs 8×12-bit against the same corpus to demonstrate the scaling.
-    """
-    return df.withColumn("buckets",
-                         _srp_bucket_udf(tables, bits)(F.col(vec_col)))
-
-
 def _srp_bucket_udf(tables: int = SRP_TABLES, bits: int = SRP_BITS):
     """The Arrow-batched SRP bucketing UDF itself (one matmul per
-    batch; see :func:`srp_buckets` for the operating-point contract)."""
+    batch; see :func:`srp_bucket_rows` for the operating-point
+    contract)."""
     planes = _srp_hyperplanes(tables, bits)  # captured in the UDF closure
 
     @F.pandas_udf(ArrayType(IntegerType()))
@@ -187,6 +166,20 @@ def srp_bucket_rows(df: DataFrame, vec_col: str = "embedding",
     """(*keep, table_id, bucket) — one row per (vector, hash table),
     with the bucket UDF call INSIDE the generator.
 
+    Arrow-batched pandas UDF: each batch becomes one (rows × dim) numpy
+    matrix; bucket bits for all tables come from a single matmul against
+    the (dim × tables·bits) hyperplane matrix.
+
+    ``tables``/``bits`` are the corpus-size dial (registered queries pin
+    the defaults so their oracles stay fixed): expected bucket occupancy
+    is N/2^bits per table, and the bucket self-join is quadratic in
+    occupancy, so ``bits`` MUST grow with log₂(N) — ~2^bits ≈ N/64 keeps
+    per-bucket work constant. Higher bits also shifts recall toward
+    higher-cosine pairs (collision prob p^bits per table), which is the
+    operating point a 100 TB dedup actually wants (cos ≥ 0.9 dups, not
+    0.4 neighbors); the 64× probe (scripts/scale_probe_embeddings.py)
+    runs 8×12-bit against the same corpus to demonstrate the scaling.
+
     Exploding a projected ``buckets`` column lets Spark 4's
     InferFiltersFromGenerate infer ``size(buckets)>0 AND isnotnull`` on
     the generator's bare-attribute input, and filter pushdown then
@@ -210,7 +203,7 @@ def _srp_bucket_prefix(tables: int = SRP_TABLES,
     """Shared oracle prefix: the SRP plane literals and the
     quantize→sign-test→bucket CTE chain (``planes``/``eq``/``dots``/``b``)
     every SRP-bucketed oracle builds on. ``tables``/``bits`` mirror
-    :func:`srp_buckets`' knobs so non-default operating points (the
+    :func:`srp_bucket_rows`' knobs so non-default operating points (the
     scaled entry below) carry their own exact plane literals."""
     w = _srp_hyperplanes(tables, bits)
     rows = ",\n".join(
@@ -1433,13 +1426,12 @@ def srp_payload_dir(spark: SparkSession, sf_dir: str) -> str:
     one re-sorted copy of the corpus vectors — 1×, vs the 16× a
     vector-in-every-band-row layout would cost.
 
-    Since r13 this float payload is TIER 2 of the embedding gates'
-    verify: candidates are first screened on the packed-int16 tier
+    Since r13 this float payload is TIER 2 of :func:`cosine_verify`:
+    candidates are first screened on the packed-int16 tier
     (:func:`srp_quant_payload_dir`, ~0.5× the bytes) with a provable
     no-false-drops cosine upper bound, and only screen survivors open
-    these float row groups — the r12 verdict overrode the earlier
-    "not worth it" adjudication here, asking the text gates' two-tier
-    I/O discipline to cover the vector family too."""
+    these float row groups — the text family's two-tier I/O discipline
+    on the vector family."""
     from ..engine.pointfetch import write_payload
 
     def build() -> str:
@@ -1549,10 +1541,8 @@ def unpacked_q_col(w32):
 def quant_screen_keep(qv, w32, s):
     """Boolean screen decision for one candidate pair — the
     Cauchy–Schwarz upper-bound test ``(qn <= r) | (dotq + xn·r >=
-    θ·xn·(qn − r))`` the embedding gates' tier 1 applies (see
-    :func:`quantized_vec_cols` for the no-false-drops argument; the
-    expression chain lived inline in streaming/joins.py through r14 and
-    moved here, next to its pack format, unchanged).
+    θ·xn·(qn − r))`` :func:`cosine_verify`'s tier 1 applies (see
+    :func:`quantized_vec_cols` for the no-false-drops argument).
 
     DELIBERATELY the Catalyst HOF form: an r15 Arrow-kernel trial LOST
     the paired order-alternating A/B 0/8 at sf0.1 (OPTIMIZATION_r15.md
@@ -1592,6 +1582,50 @@ def srp_quant_payload_dir(spark: SparkSession, sf_dir: str) -> str:
         write_payload(quantized_vec_cols(e), "vec_id", path)
         return path
     return memo(("srp_quant_payload_dir", sf_dir), build)
+
+
+def cosine_verify(spark: SparkSession, cand: DataFrame, batch: DataFrame,
+                  quant_payload: str, float_payload: str,
+                  scope: list) -> DataFrame:
+    """The embedding family's one exact verify: the verified (old_id,
+    vec_id) pairs among the (vec_id, old_id) candidates, cosine ≥
+    ``NEARDUP_COS``. ``batch`` holds the new side's (vec_id,
+    embedding); the corpus side is read only from its two payload
+    tiers, by pk-pruned point fetch — never an embeddings.parquet pass
+    (``engine.pointfetch.two_tier_verify`` runs the fetches; ``scope``
+    receives the persisted screened pairs).
+
+    Tier 1 fetches candidate corpus vectors' packed-int16
+    quantizations (:func:`srp_quant_payload_dir`) and screens pairs on
+    the provable cosine upper bound (:func:`quant_screen_keep`; the
+    proof is on :func:`quantized_vec_cols`) — a superset of the
+    exact-passing pairs, so the screen changes I/O, never the result.
+    Tier 2 fetches only the survivors' float vectors
+    (:func:`srp_payload_dir`) and decides on exact cosine."""
+    from ..engine.pointfetch import two_tier_verify
+
+    q = batch.select("vec_id", F.col("embedding").alias("qv"))
+
+    def screen():
+        keep = quant_screen_keep(F.col("qv"), F.col("w32"), F.col("s"))
+        return lambda pairs, rows: (
+            pairs.join(rows.select("old_id", "w32", "s"), "old_id")
+            .join(q, "vec_id")
+            .where(keep)
+            .select("old_id", "vec_id"))
+
+    def exact():
+        cos_pred = cosine_sim(F.col("old_emb"), F.col("qv")) >= NEARDUP_COS
+        return lambda pairs, rows: (
+            pairs.join(rows.select("old_id",
+                                   F.col("embedding").alias("old_emb")),
+                       "old_id")
+            .join(q, "vec_id")
+            .where(cos_pred)
+            .select("old_id", "vec_id"))
+
+    return two_tier_verify(spark, cand, "old_id", "vec_id", quant_payload,
+                           screen, float_payload, exact, scope)
 
 
 # ---------------------------------------------------------------------------
@@ -2441,90 +2475,6 @@ def ann_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cb = _pq_trained_codebooks(spark, sf_dir)
     return _adc_search(spark, sf_dir, cb, pq_codes(spark, sf_dir, cb))
-
-
-def _ivfpq_oracle(cells: int = IVF_CELLS_WIDE,
-                  probes: int = IVF_PROBES_WIDE) -> str:
-    """DuckDB twin of the composed IVF-PQ (IVFADC) pipeline: sign-
-    codebook coarse assignment + probe sets (the ``ann_ivf_scaled``
-    chain), PQ code assignment + per-query integer LUT (the
-    ``ann_pq_adc`` chain, CTEs renamed to coexist), candidates
-    restricted to probed cells, ADC sum, top-k."""
-    iw = _ivf_sign_centroids(cells)
-    irows = ",\n".join(
-        f"  ({j}, [{', '.join(str(int(x)) for x in iw[j])}]::DOUBLE[])"
-        for j in range(cells))
-    cb = _pq_codebooks()
-    n2 = (cb * cb).sum(axis=2)
-    prows = ",\n".join(
-        f"  ({s}, {j}, [{', '.join(str(int(x)) for x in cb[s, j])}]::DOUBLE[], "
-        f"{int(n2[s, j])}::BIGINT)"
-        for s in range(PQ_SUBSPACES) for j in range(PQ_CELLS))
-    return f"""
-WITH icents(cell, w) AS (VALUES
-{irows}
-), eq AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[], x -> FLOOR(x * 100)) AS v
-  FROM embeddings
-), idots AS (
-  SELECT e.vec_id, c.cell, CAST(list_dot_product(e.v, c.w) AS BIGINT) AS d
-  FROM eq e CROSS JOIN icents c
-), ranked_cells AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) AS r
-  FROM idots
-), corpus AS (
-  SELECT vec_id, cell FROM ranked_cells WHERE r = 1
-), qcells AS (
-  SELECT vec_id AS query_id, cell FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND r <= {probes}
-), pcents(sub, pcell, w, n2) AS (VALUES
-{prows}
-), pcosts AS (
-  SELECT e.vec_id, c.sub, c.pcell,
-         c.n2 - 2 * CAST(list_dot_product(
-           list_slice(e.v, c.sub * {PQ_SUBDIM} + 1,
-                      c.sub * {PQ_SUBDIM} + {PQ_SUBDIM}), c.w) AS BIGINT) AS cost
-  FROM eq e CROSS JOIN pcents c
-), pbest AS (
-  SELECT vec_id, sub, pcell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                            ORDER BY cost, pcell) AS r
-  FROM pcosts
-), lut AS (
-  SELECT e.vec_id AS query_id, c.sub, c.pcell,
-         c.n2
-         - 2 * CAST(list_dot_product(
-             list_slice(e.v, c.sub * {PQ_SUBDIM} + 1,
-                        c.sub * {PQ_SUBDIM} + {PQ_SUBDIM}), c.w) AS BIGINT)
-         + CAST(list_dot_product(
-             list_slice(e.v, c.sub * {PQ_SUBDIM} + 1,
-                        c.sub * {PQ_SUBDIM} + {PQ_SUBDIM}),
-             list_slice(e.v, c.sub * {PQ_SUBDIM} + 1,
-                        c.sub * {PQ_SUBDIM} + {PQ_SUBDIM})) AS BIGINT) AS cost
-  FROM eq e CROSS JOIN pcents c
-  WHERE e.vec_id < {N_QUERIES}
-), cand AS (
-  SELECT DISTINCT q.query_id, c.vec_id
-  FROM qcells q JOIN corpus c USING (cell)
-  WHERE c.vec_id <> q.query_id
-), adc AS (
-  SELECT ca.query_id, ca.vec_id, CAST(SUM(l.cost) AS BIGINT) AS adc_x
-  FROM cand ca
-  JOIN pbest b ON b.vec_id = ca.vec_id AND b.r = 1
-  JOIN lut l ON l.query_id = ca.query_id
-            AND l.sub = b.sub AND l.pcell = b.pcell
-  GROUP BY ca.query_id, ca.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, adc_x,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_x, vec_id) AS rank
-  FROM adc
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id, adc_x
-FROM ranked WHERE rank <= {TOP_K}
-"""
 
 
 def _ivfpq_rows(e: DataFrame, cb: np.ndarray) -> DataFrame:

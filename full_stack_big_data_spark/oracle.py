@@ -14,7 +14,7 @@ import math
 from dataclasses import dataclass
 
 import duckdb
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .engine.catalog import TABLES
 
@@ -91,21 +91,3 @@ def compare(name: str, spark_df: DataFrame, oracle_sql: str,
                      for a, b in zip(s_canon, o_canon) if a != b), "tail diff")
         return CompareResult(name, False, len(s_rows), len(o_rows), diff)
     return CompareResult(name, True, len(s_rows), len(o_rows))
-
-
-def run_all(spark: SparkSession, sf_dir: str,
-            names: list[str] | None = None) -> list[CompareResult]:
-    from .operators.registry import load_all
-    reg = load_all()
-    con = duckdb_connect(sf_dir)
-    out = []
-    for name, spec in reg.items():
-        if names and name not in names:
-            continue
-        df = spec.builder(spark, sf_dir)
-        if spec.oracle is None:
-            n = df.count()
-            out.append(CompareResult(name, n >= 0, n, -1, "rows-only (no oracle)"))
-        else:
-            out.append(compare(name, df, spec.oracle, con))
-    return out

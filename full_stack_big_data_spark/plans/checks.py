@@ -47,9 +47,3 @@ def assert_read_schema_only(df: DataFrame, table_file: str, allowed: set[str]) -
 def assert_no_cartesian(df: DataFrame) -> None:
     plan = plan_string(df)
     assert "CartesianProduct" not in plan, f"unexpected cartesian product:\n{plan[:4000]}"
-
-
-def whole_stage_codegen_ids(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (fewer = wider fused pipelines)."""
-    plan = plan_string(df, "simple")
-    return plan.count("WholeStageCodegen")

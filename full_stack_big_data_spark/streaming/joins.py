@@ -22,7 +22,6 @@ plain-SQL DuckDB oracle (same rows a batch run would produce).
 
 from __future__ import annotations
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import append_epoch, read_epochs, write_generation
@@ -500,127 +499,27 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the persisted SRP bucket index.
 # ---------------------------------------------------------------------------
 
-def _verify_pool():
-    """One-thread overlap pool for the verify tiers' driver id collects
-    (guide §2.6: Spark happily runs jobs from several driver threads;
-    the tiers' actions are only sequential because the driver code
-    called them sequentially). The r15 body decomposition measured
-    ~43% of the per-batch wall as DRIVER-side expression construction
-    (minhash/HOF lambda trees, the UDF registration) serialized
-    between the two id-collect actions — so each collect now runs on
-    this pool while the main thread builds the next tier's expression
-    trees. One worker is enough: there is never more than one collect
-    in flight. Paired A/B against serial order read parity, never worse
-    (OPTIMIZATION_r15.md §1)."""
-    from concurrent.futures import ThreadPoolExecutor
-    return ThreadPoolExecutor(max_workers=1)
-
-
-def _verify_submit(pool, spark: SparkSession, fn, *args):
-    """Run ``fn(*args)`` on the verify pool under the SUBMITTING
-    thread's Spark local properties. A bare ``pool.submit`` runs the
-    collect with none: it loses the micro-batch's job group, so a
-    failed or cancelled batch leaves a job that stopping the query
-    cannot cancel."""
-    return pool.submit(inheritable_thread_target(spark)(fn), *args)
-
-
-def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
-                        batch: DataFrame, payload_path: str,
-                        quant_payload_path: str | None = None,
-                        scope: list | None = None) -> DataFrame:
-    """Exact-cosine verify for the embedding gate, two-tier since r13
-    (r12 verdict item 2). Tier 1: point-fetch candidate corpus
-    vectors' PACKED-INT16 quantizations (~0.5× the float bytes) and
-    screen pairs on the provable cosine UPPER BOUND
-    (``similarity.quantized_vec_cols``'s Cauchy–Schwarz argument:
-    cos(x,v) ≤ (x·ũ + |x|r)/(|x|(|ũ|−r)) with r the quantization error
-    radius) — keeping a superset of the exact-passing pairs, so the
-    screen changes I/O, never the result, and every oracle stays
-    as-is. Tier 2: point-fetch only the screen survivors' float
-    vectors (≈ true near-dups) and decide on exact cosine. Both tiers
-    are pk-pruned point fetches — NEVER a pass over embeddings.parquet
-    (the r10 weak item). Module-level so tests/test_plans.py can pin
-    the fetch plans outside the streaming run; the screened pair frame
-    is batch-scoped persisted (it feeds the tier-2 id fetch AND the
-    exact join), so two-tier callers must pass ``scope`` and unpersist
-    it after the sink write consumes the result."""
-    from ..engine.pointfetch import (fetch_ids, fetch_payload,
-                                     fetch_payload_prefetched)
-    from ..functions.vectors import cosine_sim
-    from ..operators.similarity import NEARDUP_COS, quant_screen_keep
-
-    q = batch.select("vec_id", F.col("embedding").alias("qv"))
-    if quant_payload_path is not None:
-        assert scope is not None, \
-            "two-tier verify persists; caller must pass scope"
-        pool = _verify_pool()
-        try:
-            ids_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids1 = _verify_submit(pool, spark, fetch_ids, ids_df, "vec_id")
-            # §2.6 overlap: while the candidate-id collect materializes
-            # the bucket join on the pool thread, the driver builds the
-            # Cauchy-Schwarz screen's HOF expression trees
-            # (quant_screen_keep — id-independent, name-resolved at
-            # analysis; an Arrow-kernel screen was measured and
-            # rejected, OPTIMIZATION_r15.md §2).
-            keep = quant_screen_keep(F.col("qv"), F.col("w32"),
-                                     F.col("s"))
-            qp = (fetch_payload_prefetched(spark, quant_payload_path,
-                                           "vec_id", ids_df, ids1.result())
-                  .select(F.col("vec_id").alias("old_id"), "w32", "s"))
-            cand = (cand.join(qp, "old_id").join(q, "vec_id")
-                    .where(keep)
-                    .select("old_id", "vec_id").persist())
-            scope.append(cand)
-            ids2_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids2 = _verify_submit(pool, spark, fetch_ids, ids2_df,
-                                  "vec_id")
-            # Overlap again: the screen's materialization + collect runs
-            # while the driver constructs (and registers) the exact
-            # Arrow cosine UDF for tier 2.
-            cos_pred = (cosine_sim(F.col("old_emb"), F.col("qv"))
-                        >= NEARDUP_COS)
-            corpus = (fetch_payload_prefetched(spark, payload_path,
-                                               "vec_id", ids2_df,
-                                               ids2.result())
-                      .select(F.col("vec_id").alias("old_id"),
-                              F.col("embedding").alias("old_emb")))
-        finally:
-            pool.shutdown(wait=False)
-    else:
-        cos_pred = cosine_sim(F.col("old_emb"), F.col("qv")) >= NEARDUP_COS
-        corpus = (fetch_payload(spark, payload_path, "vec_id",
-                                cand.select(F.col("old_id")
-                                            .alias("vec_id")))
-                  .select(F.col("vec_id").alias("old_id"),
-                          F.col("embedding").alias("old_emb")))
-    return (cand.join(corpus, "old_id").join(q, "vec_id")
-            .where(cos_pred)
-            .select("vec_id").distinct())
-
-
-def _embedding_gate(index_path: str, payload_path: str, target_dir: str,
-                    sensor: str, survivors, tables: int | None = None,
-                    bits: int | None = None,
-                    quant_payload_path: str | None = None):
+def _embedding_gate(index_path: str, quant_payload_path: str,
+                    payload_path: str, target_dir: str, sensor: str,
+                    survivors, tables: int | None = None,
+                    bits: int | None = None):
     """Shared foreachBatch chain for BOTH embedding gates (admit +
     ingest — r11 review finding): bucket the micro-batch's vectors (the
     SRP Arrow pass), equi-join the batch's (table_id, bucket) rows
-    against the stored corpus index, verify candidates with the exact
-    cosine kernel over POINT-FETCHED payload rows (engine.pointfetch —
-    per-batch I/O ∝ candidates, never an embeddings.parquet pass), and
-    append ``survivors(batch, nb, hits)`` as the epoch's partition
-    (``engine.generations.append_epoch``). Candidates carry IDS ONLY
-    through the bucket join; the bucket rows and candidate subtree are
-    batch-scoped persisted (each feeds two consumers).
-    ``tables``/``bits`` default to the registered fixture operating
-    point; the sf1.0 probe overrides bits to the N/64 sizing rule
-    against a matching index."""
+    against the stored corpus index, verify candidates with the
+    family's one exact verify (``similarity.cosine_verify`` — two-tier
+    point fetches, per-batch I/O ∝ candidates, never an
+    embeddings.parquet pass), and append ``survivors(batch, nb, hits)``
+    as the epoch's partition (``engine.generations.append_epoch``).
+    Candidates carry IDS ONLY through the bucket join; the bucket rows
+    and candidate subtree are batch-scoped persisted (each feeds two
+    consumers). ``tables``/``bits`` default to the registered fixture
+    operating point; the sf1.0 probe overrides bits to the N/64 sizing
+    rule against a matching index."""
     def body(batch: DataFrame, batch_id: int) -> None:
         from ..functions import observability
         from ..operators.similarity import (SRP_BITS, SRP_TABLES,
-                                            srp_bucket_rows)
+                                            cosine_verify, srp_bucket_rows)
 
         ss = batch.sparkSession
         idx = (ss.read.parquet(index_path)
@@ -637,9 +536,8 @@ def _embedding_gate(index_path: str, payload_path: str, target_dir: str,
                     .distinct().persist())
             scope: list = []
             try:
-                hits = _cosine_verify_hits(
-                    ss, cand, batch, payload_path,
-                    quant_payload_path=quant_payload_path, scope=scope)
+                hits = cosine_verify(ss, cand, batch, quant_payload_path,
+                                     payload_path, scope)
                 append_epoch(survivors(batch, nb, hits), batch_id,
                              target_dir)
             finally:
@@ -651,16 +549,16 @@ def _embedding_gate(index_path: str, payload_path: str, target_dir: str,
     return body
 
 
-def _embedding_admit(index_path: str, payload_path: str, out_dir: str,
-                     tables: int | None = None, bits: int | None = None,
-                     quant_payload_path: str | None = None):
+def _embedding_admit(index_path: str, quant_payload_path: str,
+                     payload_path: str, out_dir: str,
+                     tables: int | None = None, bits: int | None = None):
     """Admit gate: survivors are the batch's vec_ids without a verified
     hit (see :func:`_embedding_gate` for the shared chain)."""
     return _embedding_gate(
-        index_path, payload_path, out_dir, "srp_admit",
+        index_path, quant_payload_path, payload_path, out_dir, "srp_admit",
         lambda batch, nb, hits: (batch.select("vec_id")
                                  .join(hits, "vec_id", "left_anti")),
-        tables=tables, bits=bits, quant_payload_path=quant_payload_path)
+        tables=tables, bits=bits)
 
 
 def _emb_admit_cte(bits: int | None = None) -> str:
@@ -723,8 +621,8 @@ def _run_embedding_admit(spark: SparkSession, sf_dir: str, tag: str,
     vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    drain(feed, _embedding_admit(index_path, payload_path, out_dir,
-                                 bits=bits, quant_payload_path=quant_path),
+    drain(feed, _embedding_admit(index_path, quant_path, payload_path,
+                                 out_dir, bits=bits),
           ckpt)
     return read_epochs(spark, out_dir, "vec_id long")
 
@@ -815,132 +713,28 @@ def stream_embedding_admit_scaled(spark: SparkSession,
 # per micro-batch against the persisted MinHash band index.
 # ---------------------------------------------------------------------------
 
-def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
-                         sh_new: DataFrame, payload_path: str | None,
-                         hash_payload_path: str | None = None,
-                         text_payload_path: str | None = None,
-                         scope: list | None = None) -> DataFrame:
-    """Exact-jaccard verify for the text gate, two-tier since r12 (r11
-    verdict item 2). Tier 1: point-fetch candidate old docs' int32
-    shingle HASHES and screen pairs on hash-jaccard at the same
-    threshold — provably drop-free (dedup.hashed_shingle_cols' superset
-    argument), so the screen changes I/O, never the result, and every
-    oracle stays as-is. Tier 2: point-fetch the screen survivors' RAW
-    TEXT (true near-dups — a sliver of the candidates) from the 1×
-    text payload, re-derive their shingle sets with the index build's
-    own kernel, and decide on exact jaccard, collision-proof. Neither
-    tier ever passes over documents.parquet (the r10 weak item), and
-    neither stores the 2.7×-corpus shingle-string payload the r11
-    dossier flagged as the system's biggest at-rest object. Module-
-    level so tests/test_plans.py can pin the fetch plans outside the
-    streaming run; two-tier needs ``hash_payload_path`` AND
-    ``text_payload_path`` — without them the one-tier exact path
-    fetches pre-exploded shingle strings from ``payload_path``. The
-    screened pair frame is batch-scoped persisted (it feeds the
-    tier-2 id fetch AND the exact-jaccard join); it is appended to
-    ``scope`` for the CALLER's finally-block to unpersist — the
-    result is consumed lazily inside the caller's sink write, after
-    this function returns."""
-    from ..engine.pointfetch import (fetch_ids, fetch_payload,
-                                     fetch_payload_prefetched)
-    from ..functions.text import token_ngrams, tokens
-    from ..operators.dedup import (JACCARD_THRESHOLD, SHINGLE_N,
-                                   hashed_shingle_cols)
-
-    two_tier = hash_payload_path is not None
-    if two_tier:
-        assert text_payload_path is not None
-        # The two-tier path persists the screened pair frame below and
-        # hands the unpersist obligation to the caller via ``scope`` —
-        # with scope=None the frame would leak in the executor cache
-        # for the life of the session (r12 ADVICE).
-        assert scope is not None, \
-            "two-tier verify persists; caller must pass scope"
-        pool = _verify_pool()
-        try:
-            ids_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids1 = _verify_submit(pool, spark, fetch_ids, ids_df, "doc_id")
-            # §2.6 overlap: the candidate-id collect (which materializes
-            # the signature chain + bucket join) runs on the pool thread
-            # while the driver builds the hash-screen expression trees —
-            # the id-independent part of tier 1's driver wall.
-            nh = (hashed_shingle_cols(sh_new)
-                  .select("doc_id", F.col("hs").alias("hn"),
-                          F.col("n").alias("nn"),
-                          F.col("collide").alias("coll_n")))
-            ih = F.size(F.array_intersect("ho", "hn"))
-            keep = (F.col("coll_o") | F.col("coll_n")
-                    | (F.col("ih") / (F.col("no") + F.col("nn")
-                                      - F.col("ih"))
-                       >= JACCARD_THRESHOLD))
-            hp = (fetch_payload_prefetched(spark, hash_payload_path,
-                                           "doc_id", ids_df, ids1.result())
-                  .select(F.col("doc_id").alias("old_doc"),
-                          F.col("hs").alias("ho"), F.col("n").alias("no"),
-                          F.col("collide").alias("coll_o")))
-            cand = (cand.join(hp, "old_doc").join(nh, "doc_id")
-                    .select("old_doc", "doc_id", ih.alias("ih"),
-                            "no", "nn", "coll_o", "coll_n")
-                    .where(keep)
-                    .select("old_doc", "doc_id")
-                    .persist())
-            scope.append(cand)
-            ids2_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids2 = _verify_submit(pool, spark, fetch_ids, ids2_df,
-                                  "doc_id")
-            # Overlap again: the screen materializes + collects on the
-            # pool thread while the driver constructs tier 2's
-            # re-shingle expression chain (the exact kernel the index
-            # build used — _shingle_sets' two-projection shape: tokenize
-            # into a real column first so the regex split stays
-            # once-per-row under the transform() lambda).
-            tok_col = tokens("text").alias("toks")
-            ng_col = F.array_distinct(
-                token_ngrams(F.col("toks"), SHINGLE_N)).alias("so")
-            sh_old = (fetch_payload_prefetched(spark, text_payload_path,
-                                               "doc_id", ids2_df,
-                                               ids2.result())
-                      .select("doc_id", tok_col)
-                      .select(F.col("doc_id").alias("old_doc"), ng_col))
-        finally:
-            pool.shutdown(wait=False)
-    else:
-        sh_old = (fetch_payload(spark, payload_path, "doc_id",
-                                cand.select(F.col("old_doc")
-                                            .alias("doc_id")))
-                  .select(F.col("doc_id").alias("old_doc"),
-                          F.col("s").alias("so")))
-    i = F.size(F.array_intersect("so", "s"))
-    jac = F.col("i") / (F.col("no") + F.col("nn") - F.col("i"))
-    return (cand.join(sh_old, "old_doc").join(sh_new, "doc_id")
-            .select("doc_id", i.alias("i"),
-                    F.size("so").alias("no"), F.size("s").alias("nn"))
-            .where(jac >= JACCARD_THRESHOLD)
-            .select("doc_id").distinct())
-
-
-def _text_gate(index_path: str, payload_path: str | None,
-               target_dir: str, sensor: str, survivors,
-               hash_payload_path: str | None = None,
-               text_payload_path: str | None = None):
+def _text_gate(index_path: str, hash_payload_path: str,
+               text_payload_path: str, target_dir: str, sensor: str,
+               survivors):
     """Shared foreachBatch chain for BOTH text gates (admit + ingest —
     r11 review finding): shingle + MinHash-band the micro-batch
-    (map-side, the shared ``_band_rows`` kernel), equi-join the batch's
-    band rows against the stored corpus index, verify candidates with
-    EXACT jaccard over POINT-FETCHED payload shingle sets
-    (engine.pointfetch — per-batch I/O ∝ candidates' pk directories,
-    never a corpus pass), and append ``survivors(sh_new, bands_new,
-    hits)`` as the epoch's partition
-    (``engine.generations.append_epoch``). The shingle
-    frame, band rows, and candidate subtree are each batch-scoped
-    persisted — every one feeds two consumers (r10 ADVICE pattern)."""
+    (map-side, the shared ``_band_rows`` kernel), join the batch's band
+    rows against the stored corpus index
+    (``dedup.band_index_candidates``), verify candidates with the
+    family's one exact verify (``dedup.jaccard_verify`` — two-tier
+    point fetches, per-batch I/O ∝ candidates' pk directories, never a
+    corpus pass), and append ``survivors(sh_new, bands_new, hits)`` as
+    the epoch's partition (``engine.generations.append_epoch``). The
+    shingle frame, band rows, and candidate subtree are each
+    batch-scoped persisted — every one feeds two consumers (r10 ADVICE
+    pattern)."""
     def body(batch: DataFrame, batch_id: int) -> None:
-        from ..functions import observability
         from ..functions.text import token_ngrams, tokens
-        from ..operators.dedup import SHINGLE_N, _band_rows
+        from ..operators.dedup import (SHINGLE_N, _band_rows,
+                                       band_index_candidates,
+                                       jaccard_verify)
 
         ss = batch.sparkSession
-        idx = ss.read.parquet(index_path)           # (doc_id, band, bucket)
         toks = (batch.select("doc_id", tokens("text").alias("toks"))
                 .where(F.size("toks") >= SHINGLE_N))
         sh_new = toks.select(
@@ -950,21 +744,13 @@ def _text_gate(index_path: str, payload_path: str | None,
         try:
             bands_new = _band_rows(sh_new).persist()
             try:
-                cand = (idx.alias("a").join(
-                            bands_new.alias("b"),
-                            (F.col("a.band") == F.col("b.band"))
-                            & (F.col("a.bucket") == F.col("b.bucket")))
-                        .select(F.col("a.doc_id").alias("old_doc"),
-                                F.col("b.doc_id").alias("doc_id")))
-                cand = (observability.observe_candidates(cand, sensor)
-                        .distinct().persist())
+                cand = band_index_candidates(ss, index_path, bands_new,
+                                             sensor).persist()
                 scope: list = []
                 try:
-                    hits = _jaccard_verify_hits(ss, cand, sh_new,
-                                                payload_path,
-                                                hash_payload_path,
-                                                text_payload_path,
-                                                scope=scope)
+                    hits = jaccard_verify(ss, cand, sh_new,
+                                          hash_payload_path,
+                                          text_payload_path, scope)
                     append_epoch(survivors(sh_new, bands_new, hits),
                                  batch_id, target_dir)
                 finally:
@@ -978,20 +764,18 @@ def _text_gate(index_path: str, payload_path: str | None,
     return body
 
 
-def _text_admit(index_path: str, payload_path: str | None, out_dir: str,
-                hash_payload_path: str | None = None,
-                text_payload_path: str | None = None):
+def _text_admit(index_path: str, hash_payload_path: str,
+                text_payload_path: str, out_dir: str):
     """Admit gate: survivors are the batch's docs without a verified
     hit, recorded as (doc_id, n_shingles) rows (see :func:`_text_gate`
     for the shared chain)."""
     return _text_gate(
-        index_path, payload_path, out_dir, "text_admit_minhash",
+        index_path, hash_payload_path, text_payload_path, out_dir,
+        "text_admit_minhash",
         lambda sh_new, bands_new, hits: (
             sh_new.select("doc_id",
                           F.size("s").cast("int").alias("n_shingles"))
-            .join(hits, "doc_id", "left_anti")),
-        hash_payload_path=hash_payload_path,
-        text_payload_path=text_payload_path)
+            .join(hits, "doc_id", "left_anti")))
 
 
 def _text_inc_oracle() -> str:
@@ -1070,9 +854,8 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    drain(feed, _text_admit(index_path, None, out_dir,
-                            hash_payload_path=hash_payload_path,
-                            text_payload_path=text_payload_path),
+    drain(feed, _text_admit(index_path, hash_payload_path,
+                            text_payload_path, out_dir),
           ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")
 
@@ -1084,23 +867,20 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingest loop for all three column families.
 # ---------------------------------------------------------------------------
 
-def _text_ingest(base_index_path: str, payload_path: str | None,
-                 epochs_dir: str,
-                 hash_payload_path: str | None = None,
-                 text_payload_path: str | None = None):
+def _text_ingest(base_index_path: str, hash_payload_path: str,
+                 text_payload_path: str, epochs_dir: str):
     """SELF-GROWING MinHash band index: the :func:`_text_gate` decision
     (per-doc, vs the BASE generation only — batch-chop-invariant), with
     survivors' BAND ROWS landing in the index's epoch generation as a
     ``batch_id=<epoch>`` partition — the ``_phash_ingest`` recipe on
     the text family."""
     return _text_gate(
-        base_index_path, payload_path, epochs_dir, "text_ingest_minhash",
+        base_index_path, hash_payload_path, text_payload_path, epochs_dir,
+        "text_ingest_minhash",
         lambda sh_new, bands_new, hits: (
             bands_new.join(hits, "doc_id", "left_anti")
             .select("doc_id", F.col("band").cast("int").alias("band"),
-                    "bucket")),
-        hash_payload_path=hash_payload_path,
-        text_payload_path=text_payload_path)
+                    "bucket")))
 
 
 def _stream_text_ingest_oracle() -> str:
@@ -1161,9 +941,8 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    drain(feed, _text_ingest(base_dir, None, epochs_dir,
-                             hash_payload_path=hash_payload_path,
-                             text_payload_path=text_payload_path),
+    drain(feed, _text_ingest(base_dir, hash_payload_path,
+                             text_payload_path, epochs_dir),
           ckpt)
     base = (spark.read.parquet(base_dir)
             .select("doc_id", F.col("band").cast("int").alias("band"),
@@ -1173,21 +952,22 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(grown)
 
 
-def _embedding_ingest(index_path: str, payload_path: str, epochs_dir: str,
-                      tables: int | None = None, bits: int | None = None,
-                      quant_payload_path: str | None = None):
+def _embedding_ingest(index_path: str, quant_payload_path: str,
+                      payload_path: str, epochs_dir: str,
+                      tables: int | None = None, bits: int | None = None):
     """SELF-GROWING SRP index: the :func:`_embedding_gate` decision
     (per-vector, vs the BASE generation only), with survivors'
     (vec_id, table_id, bucket) rows appended as an epoch-keyed
     partition — the family recipe on the vector column."""
     return _embedding_gate(
-        index_path, payload_path, epochs_dir, "srp_ingest",
+        index_path, quant_payload_path, payload_path, epochs_dir,
+        "srp_ingest",
         lambda batch, nb, hits: (
             nb.join(hits, "vec_id", "left_anti")
             .select("vec_id",
                     F.col("table_id").cast("int").alias("table_id"),
                     F.col("bucket").cast("int").alias("bucket"))),
-        tables=tables, bits=bits, quant_payload_path=quant_payload_path)
+        tables=tables, bits=bits)
 
 
 def _stream_embedding_ingest_oracle(bits: int | None = None) -> str:
@@ -1220,8 +1000,8 @@ def _run_embedding_ingest(spark: SparkSession, sf_dir: str, tag: str,
     vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    drain(feed, _embedding_ingest(base_dir, payload_path, epochs_dir,
-                                  bits=bits, quant_payload_path=quant_path),
+    drain(feed, _embedding_ingest(base_dir, quant_path, payload_path,
+                                  epochs_dir, bits=bits),
           ckpt)
     base = (spark.read.parquet(base_dir)
             .select("vec_id",
@@ -1400,30 +1180,38 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_index_compact_dirs(spark: SparkSession,
-                                 sf_dir: str) -> tuple[str, str]:
+                                 sf_dir: str) -> tuple[str, str, str]:
     """The SRP twin of :func:`text_index_compact_dirs`: fold base +
     ingest epochs into one table_id-partitioned generation (one file
-    per table) and rebuild the vector payload over the grown
-    membership. The drain folded is the SCALED-geometry lifecycle
+    per table) and rebuild BOTH verify-payload tiers (packed-int16
+    screen + float) over the grown membership, so the folded
+    generation serves ``similarity.cosine_verify`` as the base one
+    does. Returns (gen2 index, gen2 quant payload, gen2 float
+    payload). The drain folded is the SCALED-geometry lifecycle
     (``stream_embedding_ingest_scaled``, 2^bits ≈ N/64) — a
     maintenance entry a user actually runs must not compose the
     fixture geometry's occupancy pathology (r11 verdict item 1). A
     per-run memo entry, like the text twin."""
     from ..engine.catalog import Catalog
     from ..engine.pointfetch import write_payload
-    from ..operators.similarity import SRP_TABLES
+    from ..operators.similarity import SRP_TABLES, quantized_vec_cols
 
-    def build() -> tuple[str, str]:
+    def build() -> tuple[str, str, str]:
         grown = stream_embedding_ingest_scaled(spark, sf_dir)
         gen2 = scratch_dir("fsbd_emb_index_gen2_")
         write_generation(grown, gen2, "table_id", SRP_TABLES)
-        pay2 = scratch_dir("fsbd_emb_payload_gen2_")
         member = grown.select("vec_id").distinct()
-        write_payload(
-            Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
-            .join(member, "vec_id", "left_semi"),
-            "vec_id", pay2)
-        return gen2, pay2
+        vecs = (Catalog(spark, sf_dir).embeddings
+                .select("vec_id", "embedding")
+                .join(member, "vec_id", "left_semi").persist())
+        try:
+            pay2q = scratch_dir("fsbd_emb_quant_payload_gen2_")
+            write_payload(quantized_vec_cols(vecs), "vec_id", pay2q)
+            pay2 = scratch_dir("fsbd_emb_payload_gen2_")
+            write_payload(vecs, "vec_id", pay2)
+        finally:
+            vecs.unpersist()
+        return gen2, pay2q, pay2
     return memo(("embedding_index_compact_dirs", sf_dir), build,
                 per_run=True)
 
@@ -1468,7 +1256,7 @@ def embedding_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture-bits entries kept only as sensor contrasts."""
     from ..functions.hashing import hex64
 
-    gen2, _pay2 = embedding_index_compact_dirs(spark, sf_dir)
+    gen2, _pay2q, _pay2 = embedding_index_compact_dirs(spark, sf_dir)
     c = spark.read.parquet(gen2)
     h = hex64(F.concat_ws("|", F.col("vec_id").cast("string"),
                           F.col("bucket").cast("string")))
@@ -1492,10 +1280,8 @@ from ..operators.pipeline import CURATE_MIN_TOKENS  # noqa: E402 — the
 
 
 def _curate_admit(eval_index_path: str, band_index_path: str,
-                  payload_path: str | None, out_dir: str,
-                  min_en_hits: int = 1,
-                  hash_payload_path: str | None = None,
-                  text_payload_path: str | None = None):
+                  hash_payload_path: str, text_payload_path: str,
+                  out_dir: str):
     """foreachBatch body: the three gates' decisions over ONE persisted
     projection of the micro-batch. Drops compose as a conjunction of
     per-doc keep predicates, so stage ORDER cannot change the result
@@ -1505,10 +1291,11 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
     only they pay MinHash banding + the point-fetch verify. One
     epoch append (``engine.generations.append_epoch``)."""
     def admit(batch: DataFrame, batch_id: int) -> None:
-        from ..functions import observability
         from ..functions.text import token_ngrams, tokens
         from ..operators.decontam import DECONTAM_N
-        from ..operators.dedup import SHINGLE_N, _band_rows
+        from ..operators.dedup import (SHINGLE_N, _band_rows,
+                                       band_index_candidates,
+                                       jaccard_verify)
         from ..operators.textanalysis import _stopword_hits_spark
 
         ss = batch.sparkSession
@@ -1517,11 +1304,8 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
                       _stopword_hits_spark("en").alias("en_hits"))
                   .withColumn("n_tokens", F.size("toks")))
         # Stage 1 — quality gate (map-only): pipeline_curate's rule.
-        # min_en_hits stays a knob for alternative corpora; since r12
-        # make_sf1.py preserves stopword surface forms, so the decade
-        # probe runs the REGISTERED rule (r11 verdict item 7 closed).
         quality = (scored.where((F.col("n_tokens") >= CURATE_MIN_TOKENS)
-                                & (F.col("en_hits") >= min_en_hits))
+                                & (F.col("en_hits") > 0))
                    .select("doc_id", "lang", "n_tokens", "toks")
                    .persist())
         try:
@@ -1545,23 +1329,14 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
                 # MinHash index + exact-jaccard point-fetch verify
                 # (stream_text_admit's rule; quality's ≥ 20 tokens
                 # implies shingles exist, so no extra eligibility cut).
-                idx = ss.read.parquet(band_index_path)
-                cand = (idx.alias("a").join(
-                            _band_rows(clean).alias("b"),
-                            (F.col("a.band") == F.col("b.band"))
-                            & (F.col("a.bucket") == F.col("b.bucket")))
-                        .select(F.col("a.doc_id").alias("old_doc"),
-                                F.col("b.doc_id").alias("doc_id")))
-                cand = (observability.observe_candidates(
-                            cand, "curate_minhash")
-                        .distinct().persist())
+                cand = band_index_candidates(
+                    ss, band_index_path, _band_rows(clean),
+                    "curate_minhash").persist()
                 scope: list = []
                 try:
-                    hits = _jaccard_verify_hits(ss, cand, clean,
-                                                payload_path,
-                                                hash_payload_path,
-                                                text_payload_path,
-                                                scope=scope)
+                    hits = jaccard_verify(ss, cand, clean,
+                                          hash_payload_path,
+                                          text_payload_path, scope)
                     append_epoch(
                         clean.select("doc_id", "lang",
                                      F.col("n_tokens").cast("int")
@@ -1638,9 +1413,10 @@ def stream_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection oracle does, column-exactly.
 
     Per-doc admission against immutable persisted artifacts (eval-gram
-    index, MinHash band index + shingle payload) keeps the composed
-    decision batch-chop-invariant — which is precisely what makes the
-    one-shot SQL replay equal the union of per-batch decisions.
+    index, MinHash band index + its two verify-payload tiers) keeps the
+    composed decision batch-chop-invariant — which is precisely what
+    makes the one-shot SQL replay equal the union of per-batch
+    decisions.
 
     Scale: ZERO streaming state (nothing remembered across batches);
     per-batch cost = one batch scan + map-only quality/tokenize work +
@@ -1667,9 +1443,8 @@ def stream_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = (docs.where((F.col("doc_id") % INCR_MOD == INCR_REM)
                        & (F.col("doc_id") % EVAL_MOD != 0))
             .select("doc_id", "lang", "text"))
-    drain(feed, _curate_admit(eval_index, band_index, None, out_dir,
-                              hash_payload_path=hash_payload,
-                              text_payload_path=text_payload),
+    drain(feed, _curate_admit(eval_index, band_index, hash_payload,
+                              text_payload, out_dir),
           ckpt)
     return read_epochs(spark, out_dir,
                        "doc_id long, lang string, n_tokens int")

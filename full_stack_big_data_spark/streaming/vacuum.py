@@ -110,9 +110,7 @@ def _text_vacuum_lifecycle(spark: SparkSession,
     feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_INGEST)
             .select("doc_id", "text"))
-    drain(feed, _text_ingest(base, None, epochs, hash_payload_path=payh,
-                             text_payload_path=payt),
-          ckpt)
+    drain(feed, _text_ingest(base, payh, payt, epochs), ckpt)
 
     # 3. compact: fold base ∪ epochs, rebuild payload tiers
     base_rows = (spark.read.parquet(base)
@@ -213,7 +211,5 @@ def text_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_SERVE)
             .select("doc_id", "text"))
-    drain(feed, _text_admit(gen2, None, out_dir, hash_payload_path=gen2h,
-                            text_payload_path=gen2t),
-          ckpt)
+    drain(feed, _text_admit(gen2, gen2h, gen2t, out_dir), ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")

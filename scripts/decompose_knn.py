@@ -11,8 +11,7 @@ from pyspark.sql import SparkSession, functions as F
 from full_stack_big_data_spark.engine.catalog import Catalog
 from full_stack_big_data_spark.engine.session import tune_session
 from full_stack_big_data_spark.operators.registry import load_all
-from full_stack_big_data_spark.operators.similarity import (
-    ANN_INCR_MOD, ANN_INCR_REM, srp_buckets)
+from full_stack_big_data_spark.operators.similarity import srp_bucket_rows
 from full_stack_big_data_spark.functions.vectors import cosine_sim
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -38,9 +37,8 @@ def t(label, df, reps=3):
 t("warmup: full emb_knn_graph", reg["emb_knn_graph"].builder(spark, sf), reps=1)
 
 src = Catalog(spark, sf).embeddings.select("vec_id", "embedding")
-buckets = (srp_buckets(src).select(
-    "vec_id", F.posexplode("buckets").alias("table_id", "bucket")))
-t("stage a: buckets+posexplode", buckets)
+buckets = srp_bucket_rows(src)
+t("stage a: bucket rows", buckets)
 
 cand = (buckets.select(F.col("vec_id").alias("src_id"), "table_id", "bucket")
         .join(buckets, ["table_id", "bucket"])

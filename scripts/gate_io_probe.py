@@ -50,7 +50,7 @@ def _touched_bytes(payload_path: str, key: str,
     threshold of 10, k > 10 ids degrade to a [min, max] RANGE push and
     this arithmetic would overstate the reader's pruning — with the
     raise, the k = 16/64/256 rows below match the reader's actual
-    rule). Past PF_IN_MAX ids, fetch_payload switches to the
+    rule). Past PF_IN_MAX ids, fetch_payload_prefetched switches to the
     broadcast-join fallback where ONLY the pk directory prune applies
     — this arithmetic mirrors that regime too (every row group in a
     touched directory counts), so each row reports what the reader's
@@ -107,31 +107,17 @@ def main() -> int:
     print("|---|---|---|---|---|---|---|---|")
 
     # --- text gate: the micro-batch is the whole new partition -------
-    from full_stack_big_data_spark.functions.text import token_ngrams, tokens
     from full_stack_big_data_spark.operators.dedup import (
-        INCR_MOD, INCR_REM, JACCARD_THRESHOLD, SHINGLE_N, _band_rows,
-        doc_text_payload_dir, hashed_shingle_cols,
-        minhash_hash_payload_dir, minhash_index_dir, minhash_payload_dir)
+        INCR_MOD, INCR_REM, _band_rows, _shingle_sets,
+        band_index_candidates, doc_text_payload_dir, jaccard_verify,
+        minhash_hash_payload_dir, minhash_index_dir)
 
-    idx_path = minhash_index_dir(spark, sf)
-    pay_path = minhash_payload_dir(spark, sf)   # r11 one-tier baseline
     hpay_path = minhash_hash_payload_dir(spark, sf)
     tpay_path = doc_text_payload_dir(spark, sf)
-    batch = (Catalog(spark, sf).documents
-             .where(F.col("doc_id") % INCR_MOD == INCR_REM)
-             .select("doc_id", "text"))
-    toks = (batch.select("doc_id", tokens("text").alias("toks"))
-            .where(F.size("toks") >= SHINGLE_N))
-    sh_new = toks.select(
-        "doc_id",
-        F.array_distinct(token_ngrams(F.col("toks"), SHINGLE_N)).alias("s"))
-    idx = spark.read.parquet(idx_path)
-    cand = (idx.alias("a").join(
-                _band_rows(sh_new).alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket")))
-            .select(F.col("a.doc_id").alias("old_doc"),
-                    F.col("b.doc_id").alias("doc_id")).distinct())
+    sh_new = (_shingle_sets(spark, sf)
+              .where(F.col("doc_id") % INCR_MOD == INCR_REM))
+    cand = band_index_candidates(spark, minhash_index_dir(spark, sf),
+                                 _band_rows(sh_new), "text_admit_minhash")
     n_cand = cand.count()
     ids = fetch_ids(cand.select(F.col("old_doc").alias("doc_id")), "doc_id")
     # correctness of the pruned fetch: rows back == ids asked for
@@ -139,48 +125,29 @@ def main() -> int:
     assert got == len(ids), (got, len(ids))
     cb = _corpus_bytes(os.path.join(sf, "documents.parquet"))
 
-    # Two-tier verify I/O (r11 verdict item 2): tier 1 fetches int32
-    # shingle hashes for every candidate; only pairs passing the
-    # hash-jaccard screen (≈ true near-dups) open tier-2 raw-text row
-    # groups. Rows: the tiers separately, then combined vs what the
-    # r11 one-tier shingle-string fetch for all candidates read.
-    hp = (point_fetch(spark, hpay_path, "doc_id", ids)
-          .select(F.col("doc_id").alias("old_doc"),
-                  F.col("hs").alias("ho"), F.col("n").alias("no"),
-                  F.col("collide").alias("coll_o")))
-    nh = (hashed_shingle_cols(sh_new)
-          .select("doc_id", F.col("hs").alias("hn"),
-                  F.col("n").alias("nn"), F.col("collide").alias("coll_n")))
-    ih = F.size(F.array_intersect("ho", "hn"))
-    keep = (F.col("coll_o") | F.col("coll_n")
-            | (F.col("ih") / (F.col("no") + F.col("nn") - F.col("ih"))
-               >= JACCARD_THRESHOLD))
-    surv = sorted(r.old_doc for r in
-                  (cand.join(hp, "old_doc").join(nh, "doc_id")
-                   .select("old_doc", ih.alias("ih"), "no", "nn",
-                           "coll_o", "coll_n")
-                   .where(keep).select("old_doc").distinct().collect()))
+    # Two-tier verify I/O: tier 1 fetches int32 shingle hashes for
+    # every candidate; only pairs passing the hash-jaccard screen
+    # (≈ true near-dups) open tier-2 raw-text row groups.
+    surv = _screen_survivors(
+        lambda scope: jaccard_verify(spark, cand, sh_new, hpay_path,
+                                     tpay_path, scope),
+        "old_doc", "doc_id")
     t1b, t1rg, hpb, hprg = _touched_bytes(hpay_path, "doc_id", ids)
     t2b, t2rg, tpb, tprg = _touched_bytes(tpay_path, "doc_id", surv)
-    old_b, old_rg, spb, _ = _touched_bytes(pay_path, "doc_id", ids)
     print(f"| text tier-1 (int32 hash screen) | {n_cand} | {len(ids)} "
           f"| {hpb} ({hprg}) | {t1b} ({t1rg}) | {cb} | {t1b / hpb:.3f} "
           f"| {t1b / cb:.3f} |")
     print(f"| text tier-2 (raw text, screen survivors) | {n_cand} "
           f"| {len(surv)} | {tpb} ({tprg}) | {t2b} ({t2rg}) | {cb} "
           f"| {t2b / tpb:.3f} | {t2b / cb:.3f} |")
-    print(f"| stream_text_admit two-tier total (vs r11 one-tier "
-          f"fetch {old_b} from the {spb}-byte string payload) "
-          f"| {n_cand} | {len(ids)} | {hpb + tpb} "
-          f"| {t1b + t2b} | {cb} | {(t1b + t2b) / max(old_b, 1):.3f}"
-          f" of one-tier | {(t1b + t2b) / cb:.3f} |")
+    print(f"| stream_text_admit two-tier total | {n_cand} | {len(ids)} "
+          f"| {hpb + tpb} | {t1b + t2b} | {cb} "
+          f"| {(t1b + t2b) / (hpb + tpb):.3f} | {(t1b + t2b) / cb:.3f} |")
 
     # --- embedding gate ----------------------------------------------
     from full_stack_big_data_spark.operators.similarity import (
-        ANN_INCR_MOD, ANN_INCR_REM, srp_buckets, srp_index_dir,
-        srp_payload_dir, srp_quant_payload_dir)
-    from full_stack_big_data_spark.streaming.joins import \
-        _cosine_verify_hits
+        ANN_INCR_MOD, ANN_INCR_REM, cosine_verify, srp_bucket_rows,
+        srp_index_dir, srp_payload_dir, srp_quant_payload_dir)
 
     eidx = (spark.read.parquet(srp_index_dir(spark, sf))
             .withColumnRenamed("vec_id", "old_id"))
@@ -189,10 +156,7 @@ def main() -> int:
     ebatch = (Catalog(spark, sf).embeddings
               .where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
               .select("vec_id", "embedding"))
-    nb = (srp_buckets(ebatch)
-          .select("vec_id", F.posexplode("buckets")
-                  .alias("table_id", "bucket")))
-    ecand = (nb.join(eidx, ["table_id", "bucket"])
+    ecand = (srp_bucket_rows(ebatch).join(eidx, ["table_id", "bucket"])
              .select("vec_id", "old_id").distinct())
     en_cand = ecand.count()
     eids = fetch_ids(ecand.select(F.col("old_id").alias("vec_id")), "vec_id")
@@ -211,15 +175,10 @@ def main() -> int:
         quantizations for every candidate; only bound-screen survivors
         (≈ true near-dups) open tier-2 float row groups. Returns the
         survivor ids so the per-k curve can price the combined tiers."""
-        scope: list = []
-        try:
-            _cosine_verify_hits(spark, cand_df, ebatch, epay,
-                                quant_payload_path=eqpay, scope=scope)
-            surv = fetch_ids(scope[0].select(F.col("old_id")
-                                             .alias("vec_id")), "vec_id")
-        finally:
-            for df in scope:
-                df.unpersist()
+        surv = _screen_survivors(
+            lambda scope: cosine_verify(spark, cand_df, ebatch, eqpay,
+                                        epay, scope),
+            "old_id", "vec_id")
         t1b, t1rg, qpb, qprg = _touched_bytes(eqpay, "vec_id", cand_ids)
         t2b, t2rg, fpb, fprg = _touched_bytes(epay, "vec_id", surv)
         print(f"| {label} tier-1 (packed int16 screen) | {len(cand_ids)} "
@@ -248,10 +207,8 @@ def main() -> int:
     sidx = (spark.read.parquet(
                 srp_index_dir(spark, sf, bits=SRP_BITS_WIDE))
             .withColumnRenamed("vec_id", "old_id"))
-    snb = (srp_buckets(ebatch, bits=SRP_BITS_WIDE)
-           .select("vec_id", F.posexplode("buckets")
-                   .alias("table_id", "bucket")))
-    scand = (snb.join(sidx, ["table_id", "bucket"])
+    scand = (srp_bucket_rows(ebatch, bits=SRP_BITS_WIDE)
+             .join(sidx, ["table_id", "bucket"])
              .select("vec_id", "old_id").distinct())
     sn_cand = scand.count()
     sids = fetch_ids(scand.select(F.col("old_id").alias("vec_id")),
@@ -310,6 +267,19 @@ def main() -> int:
               f"| {b1 + b2} | {bf} | {(b1 + b2) / max(bf, 1):.3f} |")
     spark.stop()
     return 0
+
+
+def _screen_survivors(verify, old: str, key: str) -> list[int]:
+    """The distinct corpus ids among the pairs a two-tier verify's
+    screen keeps (the screened pair frame it leaves in ``scope``) —
+    the ids whose tier-2 rows the verify fetches."""
+    scope: list = []
+    try:
+        verify(scope)
+        return fetch_ids(scope[0].select(F.col(old).alias(key)), key)
+    finally:
+        for df in scope:
+            df.unpersist()
 
 
 def _corpus_bytes(path: str) -> int:

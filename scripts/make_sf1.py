@@ -21,13 +21,13 @@ growth would, instead of degenerating:
   functions.text.STOPWORDS_BY_LANG, 6.6% of sf0.1 tokens) keep their
   surface form, so stopword-evidence statistics (language ID, quality
   gates, stream_pipeline_curate's en_hits rule) survive the decade and
-  the composed gate probes at its REGISTERED rule instead of a
-  min_en_hits=0 override. Shingle copy-disjointness — the property
-  that keeps planted near-dup PAIRS growing linearly (10 copies of
-  each 1x pair, never quadratically) — survives to within measurement
-  noise: only ALL-stopword 3-grams are copy-shared, 77 of 260,704
-  sf0.1 shingle instances (0.03%), and a band collision needs BOTH
-  minhash rows of a band to land on shared shingles (~p² per band).
+  the composed gate probes at its registered rule. Shingle
+  copy-disjointness — the property that keeps planted near-dup PAIRS
+  growing linearly (10 copies of each 1x pair, never quadratically) —
+  survives to within measurement noise: only ALL-stopword 3-grams are
+  copy-shared, 77 of 260,704 sf0.1 shingle instances (0.03%), and a
+  band collision needs BOTH minhash rows of a band to land on shared
+  shingles (~p² per band).
 - embeddings: 10 copies with vec_id offset and a per-copy DETERMINISTIC
   SIGN-FLIP pattern (element d multiplied by ±1 from xxhash64(copy, d);
   copy 0 keeps the original data). A diagonal ±1 matrix is orthogonal:

@@ -311,7 +311,7 @@ def _clusters_scaled_bits(spark, sf):
     occupancy grows 10x, the quadratic-in-occupancy bucket self-join
     grows 100x (measured 35.9x wall at sf1.0 — the probe run that
     motivated this override; BENCHNOTES round 6). A deployment instead
-    applies srp_buckets' sizing rule 2^bits ~= N/64, which keeps
+    applies srp_bucket_rows' sizing rule 2^bits ~= N/64, which keeps
     per-bucket work constant so candidates stay linear in N. This
     builder IS that deployment: same operator composition, bits derived
     from the corpus count (sf0.1: 2k -> 5 bits; sf1.0: 20k -> 9 bits).

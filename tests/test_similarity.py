@@ -464,10 +464,9 @@ def test_quantized_screen_no_false_drops(spark, tmp_path):
 
     from pyspark.sql import functions as F
     from full_stack_big_data_spark.engine.pointfetch import write_payload
+    from full_stack_big_data_spark.functions.vectors import cosine_sim
     from full_stack_big_data_spark.operators.similarity import (
-        NEARDUP_COS, quantized_vec_cols)
-    from full_stack_big_data_spark.streaming.joins import \
-        _cosine_verify_hits
+        NEARDUP_COS, cosine_verify, quantized_vec_cols)
 
     rng = random.Random(13)
     d = 64
@@ -513,13 +512,17 @@ def test_quantized_screen_no_false_drops(spark, tmp_path):
     cand = (new.select("vec_id")
             .crossJoin(old.select(F.col("vec_id").alias("old_id"))))
     exact = {r.vec_id
-             for r in _cosine_verify_hits(spark, cand, new, pay).collect()}
+             for r in (new.select("vec_id", F.col("embedding").alias("qv"))
+                       .crossJoin(old.select(
+                           F.col("embedding").alias("old_emb")))
+                       .where(cosine_sim(F.col("old_emb"), F.col("qv"))
+                              >= NEARDUP_COS)
+                       .select("vec_id").collect())}
     scope = []
     try:
         two = {r.vec_id
-               for r in _cosine_verify_hits(
-                   spark, cand, new, pay, quant_payload_path=qpay,
-                   scope=scope).collect()}
+               for r in cosine_verify(spark, cand, new, qpay, pay,
+                                      scope).collect()}
         survivors = scope[0].count()
     finally:
         for df in scope:

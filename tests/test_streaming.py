@@ -872,10 +872,8 @@ def test_stream_text_ingest_epoch_replay_and_gate_equivalence(spark, tmp_path):
     gate's decision exactly (ingest == admit + append)."""
     from full_stack_big_data_spark.engine.pointfetch import write_payload
     from full_stack_big_data_spark.functions.text import token_ngrams, tokens
-    from full_stack_big_data_spark.operators.dedup import (INCR_MOD,
-                                                           INCR_REM,
-                                                           SHINGLE_N,
-                                                           _band_rows)
+    from full_stack_big_data_spark.operators.dedup import (
+        INCR_MOD, INCR_REM, SHINGLE_N, _band_rows, hashed_shingle_cols)
     from full_stack_big_data_spark.operators.registry import load_all
     from full_stack_big_data_spark.streaming.joins import _text_ingest
 
@@ -888,15 +886,17 @@ def test_stream_text_ingest_epoch_replay_and_gate_equivalence(spark, tmp_path):
     corpus = spark.createDataFrame(
         [(10, "alpha beta gamma delta epsilon zeta")],
         "doc_id long, text string")
-    base, pay = str(tmp_path / "base"), str(tmp_path / "pay")
+    base = str(tmp_path / "base")
+    hpay, tpay = str(tmp_path / "hpay"), str(tmp_path / "tpay")
     epochs = str(tmp_path / "epochs")
     _band_rows(sh(corpus)).write.parquet(base)
-    write_payload(sh(corpus), "doc_id", pay)
+    write_payload(hashed_shingle_cols(sh(corpus)), "doc_id", hpay)
+    write_payload(corpus, "doc_id", tpay)
     batch = spark.createDataFrame(
         [(21, "alpha beta gamma delta epsilon zeta"),   # exact dup → drop
          (22, "one two three four five six")],          # novel → admit
         "doc_id long, text string")
-    ingest = _text_ingest(base, pay, epochs)
+    ingest = _text_ingest(base, hpay, tpay, epochs)
     ingest(batch, 7)
     once = sorted(map(tuple, spark.read.parquet(epochs)
                       .select("doc_id", "band", "bucket").collect()))
@@ -1002,7 +1002,7 @@ def test_index_compaction_layout_and_payload_serve(spark):
     assert sorted(hrow[0].hs) == sorted(want_h[0].hs)
     assert hrow[0].n == len(doc[0].s) and not hrow[0].collide
 
-    egen2, epay2 = embedding_index_compact_dirs(spark, SF_SMOKE)
+    egen2, eqpay2, epay2 = embedding_index_compact_dirs(spark, SF_SMOKE)
     tdirs = glob.glob(f"{egen2}/table_id=*")
     assert len(tdirs) == SRP_TABLES
     assert all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in tdirs)
@@ -1013,6 +1013,17 @@ def test_index_compaction_layout_and_payload_serve(spark):
                        .builder(spark, SF_SMOKE).collect())
     egot = point_fetch(spark, epay2, "vec_id", [eadmitted[0]]).collect()
     assert len(egot) == 1 and len(egot[0].embedding) == 64
+    # Tier 1 (packed-int16 screen): the rebuilt quant row equals a
+    # fresh quantization of the admitted vector, so the folded
+    # generation can serve cosine_verify's screen.
+    from full_stack_big_data_spark.operators.similarity import \
+        quantized_vec_cols
+    qrow = point_fetch(spark, eqpay2, "vec_id", [eadmitted[0]]).collect()
+    want_q = quantized_vec_cols(spark.createDataFrame(
+        [(eadmitted[0], egot[0].embedding)],
+        "vec_id long, embedding array<float>")).collect()
+    assert len(qrow) == 1
+    assert (qrow[0].w32, qrow[0].s) == (want_q[0].w32, want_q[0].s)
 
 
 
@@ -1066,8 +1077,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
         [(21, "alpha beta gamma delta epsilon zeta"),   # dup → dropped
          (22, "one two three four five six")],          # novel → admitted
         "doc_id long, text string")
-    _text_ingest(base, None, epochs,
-                 hash_payload_path=hpay, text_payload_path=tpay)(dump, 0)
+    _text_ingest(base, hpay, tpay, epochs)(dump, 0)
 
     # Fold: gen2 index = base ∪ epochs; payloads rebuilt over the
     # GROWN membership (corpus + admitted docs).
@@ -1093,8 +1103,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
          (32, "seven eight nine ten eleven twelve")],
         "doc_id long, text string")
     out_pre, out_post = str(tmp_path / "out_pre"), str(tmp_path / "out_post")
-    admit = _text_admit(gen2, None, out_pre,
-                        hash_payload_path=hpay2, text_payload_path=tpay2)
+    admit = _text_admit(gen2, hpay2, tpay2, out_pre)
     admit(probe, 0)
     pre = sorted(r.doc_id for r in read_epochs(
         spark, out_pre, "doc_id long, n_shingles int").collect())
@@ -1117,8 +1126,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     assert glob.glob(f"{gen2}/band=*")
 
     # (a) post-vacuum serve equality from the folded artifacts alone.
-    admit2 = _text_admit(gen2, None, out_post,
-                         hash_payload_path=hpay2, text_payload_path=tpay2)
+    admit2 = _text_admit(gen2, hpay2, tpay2, out_post)
     admit2(probe, 0)
     post = sorted(r.doc_id for r in read_epochs(
         spark, out_post, "doc_id long, n_shingles int").collect())
@@ -1489,8 +1497,8 @@ def test_verify_pool_task_keeps_the_batch_job_group(spark):
     """The verify tiers' id collects run on a pool thread; submitted
     the way the gates submit them, they must carry the micro-batch's
     job group, so cancelling the batch cancels their jobs too."""
-    from full_stack_big_data_spark.streaming.joins import (_verify_pool,
-                                                           _verify_submit)
+    from full_stack_big_data_spark.engine.pointfetch import (_verify_pool,
+                                                             _verify_submit)
 
     sc = spark.sparkContext
     sc.setJobGroup("batch-7", "verify pool job-group pin")
