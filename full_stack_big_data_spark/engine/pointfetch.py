@@ -37,9 +37,18 @@ collect overlapped against the driver's expression building.
 ``dedup.jaccard_verify`` (text) and ``similarity.cosine_verify``
 (embeddings) supply the tiers; the batch ``dedup_incremental`` entry
 and every streaming ingest gate call them.
+
+Store (``VerifyStore``): the candidate index plus the two payload
+tiers the verify reads, passed as one value. Each family writes all
+three through one function (``dedup.write_text_store``,
+``similarity.write_embedding_store``) whether the store is the corpus
+base, a compaction's fold or a vacuum lifecycle's private base, so
+every store has one layout.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -63,6 +72,19 @@ PF_MAX_IDS = 200_000  # size gate for the driver-side id fetch (~1.6 MB)
 # candidate set; per-value stats evaluation at this width is footer
 # arithmetic, microseconds against row-group I/O.
 PF_IN_MAX = 1000
+
+
+class VerifyStore(NamedTuple):
+    """One similarity family's stored corpus side: the candidate
+    ``index`` (one file per band/table key,
+    ``engine.generations.write_generation``), the tier-1 ``screen``
+    payload and the tier-2 ``exact`` payload (both
+    :func:`write_payload` layout). Both payload tiers hold exactly the
+    index's ids: candidates come only from index rows, so every
+    payload row a candidate can reach is present."""
+    index: str
+    screen: str
+    exact: str
 
 
 def write_payload(df: DataFrame, key: str, path: str,
@@ -183,12 +205,12 @@ def _verify_submit(pool, spark: SparkSession, fn, *args):
 
 
 def two_tier_verify(spark: SparkSession, cand: DataFrame, old: str,
-                    key: str, screen_path: str, screen, exact_path: str,
-                    exact, scope: list) -> DataFrame:
+                    key: str, store: VerifyStore, screen, exact,
+                    scope: list) -> DataFrame:
     """The exact verify every similarity family shares: a cheap SCREEN
     tier over every candidate, then the exact tier over the screen's
     survivors only, each read by a pk-pruned point fetch of its payload
-    — never a pass over the corpus table.
+    in ``store`` — never a pass over the corpus table.
 
     ``cand`` holds candidate pairs; its ``old`` column is the corpus
     side's id, looked up in both payloads under ``key`` (the fetched
@@ -208,14 +230,14 @@ def two_tier_verify(spark: SparkSession, cand: DataFrame, old: str,
         ids_df = cand.select(F.col(old).alias(key))
         ids = _verify_submit(pool, spark, fetch_ids, ids_df, key)
         apply_screen = screen()
-        rows = fetch_payload_prefetched(spark, screen_path, key, ids_df,
+        rows = fetch_payload_prefetched(spark, store.screen, key, ids_df,
                                         ids.result())
         cand = apply_screen(cand, rows.withColumnRenamed(key, old)).persist()
         scope.append(cand)
         ids_df = cand.select(F.col(old).alias(key))
         ids = _verify_submit(pool, spark, fetch_ids, ids_df, key)
         apply_exact = exact()
-        rows = fetch_payload_prefetched(spark, exact_path, key, ids_df,
+        rows = fetch_payload_prefetched(spark, store.exact, key, ids_df,
                                         ids.result())
     finally:
         pool.shutdown(wait=False)

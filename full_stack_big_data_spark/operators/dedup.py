@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..engine.catalog import Catalog
+from ..engine.generations import write_generation
+from ..engine.pointfetch import VerifyStore, two_tier_verify, write_payload
 from ..engine.scratch import memo, scratch_dir
 from ..functions import observability
 from ..functions.hashing import hex64, hex64_sql
@@ -158,7 +160,7 @@ def _minhash_bands_prefix(s_sql: str = _SHINGLES_SQL,
                           src_filter: str | None = None) -> str:
     """Shared oracle prefix: the shingle→minhash→band CTE chain ending
     in ``bands(doc_id, band, bucket)`` — the exact content of the
-    persisted band index (:func:`minhash_index_dir` is its corpus-side
+    persisted band index (:func:`text_store`'s index is its corpus-side
     slice). Reused by :func:`_minhash_oracle` and the grown-index
     oracle of ``streaming.joins.stream_text_ingest``."""
     if src_filter is None:
@@ -400,7 +402,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since r13 (r12 verdict item 7) the entry runs against the SAME
     at-scale artifacts the streaming gate reads, and through the same
     code: candidates come from the STORED band index
-    (:func:`band_index_candidates` over :func:`minhash_index_dir` — the
+    (:func:`band_index_candidates` over :func:`text_store` — the
     corpus is bucketed once per dump, never re-shingled here) and the
     verify is the text family's one two-tier exact verify
     (:func:`jaccard_verify`) — so batch and stream make the same
@@ -408,43 +410,69 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-batch size, never corpus²; verify I/O ∝ candidate pk
     directories, never a corpus pass.
     """
+    store = text_store(spark, sf_dir)
     sh_new = (_shingle_sets(spark, sf_dir)
               .where(F.col("doc_id") % INCR_MOD == INCR_REM).persist())
-    cand = band_index_candidates(spark, minhash_index_dir(spark, sf_dir),
-                                 _band_rows(sh_new), "incremental_minhash")
+    cand = band_index_candidates(spark, store.index, _band_rows(sh_new),
+                                 "incremental_minhash")
     # the screened pair frame stays cached for the returned lazy frame,
     # as sh_new does
-    return (jaccard_verify(spark, cand, sh_new,
-                           minhash_hash_payload_dir(spark, sf_dir),
-                           doc_text_payload_dir(spark, sf_dir), [])
+    return (jaccard_verify(spark, cand, sh_new, store, [])
             .select("old_doc", F.col("doc_id").alias("new_doc"),
                     "jaccard"))
 
 
-def minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the EXISTING corpus's (doc_id, band, bucket) MinHash
-    band rows as band-partitioned parquet ONCE per (process, corpus) —
-    the reusable index ``dedup_incremental``'s docstring describes,
-    made into a stored artifact so the STREAMING admit gate
-    (``stream_text_admit``) checks each micro-batch against disk
-    instead of re-bucketing the corpus. Same memoized economics as the
-    SRP/phash/eval-gram artifacts."""
-    def build() -> str:
-        sh = _shingle_sets(spark, sf_dir).where(
-            F.col("doc_id") % INCR_MOD != INCR_REM)
-        path = scratch_dir("fsbd_minhash_index_")
-        (_band_rows(sh).write.mode("overwrite").partitionBy("band")
-         .parquet(path))
-        return path
-    return memo(("minhash_index_dir", sf_dir), build)
+def write_text_store(spark: SparkSession, sf_dir: str,
+                     bands: DataFrame) -> VerifyStore:
+    """Write the text family's verify store for the (doc_id, band,
+    bucket) rows ``bands``: the band index, one file per band, and
+    both payload tiers over exactly the docs ``bands`` holds — the one
+    writer of the corpus base (:func:`text_store`), the compaction
+    fold (``streaming.joins.text_index_compact_dirs``) and the vacuum
+    lifecycle's private base (``streaming.vacuum``).
+
+    Tier 1 (``screen``) is the docs' distinct int32 shingle hashes
+    (:func:`hashed_shingle_cols`): ~0.5× the bytes of the raw-string
+    shingle payload it replaced (which measured ~2.7× the corpus text,
+    BENCHNOTES r11), widening on natural corpora — see that function's
+    width note. Every candidate is screened there. Tier 2 (``exact``)
+    is the docs' raw (doc_id, text): the exact verify re-derives a
+    survivor's shingle set with the index build's own kernel, so at
+    rest this tier is exactly 1× corpus text, and per batch only
+    screen survivors (≈ true near-dups) open its row groups."""
+    store = VerifyStore(scratch_dir("fsbd_minhash_index_"),
+                        scratch_dir("fsbd_minhash_hash_payload_"),
+                        scratch_dir("fsbd_doc_text_payload_"))
+    write_generation(bands, store.index, "band", BANDS)
+    member = bands.select("doc_id").distinct().persist()
+    try:
+        write_payload(hashed_shingle_cols(
+            _shingle_sets(spark, sf_dir).join(member, "doc_id", "left_semi")),
+            "doc_id", store.screen)
+        write_payload(Catalog(spark, sf_dir).documents.select("doc_id", "text")
+                      .join(member, "doc_id", "left_semi"),
+                      "doc_id", store.exact)
+    finally:
+        member.unpersist()
+    return store
+
+
+def text_store(spark: SparkSession, sf_dir: str) -> VerifyStore:
+    """The corpus side's text verify store (every doc outside the
+    incremental residue), written ONCE per (process, corpus): the
+    stored index ``dedup_incremental`` and every streaming text gate
+    check new docs against, instead of re-bucketing the corpus."""
+    return memo(("text_store", sf_dir), lambda: write_text_store(
+        spark, sf_dir, _band_rows(_shingle_sets(spark, sf_dir).where(
+            F.col("doc_id") % INCR_MOD != INCR_REM))))
 
 
 def band_index_candidates(spark: SparkSession, index_path: str,
                           bands_new: DataFrame, sensor: str) -> DataFrame:
     """Distinct (old_doc, doc_id) candidate pairs: the new side's
     (doc_id, band, bucket) rows (:func:`_band_rows`) equi-joined
-    against the STORED band index at ``index_path``
-    (:func:`minhash_index_dir`'s layout) — the one bipartite candidate
+    against the STORED band index at ``index_path`` (a
+    :class:`VerifyStore`'s ``index``) — the one bipartite candidate
     join of ``dedup_incremental``, every streaming text gate and
     scripts/gate_io_probe.py. Cost ∝ new-side band rows × bucket
     occupancy, never corpus²; ``sensor`` names the raw collision
@@ -461,10 +489,10 @@ def band_index_candidates(spark: SparkSession, index_path: str,
 
 def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
     """(doc_id, hs, n, collide) from a (doc_id, s) shingle-set frame —
-    the tier-1 screen representation shared by the payload builder
-    (:func:`minhash_hash_payload_dir`, and the compaction folds'
-    rebuilds) and :func:`jaccard_verify`'s new side (both sides MUST
-    hash identically or the screen's superset argument below is void).
+    the tier-1 screen representation shared by the store writer
+    (:func:`write_text_store`) and :func:`jaccard_verify`'s new side
+    (both sides MUST hash identically or the screen's superset argument
+    below is void).
 
     ``hs`` = distinct 31-bit hash of each shingle (xxhash64 folded to
     int32), ``n`` = |s| (the EXACT set size; the screen's jaccard
@@ -497,69 +525,23 @@ def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
             .withColumn("collide", F.size("hs") < F.col("n")))
 
 
-def doc_text_payload_dir(spark: SparkSession, sf_dir: str) -> str:
-    """TIER 2 of the text gates' verify payload: the corpus side's raw
-    (doc_id, text) in point-lookup layout. The exact verify re-derives
-    a candidate's shingle set from its text with the SAME kernel the
-    index build used (:func:`_shingle_sets`'s expressions) — paying a
-    few docs' tokenization per batch instead of storing pre-exploded
-    shingle strings at 2.7× the corpus (BENCHNOTES r11): at rest this
-    tier is exactly 1× corpus text, and per batch it is only opened
-    for hash-screen survivors (≈ true near-dups)."""
-    from ..engine.pointfetch import write_payload
-
-    def build() -> str:
-        d = (Catalog(spark, sf_dir).documents
-             .where(F.col("doc_id") % INCR_MOD != INCR_REM)
-             .select("doc_id", "text"))
-        path = scratch_dir("fsbd_doc_text_payload_")
-        write_payload(d, "doc_id", path)
-        return path
-    return memo(("doc_text_payload_dir", sf_dir), build)
-
-
-def minhash_hash_payload_dir(spark: SparkSession, sf_dir: str) -> str:
-    """TIER 1 of the text gates' verify payload (r11 verdict item 2):
-    the corpus side's distinct int32 shingle hashes in point-lookup
-    layout. The r11 raw-string payload was the system's biggest at-rest
-    object (~2.7× corpus text, BENCHNOTES r11); this tier measures
-    ~0.5× of it at fixture encodings (widening on natural corpora —
-    see :func:`hashed_shingle_cols`'s width note), and per-batch verify
-    I/O rides it — candidates are screened on hash-jaccard (provably no
-    false drops, see :func:`hashed_shingle_cols`) and only the screen's
-    survivors (true near-dups plus the ~zero-probability collision
-    bypasses) open tier-2 raw-text row groups
-    (:func:`doc_text_payload_dir`)."""
-    from ..engine.pointfetch import write_payload
-
-    def build() -> str:
-        sh = _shingle_sets(spark, sf_dir).where(
-            F.col("doc_id") % INCR_MOD != INCR_REM)
-        path = scratch_dir("fsbd_minhash_hash_payload_")
-        write_payload(hashed_shingle_cols(sh), "doc_id", path)
-        return path
-    return memo(("minhash_hash_payload_dir", sf_dir), build)
-
-
 def jaccard_verify(spark: SparkSession, cand: DataFrame, sh_new: DataFrame,
-                   hash_payload: str, text_payload: str,
-                   scope: list) -> DataFrame:
+                   store: VerifyStore, scope: list) -> DataFrame:
     """The text family's one exact verify: the verified (old_doc,
     doc_id, jaccard) pairs among the (old_doc, doc_id) candidates,
     jaccard ≥ ``JACCARD_THRESHOLD`` rounded to 6 places. ``sh_new``
     holds the new side's (doc_id, s) shingle sets; the corpus side is
-    read only from its two payload tiers, by pk-pruned point fetch —
-    never a documents.parquet pass (``engine.pointfetch.two_tier_verify``
-    runs the fetches; ``scope`` receives the persisted screened pairs).
+    read only from the two payload tiers of ``store``
+    (:func:`write_text_store`), by pk-pruned point fetch — never a
+    documents.parquet pass (``engine.pointfetch.two_tier_verify`` runs
+    the fetches; ``scope`` receives the persisted screened pairs).
 
-    Tier 1 fetches candidate old docs' int32 shingle hashes
-    (:func:`minhash_hash_payload_dir`) and screens pairs on hash-jaccard
-    at the same threshold — drop-free (:func:`hashed_shingle_cols`), so
-    the screen changes I/O, never the result. Tier 2 fetches only the
-    survivors' raw text (:func:`doc_text_payload_dir`), re-derives
-    their shingle sets with the index build's own kernel and decides
-    on exact jaccard, collision-proof."""
-    from ..engine.pointfetch import two_tier_verify
+    Tier 1 fetches candidate old docs' int32 shingle hashes and
+    screens pairs on hash-jaccard at the same threshold — drop-free
+    (:func:`hashed_shingle_cols`), so the screen changes I/O, never
+    the result. Tier 2 fetches only the survivors' raw text,
+    re-derives their shingle sets with the index build's own kernel
+    and decides on exact jaccard, collision-proof."""
 
     def screen():
         nh = (hashed_shingle_cols(sh_new)
@@ -598,8 +580,8 @@ def jaccard_verify(spark: SparkSession, cand: DataFrame, sh_new: DataFrame,
             .where(jac >= JACCARD_THRESHOLD)
             .select("old_doc", "doc_id", F.round(jac, 6).alias("jaccard")))
 
-    return two_tier_verify(spark, cand, "old_doc", "doc_id", hash_payload,
-                           screen, text_payload, exact, scope)
+    return two_tier_verify(spark, cand, "old_doc", "doc_id", store, screen,
+                           exact, scope)
 
 
 # ---------------------------------------------------------------------------

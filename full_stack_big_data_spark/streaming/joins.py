@@ -24,11 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine.generations import append_epoch, read_epochs, write_generation
+from ..engine.generations import append_epoch, read_epochs
+from ..engine.pointfetch import VerifyStore
 from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
 from ..operators.registry import register
-from ..operators.similarity import SRP_BITS_WIDE as _SRP_BITS_WIDE
+from ..operators.similarity import SRP_BITS, SRP_BITS_WIDE as _SRP_BITS_WIDE
 from .core import corpus_stream, drain, drain_dirs, run_to_completion
 from .windows import TS_FMT, with_event_time
 
@@ -499,10 +500,8 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the persisted SRP bucket index.
 # ---------------------------------------------------------------------------
 
-def _embedding_gate(index_path: str, quant_payload_path: str,
-                    payload_path: str, target_dir: str, sensor: str,
-                    survivors, tables: int | None = None,
-                    bits: int | None = None):
+def _embedding_gate(store: VerifyStore, target_dir: str, sensor: str,
+                    survivors, bits: int = SRP_BITS):
     """Shared foreachBatch chain for BOTH embedding gates (admit +
     ingest — r11 review finding): bucket the micro-batch's vectors (the
     SRP Arrow pass), equi-join the batch's (table_id, bucket) rows
@@ -513,22 +512,16 @@ def _embedding_gate(index_path: str, quant_payload_path: str,
     as the epoch's partition (``engine.generations.append_epoch``).
     Candidates carry IDS ONLY through the bucket join; the bucket rows
     and candidate subtree are batch-scoped persisted (each feeds two
-    consumers). ``tables``/``bits`` default to the registered fixture
-    operating point; the sf1.0 probe overrides bits to the N/64 sizing
-    rule against a matching index."""
+    consumers). ``bits`` is the SRP geometry of ``store``'s index
+    (``similarity.embedding_store``'s key)."""
     def body(batch: DataFrame, batch_id: int) -> None:
         from ..functions import observability
-        from ..operators.similarity import (SRP_BITS, SRP_TABLES,
-                                            cosine_verify, srp_bucket_rows)
+        from ..operators.similarity import cosine_verify, srp_bucket_rows
 
         ss = batch.sparkSession
-        idx = (ss.read.parquet(index_path)
+        idx = (ss.read.parquet(store.index)
                .withColumnRenamed("vec_id", "old_id"))
-        nb = (srp_bucket_rows(
-                  batch,
-                  tables=tables if tables is not None else SRP_TABLES,
-                  bits=bits if bits is not None else SRP_BITS)
-              .persist())
+        nb = srp_bucket_rows(batch, bits=bits).persist()
         try:
             cand = (nb.join(idx, ["table_id", "bucket"])
                     .select("vec_id", "old_id"))
@@ -536,8 +529,7 @@ def _embedding_gate(index_path: str, quant_payload_path: str,
                     .distinct().persist())
             scope: list = []
             try:
-                hits = cosine_verify(ss, cand, batch, quant_payload_path,
-                                     payload_path, scope)
+                hits = cosine_verify(ss, cand, batch, store, scope)
                 append_epoch(survivors(batch, nb, hits), batch_id,
                              target_dir)
             finally:
@@ -549,16 +541,15 @@ def _embedding_gate(index_path: str, quant_payload_path: str,
     return body
 
 
-def _embedding_admit(index_path: str, quant_payload_path: str,
-                     payload_path: str, out_dir: str,
-                     tables: int | None = None, bits: int | None = None):
+def _embedding_admit(store: VerifyStore, out_dir: str,
+                     bits: int = SRP_BITS):
     """Admit gate: survivors are the batch's vec_ids without a verified
     hit (see :func:`_embedding_gate` for the shared chain)."""
     return _embedding_gate(
-        index_path, quant_payload_path, payload_path, out_dir, "srp_admit",
+        store, out_dir, "srp_admit",
         lambda batch, nb, hits: (batch.select("vec_id")
                                  .join(hits, "vec_id", "left_anti")),
-        tables=tables, bits=bits)
+        bits=bits)
 
 
 def _emb_admit_cte(bits: int | None = None) -> str:
@@ -570,8 +561,7 @@ def _emb_admit_cte(bits: int | None = None) -> str:
     ``_scaled`` entries' N/64 operating point) — the prefix embeds the
     exact plane literals for that geometry."""
     from ..operators.similarity import (ANN_INCR_MOD, ANN_INCR_REM,
-                                        NEARDUP_COS, SRP_BITS,
-                                        _srp_bucket_prefix)
+                                        NEARDUP_COS, _srp_bucket_prefix)
     return _srp_bucket_prefix(
         bits=bits if bits is not None else SRP_BITS) + f""", newb AS (
   SELECT vec_id, table_id, bucket FROM b
@@ -602,28 +592,22 @@ WHERE vec_id % {ANN_INCR_MOD} = {ANN_INCR_REM}
 
 
 def _run_embedding_admit(spark: SparkSession, sf_dir: str, tag: str,
-                         bits: int | None = None) -> DataFrame:
+                         bits: int = SRP_BITS) -> DataFrame:
     """Shared entry body for the admit gate at either SRP geometry:
-    build/reuse the (geometry-keyed) corpus index + (geometry-free)
-    payload, drain the new-vector feed through the checkpointed
-    foreachBatch gate, read back the admitted epoch partitions."""
+    build/reuse the geometry-keyed corpus store, drain the new-vector
+    feed through the checkpointed foreachBatch gate, read back the
+    admitted epoch partitions."""
     from ..operators.similarity import (ANN_INCR_MOD, ANN_INCR_REM,
-                                        srp_index_dir, srp_payload_dir,
-                                        srp_quant_payload_dir)
+                                        embedding_store)
 
     tune_session(spark)
-    kw = {} if bits is None else {"bits": bits}
-    index_path = srp_index_dir(spark, sf_dir, **kw)
-    payload_path = srp_payload_dir(spark, sf_dir)
-    quant_path = srp_quant_payload_dir(spark, sf_dir)
+    store = embedding_store(spark, sf_dir, bits)
     out_dir, ckpt = drain_dirs(tag, sf_dir)
 
     vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    drain(feed, _embedding_admit(index_path, quant_path, payload_path,
-                                 out_dir, bits=bits),
-          ckpt)
+    drain(feed, _embedding_admit(store, out_dir, bits), ckpt)
     return read_epochs(spark, out_dir, "vec_id long")
 
 
@@ -713,8 +697,7 @@ def stream_embedding_admit_scaled(spark: SparkSession,
 # per micro-batch against the persisted MinHash band index.
 # ---------------------------------------------------------------------------
 
-def _text_gate(index_path: str, hash_payload_path: str,
-               text_payload_path: str, target_dir: str, sensor: str,
+def _text_gate(store: VerifyStore, target_dir: str, sensor: str,
                survivors):
     """Shared foreachBatch chain for BOTH text gates (admit + ingest —
     r11 review finding): shingle + MinHash-band the micro-batch
@@ -744,13 +727,11 @@ def _text_gate(index_path: str, hash_payload_path: str,
         try:
             bands_new = _band_rows(sh_new).persist()
             try:
-                cand = band_index_candidates(ss, index_path, bands_new,
+                cand = band_index_candidates(ss, store.index, bands_new,
                                              sensor).persist()
                 scope: list = []
                 try:
-                    hits = jaccard_verify(ss, cand, sh_new,
-                                          hash_payload_path,
-                                          text_payload_path, scope)
+                    hits = jaccard_verify(ss, cand, sh_new, store, scope)
                     append_epoch(survivors(sh_new, bands_new, hits),
                                  batch_id, target_dir)
                 finally:
@@ -764,14 +745,12 @@ def _text_gate(index_path: str, hash_payload_path: str,
     return body
 
 
-def _text_admit(index_path: str, hash_payload_path: str,
-                text_payload_path: str, out_dir: str):
+def _text_admit(store: VerifyStore, out_dir: str):
     """Admit gate: survivors are the batch's docs without a verified
     hit, recorded as (doc_id, n_shingles) rows (see :func:`_text_gate`
     for the shared chain)."""
     return _text_gate(
-        index_path, hash_payload_path, text_payload_path, out_dir,
-        "text_admit_minhash",
+        store, out_dir, "text_admit_minhash",
         lambda sh_new, bands_new, hits: (
             sh_new.select("doc_id",
                           F.size("s").cast("int").alias("n_shingles"))
@@ -822,7 +801,7 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets; THIS drops docs the corpus effectively already has
     (jaccard ≥ the dedup family's threshold) — the decision
     ``dedup_incremental`` makes per dump, moved to the ingest door
-    against the stored band index (``dedup.minhash_index_dir``).
+    against the stored band index (``dedup.text_store``).
 
     Shape: readStream over the new dump's feed → checkpointed
     ``foreachBatch`` where the batch is shingled + banded map-side, its
@@ -840,23 +819,16 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the immutable index → batch-chop-invariant (intra-stream
     near-dups belong to the batch cluster/apply path, the
     division-of-labor note on ``stream_phash_admit``)."""
-    from ..operators.dedup import (INCR_MOD, INCR_REM,
-                                   doc_text_payload_dir,
-                                   minhash_hash_payload_dir,
-                                   minhash_index_dir)
+    from ..operators.dedup import INCR_MOD, INCR_REM, text_store
 
     tune_session(spark)
-    index_path = minhash_index_dir(spark, sf_dir)
-    hash_payload_path = minhash_hash_payload_dir(spark, sf_dir)
-    text_payload_path = doc_text_payload_dir(spark, sf_dir)
+    store = text_store(spark, sf_dir)
     out_dir, ckpt = drain_dirs("text_admit", sf_dir)
 
     docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    drain(feed, _text_admit(index_path, hash_payload_path,
-                            text_payload_path, out_dir),
-          ckpt)
+    drain(feed, _text_admit(store, out_dir), ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")
 
 
@@ -867,16 +839,14 @@ def stream_text_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingest loop for all three column families.
 # ---------------------------------------------------------------------------
 
-def _text_ingest(base_index_path: str, hash_payload_path: str,
-                 text_payload_path: str, epochs_dir: str):
+def _text_ingest(base: VerifyStore, epochs_dir: str):
     """SELF-GROWING MinHash band index: the :func:`_text_gate` decision
     (per-doc, vs the BASE generation only — batch-chop-invariant), with
     survivors' BAND ROWS landing in the index's epoch generation as a
     ``batch_id=<epoch>`` partition — the ``_phash_ingest`` recipe on
     the text family."""
     return _text_gate(
-        base_index_path, hash_payload_path, text_payload_path, epochs_dir,
-        "text_ingest_minhash",
+        base, epochs_dir, "text_ingest_minhash",
         lambda sh_new, bands_new, hits: (
             bands_new.join(hits, "doc_id", "left_anti")
             .select("doc_id", F.col("band").cast("int").alias("band"),
@@ -910,7 +880,7 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly: every admitted document's band rows land in the index the
     NEXT dump will be checked against, with no separate maintenance
     job. Two generations on disk: the immutable corpus generation
-    (``dedup.minhash_index_dir``, shared with the admit entry, never
+    (``dedup.text_store``, shared with the admit entry, never
     written here) plus a batch_id-partitioned epoch dir under dynamic
     partition overwrite — both replay layers idempotent, and the
     generation split keeps Spark from overwriting a path the same plan
@@ -927,24 +897,17 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch cost identical to the admit gate plus one
     batch-sized partition write; the index grows ~8 band rows per
     admitted doc; zero streaming state."""
-    from ..operators.dedup import (INCR_MOD, INCR_REM,
-                                   doc_text_payload_dir,
-                                   minhash_hash_payload_dir,
-                                   minhash_index_dir)
+    from ..operators.dedup import INCR_MOD, INCR_REM, text_store
 
     tune_session(spark)
-    base_dir = minhash_index_dir(spark, sf_dir)
-    hash_payload_path = minhash_hash_payload_dir(spark, sf_dir)
-    text_payload_path = doc_text_payload_dir(spark, sf_dir)
+    store = text_store(spark, sf_dir)
     epochs_dir, ckpt = drain_dirs("text_ingest", sf_dir)
 
     docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where(F.col("doc_id") % INCR_MOD == INCR_REM)
             .select("doc_id", "text"))
-    drain(feed, _text_ingest(base_dir, hash_payload_path,
-                             text_payload_path, epochs_dir),
-          ckpt)
-    base = (spark.read.parquet(base_dir)
+    drain(feed, _text_ingest(store, epochs_dir), ckpt)
+    base = (spark.read.parquet(store.index)
             .select("doc_id", F.col("band").cast("int").alias("band"),
                     "bucket"))
     grown = read_epochs(spark, epochs_dir,
@@ -952,22 +915,20 @@ def stream_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(grown)
 
 
-def _embedding_ingest(index_path: str, quant_payload_path: str,
-                      payload_path: str, epochs_dir: str,
-                      tables: int | None = None, bits: int | None = None):
+def _embedding_ingest(store: VerifyStore, epochs_dir: str,
+                      bits: int = SRP_BITS):
     """SELF-GROWING SRP index: the :func:`_embedding_gate` decision
     (per-vector, vs the BASE generation only), with survivors'
     (vec_id, table_id, bucket) rows appended as an epoch-keyed
     partition — the family recipe on the vector column."""
     return _embedding_gate(
-        index_path, quant_payload_path, payload_path, epochs_dir,
-        "srp_ingest",
+        store, epochs_dir, "srp_ingest",
         lambda batch, nb, hits: (
             nb.join(hits, "vec_id", "left_anti")
             .select("vec_id",
                     F.col("table_id").cast("int").alias("table_id"),
                     F.col("bucket").cast("int").alias("bucket"))),
-        tables=tables, bits=bits)
+        bits=bits)
 
 
 def _stream_embedding_ingest_oracle(bits: int | None = None) -> str:
@@ -982,28 +943,22 @@ WHERE vec_id % {ANN_INCR_MOD} <> {ANN_INCR_REM}
 
 
 def _run_embedding_ingest(spark: SparkSession, sf_dir: str, tag: str,
-                          bits: int | None = None) -> DataFrame:
+                          bits: int = SRP_BITS) -> DataFrame:
     """Shared entry body for the self-growing SRP index at either
     geometry: drain the feed through the ingest gate (admit decision
-    vs the geometry-keyed BASE index), return base ∪ grown epochs."""
+    vs the geometry-keyed BASE store), return base ∪ grown epochs."""
     from ..operators.similarity import (ANN_INCR_MOD, ANN_INCR_REM,
-                                        srp_index_dir, srp_payload_dir,
-                                        srp_quant_payload_dir)
+                                        embedding_store)
 
     tune_session(spark)
-    kw = {} if bits is None else {"bits": bits}
-    base_dir = srp_index_dir(spark, sf_dir, **kw)
-    payload_path = srp_payload_dir(spark, sf_dir)
-    quant_path = srp_quant_payload_dir(spark, sf_dir)
+    store = embedding_store(spark, sf_dir, bits)
     epochs_dir, ckpt = drain_dirs(tag, sf_dir)
 
     vecs = corpus_stream(spark, sf_dir, "embeddings")
     feed = (vecs.where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
             .select("vec_id", "embedding"))
-    drain(feed, _embedding_ingest(base_dir, quant_path, payload_path,
-                                  epochs_dir, bits=bits),
-          ckpt)
-    base = (spark.read.parquet(base_dir)
+    drain(feed, _embedding_ingest(store, epochs_dir, bits), ckpt)
+    base = (spark.read.parquet(store.index)
             .select("vec_id",
                     F.col("table_id").cast("int").alias("table_id"),
                     F.col("bucket").cast("int").alias("bucket")))
@@ -1073,52 +1028,23 @@ _CHECKSUM_P = 1_000_000_007
 
 
 def text_index_compact_dirs(spark: SparkSession,
-                            sf_dir: str) -> tuple[str, str, str]:
+                            sf_dir: str) -> VerifyStore:
     """Fold the grown text index's generations (base + ingest epochs)
-    into ONE band-partitioned generation with one file per band, and
-    REBUILD the verify payload — both tiers (int32 hash screen + raw
-    text, r11 verdict item 2) — to cover the admitted docs: the
-    periodic maintenance job the ingest docstrings promise
-    (``phash_index_compact``'s pattern, plus the payload half this
-    family carries). Returns (gen2 index dir, gen2 hash-payload dir,
-    gen2 text-payload dir). A per-run memo entry: after
+    into ONE store (``dedup.write_text_store``): the band index with
+    one file per band, and both verify-payload tiers (int32 hash
+    screen + raw text, r11 verdict item 2) rebuilt to cover the
+    admitted docs — the periodic maintenance job the ingest docstrings
+    promise (``phash_index_compact``'s pattern, plus the payload half
+    this family carries). A per-run memo entry: after
     ``engine.scratch.forget_runs`` the next call re-runs the WHOLE
     lifecycle it composes (ingest drain + fold + payload rebuild), not
     just a read of the folded generation."""
+    from ..operators.dedup import write_text_store
+
     return memo(("text_index_compact_dirs", sf_dir),
-                lambda: _fold_text_generations(
-                    spark, sf_dir, stream_text_ingest(spark, sf_dir)),
+                lambda: write_text_store(spark, sf_dir,
+                                         stream_text_ingest(spark, sf_dir)),
                 per_run=True)
-
-
-def _fold_text_generations(spark: SparkSession, sf_dir: str,
-                           grown: DataFrame) -> tuple[str, str, str]:
-    """The text compact's fold kernel, shared with the registered
-    vacuum lifecycle (streaming/vacuum.py): write ``grown`` (the
-    base ∪ epochs band rows) as ONE band-partitioned generation and
-    rebuild both verify-payload tiers over the grown membership.
-    Returns (gen2 index, gen2 hash payload, gen2 text payload)."""
-    from ..engine.catalog import Catalog
-    from ..engine.pointfetch import write_payload
-    from ..operators.dedup import BANDS, _shingle_sets, hashed_shingle_cols
-
-    gen2 = scratch_dir("fsbd_text_index_gen2_")
-    write_generation(grown, gen2, "band", BANDS)
-    member = grown.select("doc_id").distinct().persist()
-    try:
-        pay2h = scratch_dir("fsbd_text_hash_payload_gen2_")
-        write_payload(
-            hashed_shingle_cols(_shingle_sets(spark, sf_dir)
-                                .join(member, "doc_id", "left_semi")),
-            "doc_id", pay2h)
-        pay2t = scratch_dir("fsbd_text_payload_gen2_")
-        write_payload(
-            Catalog(spark, sf_dir).documents.select("doc_id", "text")
-            .join(member, "doc_id", "left_semi"),
-            "doc_id", pay2t)
-    finally:
-        member.unpersist()
-    return gen2, pay2h, pay2t
 
 
 def _text_index_compact_oracle() -> str:
@@ -1170,8 +1096,7 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan reads BANDS files instead of BANDS × epochs."""
     from ..functions.hashing import hex64
 
-    gen2, _pay2h, _pay2t = text_index_compact_dirs(spark, sf_dir)
-    c = spark.read.parquet(gen2)
+    c = spark.read.parquet(text_index_compact_dirs(spark, sf_dir).index)
     h = hex64(F.concat_ws("|", F.col("doc_id").cast("string"),
                           F.col("bucket")))
     return (c.groupBy(F.col("band").cast("int").alias("band"))
@@ -1180,39 +1105,23 @@ def text_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_index_compact_dirs(spark: SparkSession,
-                                 sf_dir: str) -> tuple[str, str, str]:
+                                 sf_dir: str) -> VerifyStore:
     """The SRP twin of :func:`text_index_compact_dirs`: fold base +
-    ingest epochs into one table_id-partitioned generation (one file
-    per table) and rebuild BOTH verify-payload tiers (packed-int16
-    screen + float) over the grown membership, so the folded
-    generation serves ``similarity.cosine_verify`` as the base one
-    does. Returns (gen2 index, gen2 quant payload, gen2 float
-    payload). The drain folded is the SCALED-geometry lifecycle
+    ingest epochs into ONE store (``similarity.write_embedding_store``)
+    — the index with one file per table, and both verify-payload tiers
+    (packed-int16 screen + float) over the grown membership, so the
+    folded generation serves ``similarity.cosine_verify`` as the base
+    one does. The drain folded is the SCALED-geometry lifecycle
     (``stream_embedding_ingest_scaled``, 2^bits ≈ N/64) — a
     maintenance entry a user actually runs must not compose the
     fixture geometry's occupancy pathology (r11 verdict item 1). A
     per-run memo entry, like the text twin."""
-    from ..engine.catalog import Catalog
-    from ..engine.pointfetch import write_payload
-    from ..operators.similarity import SRP_TABLES, quantized_vec_cols
+    from ..operators.similarity import write_embedding_store
 
-    def build() -> tuple[str, str, str]:
-        grown = stream_embedding_ingest_scaled(spark, sf_dir)
-        gen2 = scratch_dir("fsbd_emb_index_gen2_")
-        write_generation(grown, gen2, "table_id", SRP_TABLES)
-        member = grown.select("vec_id").distinct()
-        vecs = (Catalog(spark, sf_dir).embeddings
-                .select("vec_id", "embedding")
-                .join(member, "vec_id", "left_semi").persist())
-        try:
-            pay2q = scratch_dir("fsbd_emb_quant_payload_gen2_")
-            write_payload(quantized_vec_cols(vecs), "vec_id", pay2q)
-            pay2 = scratch_dir("fsbd_emb_payload_gen2_")
-            write_payload(vecs, "vec_id", pay2)
-        finally:
-            vecs.unpersist()
-        return gen2, pay2q, pay2
-    return memo(("embedding_index_compact_dirs", sf_dir), build,
+    return memo(("embedding_index_compact_dirs", sf_dir),
+                lambda: write_embedding_store(
+                    spark, sf_dir,
+                    stream_embedding_ingest_scaled(spark, sf_dir)),
                 per_run=True)
 
 
@@ -1256,8 +1165,7 @@ def embedding_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture-bits entries kept only as sensor contrasts."""
     from ..functions.hashing import hex64
 
-    gen2, _pay2q, _pay2 = embedding_index_compact_dirs(spark, sf_dir)
-    c = spark.read.parquet(gen2)
+    c = spark.read.parquet(embedding_index_compact_dirs(spark, sf_dir).index)
     h = hex64(F.concat_ws("|", F.col("vec_id").cast("string"),
                           F.col("bucket").cast("string")))
     return (c.groupBy(F.col("table_id").cast("int").alias("table_id"))
@@ -1279,9 +1187,7 @@ from ..operators.pipeline import CURATE_MIN_TOKENS  # noqa: E402 — the
 # (r11 review finding).
 
 
-def _curate_admit(eval_index_path: str, band_index_path: str,
-                  hash_payload_path: str, text_payload_path: str,
-                  out_dir: str):
+def _curate_admit(eval_index_path: str, store: VerifyStore, out_dir: str):
     """foreachBatch body: the three gates' decisions over ONE persisted
     projection of the micro-batch. Drops compose as a conjunction of
     per-doc keep predicates, so stage ORDER cannot change the result
@@ -1330,13 +1236,11 @@ def _curate_admit(eval_index_path: str, band_index_path: str,
                 # (stream_text_admit's rule; quality's ≥ 20 tokens
                 # implies shingles exist, so no extra eligibility cut).
                 cand = band_index_candidates(
-                    ss, band_index_path, _band_rows(clean),
+                    ss, store.index, _band_rows(clean),
                     "curate_minhash").persist()
                 scope: list = []
                 try:
-                    hits = jaccard_verify(ss, cand, clean,
-                                          hash_payload_path,
-                                          text_payload_path, scope)
+                    hits = jaccard_verify(ss, cand, clean, store, scope)
                     append_epoch(
                         clean.select("doc_id", "lang",
                                      F.col("n_tokens").cast("int")
@@ -1426,26 +1330,19 @@ def stream_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose I/O ∝ candidates (engine.pointfetch, the r11 gate
     discipline). Stage order is pure cost optimization — drops are a
     conjunction, so the result set is order-free by construction."""
-    from ..operators.dedup import (INCR_MOD, INCR_REM,
-                                   doc_text_payload_dir,
-                                   minhash_hash_payload_dir,
-                                   minhash_index_dir)
     from ..operators.decontam import EVAL_MOD
+    from ..operators.dedup import INCR_MOD, INCR_REM, text_store
 
     tune_session(spark)
     eval_index = _eval_gram_index_dir(spark, sf_dir)
-    band_index = minhash_index_dir(spark, sf_dir)
-    hash_payload = minhash_hash_payload_dir(spark, sf_dir)
-    text_payload = doc_text_payload_dir(spark, sf_dir)
+    store = text_store(spark, sf_dir)
     out_dir, ckpt = drain_dirs("stream_curate", sf_dir)
 
     docs = corpus_stream(spark, sf_dir, "documents")
     feed = (docs.where((F.col("doc_id") % INCR_MOD == INCR_REM)
                        & (F.col("doc_id") % EVAL_MOD != 0))
             .select("doc_id", "lang", "text"))
-    drain(feed, _curate_admit(eval_index, band_index, hash_payload,
-                              text_payload, out_dir),
-          ckpt)
+    drain(feed, _curate_admit(eval_index, store, out_dir), ckpt)
     return read_epochs(spark, out_dir,
                        "doc_id long, lang string, n_tokens int")
 

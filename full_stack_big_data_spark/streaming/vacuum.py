@@ -10,22 +10,23 @@ judge's gap: the driver never proved serve-equality after reclaim.
 The lifecycle here is PRIVATE to the entry (its own base generation,
 epochs, payload tiers — built from a three-way residue split of the
 documents table) because vacuum DELETES its inputs: reclaiming the
-family-shared memoized artifacts (``dedup.minhash_index_dir`` et al.)
-would corrupt every sibling entry swept later in the same process. At
-production scale there is no copy — the private dirs ARE the store;
+family-shared memoized store (``dedup.text_store``) would corrupt
+every sibling entry swept later in the same process. At production
+scale there is no copy — the private dirs ARE the store;
 the split is only the fixture's way of owning its bytes.
 
 Timeline (doc_id % 4 partitions the corpus):
 
 1. **Base generation** over the OLD corpus (residues 0, 1): band
-   index + both verify-payload tiers — ``minhash_index_dir``'s build
-   on the entry's own slice.
+   index + both verify-payload tiers, written by
+   ``dedup.write_text_store`` from the slice's band rows — the writer
+   of every text store.
 2. **Ingest drain** of dump A (residue 2) through the self-growing
    gate (``_text_ingest``): admitted docs' band rows land as
    epoch-keyed partitions, exactly-once under both replay layers.
-3. **Compact**: fold base ∪ epochs into one band-partitioned gen2 and
-   rebuild both payload tiers over the grown membership — the exact
-   kernel ``text_index_compact`` runs (``_fold_text_generations``).
+3. **Compact**: ``write_text_store`` over base ∪ epochs — one
+   band-partitioned gen2 and both payload tiers over the grown
+   membership, exactly what ``text_index_compact`` runs.
 4. **Vacuum**: reclaim base + epochs + old payloads, completeness-
    gated on every gen2 ``_SUCCESS``. The builder RAISES unless
    bytes_reclaimed > 0 and the streaming checkpoint survived — the
@@ -52,11 +53,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.generations import read_epochs, vacuum_checked
+from ..engine.pointfetch import VerifyStore
 from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
+from ..operators.dedup import _band_rows, _shingle_sets, write_text_store
 from ..operators.registry import register
 from .core import corpus_stream, drain, drain_dirs
-from .joins import _fold_text_generations, _text_admit, _text_ingest
+from .joins import _text_admit, _text_ingest
 
 # doc_id % 4 → lifecycle role: {0,1} = the old corpus the base
 # generation indexes; 2 = the ingested dump that grows the index;
@@ -68,41 +71,22 @@ _VAC_INGEST = 2
 _VAC_SERVE = 3
 
 
-def _vacuumed_gen2_dirs(spark: SparkSession,
-                        sf_dir: str) -> tuple[str, str, str]:
-    """Steps 1-4: build the private base generation, drain the ingest
-    dump into epochs, fold to gen2, vacuum the superseded dirs.
-    Returns the (index, hash payload, text payload) gen2 triple — the
-    ONLY directories left alive besides the checkpoint. A per-run memo
-    entry, so fresh-dirs probe reps re-run the WHOLE lifecycle (build +
-    drain + fold + vacuum), not a memo read."""
+def _vacuumed_gen2_dirs(spark: SparkSession, sf_dir: str) -> VerifyStore:
+    """Steps 1-4: write the private base store, drain the ingest dump
+    into epochs, fold to the gen2 store, vacuum the superseded dirs.
+    Returns the gen2 store — its three directories are the ONLY ones
+    left alive besides the checkpoint. A per-run memo entry, so
+    fresh-dirs probe reps re-run the WHOLE lifecycle (build + drain +
+    fold + vacuum), not a memo read."""
     return memo(("vacuumed_gen2_dirs", sf_dir),
                 lambda: _text_vacuum_lifecycle(spark, sf_dir), per_run=True)
 
 
-def _text_vacuum_lifecycle(spark: SparkSession,
-                           sf_dir: str) -> tuple[str, str, str]:
-    from ..engine.catalog import Catalog
-    from ..engine.pointfetch import write_payload
-    from ..operators.dedup import (_band_rows, _shingle_sets,
-                                   hashed_shingle_cols)
-
-    # 1. base generation over the old corpus (residues 0, 1)
-    old_pred = (F.col("doc_id") % _VAC_MOD).isin(*_VAC_OLD)
-    sh_old = _shingle_sets(spark, sf_dir).where(old_pred).persist()
-    base = scratch_dir("fsbd_vac_base_index_")
-    payh = scratch_dir("fsbd_vac_hash_payload_")
-    payt = scratch_dir("fsbd_vac_text_payload_")
-    try:
-        (_band_rows(sh_old)
-         .write.mode("overwrite").partitionBy("band").parquet(base))
-        write_payload(hashed_shingle_cols(sh_old), "doc_id", payh)
-    finally:
-        sh_old.unpersist()
-    write_payload(
-        Catalog(spark, sf_dir).documents.where(old_pred)
-        .select("doc_id", "text"),
-        "doc_id", payt)
+def _text_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> VerifyStore:
+    # 1. base store over the old corpus (residues 0, 1)
+    base = write_text_store(spark, sf_dir, _band_rows(
+        _shingle_sets(spark, sf_dir)
+        .where((F.col("doc_id") % _VAC_MOD).isin(*_VAC_OLD))))
 
     # 2. ingest drain: dump A grows the index as epoch partitions
     epochs = scratch_dir("fsbd_vac_epochs_")
@@ -110,20 +94,19 @@ def _text_vacuum_lifecycle(spark: SparkSession,
     feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_INGEST)
             .select("doc_id", "text"))
-    drain(feed, _text_ingest(base, payh, payt, epochs), ckpt)
+    drain(feed, _text_ingest(base, epochs), ckpt)
 
-    # 3. compact: fold base ∪ epochs, rebuild payload tiers
-    base_rows = (spark.read.parquet(base)
+    # 3. compact: fold base ∪ epochs into the gen2 store
+    base_rows = (spark.read.parquet(base.index)
                  .select("doc_id", F.col("band").cast("int").alias("band"),
                          "bucket"))
     epoch_rows = read_epochs(spark, epochs,
                              "doc_id long, band int, bucket string")
-    gen2, gen2h, gen2t = _fold_text_generations(
-        spark, sf_dir, base_rows.unionByName(epoch_rows))
+    gen2 = write_text_store(spark, sf_dir, base_rows.unionByName(epoch_rows))
 
     # 4. vacuum the superseded generations — asserted, not just run
-    vacuum_checked([gen2, gen2h, gen2t], [base, epochs, payh, payt], ckpt)
-    return gen2, gen2h, gen2t
+    vacuum_checked(list(gen2), [*base, epochs], ckpt)
+    return gen2
 
 
 def _text_vacuum_oracle() -> str:
@@ -205,11 +188,11 @@ def text_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     started, which is the end-to-end proof ``engine.generations``'s
     pytest pins could not give the driver."""
     tune_session(spark)
-    gen2, gen2h, gen2t = _vacuumed_gen2_dirs(spark, sf_dir)
+    gen2 = _vacuumed_gen2_dirs(spark, sf_dir)
 
     out_dir, ckpt = drain_dirs("vac_serve", sf_dir)
     feed = (corpus_stream(spark, sf_dir, "documents")
             .where(F.col("doc_id") % _VAC_MOD == _VAC_SERVE)
             .select("doc_id", "text"))
-    drain(feed, _text_admit(gen2, gen2h, gen2t, out_dir), ckpt)
+    drain(feed, _text_admit(gen2, out_dir), ckpt)
     return read_epochs(spark, out_dir, "doc_id long, n_shingles int")

@@ -49,8 +49,7 @@ def _touched_bytes(payload_path: str, key: str,
     every literal fetch it issues (r11 ADVICE: at the DEFAULT
     threshold of 10, k > 10 ids degrade to a [min, max] RANGE push and
     this arithmetic would overstate the reader's pruning — with the
-    raise, the k = 16/64/256 rows below match the reader's actual
-    rule). Past PF_IN_MAX ids, fetch_payload_prefetched switches to the
+    raise, the k > 10 rows below match the reader's actual rule). Past PF_IN_MAX ids, fetch_payload_prefetched switches to the
     broadcast-join fallback where ONLY the pk directory prune applies
     — this arithmetic mirrors that regime too (every row group in a
     touched directory counts), so each row reports what the reader's
@@ -109,19 +108,17 @@ def main() -> int:
     # --- text gate: the micro-batch is the whole new partition -------
     from full_stack_big_data_spark.operators.dedup import (
         INCR_MOD, INCR_REM, _band_rows, _shingle_sets,
-        band_index_candidates, doc_text_payload_dir, jaccard_verify,
-        minhash_hash_payload_dir, minhash_index_dir)
+        band_index_candidates, jaccard_verify, text_store)
 
-    hpay_path = minhash_hash_payload_dir(spark, sf)
-    tpay_path = doc_text_payload_dir(spark, sf)
+    tstore = text_store(spark, sf)
     sh_new = (_shingle_sets(spark, sf)
               .where(F.col("doc_id") % INCR_MOD == INCR_REM))
-    cand = band_index_candidates(spark, minhash_index_dir(spark, sf),
-                                 _band_rows(sh_new), "text_admit_minhash")
+    cand = band_index_candidates(spark, tstore.index, _band_rows(sh_new),
+                                 "text_admit_minhash")
     n_cand = cand.count()
     ids = fetch_ids(cand.select(F.col("old_doc").alias("doc_id")), "doc_id")
     # correctness of the pruned fetch: rows back == ids asked for
-    got = point_fetch(spark, hpay_path, "doc_id", ids).count()
+    got = point_fetch(spark, tstore.screen, "doc_id", ids).count()
     assert got == len(ids), (got, len(ids))
     cb = _corpus_bytes(os.path.join(sf, "documents.parquet"))
 
@@ -129,11 +126,10 @@ def main() -> int:
     # every candidate; only pairs passing the hash-jaccard screen
     # (≈ true near-dups) open tier-2 raw-text row groups.
     surv = _screen_survivors(
-        lambda scope: jaccard_verify(spark, cand, sh_new, hpay_path,
-                                     tpay_path, scope),
+        lambda scope: jaccard_verify(spark, cand, sh_new, tstore, scope),
         "old_doc", "doc_id")
-    t1b, t1rg, hpb, hprg = _touched_bytes(hpay_path, "doc_id", ids)
-    t2b, t2rg, tpb, tprg = _touched_bytes(tpay_path, "doc_id", surv)
+    t1b, t1rg, hpb, hprg = _touched_bytes(tstore.screen, "doc_id", ids)
+    t2b, t2rg, tpb, tprg = _touched_bytes(tstore.exact, "doc_id", surv)
     print(f"| text tier-1 (int32 hash screen) | {n_cand} | {len(ids)} "
           f"| {hpb} ({hprg}) | {t1b} ({t1rg}) | {cb} | {t1b / hpb:.3f} "
           f"| {t1b / cb:.3f} |")
@@ -146,82 +142,64 @@ def main() -> int:
 
     # --- embedding gate ----------------------------------------------
     from full_stack_big_data_spark.operators.similarity import (
-        ANN_INCR_MOD, ANN_INCR_REM, cosine_verify, srp_bucket_rows,
-        srp_index_dir, srp_payload_dir, srp_quant_payload_dir)
+        ANN_INCR_MOD, ANN_INCR_REM, SRP_BITS, SRP_BITS_WIDE, cosine_verify,
+        embedding_store, srp_bucket_rows)
 
-    eidx = (spark.read.parquet(srp_index_dir(spark, sf))
-            .withColumnRenamed("vec_id", "old_id"))
-    epay = srp_payload_dir(spark, sf)
-    eqpay = srp_quant_payload_dir(spark, sf)
     ebatch = (Catalog(spark, sf).embeddings
               .where(F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM)
               .select("vec_id", "embedding"))
-    ecand = (srp_bucket_rows(ebatch).join(eidx, ["table_id", "bucket"])
-             .select("vec_id", "old_id").distinct())
-    en_cand = ecand.count()
-    eids = fetch_ids(ecand.select(F.col("old_id").alias("vec_id")), "vec_id")
-    egot = point_fetch(spark, epay, "vec_id", eids).count()
-    assert egot == len(eids), (egot, len(eids))
-    efb, efrg, epb, eprg = _touched_bytes(epay, "vec_id", eids)
     ecb = _corpus_bytes(os.path.join(sf, "embeddings.parquet"))
-    print(f"| stream_embedding_admit (fixture 16×4 — sensor contrast; "
-          f"one-tier float fetch) | {en_cand} | {len(eids)} | {epb} "
-          f"({eprg}) | {efb} ({efrg}) | {ecb} | {efb / epb:.3f} "
-          f"| {efb / ecb:.3f} |")
 
-    def _emb_two_tier_rows(label: str, cand_df, cand_ids,
-                           one_tier_bytes: int) -> list[int]:
-        """The r13 two-tier verify I/O: tier 1 fetches packed-int16
-        quantizations for every candidate; only bound-screen survivors
-        (≈ true near-dups) open tier-2 float row groups. Returns the
-        survivor ids so the per-k curve can price the combined tiers."""
+    def _emb_gate_rows(label: str, bits: int):
+        """One SRP geometry's rows: the one-tier float fetch of every
+        candidate, then the r13 two-tier verify I/O — tier 1 fetches
+        packed-int16 quantizations for every candidate; only
+        bound-screen survivors (≈ true near-dups) open tier-2 float row
+        groups. Returns (store, candidate ids, survivor ids) for the
+        per-k curves."""
+        store = embedding_store(spark, sf, bits)
+        idx = (spark.read.parquet(store.index)
+               .withColumnRenamed("vec_id", "old_id"))
+        cand = (srp_bucket_rows(ebatch, bits=bits)
+                .join(idx, ["table_id", "bucket"])
+                .select("vec_id", "old_id").distinct())
+        n_cand = cand.count()
+        cids = fetch_ids(cand.select(F.col("old_id").alias("vec_id")),
+                         "vec_id")
+        got = point_fetch(spark, store.exact, "vec_id", cids).count()
+        assert got == len(cids), (got, len(cids))
+        ofb, ofrg, fpb, fprg = _touched_bytes(store.exact, "vec_id", cids)
+        print(f"| {label}; one-tier float fetch | {n_cand} | {len(cids)} "
+              f"| {fpb} ({fprg}) | {ofb} ({ofrg}) | {ecb} "
+              f"| {ofb / fpb:.3f} | {ofb / ecb:.3f} |")
         surv = _screen_survivors(
-            lambda scope: cosine_verify(spark, cand_df, ebatch, eqpay,
-                                        epay, scope),
+            lambda scope: cosine_verify(spark, cand, ebatch, store, scope),
             "old_id", "vec_id")
-        t1b, t1rg, qpb, qprg = _touched_bytes(eqpay, "vec_id", cand_ids)
-        t2b, t2rg, fpb, fprg = _touched_bytes(epay, "vec_id", surv)
-        print(f"| {label} tier-1 (packed int16 screen) | {len(cand_ids)} "
-              f"ids | {len(cand_ids)} | {qpb} ({qprg}) | {t1b} ({t1rg}) "
+        t1b, t1rg, qpb, qprg = _touched_bytes(store.screen, "vec_id", cids)
+        t2b, t2rg, _, _ = _touched_bytes(store.exact, "vec_id", surv)
+        print(f"| {label} tier-1 (packed int16 screen) | {len(cids)} "
+              f"ids | {len(cids)} | {qpb} ({qprg}) | {t1b} ({t1rg}) "
               f"| {ecb} | {t1b / qpb:.3f} | {t1b / ecb:.3f} |")
         print(f"| {label} tier-2 (float, screen survivors) "
-              f"| {len(cand_ids)} ids | {len(surv)} | {fpb} ({fprg}) "
+              f"| {len(cids)} ids | {len(surv)} | {fpb} ({fprg}) "
               f"| {t2b} ({t2rg}) | {ecb} | {t2b / fpb:.3f} "
               f"| {t2b / ecb:.3f} |")
         print(f"| {label} two-tier total (vs one-tier float fetch "
-              f"{one_tier_bytes}) | {len(cand_ids)} ids | {len(surv)} "
+              f"{ofb}) | {len(cids)} ids | {len(surv)} "
               f"| {qpb + fpb} | {t1b + t2b} | {ecb} "
-              f"| {(t1b + t2b) / max(one_tier_bytes, 1):.3f} of one-tier "
+              f"| {(t1b + t2b) / max(ofb, 1):.3f} of one-tier "
               f"| {(t1b + t2b) / ecb:.3f} |")
-        return surv
+        return store, cids, surv
 
-    _emb_two_tier_rows("stream_embedding_admit (fixture)", ecand, eids,
-                       efb)
-
-    # The DEPLOYMENT row (r12): the scaled gate's candidate set at the
+    _emb_gate_rows(f"stream_embedding_admit (fixture 16×{SRP_BITS} — "
+                   "sensor contrast)", SRP_BITS)
+    # The DEPLOYMENT rows (r12): the scaled gate's candidate set at the
     # N/64 geometry is ~3 orders smaller, so its verify fetch rides the
     # pushed-literal point-fetch regime instead of the fixture row's
     # join fallback — this is the per-batch I/O a production gate pays.
-    from full_stack_big_data_spark.operators.similarity import \
-        SRP_BITS_WIDE
-    sidx = (spark.read.parquet(
-                srp_index_dir(spark, sf, bits=SRP_BITS_WIDE))
-            .withColumnRenamed("vec_id", "old_id"))
-    scand = (srp_bucket_rows(ebatch, bits=SRP_BITS_WIDE)
-             .join(sidx, ["table_id", "bucket"])
-             .select("vec_id", "old_id").distinct())
-    sn_cand = scand.count()
-    sids = fetch_ids(scand.select(F.col("old_id").alias("vec_id")),
-                     "vec_id")
-    sgot = point_fetch(spark, epay, "vec_id", sids).count()
-    assert sgot == len(sids), (sgot, len(sids))
-    sfb, sfrg, _, _ = _touched_bytes(epay, "vec_id", sids)
-    print(f"| stream_embedding_admit_scaled (16×{SRP_BITS_WIDE}, "
-          f"deployment; one-tier float fetch) | {sn_cand} | {len(sids)} "
-          f"| {epb} ({eprg}) | {sfb} ({sfrg}) | {ecb} | {sfb / epb:.3f} "
-          f"| {sfb / ecb:.3f} |")
-    s_surv = _emb_two_tier_rows("stream_embedding_admit_scaled "
-                                "(deployment)", scand, sids, sfb)
+    sstore, sids, s_surv = _emb_gate_rows(
+        f"stream_embedding_admit_scaled (16×{SRP_BITS_WIDE}, deployment)",
+        SRP_BITS_WIDE)
 
     # The proportionality curve: fetched bytes for id SUBSETS of the
     # text gate's candidates — a production micro-batch is minutes of
@@ -231,9 +209,8 @@ def main() -> int:
     # the curve measures.
     print("\n| gate | k (ids) | fetched bytes | row groups | of payload |")
     print("|---|---|---|---|---|")
-    for k in (4, 16, 64, 256):
-        sub = ids[:: max(1, len(ids) // k)][:k]   # spread across pk space
-        b, rg, pb2, _ = _touched_bytes(hpay_path, "doc_id", sub)
+    for sub in _spread_subsets(ids):
+        b, rg, pb2, _ = _touched_bytes(tstore.screen, "doc_id", sub)
         print(f"| stream_text_admit tier-1 | {len(sub)} | {b} | {rg} "
               f"| {b / pb2:.3f} |")
     # Embedding payload curve: the fixture's one-shot batch is 10% of
@@ -244,9 +221,8 @@ def main() -> int:
     # groups open only for bound-screen survivors), so that's the
     # payload the curve measures.
     surv_set = set(s_surv)
-    for k in (4, 16, 64, 256):
-        sub = sids[:: max(1, len(sids) // k)][:k]
-        b, rg, pb2, _ = _touched_bytes(eqpay, "vec_id", sub)
+    for sub in _spread_subsets(sids):
+        b, rg, pb2, _ = _touched_bytes(sstore.screen, "vec_id", sub)
         print(f"| stream_embedding_admit_scaled tier-1 | {len(sub)} "
               f"| {b} | {rg} | {b / pb2:.3f} |")
     # Combined two-tier per-k (the production per-batch number): tier-1
@@ -257,16 +233,25 @@ def main() -> int:
     print("\n| k (ids) | tier-1 bytes | survivors | tier-2 bytes "
           "| two-tier total | one-tier float | two/one |")
     print("|---|---|---|---|---|---|---|")
-    for k in (4, 16, 64, 256):
-        sub = sids[:: max(1, len(sids) // k)][:k]
-        b1, _, _, _ = _touched_bytes(eqpay, "vec_id", sub)
+    for sub in _spread_subsets(sids):
+        b1, _, _, _ = _touched_bytes(sstore.screen, "vec_id", sub)
         sub_surv = sorted(i for i in sub if i in surv_set)
-        b2, _, _, _ = _touched_bytes(epay, "vec_id", sub_surv)
-        bf, _, _, _ = _touched_bytes(epay, "vec_id", sub)
+        b2, _, _, _ = _touched_bytes(sstore.exact, "vec_id", sub_surv)
+        bf, _, _, _ = _touched_bytes(sstore.exact, "vec_id", sub)
         print(f"| {len(sub)} | {b1} | {len(sub_surv)} | {b2} "
               f"| {b1 + b2} | {bf} | {(b1 + b2) / max(bf, 1):.3f} |")
     spark.stop()
     return 0
+
+
+def _spread_subsets(ids: list[int]):
+    """The curve's id subsets: k = 4, 16, 64, 256 ids spread across the
+    pk space, ending with all of ``ids`` once k reaches its length (a
+    larger k would repeat that row)."""
+    for k in (4, 16, 64, 256):
+        yield ids[:: max(1, len(ids) // k)][:k]
+        if k >= len(ids):
+            return
 
 
 def _screen_survivors(verify, old: str, key: str) -> list[int]:

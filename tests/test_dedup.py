@@ -149,3 +149,26 @@ def test_min_label_components_frees_superseded_checkpoints(spark):
     assert len(live) - before <= 2, (
         f"superseded localCheckpoint blocks leaked: "
         f"{[(i.name(), i.numCachedPartitions()) for i in live]}")
+
+
+def test_query_boundary_releases_persisted_intermediates(spark):
+    """Builders persist intermediates their lazy results read
+    (``dedup_incremental``'s new-side shingle sets and screened pairs,
+    ``dedup_minhash_lsh``'s shingle table and band rows) and leave
+    them cached past the collect. The query boundary frees them:
+    after ``release_scoped_cache`` no RDD is persisted that was not
+    persisted before either builder ran (ids, not a count: an earlier
+    test's leftover may be cleaned up meanwhile)."""
+    from full_stack_big_data_spark.engine.session import release_scoped_cache
+    from full_stack_big_data_spark.operators.registry import load_all
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    reg = load_all()
+    before = persisted()
+    for name in ("dedup_incremental", "dedup_minhash_lsh"):
+        assert reg[name].builder(spark, SF_SMOKE).collect()
+    assert persisted() - before, "nothing persisted — test vacuous"
+    release_scoped_cache(spark)
+    assert persisted() <= before

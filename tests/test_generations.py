@@ -38,6 +38,9 @@ def test_layout_decisions_live_only_in_the_store():
         return sorted(name for name, text in src.items() if pred(text))
 
     assert holders(lambda t: 'partitionBy("batch_id")' in t) == [STORE]
+    # verify-store indexes are keyed generations: write_generation only
+    assert holders(lambda t: 'partitionBy("band")' in t
+                   or 'partitionBy("table_id")' in t) == []
     assert holders(lambda t: "partitionOverwriteMode" in t
                    and "batch_id" in t) == [STORE]
     assert holders(lambda t: '"_SUCCESS"' in t) == [STORE]

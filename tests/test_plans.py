@@ -520,7 +520,7 @@ def test_gate_verify_fetches_never_scan_the_corpus(spark):
     corpus pass the r10 verdict flagged."""
     from full_stack_big_data_spark.operators.dedup import jaccard_verify
     from full_stack_big_data_spark.operators.similarity import (
-        cosine_verify, srp_payload_dir)
+        cosine_verify, embedding_store)
 
     cand = spark.createDataFrame(
         [(0, 999001), (4, 999002)], "old_doc long, doc_id long")
@@ -531,13 +531,11 @@ def test_gate_verify_fetches_never_scan_the_corpus(spark):
     # Two-tier path (r11 verdict item 2): the hash-screen tier and the
     # raw-text tier are BOTH point fetches — still no corpus scan
     # anywhere in the verify, and the tier-1 screen runs pk-pruned.
-    from full_stack_big_data_spark.operators.dedup import (
-        doc_text_payload_dir, minhash_hash_payload_dir)
-    hpay = minhash_hash_payload_dir(spark, SF)
-    tpay = doc_text_payload_dir(spark, SF)
+    from full_stack_big_data_spark.operators.dedup import text_store
+    store = text_store(spark, SF)
     scope = []
     try:
-        hits2 = jaccard_verify(spark, cand, sh_new, hpay, tpay, scope)
+        hits2 = jaccard_verify(spark, cand, sh_new, store, scope)
         plan2 = hits2._jdf.queryExecution().executedPlan().toString()
         assert "documents.parquet" not in plan2, plan2[:2000]
         assert scope, "tier-1 screen did not run"
@@ -549,7 +547,6 @@ def test_gate_verify_fetches_never_scan_the_corpus(spark):
         for df in scope:
             df.unpersist()
 
-    emb_payload = srp_payload_dir(spark, SF)
     ecand = spark.createDataFrame(
         [(999001, 1), (999002, 2)], "vec_id long, old_id long")
     batch = spark.createDataFrame(
@@ -559,13 +556,10 @@ def test_gate_verify_fetches_never_scan_the_corpus(spark):
     # Two-tier path (r12 verdict item 2): the quantized int16 screen
     # tier and the float tier are BOTH point fetches — still no corpus
     # scan anywhere in the verify, and the tier-1 screen runs pk-pruned.
-    from full_stack_big_data_spark.operators.similarity import \
-        srp_quant_payload_dir
-    eqpay = srp_quant_payload_dir(spark, SF)
+    estore = embedding_store(spark, SF)
     escope = []
     try:
-        ehits2 = cosine_verify(spark, ecand, batch, eqpay, emb_payload,
-                               escope)
+        ehits2 = cosine_verify(spark, ecand, batch, estore, escope)
         eplan2 = ehits2._jdf.queryExecution().executedPlan().toString()
         assert "embeddings.parquet" not in eplan2, eplan2[:2000]
         assert escope, "tier-1 screen did not run"

@@ -463,7 +463,8 @@ def test_quantized_screen_no_false_drops(spark, tmp_path):
     import random
 
     from pyspark.sql import functions as F
-    from full_stack_big_data_spark.engine.pointfetch import write_payload
+    from full_stack_big_data_spark.engine.pointfetch import (VerifyStore,
+                                                             write_payload)
     from full_stack_big_data_spark.functions.vectors import cosine_sim
     from full_stack_big_data_spark.operators.similarity import (
         NEARDUP_COS, cosine_verify, quantized_vec_cols)
@@ -521,7 +522,8 @@ def test_quantized_screen_no_false_drops(spark, tmp_path):
     scope = []
     try:
         two = {r.vec_id
-               for r in cosine_verify(spark, cand, new, qpay, pay,
+               for r in cosine_verify(spark, cand, new,
+                                      VerifyStore(None, qpay, pay),
                                       scope).collect()}
         survivors = scope[0].count()
     finally:

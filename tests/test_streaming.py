@@ -870,7 +870,8 @@ def test_stream_text_ingest_epoch_replay_and_gate_equivalence(spark, tmp_path):
     rows, the family recipe); (b) at registry level a second drain adds
     zero rows and the grown index's NEW-side doc set equals the admit
     gate's decision exactly (ingest == admit + append)."""
-    from full_stack_big_data_spark.engine.pointfetch import write_payload
+    from full_stack_big_data_spark.engine.pointfetch import (VerifyStore,
+                                                             write_payload)
     from full_stack_big_data_spark.functions.text import token_ngrams, tokens
     from full_stack_big_data_spark.operators.dedup import (
         INCR_MOD, INCR_REM, SHINGLE_N, _band_rows, hashed_shingle_cols)
@@ -896,7 +897,7 @@ def test_stream_text_ingest_epoch_replay_and_gate_equivalence(spark, tmp_path):
         [(21, "alpha beta gamma delta epsilon zeta"),   # exact dup → drop
          (22, "one two three four five six")],          # novel → admit
         "doc_id long, text string")
-    ingest = _text_ingest(base, hpay, tpay, epochs)
+    ingest = _text_ingest(VerifyStore(base, hpay, tpay), epochs)
     ingest(batch, 7)
     once = sorted(map(tuple, spark.read.parquet(epochs)
                       .select("doc_id", "band", "bucket").collect()))
@@ -959,7 +960,8 @@ def test_index_compaction_layout_and_payload_serve(spark):
     band/table partition (the small-file fold actually folded);
     (b) the rebuilt payload point-fetches an ADMITTED doc's verify
     payload — the grown generation can serve the next dump's exact
-    verify without touching the raw corpus."""
+    verify without touching the raw corpus; (c) the corpus base
+    stores have the same layout."""
     import glob
 
     from full_stack_big_data_spark.engine.pointfetch import point_fetch
@@ -1025,6 +1027,27 @@ def test_index_compaction_layout_and_payload_serve(spark):
     assert len(qrow) == 1
     assert (qrow[0].w32, qrow[0].s) == (want_q[0].w32, want_q[0].s)
 
+    # (c) the corpus bases share the folds' layout: one file per key,
+    # every directory committed, both payload tiers holding exactly
+    # the index's ids.
+    import os
+
+    from full_stack_big_data_spark.operators.dedup import text_store
+    from full_stack_big_data_spark.operators.similarity import \
+        embedding_store
+    for store, key, n_keys, idc in (
+            (text_store(spark, SF_SMOKE), "band", BANDS, "doc_id"),
+            (embedding_store(spark, SF_SMOKE), "table_id", SRP_TABLES,
+             "vec_id")):
+        kdirs = glob.glob(f"{store.index}/{key}=*")
+        assert len(kdirs) == n_keys
+        assert all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in kdirs)
+        assert all(os.path.isfile(os.path.join(p, "_SUCCESS"))
+                   for p in store)
+        ids = [{r[0] for r in spark.read.parquet(p).select(idc)
+                .distinct().collect()} for p in store]
+        assert ids[0] and ids[1] == ids[0] and ids[2] == ids[0]
+
 
 
 def test_retention_vacuum_superseded_generations(spark, tmp_path):
@@ -1047,7 +1070,8 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
 
     import pytest
 
-    from full_stack_big_data_spark.engine.pointfetch import write_payload
+    from full_stack_big_data_spark.engine.pointfetch import (VerifyStore,
+                                                             write_payload)
     from full_stack_big_data_spark.engine.generations import (
         IncompleteGenerationError, read_epochs, vacuum_superseded)
     from full_stack_big_data_spark.functions.text import token_ngrams, tokens
@@ -1077,7 +1101,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
         [(21, "alpha beta gamma delta epsilon zeta"),   # dup → dropped
          (22, "one two three four five six")],          # novel → admitted
         "doc_id long, text string")
-    _text_ingest(base, hpay, tpay, epochs)(dump, 0)
+    _text_ingest(VerifyStore(base, hpay, tpay), epochs)(dump, 0)
 
     # Fold: gen2 index = base ∪ epochs; payloads rebuilt over the
     # GROWN membership (corpus + admitted docs).
@@ -1103,7 +1127,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
          (32, "seven eight nine ten eleven twelve")],
         "doc_id long, text string")
     out_pre, out_post = str(tmp_path / "out_pre"), str(tmp_path / "out_post")
-    admit = _text_admit(gen2, hpay2, tpay2, out_pre)
+    admit = _text_admit(VerifyStore(gen2, hpay2, tpay2), out_pre)
     admit(probe, 0)
     pre = sorted(r.doc_id for r in read_epochs(
         spark, out_pre, "doc_id long, n_shingles int").collect())
@@ -1126,7 +1150,7 @@ def test_retention_vacuum_superseded_generations(spark, tmp_path):
     assert glob.glob(f"{gen2}/band=*")
 
     # (a) post-vacuum serve equality from the folded artifacts alone.
-    admit2 = _text_admit(gen2, hpay2, tpay2, out_post)
+    admit2 = _text_admit(VerifyStore(gen2, hpay2, tpay2), out_post)
     admit2(probe, 0)
     post = sorted(r.doc_id for r in read_epochs(
         spark, out_post, "doc_id long, n_shingles int").collect())
