@@ -313,7 +313,7 @@ def decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (signatures, bands, candidate join, exact verify), so the
     hash match pins candidate semantics, not just the final filter.
     """
-    from .dedup import _band_rows, _shingle_sets
+    from .dedup import _band_rows, _shingle_sets, jaccard_pairs
 
     sh = _shingle_sets(spark, sf_dir).persist()
     is_eval = F.col("doc_id") % EVAL_MOD == 0
@@ -327,16 +327,6 @@ def decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
-    i = F.size(F.array_intersect("sa", "sb"))
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", i.alias("i"),
-                F.size("sa").alias("na"), F.size("sb").alias("nb"))
-        .where(jac >= FUZZY_DECONTAM_THRESHOLD)
-        .select(F.col("doc_a").alias("eval_doc"),
-                F.col("doc_b").alias("train_doc"),
-                F.round(jac, 6).alias("jaccard"))
-    )
+    return (jaccard_pairs(cand, sh, FUZZY_DECONTAM_THRESHOLD)
+            .select(F.col("doc_a").alias("eval_doc"),
+                    F.col("doc_b").alias("train_doc"), "jaccard"))

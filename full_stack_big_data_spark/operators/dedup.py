@@ -354,9 +354,18 @@ def minhash_lsh_pairs(sh: DataFrame, sensor: str,
     # Candidate-volume sensor (identity unless a probe enabled it).
     cand = observability.observe_candidates(cand, sensor).distinct()
 
-    # Verify: join each candidate pair to the compact per-doc arrays and
-    # intersect map-side — no shuffle of the exploded shingle table, and
-    # per-pair cost is bounded by document length, not corpus size.
+    return jaccard_pairs(cand, sh, threshold)
+
+
+def jaccard_pairs(cand: DataFrame, sh: DataFrame,
+                  threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the candidate pairs ``cand`` (doc_a,
+    doc_b) whose exact shingle-set jaccard over ``sh`` (doc_id, s) is
+    at least ``threshold``, rounded to 6 places — the one in-memory
+    jaccard verify of the batch text builders. Each pair joins the
+    compact per-doc arrays and intersects map-side: no shuffle of the
+    exploded shingle table, and per-pair cost is bounded by document
+    length, not corpus size."""
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
     i = F.size(F.array_intersect("sa", "sb"))
@@ -804,6 +813,31 @@ def banded_hamming_join(sig_old: DataFrame, sig_new: DataFrame, bits: int,
 # Exact n-gram jaccard (non-approximate baseline).
 # ---------------------------------------------------------------------------
 
+def _rarest_prefix(sh: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(ex, sizes, pref) over the shingle sets ``sh`` (doc_id, s): the
+    exploded (doc_id, g) postings, the (doc_id, n) set sizes and the
+    AllPairs prefix (doc_id, g, n) — each doc's ``n - ⌈t·n⌉ + 1``
+    rarest shingles for t = 4/5, ordered by (global document
+    frequency, shingle). A pair (or a contained doc) at similarity ≥ t
+    shares a shingle inside that prefix, so the prefix join is the
+    lossless candidate generator of ``dedup_ngram_jaccard`` and
+    ``dedup_containment``."""
+    ex = sh.select("doc_id", F.explode("s").alias("g"))
+    sizes = sh.select("doc_id", F.size("s").alias("n"))
+    # ⌈t·n⌉ in exact integer arithmetic (t = 4/5): (4n + 4) div 5.
+    prefix_len = (F.col("n") - ((F.lit(4) * F.col("n") + 4) / 5).cast("bigint") + 1)
+    freq = ex.groupBy("g").agg(F.count("*").alias("df_g"))
+    w = Window.partitionBy("doc_id").orderBy("df_g", "g")
+    pref = (
+        ex.join(freq, "g")
+        .withColumn("pos", F.row_number().over(w))
+        .join(sizes, "doc_id")
+        .where(F.col("pos") <= prefix_len)
+        .select("doc_id", "g", "n")
+    )
+    return ex, sizes, pref
+
+
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
@@ -847,19 +881,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a fraction of the shuffle.
     """
     sh = _shingle_sets(spark, sf_dir).persist()
-    ex = sh.select("doc_id", F.explode("s").alias("g"))
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    # ⌈t·n⌉ in exact integer arithmetic (t = 4/5): (4n + 4) div 5.
-    prefix_len = (F.col("n") - ((F.lit(4) * F.col("n") + 4) / 5).cast("bigint") + 1)
-    freq = ex.groupBy("g").agg(F.count("*").alias("df_g"))
-    w = Window.partitionBy("doc_id").orderBy("df_g", "g")
-    pref = (
-        ex.join(freq, "g")
-        .withColumn("pos", F.row_number().over(w))
-        .join(sizes, "doc_id")
-        .where(F.col("pos") <= prefix_len)
-        .select("doc_id", "g", "n")
-    )
+    _, _, pref = _rarest_prefix(sh)
     # Length filter (lossless for jaccard ≥ 4/5): J ≤ min(|A|,|B|)/max,
     # so 4·na ≤ 5·nb ∧ 4·nb ≤ 5·na — prunes size-incompatible pairs
     # before the distinct and the verify join ever see them.
@@ -872,17 +894,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
-    i = F.size(F.array_intersect("sa", "sb"))
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", i.alias("i"),
-                F.size("sa").alias("na"), F.size("sb").alias("nb"))
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return jaccard_pairs(cand, sh, JACCARD_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -936,19 +948,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted per-doc arrays map-side, integer-exact (i·5 ≥ n·4).
     """
     sh = _shingle_sets(spark, sf_dir).persist()
-    ex = sh.select("doc_id", F.explode("s").alias("g"))
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    # prefix length n - ceil(t·n) + 1 with t = 4/5: ceil = (4n+4) div 5
-    prefix_len = (F.col("n") - ((F.lit(4) * F.col("n") + 4) / 5).cast("bigint") + 1)
-    freq = ex.groupBy("g").agg(F.count("*").alias("df_g"))
-    w = Window.partitionBy("doc_id").orderBy("df_g", "g")
-    pref = (
-        ex.join(freq, "g")
-        .withColumn("pos", F.row_number().over(w))
-        .join(sizes, "doc_id")
-        .where(F.col("pos") <= prefix_len)
-        .select("doc_id", "g", "n")
-    )
+    ex, sizes, pref = _rarest_prefix(sh)
     posting = (ex.join(sizes, "doc_id")
                .select(F.col("doc_id").alias("container_doc"), "g",
                        F.col("n").alias("nb")))

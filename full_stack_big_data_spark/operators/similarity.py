@@ -68,22 +68,54 @@ _SRP_SEED = 42
 _SRP_P = 2147483647  # same Mersenne-mod multiplicative LCG as the minhash family
 
 
+def neighbor_topk(scored: DataFrame, group: str, k: int) -> DataFrame:
+    """(group, neighbor_id, rank, cosine): the exact re-rank every ANN
+    builder ends with — the top-``k`` of each ``group``'s scored
+    (group, neighbor_id, cos) candidates by (cos desc, neighbor_id
+    asc), cosine rounded to 6 places. The SQL twin is
+    :func:`_rerank_sql`.
+
+    The cut is the skew-proof ``grouped_topk`` (functions/skew.py): a
+    naive full sort partitioned by the group alone would push ~N
+    candidates per query through N_QUERIES tasks — the
+    low-cardinality-window ceiling; the native rank-limit window's
+    partial WindowGroupLimit caps it at k rows per group per map
+    partition (two-phase salt fallback on older runtimes)."""
+    return (grouped_topk(scored, [group],
+                         [F.desc("cos"), F.asc("neighbor_id")],
+                         k, F.col("neighbor_id"))
+            .select(group, "neighbor_id", "rank",
+                    F.round("cos", 6).alias("cosine")))
+
+
+def _rerank_sql(group: str, k: int) -> str:
+    """The oracle tail of :func:`neighbor_topk`: the preceding ``cand``
+    CTE's (group, neighbor_id) pairs scored by exact cosine over
+    ``embeddings`` and cut to the top-``k`` per group."""
+    return f""", scored AS (
+  SELECT c.{group}, c.neighbor_id,
+         list_cosine_similarity(n.embedding::DOUBLE[], g.embedding::DOUBLE[]) AS cos
+  FROM cand c
+  JOIN embeddings n ON n.vec_id = c.neighbor_id
+  JOIN embeddings g ON g.vec_id = c.{group}
+), ranked AS (
+  SELECT {group}, neighbor_id, cos,
+         ROW_NUMBER() OVER (PARTITION BY {group} ORDER BY cos DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT {group}, neighbor_id, rank, ROUND(cos, 6) AS cosine
+FROM ranked WHERE rank <= {k}
+"""
+
+
 @register(
     "ann_brute_topk",
     oracle=f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS cos
+WITH q AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
+cand AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id
   FROM q JOIN embeddings e ON e.vec_id <> q.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-""",
+)""" + _rerank_sql("query_id", TOP_K),
     description=f"exact cosine top-{TOP_K} neighbors for {N_QUERIES} query vectors (broadcast + window)",
     tags=("similarity", "ann", "bench"),
 )
@@ -103,18 +135,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cosine_sim_exprs(F.col("embedding"),
                                  F.col("qv")).alias("cos"))
     )
-    # Per-query top-k via the skew-proof grouped_topk (functions/
-    # skew.py): a naive full sort partitioned by query_id alone would
-    # push ~N candidates per query through N_QUERIES tasks — the
-    # low-cardinality-window ceiling; the native rank-limit window's
-    # partial WindowGroupLimit caps it at k rows per query per map
-    # partition (two-phase salt fallback on older runtimes).
-    return (
-        grouped_topk(scored, ["query_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     TOP_K, F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return neighbor_topk(scored, "query_id", TOP_K)
 
 
 def _srp_hyperplanes(tables: int = SRP_TABLES, bits: int = SRP_BITS) -> np.ndarray:
@@ -239,20 +260,7 @@ def _srp_oracle() -> str:
   SELECT DISTINCT q.query_id, b.vec_id AS neighbor_id
   FROM q JOIN b USING (table_id, bucket)
   WHERE b.vec_id <> q.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(n.embedding::DOUBLE[], qe.embedding::DOUBLE[]) AS cos
-  FROM cand c
-  JOIN embeddings n  ON n.vec_id  = c.neighbor_id
-  JOIN embeddings qe ON qe.vec_id = c.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _rerank_sql("query_id", TOP_K)
 
 
 @register(
@@ -275,13 +283,7 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cand.select("query_id", "neighbor_id",
                          cosine_sim(F.col("embedding"), F.col("qv")).alias("cos"))
-    # skew-proof grouped_topk — see ann_brute_topk for the ceiling note
-    return (
-        grouped_topk(scored, ["query_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     TOP_K, F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return neighbor_topk(scored, "query_id", TOP_K)
 
 
 # IVF tuning: 16 spherical cells from deterministic unit centroids; the
@@ -433,20 +435,7 @@ def _ivf_oracle() -> str:
   SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
   FROM qcells q JOIN corpus c USING (cell)
   WHERE c.vec_id <> q.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(n.embedding::DOUBLE[], qe.embedding::DOUBLE[]) AS cos
-  FROM cand c
-  JOIN embeddings n  ON n.vec_id  = c.neighbor_id
-  JOIN embeddings qe ON qe.vec_id = c.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _rerank_sql("query_id", TOP_K)
 
 
 @register(
@@ -462,6 +451,14 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (ivf_cells(e.where(F.col("vec_id") < N_QUERIES), probes=IVF_PROBES)
          .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
                  F.explode("cells").alias("cell")))
+    return _cell_probe_topk(q, corpus)
+
+
+def _cell_probe_topk(q: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The IVF serve: the broadcast (query_id, qv, cell) probe set
+    joined to the (vec_id, embedding, cell) corpus on the cell, each
+    probed vector scored by exact cosine against its query, top-TOP_K
+    per query (:func:`neighbor_topk`)."""
     cand = (
         F.broadcast(q).join(corpus, "cell")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -469,13 +466,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cand.select("query_id", "neighbor_id",
                          cosine_sim(F.col("embedding"), F.col("qv")).alias("cos"))
-    # skew-proof grouped_topk — see ann_brute_topk for the ceiling note
-    return (
-        grouped_topk(scored, ["query_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     TOP_K, F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return neighbor_topk(scored, "query_id", TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -655,20 +646,7 @@ def _ivf_scaled_oracle(cells: int = IVF_CELLS_WIDE,
   SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
   FROM qcells q JOIN corpus c USING (cell)
   WHERE c.vec_id <> q.query_id
-), scored AS (
-  SELECT c.query_id, c.neighbor_id,
-         list_cosine_similarity(n.embedding::DOUBLE[], qe.embedding::DOUBLE[]) AS cos
-  FROM cand c
-  JOIN embeddings n  ON n.vec_id  = c.neighbor_id
-  JOIN embeddings qe ON qe.vec_id = c.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _rerank_sql("query_id", TOP_K)
 
 
 @register(
@@ -694,20 +672,7 @@ def ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("vec_id", "embedding", F.col("cells")[0].alias("cell")))
     # probe set built driver-side from the bounded query batch
     # (see _query_batch) — same rows as the former scan→UDF chain
-    q = _probe_frame(spark, sf_dir)
-    cand = (
-        F.broadcast(q).join(corpus, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "embedding")
-    )
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_sim(F.col("embedding"), F.col("qv")).alias("cos"))
-    return (
-        grouped_topk(scored, ["query_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     TOP_K, F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return _cell_probe_topk(_probe_frame(spark, sf_dir), corpus)
 
 
 @register(
@@ -784,27 +749,9 @@ def ivf_index_serve(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
         spark, rows, "query_id long, qv array<double>, cell int")
     probed = sorted({r[2] for r in rows})
     index = spark.read.parquet(path).where(F.col("cell").isin(probed))
-    cand = (
-        F.broadcast(q).join(index, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "embedding")
-    )
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_sim(F.col("embedding"), F.col("qv")).alias("cos"))
-    return (
-        grouped_topk(scored, ["query_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     TOP_K, F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return _cell_probe_topk(q, index)
 
 
-# Broadcast path is used while the corpus parquet fits well under driver/
-# executor memory as a dense float64 matrix (bytes on disk ≈ bytes as
-# float32; ×2 for the widen). 256 MiB of parquet ≈ 1 M vectors at dim 64
-# — far below the ~10 M hard ceiling, so the switch happens long before
-# the broadcast path degrades. Past it, the same exact kernel runs as a
-# block-pair join with no driver materialization at all.
 IVF_APPEND_MOD = 10   # vec_id % 10 == 0 plays "today's dump" in the append
 
 
@@ -872,6 +819,12 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_index_serve(spark, sf_dir, gen2)
 
 
+# Broadcast path is used while the corpus parquet fits well under driver/
+# executor memory as a dense float64 matrix (bytes on disk ≈ bytes as
+# float32; ×2 for the widen). 256 MiB of parquet ≈ 1 M vectors at dim 64
+# — far below the ~10 M hard ceiling, so the switch happens long before
+# the broadcast path degrades. Past it, the same exact kernel runs as a
+# block-pair join with no driver materialization at all.
 NEARDUP_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 NEARDUP_BLOCK_ROWS = 65536          # ~32 MiB float64 per block side at dim 64
 _NEARDUP_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
@@ -1160,14 +1113,22 @@ def banded_neardup_pairs(src: DataFrame, threshold: float = NEARDUP_COS,
     # raw SRP bucket collisions before the exact-cosine verify.
     cand = observability.observe_candidates(
         cand, f"srp_t{tables}_b{bits}").distinct()
-    # verify: embeddings join the deduplicated pair set, once per side
-    ea = src.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-    eb = src.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    cos = cosine_sim(F.col("emb_a"), F.col("emb_b"))
-    return (cand.join(ea, "vec_a").join(eb, "vec_b")
-            .select("vec_a", "vec_b", cos.alias("cos"))
+    return (cosine_pairs(cand, src, "vec_a", "vec_b")
             .where(F.col("cos") >= threshold)
             .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine")))
+
+
+def cosine_pairs(cand: DataFrame, src: DataFrame, a: str,
+                 b: str) -> DataFrame:
+    """(a, b, cos): the exact cosine of every candidate pair in
+    ``cand`` (a, b), each side's vector joined from ``src`` (vec_id,
+    embedding) once — the one pair scorer of the batch near-dup and
+    kNN builders. Candidates carry ids only up to here; callers apply
+    their own threshold, rounding or top-k to ``cos``."""
+    ea = src.select(F.col("vec_id").alias(a), F.col("embedding").alias("emb_a"))
+    eb = src.select(F.col("vec_id").alias(b), F.col("embedding").alias("emb_b"))
+    cos = cosine_sim(F.col("emb_a"), F.col("emb_b"))
+    return cand.join(ea, a).join(eb, b).select(a, b, cos.alias("cos"))
 
 
 # ---------------------------------------------------------------------------
@@ -1189,21 +1150,7 @@ def _ann_incremental_oracle() -> str:
 ), cand AS (
   SELECT DISTINCT n.vec_id AS new_id, o.vec_id AS neighbor_id
   FROM newb n JOIN oldb o USING (table_id, bucket)
-), scored AS (
-  SELECT c.new_id, c.neighbor_id,
-         list_cosine_similarity(a.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS cos
-  FROM cand c
-  JOIN embeddings a ON a.vec_id = c.neighbor_id
-  JOIN embeddings q ON q.vec_id = c.new_id
-), ranked AS (
-  SELECT new_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY new_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT new_id, neighbor_id, rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {ANN_INCR_K}
-"""
+)""" + _rerank_sql("new_id", ANN_INCR_K)
 
 
 @register(
@@ -1229,10 +1176,19 @@ def ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tbl = srp_bucket_rows(Catalog(spark, sf_dir).embeddings)
     is_new = F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM
-    newb = (tbl.where(is_new)
-            .select(F.col("vec_id").alias("new_id"), "table_id", "bucket"))
-    oldb = tbl.where(~is_new)
-    cand = (newb.join(oldb, ["table_id", "bucket"])
+    return _new_batch_topk(spark, sf_dir, tbl.where(is_new), tbl.where(~is_new))
+
+
+def _new_batch_topk(spark: SparkSession, sf_dir: str, new: DataFrame,
+                    index: DataFrame) -> DataFrame:
+    """(new_id, neighbor_id, rank, cosine): the new batch's (vec_id,
+    table_id, bucket) rows ``new`` equi-joined to the corpus SRP
+    ``index`` (the same layout, in-query or read back from disk), each
+    distinct pair scored by exact cosine, top-ANN_INCR_K per new
+    vector — the serve side of ``ann_incremental`` and
+    ``ann_index_persist``."""
+    newb = new.select(F.col("vec_id").alias("new_id"), "table_id", "bucket")
+    cand = (newb.join(index, ["table_id", "bucket"])
             .select("new_id", F.col("vec_id").alias("neighbor_id"))
             .distinct())
     src = Catalog(spark, sf_dir).embeddings
@@ -1243,12 +1199,7 @@ def ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (cand.join(qn, "new_id").join(nn, "neighbor_id")
               .select("new_id", "neighbor_id",
                       cosine_sim(F.col("nv"), F.col("qv")).alias("cos")))
-    return (
-        grouped_topk(scored, ["new_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     ANN_INCR_K, F.col("neighbor_id"))
-        .select("new_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return neighbor_topk(scored, "new_id", ANN_INCR_K)
 
 
 @register(
@@ -1287,27 +1238,8 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("vec_id") % ANN_INCR_MOD == ANN_INCR_REM
     path = scratch_dir("fsbd_ann_index_")
     write_generation(tbl.where(~is_new), path, "table_id", SRP_TABLES)
-    index = spark.read.parquet(path)
-
-    newb = (tbl.where(is_new)
-            .select(F.col("vec_id").alias("new_id"), "table_id", "bucket"))
-    cand = (newb.join(index, ["table_id", "bucket"])
-            .select("new_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct())
-    src = Catalog(spark, sf_dir).embeddings
-    qn = src.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("qv"))
-    nn = src.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("nv"))
-    # Arrow cosine: candidate volume here amortizes the boundary
-    scored = (cand.join(qn, "new_id").join(nn, "neighbor_id")
-              .select("new_id", "neighbor_id",
-                      cosine_sim(F.col("nv"), F.col("qv")).alias("cos")))
-    return (
-        grouped_topk(scored, ["new_id"],
-                     [F.desc("cos"), F.asc("neighbor_id")],
-                     ANN_INCR_K, F.col("neighbor_id"))
-        .select("new_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine"))
-    )
+    return _new_batch_topk(spark, sf_dir, tbl.where(is_new),
+                           spark.read.parquet(path))
 
 
 # ---------------------------------------------------------------------------
@@ -1518,9 +1450,24 @@ def write_embedding_store(spark: SparkSession, sf_dir: str,
     """Write the embedding family's verify store for the (vec_id,
     table_id, bucket) SRP rows ``rows``: the index, one file per
     table, and both payload tiers over exactly the vectors ``rows``
-    holds — the one writer of the corpus base
-    (:func:`embedding_store`) and the compaction fold
-    (``streaming.joins.embedding_index_compact_dirs``).
+    holds (:func:`_write_embedding_tiers`) — the writer of the
+    compaction fold (``streaming.joins.embedding_index_compact_dirs``);
+    the corpus base (:func:`embedding_store`) writes the same two
+    parts."""
+    return VerifyStore(_write_srp_index(rows),
+                       *_write_embedding_tiers(spark, sf_dir, rows))
+
+
+def _write_srp_index(rows: DataFrame) -> str:
+    path = scratch_dir("fsbd_srp_admit_index_")
+    write_generation(rows, path, "table_id", SRP_TABLES)
+    return path
+
+
+def _write_embedding_tiers(spark: SparkSession, sf_dir: str,
+                           rows: DataFrame) -> tuple[str, str]:
+    """The (screen, exact) payload tiers over the distinct vec_ids of
+    ``rows``.
 
     Tier 1 (``screen``) is the vectors' packed-int16 quantizations
     (:func:`quantized_vec_cols`, ~0.5× the float tier's bytes): every
@@ -1531,36 +1478,37 @@ def write_embedding_store(spark: SparkSession, sf_dir: str,
     vector-in-every-table-row index would cost), and per-batch verify
     I/O rides the pk directories the candidate ids touch — never an
     embeddings.parquet pass."""
-    store = VerifyStore(scratch_dir("fsbd_srp_admit_index_"),
-                        scratch_dir("fsbd_srp_quant_payload_"),
-                        scratch_dir("fsbd_srp_payload_"))
-    write_generation(rows, store.index, "table_id", SRP_TABLES)
+    screen = scratch_dir("fsbd_srp_quant_payload_")
+    exact = scratch_dir("fsbd_srp_payload_")
     member = rows.select("vec_id").distinct().persist()
     try:
         vecs = (Catalog(spark, sf_dir).embeddings
                 .select("vec_id", "embedding")
                 .join(member, "vec_id", "left_semi"))
-        write_payload(quantized_vec_cols(vecs), "vec_id", store.screen)
-        write_payload(vecs, "vec_id", store.exact)
+        write_payload(quantized_vec_cols(vecs), "vec_id", screen)
+        write_payload(vecs, "vec_id", exact)
     finally:
         member.unpersist()
-    return store
+    return screen, exact
 
 
 def embedding_store(spark: SparkSession, sf_dir: str,
                     bits: int = SRP_BITS) -> VerifyStore:
     """The corpus side's embedding verify store (every vector outside
-    the incremental residue) at SRP geometry ``bits``, written ONCE per
-    (process, corpus, bits): the stored index every streaming
-    embedding gate checks micro-batches against. The fixture gates
-    read the 16×4 store, the ``_scaled`` lifecycle entries the 16×9
-    one (a deployment runs exactly one geometry; both exist here only
-    because the fixture rows are kept as sensor contrasts)."""
-    return memo(("embedding_store", sf_dir, bits), lambda: (
-        write_embedding_store(spark, sf_dir, srp_bucket_rows(
-            Catalog(spark, sf_dir).embeddings.where(
-                F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM),
-            bits=bits))))
+    the incremental residue) at SRP geometry ``bits``: the stored index
+    every streaming embedding gate checks micro-batches against. The
+    fixture gates read the 16×4 index, the ``_scaled`` lifecycle
+    entries the 16×9 one (a deployment runs exactly one geometry; both
+    exist here only because the fixture rows are kept as sensor
+    contrasts). Every geometry indexes the same vectors, so the index
+    is written once per (process, corpus, bits) and the two payload
+    tiers once per (process, corpus), shared by all geometries."""
+    corpus = Catalog(spark, sf_dir).embeddings.where(
+        F.col("vec_id") % ANN_INCR_MOD != ANN_INCR_REM)
+    tiers = memo(("embedding_tiers", sf_dir),
+                 lambda: _write_embedding_tiers(spark, sf_dir, corpus))
+    return memo(("embedding_store", sf_dir, bits), lambda: VerifyStore(
+        _write_srp_index(srp_bucket_rows(corpus, bits=bits)), *tiers))
 
 
 def cosine_verify(spark: SparkSession, cand: DataFrame, batch: DataFrame,
@@ -1684,10 +1632,8 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_a", F.col("vec_id").alias("vec_b")))
     cand = observability.observe_candidates(
         cand, f"semdedup_cells{IVF_CELLS_WIDE}")
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    pairs = (cand.join(ea, "vec_a").join(eb, "vec_b")
-             .where(cosine_sim(F.col("emb_a"), F.col("emb_b")) >= SEMDEDUP_COS)
+    pairs = (cosine_pairs(cand, e, "vec_a", "vec_b")
+             .where(F.col("cos") >= SEMDEDUP_COS)
              .select("vec_a", "vec_b"))
     return min_label_components(pairs, a="vec_a", b="vec_b", id_col="vec_id")
 
@@ -1792,13 +1738,8 @@ def semdedup_pairs_multiprobe(e: DataFrame,
             .select("vec_a", F.col("vec_id").alias("vec_b")))
     cand = observability.observe_candidates(
         cand, f"semdedup_mp{probes}_cells{IVF_CELLS_WIDE}").distinct()
-    ea = e.select(F.col("vec_id").alias("vec_a"),
-                  F.col("embedding").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"),
-                  F.col("embedding").alias("emb_b"))
-    return (cand.join(ea, "vec_a").join(eb, "vec_b")
-            .where(cosine_sim(F.col("emb_a"), F.col("emb_b"))
-                   >= SEMDEDUP_COS)
+    return (cosine_pairs(cand, e, "vec_a", "vec_b")
+            .where(F.col("cos") >= SEMDEDUP_COS)
             .select("vec_a", "vec_b"))
 
 
@@ -2273,6 +2214,31 @@ def _pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     return cb
 
 
+def _adc_topk(adc: DataFrame) -> DataFrame:
+    """(query_id, rank, neighbor_id, adc_x): the PQ family's re-rank —
+    the top-TOP_K of each query's (query_id, vec_id, adc_x) candidates
+    by (adc_x asc, vec_id asc), through the skew-proof
+    ``grouped_topk``. The SQL twin is :func:`_adc_rank_sql`."""
+    return (grouped_topk(adc, ["query_id"],
+                         [F.asc("adc_x"), F.asc("vec_id")],
+                         TOP_K, F.col("vec_id"))
+            .select("query_id", F.col("rank").cast("bigint").alias("rank"),
+                    F.col("vec_id").alias("neighbor_id"), "adc_x"))
+
+
+def _adc_rank_sql(adc: str) -> str:
+    """The oracle tail of :func:`_adc_topk` over the CTE ``adc``."""
+    return f""", adc_ranked AS (
+  SELECT query_id, vec_id, adc_x,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY adc_x, vec_id) AS rank
+  FROM {adc}
+)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id, adc_x
+FROM adc_ranked WHERE rank <= {TOP_K}
+"""
+
+
 def _pq_adc_oracle() -> str:
     return _pq_code_prefix() + f""", lut AS (
   SELECT e.vec_id AS query_id, c.sub, c.cell,
@@ -2292,15 +2258,7 @@ def _pq_adc_oracle() -> str:
   FROM best b JOIN lut l ON l.sub = b.sub AND l.cell = b.cell
   WHERE b.r = 1 AND b.vec_id <> l.query_id
   GROUP BY l.query_id, b.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, adc_x,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_x, vec_id) AS rank
-  FROM adc
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id, adc_x
-FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _adc_rank_sql("adc")
 
 
 @register(
@@ -2361,11 +2319,7 @@ def _adc_search(spark: SparkSession, sf_dir: str, cb: np.ndarray,
            .where(F.col("vec_id") != F.col("query_id"))
            .select("query_id", "vec_id",
                    _adc_fold(F.col("codes"), F.col("lut")).alias("adc_x")))
-    return (grouped_topk(adc, ["query_id"],
-                         [F.asc("adc_x"), F.asc("vec_id")],
-                         TOP_K, F.col("vec_id"))
-            .select("query_id", F.col("rank").cast("bigint").alias("rank"),
-                    F.col("vec_id").alias("neighbor_id"), "adc_x"))
+    return _adc_topk(adc)
 
 
 def _pq_adc_trained_oracle() -> str:
@@ -2414,15 +2368,7 @@ def _pq_adc_trained_oracle() -> str:
   FROM best2 b JOIN lut2 l ON l.sub = b.sub AND l.cell = b.cell
   WHERE b.r = 1 AND b.vec_id <> l.query_id
   GROUP BY l.query_id, b.vec_id
-), ranked2 AS (
-  SELECT query_id, vec_id, adc_x,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_x, vec_id) AS rank
-  FROM adc2
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id, adc_x
-FROM ranked2 WHERE rank <= {TOP_K}
-"""
+)""" + _adc_rank_sql("adc2")
 
 
 @register(
@@ -2533,11 +2479,7 @@ def _ivfpq_serve(idx: DataFrame, probes: DataFrame) -> DataFrame:
             .where(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id",
                     _adc_fold(F.col("codes"), F.col("lut")).alias("adc_x")))
-    return (grouped_topk(cand, ["query_id"],
-                         [F.asc("adc_x"), F.asc("vec_id")],
-                         TOP_K, F.col("vec_id"))
-            .select("query_id", F.col("rank").cast("bigint").alias("rank"),
-                    F.col("vec_id").alias("neighbor_id"), "adc_x"))
+    return _adc_topk(cand)
 
 
 def _ivfpq_trained_oracle(cells: int = IVF_CELLS_WIDE,
@@ -2621,15 +2563,7 @@ def _ivfpq_trained_oracle(cells: int = IVF_CELLS_WIDE,
   JOIN lut2 l ON l.query_id = ca.query_id
              AND l.sub = b.sub AND l.cell = b.cell
   GROUP BY ca.query_id, ca.vec_id
-), ranked3 AS (
-  SELECT query_id, vec_id, adc_x,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_x, vec_id) AS rank
-  FROM adc3
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id, adc_x
-FROM ranked3 WHERE rank <= {TOP_K}
-"""
+)""" + _adc_rank_sql("adc3")
 
 
 @register(
@@ -3247,26 +3181,12 @@ def _knn_graph_oracle(tables: int = SRP_TABLES, bits: int = SRP_BITS) -> str:
     """DuckDB twin of the kNN-graph build, parametric in the SRP
     operating point (the scaled entry below embeds its own 16×9 plane
     literals, exactly like ``_neardup_banded_oracle``)."""
-    return _srp_bucket_prefix(tables, bits) + f""", cp AS (
+    return ("SELECT src_id, rank, neighbor_id, cosine FROM ("
+            + _srp_bucket_prefix(tables, bits) + """, cand AS (
   SELECT DISTINCT a.vec_id AS src_id, x.vec_id AS neighbor_id
   FROM b a JOIN b x ON a.table_id = x.table_id AND a.bucket = x.bucket
                    AND a.vec_id <> x.vec_id
-), scored AS (
-  SELECT c.src_id, c.neighbor_id,
-         list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) AS cos
-  FROM cp c
-  JOIN embeddings ea ON ea.vec_id = c.src_id
-  JOIN embeddings eb ON eb.vec_id = c.neighbor_id
-), ranked AS (
-  SELECT src_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY src_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT src_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {KNN_K}
-"""
+)""" + _rerank_sql("src_id", KNN_K) + ")")
 
 
 @register(
@@ -3337,18 +3257,10 @@ def knn_graph_edges(src: DataFrame, k: int = KNN_K,
             .where(F.col("src_id") != F.col("vec_id"))
             .select("src_id", F.col("vec_id").alias("neighbor_id"))
             .distinct())
-    ea = src.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("emb_a"))
-    eb = src.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("emb_b"))
-    scored = (cand.join(ea, "src_id").join(eb, "neighbor_id")
-              .select("src_id", "neighbor_id",
-                      cosine_sim(F.col("emb_a"),
-                                 F.col("emb_b")).alias("cos")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("src_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .where(F.col("rank") <= k)
-            .select("src_id", "rank", "neighbor_id",
-                    F.round("cos", 6).alias("cosine")))
+    return (neighbor_topk(cosine_pairs(cand, src, "src_id", "neighbor_id"),
+                          "src_id", k)
+            .select("src_id", F.col("rank").cast("bigint").alias("rank"),
+                    "neighbor_id", "cosine"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,7 @@
 """Stage decomposition of emb_knn_graph / ann_incremental at sf0.1 —
-one warm process, noop-sink timings per sub-stage (guide §1.4)."""
+one warm process, noop-sink timings per sub-stage (guide §1.4). Stages
+d–e run the builder's own scorer (``cosine_pairs``) and top-k cut
+(``neighbor_topk``)."""
 import os
 import sys
 import time
@@ -11,8 +13,8 @@ from pyspark.sql import SparkSession, functions as F
 from full_stack_big_data_spark.engine.catalog import Catalog
 from full_stack_big_data_spark.engine.session import tune_session
 from full_stack_big_data_spark.operators.registry import load_all
-from full_stack_big_data_spark.operators.similarity import srp_bucket_rows
-from full_stack_big_data_spark.functions.vectors import cosine_sim
+from full_stack_big_data_spark.operators.similarity import (
+    KNN_K, cosine_pairs, neighbor_topk, srp_bucket_rows)
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 spark = SparkSession.builder.master(
@@ -49,13 +51,9 @@ candd = cand.distinct()
 t("stage c: + distinct", candd)
 print("candidate pairs:", candd.count(), flush=True)
 
-ea = src.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("emb_a"))
-eb = src.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("emb_b"))
-joined = candd.join(ea, "src_id").join(eb, "neighbor_id")
-t("stage d: + embedding joins (no cos)", joined)
-scored = joined.select("src_id", "neighbor_id",
-                       cosine_sim(F.col("emb_a"), F.col("emb_b")).alias("cos"))
-t("stage e: + cosine_sim", scored)
+scored = cosine_pairs(candd, src, "src_id", "neighbor_id")
+t("stage d: + embedding joins + cosine", scored)
+t("stage e: + top-k", neighbor_topk(scored, "src_id", KNN_K))
 
 t("full emb_knn_graph", reg["emb_knn_graph"].builder(spark, sf))
 t("full emb_knn_graph_scaled", reg["emb_knn_graph_scaled"].builder(spark, sf))

@@ -621,15 +621,19 @@ def test_dedup_incremental_two_tier_artifacts(spark):
 def test_each_verify_step_lives_in_one_function():
     """One exact verify per similarity family: the text hash screen,
     the vector bound screen and the tiered payload fetch each have ONE
-    caller in the package. A second copy anywhere is a batch path and a
-    stream path free to decide differently."""
+    caller in the package, and the batch layer's in-memory jaccard and
+    pair-cosine scorers each have ONE holding function. A second copy
+    anywhere is a batch path and a stream path free to decide
+    differently."""
     import ast
     import os
 
     pkg = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "full_stack_big_data_spark")
     needles = ('F.col("coll_o") | F.col("coll_n")', "quant_screen_keep(",
-               "fetch_payload_prefetched(")
+               "fetch_payload_prefetched(",
+               'F.col("na") + F.col("nb") - F.col("i")',
+               'cosine_sim(F.col("emb_a"), F.col("emb_b"))')
     holders = {n: [] for n in needles}
     for root, _dirs, files in os.walk(pkg):
         for f in files:
@@ -656,6 +660,10 @@ def test_each_verify_step_lives_in_one_function():
                      + ":cosine_verify"],
         needles[2]: [os.path.join("engine", "pointfetch.py")
                      + ":two_tier_verify"],
+        needles[3]: [os.path.join("operators", "dedup.py")
+                     + ":jaccard_pairs"],
+        needles[4]: [os.path.join("operators", "similarity.py")
+                     + ":cosine_pairs"],
     }, holders
 
 

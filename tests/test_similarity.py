@@ -700,3 +700,25 @@ def test_srp_bucket_rows_single_udf_eval(spark):
     n_arrow = tree.count("ArrowEvalPython")
     assert n_arrow == 1, f"expected 1 ArrowEvalPython, got {n_arrow}:\n{tree}"
     assert "size(" not in plan, "inferred size() filter reappeared"
+
+
+def test_embedding_store_geometries_share_the_payload_tiers(spark):
+    """Every SRP geometry of the corpus base indexes the same vectors,
+    so the 16×4 and 16×9 stores differ only in their index: both read
+    one screen tier and one exact tier, written once per corpus, and
+    those tiers hold exactly the ids each index holds."""
+    from full_stack_big_data_spark.operators.similarity import \
+        embedding_store
+
+    s4 = embedding_store(spark, SF_SMOKE, 4)
+    s9 = embedding_store(spark, SF_SMOKE, 9)
+    assert s4.index != s9.index
+    assert (s4.screen, s4.exact) == (s9.screen, s9.exact)
+
+    def ids(path):
+        return {r.vec_id for r in
+                spark.read.parquet(path).select("vec_id").distinct().collect()}
+
+    tier_ids = ids(s9.exact)
+    assert tier_ids and ids(s9.screen) == tier_ids
+    assert ids(s4.index) == ids(s9.index) == tier_ids

@@ -53,6 +53,17 @@ _EXPECTED = {
     # signature pass of the MinHash bucket kernel
     "dedup_minhash_lsh": {"_buckets": 1},
     "multimodal_frame_neardup": {"_buckets": 1},
+    # SRP bucketing per self-join side, one cosine re-rank over the
+    # deduplicated candidates
+    "ann_srp_lsh": {"_buckets": 2, "_cos": 1},
+    "ann_incremental": {"_buckets": 2, "_cos": 1},
+    "embedding_neardup_banded_scaled": {"_buckets": 2, "_cos": 1},
+    "emb_knn_graph": {"_buckets": 2, "_cos": 1},
+    # the index side is read back from disk: only the new batch buckets
+    "ann_index_persist": {"_buckets": 1, "_cos": 1},
+    # the component loop reads the persisted verified pairs: no Python
+    # eval in the returned plan
+    "embedding_semdedup": {},
 }
 
 
