@@ -5,10 +5,11 @@ The SimHash fixture's quadratic candidate blowup was invisible in wall
 time at sf1.0 — the 32-core box absorbed a ~100× collision explosion
 (BENCHNOTES r7). Wall-clock is the wrong sensor for bucket-geometry
 health; the right one is the thing the geometry actually controls:
-**rows flowing out of the bucket self-join, before the exact verify**.
-This module lets the banded operators (`dedup.simhash_pairs`,
-`dedup.dedup_minhash_lsh`, `similarity.banded_neardup_pairs`) attach a
-``CollectMetrics`` node (``DataFrame.observe``) at exactly that point.
+**rows flowing out of the bucket join, before the exact verify**.
+This module attaches a ``CollectMetrics`` node (``DataFrame.observe``)
+at exactly that point. It has one attach point: the shared candidate
+join ``functions.candidates.candidate_pairs``, which every bucketed
+near-dup and ANN builder calls, each under its own sensor name.
 
 Off by default: ``observe_candidates`` is an identity when observation
 is not enabled, so registered queries, oracles, and bench numbers are
@@ -56,7 +57,8 @@ def disable() -> None:
 
 def observe_candidates(df: DataFrame, name: str) -> DataFrame:
     """Attach a candidate-pair counter to ``df`` — the post-bucket-join,
-    pre-verify stage of a banded operator. Identity when disabled.
+    pre-verify stage of ``candidates.candidate_pairs``. Identity when
+    disabled.
 
     The count is RAW collisions (before ``distinct()``): that is the
     volume the bucket join shuffles and the verify stage pays for, the

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.catalog import Catalog
+from ..functions.candidates import candidate_pairs
 from ..functions.hashing import hex64, hex64_sql
 from ..functions.text import token_ngrams, token_ngrams_sql, tokens, tokens_sql
 from .registry import register
@@ -317,16 +318,10 @@ def decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sh = _shingle_sets(spark, sf_dir).persist()
     is_eval = F.col("doc_id") % EVAL_MOD == 0
-    bands_eval = _band_rows(sh.where(is_eval))
-    bands_train = _band_rows(sh.where(~is_eval))
-    cand = (
-        bands_eval.alias("a").join(
-            bands_train.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = candidate_pairs(_band_rows(sh.where(is_eval)),
+                           _band_rows(sh.where(~is_eval)), ["band", "bucket"],
+                           "doc_id", ("doc_a", "doc_b"),
+                           "decontam_fuzzy_minhash")
     return (jaccard_pairs(cand, sh, FUZZY_DECONTAM_THRESHOLD)
             .select(F.col("doc_a").alias("eval_doc"),
                     F.col("doc_b").alias("train_doc"), "jaccard"))

@@ -47,7 +47,7 @@ from ..engine.catalog import Catalog
 from ..engine.generations import write_generation
 from ..engine.pointfetch import VerifyStore, two_tier_verify, write_payload
 from ..engine.scratch import memo, scratch_dir
-from ..functions import observability
+from ..functions.candidates import candidate_pairs
 from ..functions.hashing import hex64, hex64_sql
 from ..functions.text import token_ngrams, token_ngrams_sql, tokens, tokens_sql
 from .registry import register
@@ -343,17 +343,8 @@ def minhash_lsh_pairs(sh: DataFrame, sensor: str,
     # doc's shingles back together. Persisted: both self-join sides read
     # one signature pass instead of running the kernel once each.
     bands = _band_rows(sh).persist()
-
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    # Candidate-volume sensor (identity unless a probe enabled it).
-    cand = observability.observe_candidates(cand, sensor).distinct()
-
+    cand = candidate_pairs(bands, bands, ["band", "bucket"], "doc_id",
+                           ("doc_a", "doc_b"), sensor, order="<")
     return jaccard_pairs(cand, sh, threshold)
 
 
@@ -410,9 +401,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since r13 (r12 verdict item 7) the entry runs against the SAME
     at-scale artifacts the streaming gate reads, and through the same
-    code: candidates come from the STORED band index
-    (:func:`band_index_candidates` over :func:`text_store` — the
-    corpus is bucketed once per dump, never re-shingled here) and the
+    code: candidates come from the STORED band index of
+    :func:`text_store` (the corpus is bucketed once per dump, never
+    re-shingled here) joined to the new batch's band rows, and the
     verify is the text family's one two-tier exact verify
     (:func:`jaccard_verify`) — so batch and stream make the same
     near-dup decision by construction. Candidate generation cost ∝
@@ -422,8 +413,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = text_store(spark, sf_dir)
     sh_new = (_shingle_sets(spark, sf_dir)
               .where(F.col("doc_id") % INCR_MOD == INCR_REM).persist())
-    cand = band_index_candidates(spark, store.index, _band_rows(sh_new),
-                                 "incremental_minhash")
+    cand = candidate_pairs(spark.read.parquet(store.index),
+                           _band_rows(sh_new), ["band", "bucket"], "doc_id",
+                           ("old_doc", "doc_id"), "incremental_minhash")
     # the screened pair frame stays cached for the returned lazy frame,
     # as sh_new does
     return (jaccard_verify(spark, cand, sh_new, store, [])
@@ -474,26 +466,6 @@ def text_store(spark: SparkSession, sf_dir: str) -> VerifyStore:
     return memo(("text_store", sf_dir), lambda: write_text_store(
         spark, sf_dir, _band_rows(_shingle_sets(spark, sf_dir).where(
             F.col("doc_id") % INCR_MOD != INCR_REM))))
-
-
-def band_index_candidates(spark: SparkSession, index_path: str,
-                          bands_new: DataFrame, sensor: str) -> DataFrame:
-    """Distinct (old_doc, doc_id) candidate pairs: the new side's
-    (doc_id, band, bucket) rows (:func:`_band_rows`) equi-joined
-    against the STORED band index at ``index_path`` (a
-    :class:`VerifyStore`'s ``index``) — the one bipartite candidate
-    join of ``dedup_incremental``, every streaming text gate and
-    scripts/gate_io_probe.py. Cost ∝ new-side band rows × bucket
-    occupancy, never corpus²; ``sensor`` names the raw collision
-    count (``functions.observability``)."""
-    idx = spark.read.parquet(index_path)
-    cand = (idx.alias("a").join(
-                bands_new.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket")))
-            .select(F.col("a.doc_id").alias("old_doc"),
-                    F.col("b.doc_id").alias("doc_id")))
-    return observability.observe_candidates(cand, sensor).distinct()
 
 
 def hashed_shingle_cols(sh: DataFrame) -> DataFrame:
@@ -707,26 +679,30 @@ def simhash_pairs(sh: DataFrame, bits: int, band_bits: int) -> DataFrame:
         term = F.when(ones[j] * 2 > F.size("h"), F.lit(1 << j)).otherwise(F.lit(0))
         sig_expr = term if sig_expr is None else sig_expr + term
     sig = hashed.select("doc_id", sig_expr.cast("bigint").alias("simhash"))
-    return banded_hamming_pairs(sig, bits=bits, band_bits=band_bits,
+    return banded_hamming_pairs(sig, sig, bits=bits, band_bits=band_bits,
                                 sig_col="simhash",
                                 sensor=f"simhash_bits{bits}_band{band_bits}")
 
 
-def banded_hamming_pairs(sig: DataFrame, bits: int, band_bits: int,
-                         sig_col: str, sensor: str,
+def banded_hamming_pairs(sig_a: DataFrame, sig_b: DataFrame, bits: int,
+                         band_bits: int, sig_col: str, sensor: str,
                          hamming_max: int = HAMMING_MAX) -> DataFrame:
-    """Banded hamming-ball self-join over ANY ``bits``-wide integer
+    """Banded hamming-ball join over ANY ``bits``-wide integer
     signature column — the blocking core shared by SimHash
     (:func:`simhash_pairs`) and the multimodal perceptual hash
-    (``operators.multimodal.multimodal_phash_neardup``): split the
+    (``operators.multimodal.multimodal_phash_neardup``): split each
     signature into ``bits // band_bits`` disjoint CONTIGUOUS bands,
-    self-join on (band, band value), verify exact hamming ≤
+    join on (band, band value), verify exact hamming ≤
     ``hamming_max``. Pigeonhole-lossless while hamming_max ≤ bands - 1:
     d bit flips corrupt at most d bands, so one band always collides
     intact (any partition of the bit positions qualifies; contiguity is
     a layout choice, see below).
 
-    Returns distinct (doc_a, doc_b, hamming), doc_a < doc_b.
+    Pass one frame twice for the self-join: distinct (doc_a, doc_b,
+    hamming), doc_a < doc_b. Pass the existing corpus's and a new
+    batch's signatures for the incremental shape: distinct (old_doc,
+    new_doc, hamming), at a candidate cost ∝ batch size × bucket
+    occupancy, never corpus².
 
     Band layout note (measured, r9): for signatures whose bits carry
     LOCALITY (the perceptual hash — bit k is a comparison at a fixed
@@ -745,26 +721,16 @@ def banded_hamming_pairs(sig: DataFrame, bits: int, band_bits: int,
     band is 2^band_bits, so band_bits must grow with log2(N) to hold
     per-bucket occupancy (and with it the quadratic-in-occupancy
     bucket self-join) constant; see tests/test_geometry_guard.py."""
-    bands = _hamming_band_rows(sig, sig_col, bits, band_bits)
-    a, b = bands.alias("a"), bands.alias("b")
+    a = _hamming_band_rows(sig_a, sig_col, bits, band_bits)
     hamming = F.bit_count(F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}")))
-    collisions = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.nib") == F.col("b.nib"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                hamming.alias("hamming"))
-    )
-    # Candidate-volume sensor (identity unless a probe enabled it):
-    # raw bucket collisions BEFORE the hamming verify is the quantity
-    # the band geometry bounds — the fixture's quadratic was invisible
-    # in wall time at sf1.0, it is not invisible here.
-    collisions = observability.observe_candidates(collisions, sensor)
-    return (
-        collisions
-        .where(F.col("hamming") <= hamming_max)
-        .distinct()
-    )
+    if sig_a is sig_b:
+        b, out, order = a, ("doc_a", "doc_b"), "<"
+    else:
+        b = _hamming_band_rows(sig_b, sig_col, bits, band_bits)
+        out, order = ("old_doc", "new_doc"), None
+    return (candidate_pairs(a, b, ["band", "nib"], "doc_id", out, sensor,
+                            order=order, carry=(hamming.alias("hamming"),))
+            .where(F.col("hamming") <= hamming_max))
 
 
 def _hamming_band_rows(sig: DataFrame, sig_col: str, bits: int,
@@ -782,31 +748,6 @@ def _hamming_band_rows(sig: DataFrame, sig_col: str, bits: int,
             for bnd in range(bits // band_bits)
         ])).alias("bb"),
     ).select("doc_id", sig_col, "bb.band", "bb.nib")
-
-
-def banded_hamming_join(sig_old: DataFrame, sig_new: DataFrame, bits: int,
-                        band_bits: int, sig_col: str, sensor: str,
-                        hamming_max: int = HAMMING_MAX) -> DataFrame:
-    """Bipartite variant of :func:`banded_hamming_pairs` — the
-    incremental-dedup shape: band rows of the NEW batch join against
-    band rows of the EXISTING corpus, so candidate cost is ∝ batch
-    size × bucket occupancy, never corpus² (``dedup_incremental``'s
-    posture for hamming signatures). Returns distinct
-    (old_doc, new_doc, hamming)."""
-    a = _hamming_band_rows(sig_old, sig_col, bits, band_bits).alias("a")
-    b = _hamming_band_rows(sig_new, sig_col, bits, band_bits).alias("b")
-    hamming = F.bit_count(F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}")))
-    collisions = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.nib") == F.col("b.nib")))
-        .select(F.col("a.doc_id").alias("old_doc"),
-                F.col("b.doc_id").alias("new_doc"),
-                hamming.alias("hamming"))
-    )
-    collisions = observability.observe_candidates(collisions, sensor)
-    return (collisions
-            .where(F.col("hamming") <= hamming_max)
-            .distinct())
 
 
 # ---------------------------------------------------------------------------

@@ -1013,8 +1013,9 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole slack and give the candidate sensor its contrast."""
     from .dedup import banded_hamming_pairs
 
+    sig = _phash_signatures(spark, sf_dir)
     return banded_hamming_pairs(
-        _phash_signatures(spark, sf_dir), bits=PHASH_BITS,
+        sig, sig, bits=PHASH_BITS,
         band_bits=PHASH_BAND_BITS, sig_col="phash",
         sensor=f"phash_bits{PHASH_BITS}_band{PHASH_BAND_BITS}",
         hamming_max=PHASH_HAMMING_MAX)
@@ -1041,8 +1042,9 @@ def multimodal_phash_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFra
     layout loses no pair."""
     from .dedup import banded_hamming_pairs
 
+    sig = _phash_signatures(spark, sf_dir)
     return banded_hamming_pairs(
-        _phash_signatures(spark, sf_dir), bits=PHASH_BITS,
+        sig, sig, bits=PHASH_BITS,
         band_bits=PHASH_BAND_BITS_SCALED, sig_col="phash",
         sensor=f"phash_bits{PHASH_BITS}_band{PHASH_BAND_BITS_SCALED}",
         hamming_max=PHASH_HAMMING_MAX)
@@ -1133,11 +1135,11 @@ def multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment persists alongside the payload store (the IVF-index
     economics). Same 60-bit dHash and 5×12 scaled banding; the oracle
     replays the bipartite predicate over the brute-force pair space."""
-    from .dedup import banded_hamming_join
+    from .dedup import banded_hamming_pairs
 
     sig = _phash_signatures(spark, sf_dir)
     is_new = F.col("doc_id") % PHASH_INCR_MOD == PHASH_INCR_REM
-    return banded_hamming_join(
+    return banded_hamming_pairs(
         sig.where(~is_new), sig.where(is_new), bits=PHASH_BITS,
         band_bits=PHASH_BAND_BITS_SCALED, sig_col="phash",
         sensor=f"phash_incr_band{PHASH_BAND_BITS_SCALED}",
@@ -1187,13 +1189,13 @@ def multimodal_phash_index_persist(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: the index is 8 bytes/doc (a 100 TB payload store carries a
     ~GB signature table); serve cost is the new dump's hashing plus
     the banded join — corpus payloads are never touched again."""
-    from .dedup import banded_hamming_join
+    from .dedup import banded_hamming_pairs
 
     index = spark.read.parquet(_phash_index_dir(spark, sf_dir))
     new = _phash_signatures(
         spark, sf_dir,
         pred=F.col("doc_id") % PHASH_INCR_MOD == PHASH_INCR_REM)
-    return banded_hamming_join(
+    return banded_hamming_pairs(
         index, new, bits=PHASH_BITS, band_bits=PHASH_BAND_BITS_SCALED,
         sig_col="phash",
         sensor=f"phash_persist_band{PHASH_BAND_BITS_SCALED}",
@@ -1261,8 +1263,9 @@ def multimodal_phash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame
         .write.mode("append").parquet(path)
     gen2 = scratch_dir("fsbd_phash_append_gen2_")
     phash_index_compact(spark, path, gen2)
+    sig = spark.read.parquet(gen2)
     return banded_hamming_pairs(
-        spark.read.parquet(gen2), bits=PHASH_BITS,
+        sig, sig, bits=PHASH_BITS,
         band_bits=PHASH_BAND_BITS_SCALED, sig_col="phash",
         sensor=f"phash_append_band{PHASH_BAND_BITS_SCALED}",
         hamming_max=PHASH_HAMMING_MAX)

@@ -45,7 +45,7 @@ from ..engine.generations import write_generation
 from ..engine.localdf import local_df
 from ..engine.pointfetch import VerifyStore, two_tier_verify, write_payload
 from ..engine.scratch import memo, scratch_dir
-from ..functions import observability
+from ..functions.candidates import candidate_pairs
 from ..functions.skew import grouped_topk
 from ..functions.vectors import cosine_sim, cosine_sim_exprs
 from .registry import register
@@ -183,9 +183,9 @@ def _srp_bucket_udf(tables: int = SRP_TABLES, bits: int = SRP_BITS):
 
 
 def srp_bucket_rows(df: DataFrame, vec_col: str = "embedding",
-                    tables: int = SRP_TABLES, bits: int = SRP_BITS,
-                    keep: tuple[str, ...] = ("vec_id",)) -> DataFrame:
-    """(*keep, table_id, bucket) — one row per (vector, hash table),
+                    tables: int = SRP_TABLES,
+                    bits: int = SRP_BITS) -> DataFrame:
+    """(vec_id, table_id, bucket) — one row per (vector, hash table),
     with the bucket UDF call INSIDE the generator.
 
     Arrow-batched pandas UDF: each batch becomes one (rows × dim) numpy
@@ -215,7 +215,7 @@ def srp_bucket_rows(df: DataFrame, vec_col: str = "embedding",
     shingle fix (`_shingled`), which measured 8.2x on the same rule.
     """
     udf = _srp_bucket_udf(tables, bits)
-    return df.select(*keep,
+    return df.select("vec_id",
                      F.posexplode(udf(F.col(vec_col)))
                      .alias("table_id", "bucket"))
 
@@ -270,20 +270,14 @@ def _srp_oracle() -> str:
     tags=("similarity", "ann", "lsh"),
 )
 def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl = srp_bucket_rows(Catalog(spark, sf_dir).embeddings,
-                          keep=("vec_id", "embedding"))
-    q = (tbl.where(F.col("vec_id") < N_QUERIES)
-         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-                 "table_id", "bucket"))
-    cand = (
-        F.broadcast(q).join(tbl, ["table_id", "bucket"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "embedding")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_sim(F.col("embedding"), F.col("qv")).alias("cos"))
-    return neighbor_topk(scored, "query_id", TOP_K)
+    src = Catalog(spark, sf_dir).embeddings
+    tbl = srp_bucket_rows(src)
+    cand = candidate_pairs(
+        F.broadcast(tbl.where(F.col("vec_id") < N_QUERIES)), tbl,
+        ["table_id", "bucket"], "vec_id", ("query_id", "neighbor_id"),
+        f"srp_ann_t{SRP_TABLES}_b{SRP_BITS}", order="!=")
+    return neighbor_topk(cosine_pairs(cand, src, "query_id", "neighbor_id"),
+                         "query_id", TOP_K)
 
 
 # IVF tuning: 16 spherical cells from deterministic unit centroids; the
@@ -1105,14 +1099,9 @@ def banded_neardup_pairs(src: DataFrame, threshold: float = NEARDUP_COS,
     # that explosion is the memory trap (same discipline as the minhash
     # path: band rows are doc_id+bucket, shingle sets join back later).
     buckets = srp_bucket_rows(src, tables=tables, bits=bits)
-    cand = (buckets.select(F.col("vec_id").alias("vec_a"), "table_id", "bucket")
-            .join(buckets, ["table_id", "bucket"])
-            .where(F.col("vec_a") < F.col("vec_id"))
-            .select("vec_a", F.col("vec_id").alias("vec_b")))
-    # Candidate-volume sensor (identity unless a probe enabled it):
-    # raw SRP bucket collisions before the exact-cosine verify.
-    cand = observability.observe_candidates(
-        cand, f"srp_t{tables}_b{bits}").distinct()
+    cand = candidate_pairs(buckets, buckets, ["table_id", "bucket"], "vec_id",
+                           ("vec_a", "vec_b"), f"srp_t{tables}_b{bits}",
+                           order="<")
     return (cosine_pairs(cand, src, "vec_a", "vec_b")
             .where(F.col("cos") >= threshold)
             .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine")))
@@ -1187,18 +1176,11 @@ def _new_batch_topk(spark: SparkSession, sf_dir: str, new: DataFrame,
     distinct pair scored by exact cosine, top-ANN_INCR_K per new
     vector — the serve side of ``ann_incremental`` and
     ``ann_index_persist``."""
-    newb = new.select(F.col("vec_id").alias("new_id"), "table_id", "bucket")
-    cand = (newb.join(index, ["table_id", "bucket"])
-            .select("new_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct())
-    src = Catalog(spark, sf_dir).embeddings
-    qn = src.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("qv"))
-    nn = src.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("nv"))
-    # Arrow cosine: candidate volume here amortizes the boundary
-    scored = (cand.join(qn, "new_id").join(nn, "neighbor_id")
-              .select("new_id", "neighbor_id",
-                      cosine_sim(F.col("nv"), F.col("qv")).alias("cos")))
+    cand = candidate_pairs(new, index, ["table_id", "bucket"], "vec_id",
+                           ("new_id", "neighbor_id"),
+                           f"srp_incr_t{SRP_TABLES}_b{SRP_BITS}")
+    scored = cosine_pairs(cand, Catalog(spark, sf_dir).embeddings,
+                          "new_id", "neighbor_id")
     return neighbor_topk(scored, "new_id", ANN_INCR_K)
 
 
@@ -1626,12 +1608,8 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Catalog(spark, sf_dir).embeddings
     ids = _ivf_assigned(e).select("vec_id", "cell")
-    cand = (ids.select(F.col("vec_id").alias("vec_a"), "cell")
-            .join(ids, "cell")
-            .where(F.col("vec_a") < F.col("vec_id"))
-            .select("vec_a", F.col("vec_id").alias("vec_b")))
-    cand = observability.observe_candidates(
-        cand, f"semdedup_cells{IVF_CELLS_WIDE}")
+    cand = candidate_pairs(ids, ids, ["cell"], "vec_id", ("vec_a", "vec_b"),
+                           f"semdedup_cells{IVF_CELLS_WIDE}", order="<")
     pairs = (cosine_pairs(cand, e, "vec_a", "vec_b")
              .where(F.col("cos") >= SEMDEDUP_COS)
              .select("vec_a", "vec_b"))
@@ -1732,12 +1710,9 @@ def semdedup_pairs_multiprobe(e: DataFrame,
     tests/test_similarity_extras.py."""
     m = (ivf_cells_scaled(e, probes=probes)
          .select("vec_id", F.explode("cells").alias("cell")))
-    cand = (m.select(F.col("vec_id").alias("vec_a"), "cell")
-            .join(m, "cell")
-            .where(F.col("vec_a") < F.col("vec_id"))
-            .select("vec_a", F.col("vec_id").alias("vec_b")))
-    cand = observability.observe_candidates(
-        cand, f"semdedup_mp{probes}_cells{IVF_CELLS_WIDE}").distinct()
+    cand = candidate_pairs(m, m, ["cell"], "vec_id", ("vec_a", "vec_b"),
+                           f"semdedup_mp{probes}_cells{IVF_CELLS_WIDE}",
+                           order="<")
     return (cosine_pairs(cand, e, "vec_a", "vec_b")
             .where(F.col("cos") >= SEMDEDUP_COS)
             .select("vec_a", "vec_b"))
@@ -3252,11 +3227,9 @@ def knn_graph_edges(src: DataFrame, k: int = KNN_K,
     right for the 2 k fixture and catastrophic at 128 k — probed)."""
     src = src.select("vec_id", "embedding")
     buckets = srp_bucket_rows(src, tables=tables, bits=bits)
-    cand = (buckets.select(F.col("vec_id").alias("src_id"), "table_id", "bucket")
-            .join(buckets, ["table_id", "bucket"])
-            .where(F.col("src_id") != F.col("vec_id"))
-            .select("src_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct())
+    cand = candidate_pairs(buckets, buckets, ["table_id", "bucket"], "vec_id",
+                           ("src_id", "neighbor_id"), f"knn_t{tables}_b{bits}",
+                           order="!=")
     return (neighbor_topk(cosine_pairs(cand, src, "src_id", "neighbor_id"),
                           "src_id", k)
             .select("src_id", F.col("rank").cast("bigint").alias("rank"),

@@ -28,6 +28,7 @@ from ..engine.generations import append_epoch, read_epochs
 from ..engine.pointfetch import VerifyStore
 from ..engine.scratch import memo, scratch_dir
 from ..engine.session import tune_session
+from ..functions.candidates import candidate_pairs
 from ..operators.registry import register
 from ..operators.similarity import SRP_BITS, SRP_BITS_WIDE as _SRP_BITS_WIDE
 from .core import corpus_stream, drain, drain_dirs, run_to_completion
@@ -303,7 +304,7 @@ def _phash_gate(index_path: str, target_dir: str, sensor: str):
     batch-scoped persisted (feeds the banded probe AND the final
     anti-join)."""
     def body(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import banded_hamming_join
+        from ..operators.dedup import banded_hamming_pairs
         from ..operators.multimodal import (PHASH_BAND_BITS_SCALED,
                                             PHASH_BITS, PHASH_HAMMING_MAX,
                                             phash_signature_frame)
@@ -311,7 +312,7 @@ def _phash_gate(index_path: str, target_dir: str, sensor: str):
         idx = batch.sparkSession.read.parquet(index_path)
         sig = phash_signature_frame(batch).persist()
         try:
-            hits = (banded_hamming_join(
+            hits = (banded_hamming_pairs(
                         idx, sig, bits=PHASH_BITS,
                         band_bits=PHASH_BAND_BITS_SCALED, sig_col="phash",
                         sensor=sensor, hamming_max=PHASH_HAMMING_MAX)
@@ -515,18 +516,14 @@ def _embedding_gate(store: VerifyStore, target_dir: str, sensor: str,
     consumers). ``bits`` is the SRP geometry of ``store``'s index
     (``similarity.embedding_store``'s key)."""
     def body(batch: DataFrame, batch_id: int) -> None:
-        from ..functions import observability
         from ..operators.similarity import cosine_verify, srp_bucket_rows
 
         ss = batch.sparkSession
-        idx = (ss.read.parquet(store.index)
-               .withColumnRenamed("vec_id", "old_id"))
         nb = srp_bucket_rows(batch, bits=bits).persist()
         try:
-            cand = (nb.join(idx, ["table_id", "bucket"])
-                    .select("vec_id", "old_id"))
-            cand = (observability.observe_candidates(cand, sensor)
-                    .distinct().persist())
+            cand = candidate_pairs(
+                nb, ss.read.parquet(store.index), ["table_id", "bucket"],
+                "vec_id", ("vec_id", "old_id"), sensor).persist()
             scope: list = []
             try:
                 hits = cosine_verify(ss, cand, batch, store, scope)
@@ -701,9 +698,9 @@ def _text_gate(store: VerifyStore, target_dir: str, sensor: str,
                survivors):
     """Shared foreachBatch chain for BOTH text gates (admit + ingest —
     r11 review finding): shingle + MinHash-band the micro-batch
-    (map-side, the shared ``_band_rows`` kernel), join the batch's band
-    rows against the stored corpus index
-    (``dedup.band_index_candidates``), verify candidates with the
+    (map-side, the shared ``_band_rows`` kernel), join the stored
+    corpus index against the batch's band rows
+    (``functions.candidates.candidate_pairs``), verify candidates with the
     family's one exact verify (``dedup.jaccard_verify`` — two-tier
     point fetches, per-batch I/O ∝ candidates' pk directories, never a
     corpus pass), and append ``survivors(sh_new, bands_new, hits)`` as
@@ -713,9 +710,7 @@ def _text_gate(store: VerifyStore, target_dir: str, sensor: str,
     pattern)."""
     def body(batch: DataFrame, batch_id: int) -> None:
         from ..functions.text import token_ngrams, tokens
-        from ..operators.dedup import (SHINGLE_N, _band_rows,
-                                       band_index_candidates,
-                                       jaccard_verify)
+        from ..operators.dedup import SHINGLE_N, _band_rows, jaccard_verify
 
         ss = batch.sparkSession
         toks = (batch.select("doc_id", tokens("text").alias("toks"))
@@ -727,8 +722,10 @@ def _text_gate(store: VerifyStore, target_dir: str, sensor: str,
         try:
             bands_new = _band_rows(sh_new).persist()
             try:
-                cand = band_index_candidates(ss, store.index, bands_new,
-                                             sensor).persist()
+                cand = candidate_pairs(
+                    ss.read.parquet(store.index), bands_new,
+                    ["band", "bucket"], "doc_id", ("old_doc", "doc_id"),
+                    sensor).persist()
                 scope: list = []
                 try:
                     hits = jaccard_verify(ss, cand, sh_new, store, scope)
@@ -1199,9 +1196,7 @@ def _curate_admit(eval_index_path: str, store: VerifyStore, out_dir: str):
     def admit(batch: DataFrame, batch_id: int) -> None:
         from ..functions.text import token_ngrams, tokens
         from ..operators.decontam import DECONTAM_N
-        from ..operators.dedup import (SHINGLE_N, _band_rows,
-                                       band_index_candidates,
-                                       jaccard_verify)
+        from ..operators.dedup import SHINGLE_N, _band_rows, jaccard_verify
         from ..operators.textanalysis import _stopword_hits_spark
 
         ss = batch.sparkSession
@@ -1235,8 +1230,9 @@ def _curate_admit(eval_index_path: str, store: VerifyStore, out_dir: str):
                 # MinHash index + exact-jaccard point-fetch verify
                 # (stream_text_admit's rule; quality's ≥ 20 tokens
                 # implies shingles exist, so no extra eligibility cut).
-                cand = band_index_candidates(
-                    ss, store.index, _band_rows(clean),
+                cand = candidate_pairs(
+                    ss.read.parquet(store.index), _band_rows(clean),
+                    ["band", "bucket"], "doc_id", ("old_doc", "doc_id"),
                     "curate_minhash").persist()
                 scope: list = []
                 try:

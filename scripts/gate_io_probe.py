@@ -26,6 +26,7 @@ from full_stack_big_data_spark.engine.catalog import Catalog
 from full_stack_big_data_spark.engine.pointfetch import (fetch_ids,
                                                          point_fetch)
 from full_stack_big_data_spark.engine.session import get_spark
+from full_stack_big_data_spark.functions.candidates import candidate_pairs
 
 
 def _tree_bytes(path: str) -> tuple[int, int]:
@@ -107,14 +108,15 @@ def main() -> int:
 
     # --- text gate: the micro-batch is the whole new partition -------
     from full_stack_big_data_spark.operators.dedup import (
-        INCR_MOD, INCR_REM, _band_rows, _shingle_sets,
-        band_index_candidates, jaccard_verify, text_store)
+        INCR_MOD, INCR_REM, _band_rows, _shingle_sets, jaccard_verify,
+        text_store)
 
     tstore = text_store(spark, sf)
     sh_new = (_shingle_sets(spark, sf)
               .where(F.col("doc_id") % INCR_MOD == INCR_REM))
-    cand = band_index_candidates(spark, tstore.index, _band_rows(sh_new),
-                                 "text_admit_minhash")
+    cand = candidate_pairs(spark.read.parquet(tstore.index),
+                           _band_rows(sh_new), ["band", "bucket"], "doc_id",
+                           ("old_doc", "doc_id"), "text_admit_minhash")
     n_cand = cand.count()
     ids = fetch_ids(cand.select(F.col("old_doc").alias("doc_id")), "doc_id")
     # correctness of the pruned fetch: rows back == ids asked for
@@ -158,11 +160,10 @@ def main() -> int:
         groups. Returns (store, candidate ids, survivor ids) for the
         per-k curves."""
         store = embedding_store(spark, sf, bits)
-        idx = (spark.read.parquet(store.index)
-               .withColumnRenamed("vec_id", "old_id"))
-        cand = (srp_bucket_rows(ebatch, bits=bits)
-                .join(idx, ["table_id", "bucket"])
-                .select("vec_id", "old_id").distinct())
+        cand = candidate_pairs(
+            srp_bucket_rows(ebatch, bits=bits),
+            spark.read.parquet(store.index), ["table_id", "bucket"],
+            "vec_id", ("vec_id", "old_id"), "srp_admit")
         n_cand = cand.count()
         cids = fetch_ids(cand.select(F.col("old_id").alias("vec_id")),
                          "vec_id")

@@ -624,7 +624,9 @@ def test_each_verify_step_lives_in_one_function():
     caller in the package, and the batch layer's in-memory jaccard and
     pair-cosine scorers each have ONE holding function. A second copy
     anywhere is a batch path and a stream path free to decide
-    differently."""
+    differently. The candidate join in front of them has one home too:
+    the candidate sensor attaches only in ``candidate_pairs``, so a
+    hand-written bucket join cannot come back unwatched."""
     import ast
     import os
 
@@ -633,7 +635,8 @@ def test_each_verify_step_lives_in_one_function():
     needles = ('F.col("coll_o") | F.col("coll_n")', "quant_screen_keep(",
                "fetch_payload_prefetched(",
                'F.col("na") + F.col("nb") - F.col("i")',
-               'cosine_sim(F.col("emb_a"), F.col("emb_b"))')
+               'cosine_sim(F.col("emb_a"), F.col("emb_b"))',
+               "observe_candidates(")
     holders = {n: [] for n in needles}
     for root, _dirs, files in os.walk(pkg):
         for f in files:
@@ -664,6 +667,8 @@ def test_each_verify_step_lives_in_one_function():
                      + ":jaccard_pairs"],
         needles[4]: [os.path.join("operators", "similarity.py")
                      + ":cosine_pairs"],
+        needles[5]: [os.path.join("functions", "candidates.py")
+                     + ":candidate_pairs"],
     }, holders
 
 

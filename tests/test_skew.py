@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from full_stack_big_data_spark.engine.catalog import Catalog
+from full_stack_big_data_spark.functions.candidates import candidate_pairs
 from full_stack_big_data_spark.functions.skew import salted_agg, salted_join
 from full_stack_big_data_spark.functions.text import tokens
 from conftest import SF_SMOKE
@@ -104,13 +105,8 @@ def test_aqe_splits_hot_lsh_bucket(spark):
                         F.when(F.col("id") < n_hot, hot_shingles)
                         .otherwise(bg_shingles).alias("s")))
         bands = _band_rows(docs)
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                       & (F.col("a.bucket") == F.col("b.bucket"))
-                       & (F.col("a.doc_id") < F.col("b.doc_id")))
-                .select(F.col("a.doc_id").alias("doc_a"),
-                        F.col("b.doc_id").alias("doc_b"))
-                .distinct())
+        cand = candidate_pairs(bands, bands, ["band", "bucket"], "doc_id",
+                               ("doc_a", "doc_b"), "minhash_lsh", order="<")
         # collect() (not count()) so the adaptive plan finalizes on THIS
         # DataFrame's QueryExecution — count() plans a separate agg.
         n_pairs = len(cand.collect())
