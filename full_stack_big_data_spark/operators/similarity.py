@@ -1707,7 +1707,7 @@ def semdedup_pairs_multiprobe(e: DataFrame,
                               probes: int = SEMDEDUP_PROBES) -> DataFrame:
     """Verified multiprobe within-cell near-dup pairs (vec_a < vec_b) —
     shared by the registered entry and the recall measurement in
-    tests/test_similarity_extras.py."""
+    tests/test_similarity.py."""
     m = (ivf_cells_scaled(e, probes=probes)
          .select("vec_id", F.explode("cells").alias("cell")))
     cand = candidate_pairs(m, m, ["cell"], "vec_id", ("vec_a", "vec_b"),
