@@ -13,6 +13,11 @@ digests. Two forms:
 
 md5 here is a deterministic mixer, not cryptography. It is JVM-side
 (Catalyst ``md5``) so the hot path stays in whole-stage codegen.
+
+Literal families (MinHash affine constants, SRP hyperplanes, IVF and PQ
+codebooks, random-projection signs) are instead drawn on the driver from
+one integer stream, :func:`lcg_stream`, and embedded as literals in both
+the Spark plan and the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -38,3 +43,19 @@ def hex64(col: Column) -> Column:
 def hex64_sql(expr: str) -> str:
     """DuckDB equivalent of :func:`hex64`."""
     return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
+
+
+_LCG_M = 2147483647   # 2³¹-1, the Mersenne modulus of the MINSTD LCG
+
+
+def lcg_stream(seed: int, n: int) -> list[int]:
+    """The next ``n`` states of the multiplicative LCG x → 48271·x mod
+    2³¹-1 (Park–Miller MINSTD), starting after ``seed``, as Python ints.
+    Every literal family draws from it with its own seed and maps each
+    state to its value range (e.g. ``s % 2001 - 1000``); pure integer
+    arithmetic, so the literals are the same on every platform."""
+    out = []
+    for _ in range(n):
+        seed = (seed * 48271) % _LCG_M
+        out.append(seed)
+    return out

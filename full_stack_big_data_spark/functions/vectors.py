@@ -21,6 +21,11 @@ Two forms of the same arithmetic:
 Floats are widened to double *before* any arithmetic so accumulation
 order and precision match the DuckDB oracle (which computes list_* in
 double).
+
+The IVF and PQ families instead work on integers: :func:`quantize` is
+their ``floor(x·100)`` step and :func:`sign_cell_order` their sign-codebook
+cell ranking. Both are plain numpy, called by the Arrow UDFs and by the
+driver-side query paths alike.
 """
 
 from __future__ import annotations
@@ -177,3 +182,24 @@ def cosine_sim(a: Column, b: Column) -> Column:
     # in both banded deployment entries). The function is genuinely
     # deterministic, so blocking reorder/duplication changes no result.
     return _cos.asNondeterministic()(a, b)
+
+
+def quantize(x) -> np.ndarray:
+    """``floor(x·100)`` as int64 — the integer quantization under every
+    IVF and PQ kernel. Product and floor are exact in double, so the
+    values equal Catalyst's ``floor(x * 100)`` and DuckDB's
+    ``FLOOR(x * 100)`` on the same floats."""
+    return np.floor(np.asarray(x, dtype=np.float64) * 100.0).astype(np.int64)
+
+
+def sign_cell_order(eq: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Every cell id of the equal-norm sign codebook ``cents`` (C, dim),
+    nearest first, for each quantized row of ``eq`` (n, dim) — or for one
+    quantized vector. Equal norms make nearest-by-cosine the largest
+    integer dot product; the stable sort keeps ties in ascending cell id,
+    DuckDB's ``ORDER BY d DESC, cell``. Raises when a dot leaves the
+    range where int64 and double agree."""
+    d = eq @ cents.T
+    if int(np.abs(d).max(initial=0)) >= 2**53:
+        raise ValueError("sign-cell dot exceeds exact range")
+    return np.argsort(-d, axis=-1, kind="stable")

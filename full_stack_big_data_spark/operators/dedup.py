@@ -48,7 +48,7 @@ from ..engine.generations import write_generation
 from ..engine.pointfetch import VerifyStore, two_tier_verify, write_payload
 from ..engine.scratch import memo, scratch_dir
 from ..functions.candidates import candidate_pairs
-from ..functions.hashing import hex64, hex64_sql
+from ..functions.hashing import hex64, hex64_sql, lcg_stream
 from ..functions.text import token_ngrams, token_ngrams_sql, tokens, tokens_sql
 from .registry import register
 
@@ -144,16 +144,13 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # h_i(g) = (a_i·h + b_i) mod P with P = 2³¹-1 (Mersenne). One md5 per
 # shingle instead of N_HASHES of them — the signature stage is 16×
 # cheaper in hashing work, and the min() shuffles bigints, not hex
-# strings. Constants come from a fixed LCG so both engines embed the
-# same literals; all products stay < 2⁶² (no BIGINT overflow anywhere).
+# strings. Constants come from the shared LCG stream (seed 1, a_i and b_i
+# interleaved) so both engines embed the same literals; all products stay
+# < 2⁶² (no BIGINT overflow anywhere).
 MH_P = 2147483647
-_seed_lcg = 1
-_MH_A, _MH_B = [], []
-for _ in range(N_HASHES):
-    _seed_lcg = (_seed_lcg * 48271) % MH_P
-    _MH_A.append(_seed_lcg or 1)
-    _seed_lcg = (_seed_lcg * 48271) % MH_P
-    _MH_B.append(_seed_lcg)
+_mh_stream = lcg_stream(1, 2 * N_HASHES)
+_MH_A = [a or 1 for a in _mh_stream[0::2]]
+_MH_B = _mh_stream[1::2]
 
 
 def _minhash_bands_prefix(s_sql: str = _SHINGLES_SQL,

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..engine.catalog import Catalog
-from ..functions.hashing import hex64, hex64_sql
+from ..functions.hashing import hex64, hex64_sql, lcg_stream
 from ..functions.text import tokens, tokens_sql
 from .dedup import dedup_clusters
 from .registry import REGISTRY, register
@@ -784,26 +784,19 @@ def q_training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 RP_OUT = 16            # projected dimensionality
 RP_DIM = 64            # input embedding dimensionality
 _RP_SEED = 4242        # distinct from the SRP seed — uncorrelated matrices
-_RP_P = 2147483647     # same multiplicative-LCG family as minhash/SRP
 _RP_SCALE = 4000.0     # 1000 (quantization) x sqrt(RP_OUT)=4 (JL normalizer)
 
 
 def _rp_signs() -> list[list[int]]:
     """Deterministic ±1 projection matrix, shape (RP_OUT, RP_DIM), from
-    the 48271-LCG parity stream. A Rademacher (±1) matrix satisfies the
-    Johnson–Lindenstrauss guarantee like a gaussian one (Achlioptas
-    2001), and — as with the SRP hyperplanes — integer entries buy a
-    bit-exact cross-engine oracle: with embeddings quantized to
-    ``floor(x·1000)`` every dot product is integer arithmetic ≪ 2⁵³."""
-    state = _RP_SEED
-    rows = []
-    for _ in range(RP_OUT):
-        row = []
-        for _ in range(RP_DIM):
-            state = (state * 48271) % _RP_P
-            row.append(1 if state % 2 else -1)
-        rows.append(row)
-    return rows
+    the parity of the shared LCG stream (``hashing.lcg_stream``). A
+    Rademacher (±1) matrix satisfies the Johnson–Lindenstrauss
+    guarantee like a gaussian one (Achlioptas 2001), and — as with the
+    SRP hyperplanes — integer entries buy a bit-exact cross-engine
+    oracle: with embeddings quantized to ``floor(x·1000)`` every dot
+    product is integer arithmetic ≪ 2⁵³."""
+    signs = [1 if s % 2 else -1 for s in lcg_stream(_RP_SEED, RP_OUT * RP_DIM)]
+    return [signs[i:i + RP_DIM] for i in range(0, len(signs), RP_DIM)]
 
 
 def _rp_oracle() -> str:

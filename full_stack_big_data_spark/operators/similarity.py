@@ -1,36 +1,34 @@
 """Similarity search over the embeddings table (``array<float>``, dim 64).
 
-Five operators (each hash-exact against a DuckDB oracle — the integer
-quantization discipline described on :func:`_srp_hyperplanes` makes even
-the approximate-recall paths deterministic):
+33 registered operators in five families, each hash-exact against a
+DuckDB oracle — even the approximate paths, because bucketing, cell
+assignment and PQ coding are integer arithmetic on embedded literals:
 
-- ``ann_brute_topk``    — exact top-k cosine neighbors for a fixed query
-  set. The query side is broadcast, the corpus side streams: one scan,
-  no shuffle until the final per-query top-k (window over ≤ q·N rows,
-  pruned by rank). This is the correctness baseline.
-- ``ann_srp_lsh``       — sign-random-projection LSH: 16 hash tables × 4
-  hyperplane bits, numpy-vectorized in an Arrow-batched pandas UDF (the
-  documented Python fast path: one matrix multiply per batch instead of
-  per-row Python). Candidates = bucket collisions; verify with exact
-  cosine; per-query top-k. Hyperplanes are LCG-generated INTEGER weights
-  and embeddings quantize to integers before the sign test, so bucketing
-  is bit-deterministic across engines and the whole pipeline has an
-  EXACT DuckDB oracle (the approximation is vs brute force, not vs the
-  oracle); recall vs the brute-force baseline is additionally pinned in
-  tests.
-- ``embedding_neardup`` — all corpus pairs with cosine ≥ 0.40 (the
-  testdata's top-pair regime). Exact quadratic at test scale (broadcast
-  matmul below the 256 MiB ceiling, block-pair join past it).
-- ``ann_ivf``            — coarse-quantizer ANN: integer centroids, cell
-  assignment by sign + BIGINT cross-multiplied ranking, probe-N cells,
-  exact re-rank.
-- ``embedding_neardup_banded`` — the 100 TB near-dup path: SRP bucket
-  collisions generate id-only candidate pairs (never all-pairs), exact
-  cosine verifies each; recall floor pinned vs the quadratic path.
+- exact: ``ann_brute_topk`` (the recall baseline), ``embedding_neardup``,
+  ``q_embedding_stats``, ``emb_label_outliers``;
+- SRP LSH: ``ann_srp_lsh``, the banded near-dup (fixture and
+  corpus-scaled) with its clusters/apply, the incremental and persisted
+  ANN index, the kNN graph;
+- IVF: ``ann_ivf`` (16-cell fixture comparator) with ``emb_kmeans_step``
+  and ``emb_cell_representatives``, the 256-cell sign codebook
+  (``ann_ivf_scaled``, persisted, appended) and SemDeDup within its
+  cells;
+- PQ and IVFADC: encode, one Lloyd training step, ADC search (literal,
+  trained, persisted) and the composed IVF-PQ index (in-query,
+  persisted, appended);
+- PCA: integer power iteration, projection, second component.
 
-Cosine is computed in double after an elementwise float→double widen,
-left-to-right accumulation — bit-compatible with DuckDB's
-``list_cosine_similarity`` on the same values.
+One home per integer-exact step, shared by builders and serve paths:
+literals from ``hashing.lcg_stream`` (here via ``_lcg_matrix``), the
+``floor(x·100)`` quantizer ``vectors.quantize`` (Catalyst twin
+``_quantized_embedding``), the sign-cell ranking
+``vectors.sign_cell_order``, the query probe set ``_probed_queries``,
+the ADC table ``_adc_lut``, the Lloyd step ``_pq_train_agg`` +
+``_lloyd_centroid``, the codebook store
+``_write_pq_codebook``/``_read_pq_codebook``. Oracles replay each step
+in SQL on their own. Cosine is computed in double after an elementwise
+float→double widen, left-to-right accumulation — bit-compatible with
+DuckDB's ``list_cosine_similarity`` on the same values.
 """
 
 from __future__ import annotations
@@ -46,8 +44,10 @@ from ..engine.localdf import local_df
 from ..engine.pointfetch import VerifyStore, two_tier_verify, write_payload
 from ..engine.scratch import memo, scratch_dir
 from ..functions.candidates import candidate_pairs
+from ..functions.hashing import lcg_stream
 from ..functions.skew import grouped_topk
-from ..functions.vectors import cosine_sim, cosine_sim_exprs
+from ..functions.vectors import (cosine_sim, cosine_sim_exprs, quantize,
+                                 sign_cell_order)
 from .registry import register
 
 N_QUERIES = 5          # vec_id < 5 are the query vectors
@@ -65,7 +65,6 @@ SRP_TABLES = 16
 SRP_BITS = 4
 SRP_DIM = 64
 _SRP_SEED = 42
-_SRP_P = 2147483647  # same Mersenne-mod multiplicative LCG as the minhash family
 
 
 def neighbor_topk(scored: DataFrame, group: str, k: int) -> DataFrame:
@@ -138,26 +137,28 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neighbor_topk(scored, "query_id", TOP_K)
 
 
+def _lcg_matrix(seed: int, shape: tuple[int, ...]) -> np.ndarray:
+    """``hashing.lcg_stream(seed, ·)`` as an int64 array of ``shape``,
+    filled in row-major order; each literal family maps it to its own
+    value range."""
+    return np.asarray(lcg_stream(seed, int(np.prod(shape))),
+                      dtype=np.int64).reshape(shape)
+
+
 def _srp_hyperplanes(tables: int = SRP_TABLES, bits: int = SRP_BITS) -> np.ndarray:
     """Deterministic INTEGER hyperplanes, shape (tables*bits, DIM).
 
-    Weights come from the multiplicative LCG (x → 48271·x mod 2³¹-1)
-    mapped to [-1000, 1000] — the same embed-the-literals discipline as
-    the minhash affine family, so the DuckDB oracle carries the exact
-    same planes. Integer weights (vs gaussian floats) cost nothing for
-    LSH quality — sign-projection only needs directions spread over the
-    sphere — and buy exactness: with embeddings quantized to integers
-    (floor(x·1000), exact in double), the sign test is pure integer
-    arithmetic with |dot| ≤ 64·10⁶ ≪ 2⁵³, so numpy, Catalyst and DuckDB
+    Weights come from the shared LCG stream (``hashing.lcg_stream``,
+    seed ``_SRP_SEED``) mapped to [-1000, 1000] — the same
+    embed-the-literals discipline as the minhash affine family, so the
+    DuckDB oracle carries the exact same planes. Integer weights (vs
+    gaussian floats) cost nothing for LSH quality — sign-projection
+    only needs directions spread over the sphere — and buy exactness:
+    with embeddings quantized to integers (floor(x·1000), exact in
+    double), the sign test is pure integer arithmetic with |dot| ≤ 64·10⁶ ≪ 2⁵³, so numpy, Catalyst and DuckDB
     agree bit-for-bit regardless of accumulation order.
     """
-    state = _SRP_SEED
-    w = np.empty((tables * bits, SRP_DIM), dtype=np.int64)
-    for j in range(tables * bits):
-        for d in range(SRP_DIM):
-            state = (state * 48271) % _SRP_P
-            w[j, d] = state % 2001 - 1000
-    return w
+    return _lcg_matrix(_SRP_SEED, (tables * bits, SRP_DIM)) % 2001 - 1000
 
 
 def _srp_bucket_udf(tables: int = SRP_TABLES, bits: int = SRP_BITS):
@@ -301,13 +302,7 @@ def _ivf_centroids() -> np.ndarray:
     [-100, 100] from the same multiplicative LCG as the SRP planes (its
     own seed chain). Integer centroids make cell ASSIGNMENT exactly
     reproducible across engines — see :func:`ivf_cells`."""
-    state = _IVF_SEED
-    w = np.empty((IVF_CELLS, SRP_DIM), dtype=np.int64)
-    for j in range(IVF_CELLS):
-        for d in range(SRP_DIM):
-            state = (state * 48271) % _SRP_P
-            w[j, d] = state % 201 - 100
-    return w
+    return _lcg_matrix(_IVF_SEED, (IVF_CELLS, SRP_DIM)) % 201 - 100
 
 
 def ivf_cells(df: DataFrame, vec_col: str = "embedding",
@@ -341,8 +336,7 @@ def ivf_cells(df: DataFrame, vec_col: str = "embedding",
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _cells(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        eq = np.floor(mat * 100.0).astype(np.int64)       # exact in double
+        eq = quantize(np.stack(v.to_numpy()))             # (n, dim) int64
         d = eq @ cents.T                                  # (n, C) int64
         dmax = int(np.abs(d).max(initial=0))
         # Exact comparator precondition (see docstring): d²·n₂ < 2⁶³.
@@ -503,40 +497,29 @@ def ivf_cells_for_corpus(n: int, occupancy: int = IVF_OCCUPANCY) -> int:
     return max(16, 2 ** round(math.log2(max(1.0, n / occupancy))))
 
 
-def _ivf_sign_centroids(cells: int = IVF_CELLS_WIDE) -> np.ndarray:
-    """Deterministic EQUAL-NORM centroids, shape (cells, DIM), every
-    component ±100 from the LCG's parity (own seed chain). Identical
-    norms make nearest-by-cosine == argmax of the integer dot product —
-    the property the scaled assignment and its DuckDB twin rely on."""
-    state = _IVF_SIGN_SEED
-    w = np.empty((cells, SRP_DIM), dtype=np.int64)
-    for j in range(cells):
-        for d in range(SRP_DIM):
-            state = (state * 48271) % _SRP_P
-            w[j, d] = (state % 2) * 200 - 100
-    return w
+def _ivf_sign_centroids() -> np.ndarray:
+    """Deterministic EQUAL-NORM centroids, shape (IVF_CELLS_WIDE, DIM),
+    every component ±100 from the LCG's parity (own seed chain).
+    Identical norms make nearest-by-cosine == argmax of the integer dot
+    product — the property the scaled assignment
+    (``vectors.sign_cell_order``) and its DuckDB twin rely on."""
+    return _lcg_matrix(_IVF_SIGN_SEED, (IVF_CELLS_WIDE, SRP_DIM)) % 2 * 200 - 100
 
 
 def ivf_cells_scaled(df: DataFrame, vec_col: str = "embedding",
-                     cells: int = IVF_CELLS_WIDE, probes: int = 1) -> DataFrame:
+                     probes: int = 1) -> DataFrame:
     """Append ``cells: array<int>`` — the ``probes`` nearest sign
-    centroids. One integer matmul + one argsort per Arrow batch; with
-    equal-norm centroids the ordering is the raw int64 dot product
-    (exact: |d| ≤ 64·53·100 ≪ 2⁵³ on this corpus, asserted per batch),
-    ties broken by ascending cell id via the stable sort. Same
-    nondeterministic-marking and Project/Filter-only call-site
+    centroids. One integer matmul + one argsort per Arrow batch
+    (``vectors.sign_cell_order``); with equal-norm centroids the
+    ordering is the raw int64 dot product (exact: |d| ≤ 64·53·100 ≪ 2⁵³
+    on this corpus, checked per batch), ties broken by ascending cell
+    id. Same nondeterministic-marking and Project/Filter-only call-site
     constraint as :func:`ivf_cells` (r14 ADVICE)."""
-    cents = _ivf_sign_centroids(cells)                    # (C, dim) ±100
+    cents = _ivf_sign_centroids()                         # (C, dim) ±100
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _cells(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        eq = np.floor(mat * 100.0).astype(np.int64)       # exact in double
-        d = eq @ cents.T                                  # (n, C) int64
-        if int(np.abs(d).max(initial=0)) >= 2**53:
-            raise ValueError("ivf_cells_scaled dot exceeds exact range")
-        # stable argsort on -d: ties (equal dot) keep ascending cell id
-        order = np.argsort(-d, axis=1, kind="stable")
+        order = sign_cell_order(quantize(np.stack(v.to_numpy())), cents)
         return pd.Series(list(order[:, :probes].astype(np.int32)))
 
     # asNondeterministic: same §4.4 duplication guard as ivf_cells.
@@ -562,54 +545,44 @@ def _query_batch(spark: SparkSession, sf_dir: str) -> list[tuple[int, list]]:
     return sorted((int(r.vec_id), list(r.embedding)) for r in rows)
 
 
-def _probe_cells_np(emb, cents: np.ndarray, probes: int):
-    """(floor(x·100) int64 vector, probes nearest sign cells) for one
-    query — the ``ivf_cells_scaled`` kernel's exact arithmetic
-    (stable argsort on -dot: ties keep ascending cell id) run in
-    driver numpy over one row."""
-    q = np.floor(np.asarray(emb, dtype=np.float64) * 100.0).astype(np.int64)
-    d = q @ cents.T
-    if int(np.abs(d).max(initial=0)) >= 2**53:
-        raise ValueError("probe dot exceeds exact range")
-    order = np.argsort(-d, kind="stable")
-    return q, [int(c) for c in order[:probes]]
-
-
-def _probe_rows(spark: SparkSession, sf_dir: str,
-                probes: int = IVF_PROBES_WIDE,
-                cells: int = IVF_CELLS_WIDE) -> list[tuple]:
-    """[(query_id, embedding, cell)] — one row per probed cell of each
-    query in the batch, built driver-side (see ``_query_batch``).
-    Bit-identical to the former scan→UDF construction: the embedding
-    doubles round-trip exactly through collect/createDataFrame, and
-    the cell ranking is the same stable integer argsort."""
-    cents = _ivf_sign_centroids(cells)
-    rows = []
+def _probed_queries(spark: SparkSession,
+                    sf_dir: str) -> list[tuple[int, list, np.ndarray, list[int]]]:
+    """[(query_id, embedding, quantized vector, probed cells)] for the
+    query batch: each query's IVF_PROBES_WIDE nearest sign cells, ranked
+    driver-side by the ``ivf_cells_scaled`` kernel's own
+    ``vectors.sign_cell_order`` over one row."""
+    cents = _ivf_sign_centroids()
+    out = []
     for qid, emb in _query_batch(spark, sf_dir):
-        _, pc = _probe_cells_np(emb, cents, probes)
-        rows.extend((qid, emb, c) for c in pc)
-    return rows
+        q = quantize(emb)
+        pc = sign_cell_order(q, cents)[:IVF_PROBES_WIDE]
+        out.append((qid, emb, q, [int(c) for c in pc]))
+    return out
 
 
-def _probe_frame(spark: SparkSession, sf_dir: str,
-                 probes: int = IVF_PROBES_WIDE,
-                 cells: int = IVF_CELLS_WIDE) -> DataFrame:
-    """(query_id, qv array<double>, cell) probe-set frame over
-    ``_probe_rows``."""
-    return local_df(
-        spark, _probe_rows(spark, sf_dir, probes, cells),
-        "query_id long, qv array<double>, cell int")
+def _ivf_probe_set(spark: SparkSession,
+                   sf_dir: str) -> tuple[DataFrame, list[int]]:
+    """((query_id, qv array<double>, cell) probe-set frame, sorted
+    distinct probed cells) — one row per probed cell of each query,
+    built driver-side (see ``_query_batch``); the embedding doubles
+    round-trip exactly through collect/createDataFrame. The cell list
+    feeds the persisted index's STATIC partition IN-filter (see
+    ``ivf_index_serve``)."""
+    rows = [(qid, emb, c) for qid, emb, _, pc in _probed_queries(spark, sf_dir)
+            for c in pc]
+    frame = local_df(spark, rows, "query_id long, qv array<double>, cell int")
+    return frame, sorted({r[2] for r in rows})
 
 
-def _ivf_scaled_assign_prefix(cells: int = IVF_CELLS_WIDE) -> str:
+def _ivf_scaled_assign_prefix() -> str:
     """Shared oracle prefix for the sign-centroid codebook:
     ``ranked_cells(vec_id, cell, r)`` ranks every cell per vector by the
     BIGINT dot product (equal norms — no cross-multiplication needed)
     and ``corpus(vec_id, cell)`` is the r=1 assignment."""
-    w = _ivf_sign_centroids(cells)
+    w = _ivf_sign_centroids()
     rows = ",\n".join(
         f"  ({j}, [{', '.join(str(int(x)) for x in w[j])}]::DOUBLE[])"
-        for j in range(cells))
+        for j in range(IVF_CELLS_WIDE))
     return f"""
 WITH cents(cell, w) AS (VALUES
 {rows}
@@ -629,13 +602,12 @@ WITH cents(cell, w) AS (VALUES
 )"""
 
 
-def _ivf_scaled_oracle(cells: int = IVF_CELLS_WIDE,
-                       probes: int = IVF_PROBES_WIDE) -> str:
+def _ivf_scaled_oracle() -> str:
     """DuckDB twin of the scaled IVF pipeline — sign-codebook
     assignment, probe sets, candidate join, exact cosine re-rank."""
-    return _ivf_scaled_assign_prefix(cells) + f""", qcells AS (
+    return _ivf_scaled_assign_prefix() + f""", qcells AS (
   SELECT vec_id AS query_id, cell FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND r <= {probes}
+  WHERE vec_id < {N_QUERIES} AND r <= {IVF_PROBES_WIDE}
 ), cand AS (
   SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
   FROM qcells q JOIN corpus c USING (cell)
@@ -661,12 +633,10 @@ def ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook is nearly one-vector-per-cell — harmless for correctness,
     which is what the gate checks; the sf1.0 probe measures the part
     that matters, a flat probe scan per query as N grows 10×."""
-    e = Catalog(spark, sf_dir).embeddings
-    corpus = (ivf_cells_scaled(e, probes=1)
-              .select("vec_id", "embedding", F.col("cells")[0].alias("cell")))
+    corpus = _ivf_assigned(Catalog(spark, sf_dir).embeddings)
     # probe set built driver-side from the bounded query batch
-    # (see _query_batch) — same rows as the former scan→UDF chain
-    return _cell_probe_topk(_probe_frame(spark, sf_dir), corpus)
+    # (see _query_batch)
+    return _cell_probe_topk(_ivf_probe_set(spark, sf_dir)[0], corpus)
 
 
 @register(
@@ -738,10 +708,7 @@ def ivf_index_serve(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     time (PartitionFilters carries the IN-list — stronger than the
     former runtime DPP subquery, possible because the driver-built
     probe set makes the cell list a literal; plan-pinned)."""
-    rows = _probe_rows(spark, sf_dir)
-    q = local_df(
-        spark, rows, "query_id long, qv array<double>, cell int")
-    probed = sorted({r[2] for r in rows})
+    q, probed = _ivf_probe_set(spark, sf_dir)
     index = spark.read.parquet(path).where(F.col("cell").isin(probed))
     return _cell_probe_topk(q, index)
 
@@ -1932,14 +1899,7 @@ def _pq_codebooks() -> np.ndarray:
     artifacts, exactly like these literals) plus this corpus's
     near-random embeddings, the same documented ceiling as the IVF
     note above."""
-    state = _PQ_SEED
-    w = np.empty((PQ_SUBSPACES, PQ_CELLS, PQ_SUBDIM), dtype=np.int64)
-    for s in range(PQ_SUBSPACES):
-        for j in range(PQ_CELLS):
-            for d in range(PQ_SUBDIM):
-                state = (state * 48271) % _SRP_P
-                w[s, j, d] = state % 61 - 30
-    return w
+    return _lcg_matrix(_PQ_SEED, (PQ_SUBSPACES, PQ_CELLS, PQ_SUBDIM)) % 61 - 30
 
 
 def _pq_code_prefix() -> str:
@@ -1978,7 +1938,7 @@ def _pq_encode_udf(cb: np.ndarray | None = None):
     """Arrow-batched PQ encoder over a given codebook (default: the
     shipped literals) — shared by :func:`pq_codes` and
     :func:`emb_pq_train` so assignment semantics cannot diverge.
-    Returns a pandas UDF mapping an embedding to [code_0..code_{{S-1}},
+    Returns a pandas UDF mapping an embedding to [code_0..code_{S-1},
     err_x]: per-subspace argmin of |c|² - 2·(v_s·c) over floor(x·100)
     integers (ties → lowest cell, numpy first-min == SQL ORDER BY
     cost, cell), plus the exact reconstruction error. Callers mark the
@@ -1993,9 +1953,8 @@ def _pq_encode_udf(cb: np.ndarray | None = None):
 
     @F.pandas_udf(ArrayType(LongType()))
     def _encode(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        eq = np.floor(mat * 100.0).astype(np.int64)        # (n, 64) exact
-        sub = eq.reshape(len(mat), PQ_SUBSPACES, PQ_SUBDIM)
+        eq = quantize(np.stack(v.to_numpy()))              # (n, 64) exact
+        sub = eq.reshape(len(eq), PQ_SUBSPACES, PQ_SUBDIM)
         # all subspace dot products at once: (n, S, C)
         d = np.einsum("nsd,scd->nsc", sub, cb)
         cost = n2[None, :, :] - 2 * d                      # (n, S, C)
@@ -2135,53 +2094,60 @@ def emb_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the old centroid for those — a driver-side rule, not a
     per-row computation).
     """
-    agg = _pq_train_agg(spark, sf_dir)
+    agg = _pq_train_agg(Catalog(spark, sf_dir).embeddings)
     total = sum(F.col(f"_s{d}") for d in range(PQ_SUBDIM))
-    cent = [F.floor(F.col(f"_s{d}") / F.col("n") + 0.5).cast("bigint")
-            for d in range(PQ_SUBDIM)]
     return agg.select(
         F.col("sub").cast("int").alias("sub"),
         F.col("cell").cast("int").alias("cell"),
         F.col("n").cast("bigint").alias("n_members"),
         total.cast("bigint").alias("dim_sum_total"),
-        F.md5(F.concat_ws(",", *[c.cast("string") for c in cent]))
+        F.md5(F.concat_ws(",", *[c.cast("string") for c in _lloyd_centroid()]))
          .alias("centroid_md5"))
 
 
-def _pq_train_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(sub, cell, n, _s0.._s{{SUBDIM-1}}) — the Lloyd-step aggregate
-    behind ``emb_pq_train`` (which md5s it) and
-    :func:`_pq_trained_codebooks` (which materializes the centroids)."""
-    e = Catalog(spark, sf_dir).embeddings
+def _pq_train_agg(e: DataFrame) -> DataFrame:
+    """(sub, cell, n, _s0.._s{SUBDIM-1}) — the Lloyd-step aggregate over
+    the corpus frame ``e``: each vector's shipped-literal PQ codes, then
+    per (sub, cell) the member count and the integer sums of the
+    members' floor(x·100) sub-vectors. Behind ``emb_pq_train`` (which
+    md5s it) and :func:`_pq_trained_codebooks` (which materializes the
+    centroids)."""
     enc = e.select(
-        "vec_id",
         F.transform("embedding", lambda x: F.floor(x.cast("double") * 100)
                     .cast("bigint")).alias("qv"),
         F.slice(_pq_encode_udf()("embedding"), 1, PQ_SUBSPACES).alias("codes"))
-    rows = enc.select(
-        F.posexplode("codes").alias("sub", "cell"),
-        F.col("qv").alias("qv"))
-    sv = rows.select(
-        "sub", "cell",
-        F.slice("qv", F.col("sub") * PQ_SUBDIM + 1, F.lit(PQ_SUBDIM)).alias("sv"))
+    sv = (enc.select(F.posexplode("codes").alias("sub", "cell"), "qv")
+          .select("sub", "cell",
+                  F.slice("qv", F.col("sub") * PQ_SUBDIM + 1,
+                          F.lit(PQ_SUBDIM)).alias("sv")))
     dim_sums = [F.sum(F.col("sv")[d]).alias(f"_s{d}") for d in range(PQ_SUBDIM)]
     return sv.groupBy("sub", "cell").agg(F.count("*").alias("n"), *dim_sums)
 
 
-def _pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    """One-Lloyd-step-trained codebooks as the (S, C, SUBDIM) integer
-    array the encoder consumes: the shipped literals updated in place
-    by the per-cell rounded means; cells with no members keep their
-    literal centroid. The fetch is a bounded TRAINING-ARTIFACT collect
-    — S·C = {0} rows regardless of corpus size, the same size-gated
-    ``toPandas`` discipline as the broadcast-matmul build side
-    (`_neardup_broadcast`); the corpus-scan work happened inside
-    :func:`_pq_train_agg`'s distributed plan.""".format(
-        PQ_SUBSPACES * PQ_CELLS)
-    cent = [F.floor(F.col(f"_s{d}") / F.col("n") + 0.5).cast("bigint")
-            .alias(f"c{d}") for d in range(PQ_SUBDIM)]
-    rows = (_pq_train_agg(spark, sf_dir)
-            .select("sub", "cell", *cent).toPandas())
+def _lloyd_centroid() -> list[F.Column]:
+    """The Lloyd step's new centroid over a :func:`_pq_train_agg` row,
+    one bigint column per dim: floor(s/n + 0.5), the explicit rounding
+    Spark and DuckDB evaluate identically."""
+    return [F.floor(F.col(f"_s{d}") / F.col("n") + 0.5).cast("bigint")
+            for d in range(PQ_SUBDIM)]
+
+
+def _pq_trained_codebooks(e: DataFrame) -> np.ndarray:
+    """One-Lloyd-step codebooks trained on the corpus frame ``e``, as
+    the (S, C, SUBDIM) integer array the encoder consumes: the shipped
+    literals updated in place by the per-cell rounded means; cells with
+    no members keep their literal centroid. ``e`` is the whole corpus,
+    or the base rows when the append lifecycle trains at base-generation
+    time (the stored codebook is then a function of the base corpus
+    only). The fetch is a bounded TRAINING-ARTIFACT collect — S·C rows
+    (128) regardless of corpus size, the same size-gated ``toPandas``
+    discipline as the broadcast-matmul build side
+    (`_neardup_broadcast`); the corpus-scan work happens inside
+    :func:`_pq_train_agg`'s distributed plan."""
+    rows = (_pq_train_agg(e)
+            .select("sub", "cell", *[c.alias(f"c{d}") for d, c
+                                     in enumerate(_lloyd_centroid())])
+            .toPandas())
     cb = _pq_codebooks().copy()
     for r in rows.itertuples(index=False):
         cb[int(r.sub), int(r.cell)] = [getattr(r, f"c{d}")
@@ -2265,28 +2231,30 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                        pq_codes(spark, sf_dir))
 
 
+def _adc_lut(q: np.ndarray, cb: np.ndarray) -> list[int]:
+    """One query's flattened ADC lookup table over codebook ``cb``:
+    lut[s·C + j] = |c_sj|² − 2·(q_s·c_sj) + |q_s|² for the quantized
+    query ``q`` — integers, so every entry is exact. Python ints, the
+    array<bigint> payload of the broadcast query frames."""
+    n2 = (cb * cb).sum(axis=2)                       # (S, C)
+    sub = q.reshape(PQ_SUBSPACES, PQ_SUBDIM)
+    dots = np.einsum("sd,scd->sc", sub, cb)          # (S, C)
+    qn = (sub * sub).sum(axis=1)                     # (S,)
+    return [int(x) for x in (n2 - 2 * dots + qn[:, None]).reshape(-1)]
+
+
 def _adc_search(spark: SparkSession, sf_dir: str, cb: np.ndarray,
                 code_df: DataFrame) -> DataFrame:
     """Shared ADC query path over a given codebook + code table — the
     literal (`ann_pq_adc`) and trained (`ann_pq_adc_trained`) variants
     differ ONLY in which artifacts they pass here."""
-    # Per-query LUT built driver-side from the bounded query batch
-    # (see _query_batch): cost(q, s, j) = |c_sj|² − 2·(q_s·c_sj) +
-    # |q_s|² over floor(x·100) integers, flattened to one S·C array per
-    # query and folded map-side over each vector's codes (``_adc_fold``,
-    # the ``_ivfpq_serve`` shape) — the former posexplode→LUT-join→
-    # groupBy chain fanned every vector to S rows through an exchange
-    # for the same integer sum; integer addition is exact and
-    # order-free, so adc_x is bit-identical.
-    n2 = (cb * cb).sum(axis=2)
-    rows = []
-    for qid, emb in _query_batch(spark, sf_dir):
-        q = np.floor(np.asarray(emb, dtype=np.float64) * 100.0).astype(np.int64)
-        sub = q.reshape(PQ_SUBSPACES, PQ_SUBDIM)
-        dots = np.einsum("sd,scd->sc", sub, cb)
-        qn = (sub * sub).sum(axis=1)
-        cost = (n2 - 2 * dots + qn[:, None]).reshape(-1)
-        rows.append((qid, [int(x) for x in cost]))
+    # Per-query LUT (``_adc_lut``) built driver-side from the bounded
+    # query batch (see _query_batch) and folded map-side over each
+    # vector's codes (``_adc_fold``, the ``_ivfpq_serve`` shape): no
+    # exchange before the top-k, and integer addition is exact in any
+    # order.
+    rows = [(qid, _adc_lut(quantize(emb), cb))
+            for qid, emb in _query_batch(spark, sf_dir)]
     luts = local_df(spark, rows, "query_id long, lut array<bigint>")
 
     adc = (code_df.select("vec_id", "codes")
@@ -2371,7 +2339,7 @@ def ann_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-codebook fetch is the bounded S·C-row artifact collect
     documented on :func:`_pq_trained_codebooks`.
     """
-    cb = _pq_trained_codebooks(spark, sf_dir)
+    cb = _pq_trained_codebooks(Catalog(spark, sf_dir).embeddings)
     return _adc_search(spark, sf_dir, cb, pq_codes(spark, sf_dir, cb))
 
 
@@ -2394,39 +2362,22 @@ def _ivfpq_corpus_index(spark: SparkSession, sf_dir: str,
     return _ivfpq_rows(Catalog(spark, sf_dir).embeddings, cb)
 
 
-def _ivfpq_probe_luts(spark: SparkSession, sf_dir: str,
-                      cb: np.ndarray) -> DataFrame:
-    """(query_id, cell, lut) — the query batch's probe set with each
-    query's FLATTENED ADC lookup table (array<bigint>, entry
-    sub·C + pcell) attached to every probe row. queries × probes rows
-    with a (S·C)-long array each — broadcast-sized by construction, so
-    the candidate join ships LUTs to the data and scoring needs no
-    LUT join at all (the r13 posexplode formulation's exchange,
-    deleted on measurement — BENCHNOTES r14). Built DRIVER-SIDE from
-    the bounded query batch (see ``_query_batch``): lut[s·C + j] =
-    |c_sj|² − 2·(q_s·c_sj) + |q_s|² over the floor(x·100) integers —
-    the exact arithmetic the former crossJoin/zip_with frame computed,
-    now one numpy pass per query instead of a 4-stage Spark job."""
-    return _ivfpq_probe_luts_and_cells(spark, sf_dir, cb)[0]
-
-
 def _ivfpq_probe_luts_and_cells(
         spark: SparkSession, sf_dir: str,
         cb: np.ndarray) -> tuple[DataFrame, list[int]]:
-    """(probe-LUT frame, sorted distinct probed cells) — the cell list
-    feeds the serve side's STATIC partition IN-filter (see
-    ``ivf_index_serve``)."""
-    cents = _ivf_sign_centroids(IVF_CELLS_WIDE)
-    n2 = (cb * cb).sum(axis=2)                       # (S, C) int64
+    """((query_id, cell, lut) frame, sorted distinct probed cells) — the
+    query batch's probe set (``_probed_queries``) with each query's
+    FLATTENED ADC lookup table (``_adc_lut``, array<bigint>, entry
+    sub·C + pcell) attached to every probe row. queries × probes rows
+    with a (S·C)-long array each — broadcast-sized by construction, so
+    the candidate join ships LUTs to the data and scoring needs no LUT
+    join at all. Built DRIVER-SIDE from the bounded query batch, one
+    numpy pass per query. The cell list feeds the serve side's STATIC
+    partition IN-filter (see ``ivf_index_serve``)."""
     rows = []
-    for qid, emb in _query_batch(spark, sf_dir):
-        q, pc = _probe_cells_np(emb, cents, IVF_PROBES_WIDE)
-        sub = q.reshape(PQ_SUBSPACES, PQ_SUBDIM)
-        dots = np.einsum("sd,scd->sc", sub, cb)      # (S, C)
-        qn = (sub * sub).sum(axis=1)                 # (S,)
-        lut = (n2 - 2 * dots + qn[:, None]).reshape(-1)
-        lut_list = [int(x) for x in lut]
-        rows.extend((qid, c, lut_list) for c in pc)
+    for qid, _, q, pc in _probed_queries(spark, sf_dir):
+        lut = _adc_lut(q, cb)
+        rows.extend((qid, c, lut) for c in pc)
     frame = local_df(
         spark, rows, "query_id long, cell int, lut array<bigint>")
     return frame, sorted({r[1] for r in rows})
@@ -2457,9 +2408,7 @@ def _ivfpq_serve(idx: DataFrame, probes: DataFrame) -> DataFrame:
     return _adc_topk(cand)
 
 
-def _ivfpq_trained_oracle(cells: int = IVF_CELLS_WIDE,
-                          probes: int = IVF_PROBES_WIDE,
-                          train_where: str = "") -> str:
+def _ivfpq_trained_oracle(train_where: str = "") -> str:
     """DuckDB twin of the TRAINED IVFADC composition: the literal
     codebooks trained one Lloyd step (the ``_pq_adc_trained_oracle``
     chain, CTEs copied verbatim — kept self-contained so this function
@@ -2469,10 +2418,10 @@ def _ivfpq_trained_oracle(cells: int = IVF_CELLS_WIDE,
     narrows WHICH rows train the Lloyd step (the append lifecycle
     trains at base-generation time); encode/probe/serve always cover
     the full corpus."""
-    iw = _ivf_sign_centroids(cells)
+    iw = _ivf_sign_centroids()
     irows = ",\n".join(
         f"  ({j}, [{', '.join(str(int(x)) for x in iw[j])}]::DOUBLE[])"
-        for j in range(cells))
+        for j in range(IVF_CELLS_WIDE))
     s_cols = ", ".join(f"SUM(sv[{d + 1}]) AS s{d}" for d in range(PQ_SUBDIM))
     cent = ", ".join(f"FLOOR(s{d} * 1.0 / n + 0.5)" for d in range(PQ_SUBDIM))
     return _pq_code_prefix() + f""", tragg AS (
@@ -2526,7 +2475,7 @@ def _ivfpq_trained_oracle(cells: int = IVF_CELLS_WIDE,
   SELECT vec_id, icell FROM ranked_cells WHERE r = 1
 ), qcells AS (
   SELECT vec_id AS query_id, icell FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND r <= {probes}
+  WHERE vec_id < {N_QUERIES} AND r <= {IVF_PROBES_WIDE}
 ), candi AS (
   SELECT DISTINCT q.query_id, c.vec_id
   FROM qcells q JOIN icorpus c USING (icell)
@@ -2596,9 +2545,9 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout); the only exchange left is the salted top-k over candidate
     scores, ∝ probes × occupancy per query — corpus-size-free at fixed
     geometry under the N/64 sizing rule."""
-    cb = _pq_trained_codebooks(spark, sf_dir)
+    cb = _pq_trained_codebooks(Catalog(spark, sf_dir).embeddings)
     return _ivfpq_serve(_ivfpq_corpus_index(spark, sf_dir, cb),
-                        _ivfpq_probe_luts(spark, sf_dir, cb))
+                        _ivfpq_probe_luts_and_cells(spark, sf_dir, cb)[0])
 
 
 def _pq_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -2613,13 +2562,8 @@ def _pq_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
     Keyed by corpus dir, so a multi-SF sweep cannot cross-serve."""
     def build() -> str:
         path = scratch_dir("fsbd_pq_artifact_")
-        cb = _pq_trained_codebooks(spark, sf_dir)
-        local_df(
-            spark,
-            [(s, j, [int(x) for x in cb[s, j]])
-             for s in range(PQ_SUBSPACES) for j in range(PQ_CELLS)],
-            "sub int, cell int, w array<bigint>",
-        ).write.mode("overwrite").parquet(path + "/codebook")
+        cb = _pq_trained_codebooks(Catalog(spark, sf_dir).embeddings)
+        _write_pq_codebook(cb, path + "/codebook")
         # The corpus codes are the index payload (4 bytes/vector at
         # scale); map-only encode streamed straight to parquet, no
         # shuffle.
@@ -2658,10 +2602,7 @@ def ann_pq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query rows.
     """
     path = _pq_artifact_dir(spark, sf_dir)
-    cb_rows = spark.read.parquet(path + "/codebook").toPandas()
-    cb = np.empty((PQ_SUBSPACES, PQ_CELLS, PQ_SUBDIM), dtype=np.int64)
-    for r in cb_rows.itertuples(index=False):
-        cb[int(r.sub), int(r.cell)] = list(r.w)
+    cb = _read_pq_codebook(spark, path + "/codebook")
     codes = spark.read.parquet(path + "/codes")
     return _adc_search(spark, sf_dir, cb, codes)
 
@@ -2687,8 +2628,7 @@ def _read_pq_codebook(spark: SparkSession, path: str) -> np.ndarray:
     return cb
 
 
-def _write_pq_codebook(spark: SparkSession, cb: np.ndarray,
-                       path: str) -> None:
+def _write_pq_codebook(cb: np.ndarray, path: str) -> None:
     """Store a codebook as the (sub, cell, w) parquet artifact — S·C
     rows, one file; written INSIDE an index generation so the
     generation is self-describing.
@@ -2698,12 +2638,11 @@ def _write_pq_codebook(spark: SparkSession, cb: np.ndarray,
     Spark job for its ~20 KB single-file write costs ~0.35 s of pure
     job machinery per index build (measured in the r15 build
     decomposition, ~15% of the build component) where the driver
-    writes the identical spark-readable file in milliseconds. Same
-    schema as the ``local_df`` form (sub int, cell int, w
-    array<bigint>); ``_read_pq_codebook``'s spark.read.parquet reads
-    both. A 100 TB deployment keeps this shape: the codebook never
-    grows with the corpus, so driver-side I/O is the correct layout at
-    any scale (the CORPUS writes stay distributed)."""
+    writes the identical spark-readable file in milliseconds. Schema
+    (sub int, cell int, w array<bigint>), read back by
+    ``_read_pq_codebook``. A 100 TB deployment keeps this shape: the
+    codebook never grows with the corpus, so driver-side I/O is the
+    correct layout at any scale (the CORPUS writes stay distributed)."""
     import pyarrow as pa
 
     from ..engine.generations import write_single_file
@@ -2736,7 +2675,7 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
     path = scratch_dir("fsbd_ivfpq_index_")
     write_generation(_ivfpq_corpus_index(spark, sf_dir, cb), path, "cell",
                      IVF_CELLS_WIDE)
-    _write_pq_codebook(spark, cb, path + "/_codebook")
+    _write_pq_codebook(cb, path + "/_codebook")
     return path
 
 
@@ -2788,36 +2727,6 @@ def ann_ivfpq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_index_serve(spark, sf_dir, ivfpq_index_build(spark, sf_dir))
 
 
-def _pq_trained_codebooks_on(spark: SparkSession,
-                             e: DataFrame) -> np.ndarray:
-    """One-Lloyd-step codebooks trained on an arbitrary corpus frame —
-    ``_pq_trained_codebooks``'s integer step parameterized by WHICH
-    rows train, because the append lifecycle trains at BASE-generation
-    time: the stored codebook is a function of the base corpus only,
-    and today's dump must be encoded with it, not with a retrain.
-    Same arithmetic (floor(x·100) ints, rounded per-cell means, empty
-    cells keep the literal centroid), same bounded S·C-row collect."""
-    enc = e.select(
-        F.transform("embedding", lambda x: F.floor(x.cast("double") * 100)
-                    .cast("bigint")).alias("qv"),
-        F.slice(_pq_encode_udf()("embedding"), 1, PQ_SUBSPACES).alias("codes"))
-    sv = (enc.select(F.posexplode("codes").alias("sub", "cell"), "qv")
-          .select("sub", "cell",
-                  F.slice("qv", F.col("sub") * PQ_SUBDIM + 1,
-                          F.lit(PQ_SUBDIM)).alias("sv")))
-    dim_sums = [F.sum(F.col("sv")[d]).alias(f"_s{d}")
-                for d in range(PQ_SUBDIM)]
-    cent = [F.floor(F.col(f"_s{d}") / F.col("n") + 0.5).cast("bigint")
-            .alias(f"c{d}") for d in range(PQ_SUBDIM)]
-    rows = (sv.groupBy("sub", "cell").agg(F.count("*").alias("n"), *dim_sums)
-            .select("sub", "cell", *cent).toPandas())
-    cb = _pq_codebooks().copy()
-    for r in rows.itertuples(index=False):
-        cb[int(r.sub), int(r.cell)] = [getattr(r, f"c{d}")
-                                       for d in range(PQ_SUBDIM)]
-    return cb
-
-
 def _ivfpq_base_build(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The IVFADC base generation at ``path``: PQ codebook TRAINED on
     the base residues (vec_id % IVF_APPEND_MOD != 0 — codebooks are
@@ -2826,9 +2735,9 @@ def _ivfpq_base_build(spark: SparkSession, sf_dir: str, path: str) -> None:
     ``path/_codebook``."""
     base = Catalog(spark, sf_dir).embeddings.where(
         F.col("vec_id") % IVF_APPEND_MOD != 0)
-    cb = _pq_trained_codebooks_on(spark, base)
+    cb = _pq_trained_codebooks(base)
     write_generation(_ivfpq_rows(base, cb), path, "cell", IVF_CELLS_WIDE)
-    _write_pq_codebook(spark, cb, path + "/_codebook")
+    _write_pq_codebook(cb, path + "/_codebook")
 
 
 @register(
@@ -2882,7 +2791,7 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                      mode="append")
     gen2 = scratch_dir("fsbd_ivfpq_append_gen2_")
     ivf_index_compact(spark, path, gen2)
-    _write_pq_codebook(spark, cb2, gen2 + "/_codebook")
+    _write_pq_codebook(cb2, gen2 + "/_codebook")
     return ivfpq_index_serve(spark, sf_dir, gen2)
 
 
@@ -2995,12 +2904,17 @@ def emb_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("component")))
 
 
+def _quantized_embedding() -> F.Column:
+    """floor(x·100) of every ``embedding`` element as array<bigint> —
+    the Catalyst twin of ``vectors.quantize``."""
+    return F.transform(F.col("embedding").cast("array<double>"),
+                       lambda c: F.floor(c * 100).cast("long"))
+
+
 def _pca_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, x): the floor(x·100) integer quantization of the corpus."""
     e = Catalog(spark, sf_dir).embeddings
-    xq = F.transform(F.col("embedding").cast("array<double>"),
-                     lambda c: F.floor(c * 100).cast("long"))
-    return e.select("vec_id", xq.alias("x"))
+    return e.select("vec_id", _quantized_embedding().alias("x"))
 
 
 def _dot_v(x="x", v="v"):
@@ -3129,11 +3043,9 @@ def emb_cell_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                  for j in range(IVF_CELLS)]
     cdf = local_df(spark, cent_rows, "cell int, w array<bigint>")
     e = Catalog(spark, sf_dir).embeddings
-    xq = F.transform(F.col("embedding").cast("array<double>"),
-                     lambda c: F.floor(c * 100).cast("long"))
     assigned = (ivf_cells(e, probes=1)
                 .select("vec_id", F.col("cells")[0].alias("cell"),
-                        xq.alias("x")))
+                        _quantized_embedding().alias("x")))
     j = assigned.join(F.broadcast(cdf), "cell")
     scored = j.select("cell", "vec_id", _dot_v("x", "w").alias("d"))
     best = F.max(F.struct(F.col("d"), (-F.col("vec_id")).alias("nid")))

@@ -79,7 +79,7 @@ def test_codebook_round_trips_through_a_file_uri(spark, tmp_path):
 
     cb = _pq_codebooks()
     path = tmp_path / "gen" / "_codebook"
-    _write_pq_codebook(spark, cb, "file://" + str(path))
+    _write_pq_codebook(cb, "file://" + str(path))
     assert sorted(os.listdir(path)) == ["_SUCCESS", "part-00000.parquet"]
     assert np.array_equal(
         _read_pq_codebook(spark, "file://" + str(path)), cb)
@@ -100,6 +100,6 @@ def test_codebook_overwrite_replaces_a_spark_written_dir(spark, tmp_path):
      .repartition(2).write.parquet(path))
     assert any(f.endswith(".crc") for f in os.listdir(path))
     cb = _pq_codebooks()
-    _write_pq_codebook(spark, cb, path)
+    _write_pq_codebook(cb, path)
     assert sorted(os.listdir(path)) == ["_SUCCESS", "part-00000.parquet"]
     assert np.array_equal(_read_pq_codebook(spark, path), cb)

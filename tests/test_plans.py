@@ -626,7 +626,10 @@ def test_each_verify_step_lives_in_one_function():
     anywhere is a batch path and a stream path free to decide
     differently. The candidate join in front of them has one home too:
     the candidate sensor attaches only in ``candidate_pairs``, so a
-    hand-written bucket join cannot come back unwatched."""
+    hand-written bucket join cannot come back unwatched. So does each
+    integer-exact vector-kernel step: the LCG literal stream, the
+    floor(x·100) quantizer, the ADC lookup table, the Lloyd rounding
+    and the stable sign-cell argsort."""
     import ast
     import os
 
@@ -636,7 +639,9 @@ def test_each_verify_step_lives_in_one_function():
                "fetch_payload_prefetched(",
                'F.col("na") + F.col("nb") - F.col("i")',
                'cosine_sim(F.col("emb_a"), F.col("emb_b"))',
-               "observe_candidates(")
+               "observe_candidates(", "* 48271)", "* 100.0)",
+               "n2 - 2 * dots + qn[:, None]", '/ F.col("n") + 0.5',
+               "np.argsort(-d")
     holders = {n: [] for n in needles}
     for root, _dirs, files in os.walk(pkg):
         for f in files:
@@ -669,6 +674,16 @@ def test_each_verify_step_lives_in_one_function():
                      + ":cosine_pairs"],
         needles[5]: [os.path.join("functions", "candidates.py")
                      + ":candidate_pairs"],
+        needles[6]: [os.path.join("functions", "hashing.py")
+                     + ":lcg_stream"],
+        needles[7]: [os.path.join("functions", "vectors.py")
+                     + ":quantize"],
+        needles[8]: [os.path.join("operators", "similarity.py")
+                     + ":_adc_lut"],
+        needles[9]: [os.path.join("operators", "similarity.py")
+                     + ":_lloyd_centroid"],
+        needles[10]: [os.path.join("functions", "vectors.py")
+                      + ":sign_cell_order"],
     }, holders
 
 

@@ -339,18 +339,18 @@ def test_ivfpq_append_compacts_to_one_file_per_cell_and_carries_codebook(spark):
     from full_stack_big_data_spark.engine.catalog import Catalog
     from full_stack_big_data_spark.engine.scratch import scratch_dir
     from full_stack_big_data_spark.operators.similarity import (
-        IVF_APPEND_MOD, _ivfpq_rows, _pq_trained_codebooks_on,
+        IVF_APPEND_MOD, _ivfpq_rows, _pq_trained_codebooks,
         _read_pq_codebook, _write_pq_codebook, ivf_index_compact,
         ivfpq_index_serve)
 
     sf = SF_SMOKE
     e = Catalog(spark, sf).embeddings
     base = e.where(F.col("vec_id") % IVF_APPEND_MOD != 0)
-    cb = _pq_trained_codebooks_on(spark, base)
+    cb = _pq_trained_codebooks(base)
     path = scratch_dir("fsbd_test_ivfpq_append_")
     (_ivfpq_rows(base, cb)
      .write.mode("overwrite").partitionBy("cell").parquet(path))
-    _write_pq_codebook(spark, cb, path + "/_codebook")
+    _write_pq_codebook(cb, path + "/_codebook")
     cb2 = _read_pq_codebook(spark, path + "/_codebook")
     assert (cb2 == cb).all(), "codebook artifact round-trip diverged"
     (_ivfpq_rows(e.where(F.col("vec_id") % IVF_APPEND_MOD == 0), cb2)
@@ -369,7 +369,7 @@ def test_ivfpq_append_compacts_to_one_file_per_cell_and_carries_codebook(spark):
 
     gen2 = scratch_dir("fsbd_test_ivfpq_append_gen2_")
     ivf_index_compact(spark, path, gen2)
-    _write_pq_codebook(spark, cb2, gen2 + "/_codebook")
+    _write_pq_codebook(cb2, gen2 + "/_codebook")
     compacted = files_per_cell(gen2)
     assert set(compacted) == set(appended)
     assert all(v == 1 for v in compacted.values()), compacted
@@ -381,7 +381,7 @@ def test_ivfpq_append_compacts_to_one_file_per_cell_and_carries_codebook(spark):
     rb = scratch_dir("fsbd_test_ivfpq_rebuild_")
     (_ivfpq_rows(e, cb2)
      .write.mode("overwrite").partitionBy("cell").parquet(rb))
-    _write_pq_codebook(spark, cb2, rb + "/_codebook")
+    _write_pq_codebook(cb2, rb + "/_codebook")
     rebuilt = canon(ivfpq_index_serve(spark, sf, rb))
     assert canon(ivfpq_index_serve(spark, sf, gen2)) == rebuilt
     assert canon(ivfpq_index_serve(spark, sf, path)) == rebuilt
